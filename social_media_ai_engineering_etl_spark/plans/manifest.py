@@ -8,6 +8,20 @@ manifest JSON is the commit log (validated-then-updated, §1.3 gate).
 This is the one optimizer feature Catalyst does not provide (SURVEY
 §4 'Custom'). Executors never see the manifest — it is pure driver
 state; stage payloads stay distributed parquet.
+
+A manifest entry records what the driver needs to reuse a snapshot
+without asking Spark again: the stage signature, its inputs, the
+output path, the row count (observed on the write job itself), the
+output's sha256 and the schema the write produced (the frame's schema
+with every field nullable, as parquet stores it).
+
+Job budget of :func:`run_stage`: a fresh stage costs one job — the
+write, which also yields the row count — plus whatever its validate
+gate runs; the snapshot is read back with the recorded schema, which
+costs none. A memo hit whose output bytes still hash to the recorded
+sha256 costs no job at all. Only a snapshot whose bytes no longer
+match its record (edited, or committed by an older manifest without
+``sha256``/``schema``) is re-read with schema inference and counted.
 """
 
 from __future__ import annotations
@@ -17,9 +31,14 @@ import json
 import os
 import tempfile
 from collections.abc import Callable
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
+                               StructType)
+
+from ..operators.observability import observe_quality
 
 STAGE_VERSION = "1"  # bump to invalidate every memoized stage
 
@@ -72,9 +91,38 @@ def snapshot_signature(input_paths: list[str],
                                  stage_version)
 
 
+def written_schema(dtype: DataType) -> DataType:
+    """The schema a parquet write stores for ``dtype``: every field,
+    array element and map value made nullable — what an inferring
+    ``spark.read.parquet`` of the output would report."""
+    if isinstance(dtype, StructType):
+        return StructType([
+            StructField(f.name, written_schema(f.dataType), True, f.metadata)
+            for f in dtype])
+    if isinstance(dtype, ArrayType):
+        return ArrayType(written_schema(dtype.elementType), True)
+    if isinstance(dtype, MapType):
+        return MapType(written_schema(dtype.keyType),
+                       written_schema(dtype.valueType), True)
+    return dtype
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """A committed stage output: ``df`` reads it with a known schema,
+    ``rows`` is its row count, ``hasher`` the un-finalized sha256
+    stream over its file bytes (see ``artifact_hasher``), ``skipped``
+    whether the stage was memoized."""
+    df: DataFrame
+    rows: int
+    hasher: "hashlib._Hash"
+    skipped: bool
+
+
 class Manifest:  # S8 manifest read/write (utils/manifest.py:12-29)
     """JSON lineage doc for one run: stage -> {signature, inputs,
-    outputs, row_count, completed_at}. Atomic writes (tmp + rename)."""
+    output, row_count, sha256, schema, completed_at, stage_version}.
+    Atomic writes (tmp + rename)."""
 
     def __init__(self, run_dir: str):
         self.run_dir = run_dir
@@ -97,12 +145,16 @@ class Manifest:  # S8 manifest read/write (utils/manifest.py:12-29)
                     and os.path.exists(self.stage_output(stage)))
 
     def update_stage(self, stage: str, signature: str,
-                     inputs: list[str], row_count: int) -> None:
+                     inputs: list[str], row_count: int,
+                     sha256: str | None = None,
+                     schema: StructType | None = None) -> None:
         self.doc["stages"][stage] = {
             "signature": signature,
             "inputs": inputs,
             "output": self.stage_output(stage),
             "row_count": row_count,
+            "sha256": sha256,
+            "schema": schema and schema.jsonValue(),
             "completed_at": datetime.now(timezone.utc).isoformat(),
             "stage_version": STAGE_VERSION,
         }
@@ -126,11 +178,12 @@ def run_stage(spark: SparkSession, manifest: Manifest, stage: str,
               input_paths: list[str], config: dict,
               fn: Callable[..., DataFrame],
               validate: Callable[[DataFrame], None] | None = None,
-              signature: str | None = None) -> DataFrame:
+              signature: str | None = None) -> Snapshot:
     """Memoized stage execution: compute the signature; if unchanged
-    and the snapshot exists, read it back (skip); otherwise run
+    and the snapshot exists, reuse it (skip); otherwise run
     ``fn(spark, *input_paths)``, write the parquet snapshot, validate
     (gating the manifest update, §1.3), then commit the manifest.
+    Either way the snapshot's output files are content-hashed once.
 
     ``signature`` lets a driver that already hashed the inputs (e.g.
     run_e2e's skip report) pass it in — content-hashing a stage's
@@ -140,14 +193,27 @@ def run_stage(spark: SparkSession, manifest: Manifest, stage: str,
         else snapshot_signature(input_paths, config)
     out = manifest.stage_output(stage)
     if manifest.should_skip(stage, sig):
-        return spark.read.parquet(out)
-    df = fn(spark, *input_paths)
+        h = artifact_hasher([out])
+        entry = manifest.doc["stages"][stage]
+        if entry.get("sha256") == h.hexdigest():
+            return Snapshot(spark.read.schema(StructType.fromJson(
+                entry["schema"])).parquet(out), entry["row_count"], h, True)
+        # bytes edited since the commit, or no recorded sha256/schema:
+        # re-derive both from the files
+        snapshot = spark.read.parquet(out)
+        return Snapshot(snapshot, snapshot.count(), h, True)
+    df, observed = observe_quality(fn(spark, *input_paths), [],
+                                   name=f"stage {stage}")
     df.write.mode("overwrite").parquet(out)
-    snapshot = spark.read.parquet(out)
+    schema = written_schema(df.schema)
+    snapshot = spark.read.schema(schema).parquet(out)
     if validate is not None:
         validate(snapshot)   # raising aborts BEFORE the manifest commit
-    manifest.update_stage(stage, sig, input_paths, snapshot.count())
-    return snapshot
+    rows = observed.get["n_rows"]
+    h = artifact_hasher([out])
+    manifest.update_stage(stage, sig, input_paths, rows, h.hexdigest(),
+                          schema)
+    return Snapshot(snapshot, rows, h, False)
 
 
 def write_contract(artifact_path: str, schema_version: str,

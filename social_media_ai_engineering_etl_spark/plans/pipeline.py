@@ -27,22 +27,20 @@ from .manifest import (STAGE_VERSION, Manifest, artifact_hasher, run_stage,
                        signature_from_hasher, write_contract)
 
 
-def _stage_posts(spark: SparkSession, docs_path: str) -> DataFrame:
+def _stage_posts(docs: DataFrame) -> DataFrame:
     """Stage 01-shaped: documents -> post-grain feature columns."""
     from ..queries.pairs_sampling import _derive_posts
-    return _derive_posts(spark.read.parquet(docs_path))
+    return _derive_posts(docs)
 
 
-def _stage_pairs(spark: SparkSession, posts_path: str) -> DataFrame:
+def _stage_pairs(posts: DataFrame) -> DataFrame:
     """Stage 22: F1 fan-out -> (prompt, chosen) training pairs."""
-    return fanout.generate_training_pairs(
-        spark.read.parquet(posts_path), id_cols=("doc_id",))
+    return fanout.generate_training_pairs(posts, id_cols=("doc_id",))
 
 
-def _stage_split(spark: SparkSession, pairs_path: str) -> DataFrame:
+def _stage_split(pairs: DataFrame) -> DataFrame:
     """Stage 23: prompt-type classification + deterministic md5-bucket
     80/20 SFT/DPO split (the content-hash B6 variant)."""
-    pairs = spark.read.parquet(pairs_path)
     bucket = (F.conv(F.substring(F.md5(F.col("prompt").cast("binary")), 1, 4),
                      16, 10).cast("long") % 5)
     return (pairs
@@ -52,9 +50,8 @@ def _stage_split(spark: SparkSession, pairs_path: str) -> DataFrame:
                         .otherwise(F.lit("dpo"))))
 
 
-def _stage_negatives(spark: SparkSession, split_path: str) -> DataFrame:
+def _stage_negatives(df: DataFrame) -> DataFrame:
     """Stage 24: DPO rows get a violation-composed 'rejected'."""
-    df = spark.read.parquet(split_path)
     length_req = F.trim(F.regexp_extract(
         F.col("prompt"), r"\*\*Suggested Post Length\*\*:\s*([^\n]*)", 1))
     emoji_usage = F.lower(F.trim(F.regexp_extract(
@@ -89,8 +86,16 @@ def run_e2e(spark: SparkSession, sf_dir: str, run_dir: str,
             config: dict | None = None) -> list[dict]:
     """Run the staged chain with memoization; returns per-stage
     {stage, rows, skipped}. A second invocation with unchanged inputs
-    skips every stage (reads snapshots back); editing any upstream
-    snapshot or the config re-runs exactly the affected suffix."""
+    skips every stage (reuses the snapshots); editing any upstream
+    snapshot or the config re-runs exactly the affected suffix.
+
+    Spark jobs: a fresh run costs one job per write (four snapshots,
+    the CSV and its parquet mirror), the split stage's validate gate,
+    and the schema inference of ``documents.parquet``. Row counts come
+    from the writes and every snapshot is read with the schema its
+    manifest entry records, so no job re-derives either. A memoized
+    re-run whose snapshots still match their recorded sha256 costs no
+    job at all (see plans/manifest.py)."""
     config = config or {}
     manifest = Manifest(run_dir)
     report = []
@@ -100,24 +105,26 @@ def run_e2e(spark: SparkSession, sf_dir: str, run_dir: str,
     # written stage's S9 contract sidecar (ADVICE r1: the double hash
     # doubled incremental-rerun I/O)
     inp_h = artifact_hasher([inp])
-    for stage, fn, validate in STAGES:
-        sig = signature_from_hasher(inp_h, config)
-        skipped = manifest.should_skip(stage, sig)
+    snap = None
+    for stage, transform, validate in STAGES:
+        # a stage reads its input only when it runs: documents by path,
+        # every later input as the previous snapshot's schema-known read
+        def fn(sp, path, transform=transform, prev=snap):
+            return transform(prev.df if prev else sp.read.parquet(path))
+
         snap = run_stage(spark, manifest, stage, [inp], config, fn,
-                         validate=validate, signature=sig)
-        out = manifest.stage_output(stage)
-        out_h = artifact_hasher([out])
-        rows = snap.count()
+                         validate=validate,
+                         signature=signature_from_hasher(inp_h, config))
+        inp, inp_h = manifest.stage_output(stage), snap.hasher
         # S9 contract sidecar per stage (deterministic content — a
         # memoized re-run rewrites identical bytes)
-        write_contract(out, schema_version=STAGE_VERSION, row_count=rows,
-                       signature=out_h.hexdigest())
-        report.append({"stage": stage, "rows": rows, "skipped": skipped})
-        inp, inp_h = out, out_h
+        write_contract(inp, schema_version=STAGE_VERSION,
+                       row_count=snap.rows, signature=inp_h.hexdigest())
+        report.append({"stage": stage, "rows": snap.rows,
+                       "skipped": snap.skipped})
     # S5/S6 terminal CSV + parquet mirror for downstream consumers;
     # only rewritten when the terminal stage actually ran
     csv_out = os.path.join(run_dir, "training-mix.csv")
-    if not report[-1]["skipped"] or not os.path.exists(csv_out):
-        write_csv_with_parquet_mirror(
-            spark.read.parquet(inp), csv_out)
+    if not snap.skipped or not os.path.exists(csv_out):
+        write_csv_with_parquet_mirror(snap.df, csv_out)
     return report

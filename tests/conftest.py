@@ -118,7 +118,6 @@ SLOW_TESTS = {
     "test_manifest_io.py::test_cli_list_and_run",  # 25.4s
     "test_manifest_io.py::test_dynamic_partition_overwrite_is_partition_scoped",  # 9.8s
     "test_manifest_io.py::test_e2e_written_artifacts_oracle_checked",  # 48.1s
-    "test_manifest_io.py::test_staged_e2e_pipeline_config_invalidates",  # 5.8s
     "test_null_semantics.py::test_funnel_reports_zero_user_steps",  # 11.1s
     "test_null_semantics.py::test_predicate_split_is_null_safe",  # 12.4s
     "test_null_semantics.py::test_snapshot_diff_null_fingerprint_is_not_presence",  # 5.3s
@@ -185,12 +184,15 @@ def pytest_collection_modifyitems(config, items):
         key = f"{fname}::{item.name}"
         if fname in SLOW_FILES:
             item.add_marker(pytest.mark.slow)
+            matched.add(fname)
         elif key in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
             matched.add(key)
-    # a renamed test must not silently fall out of the manifest: when
-    # the WHOLE suite is collected, every manifest entry must match
-    # (subset runs -- -k / single files -- legitimately match fewer)
+    # a renamed test or file must not silently fall out of the
+    # manifest: when the WHOLE suite is collected, every manifest
+    # entry must match (subset runs -- -k / single files --
+    # legitimately match fewer)
     if len(items) >= 600:
-        stale = set(SLOW_TESTS) - matched
-        assert not stale, f"stale SLOW_TESTS manifest entries: {sorted(stale)}"
+        stale = (SLOW_FILES | SLOW_TESTS) - matched
+        assert not stale, \
+            f"stale SLOW_FILES/SLOW_TESTS manifest entries: {sorted(stale)}"

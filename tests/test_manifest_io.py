@@ -6,6 +6,7 @@ and nested-posts unnesting."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
                                StructType)
@@ -40,7 +41,8 @@ def test_stage_memoization_skips_unchanged(spark, tmp_path):
     a = mf.run_stage(spark, man, "01-stage", [src], {"k": 1}, stage)
     b = mf.run_stage(spark, man, "01-stage", [src], {"k": 1}, stage)
     assert len(calls) == 1                       # second run skipped
-    assert a.count() == b.count() == 10
+    assert (a.skipped, b.skipped) == (False, True)
+    assert a.rows == b.rows == a.df.count() == b.df.count() == 10
 
     # config change invalidates
     mf.run_stage(spark, man, "01-stage", [src], {"k": 2}, stage)
@@ -235,6 +237,167 @@ def test_staged_e2e_pipeline_config_invalidates(spark, sf_dir, tmp_path):
     changed = run_e2e(spark, sf_dir, run_dir, config={"v": 2})
     assert all(not e["skipped"] for e in changed)
     assert [e["rows"] for e in changed] == [e["rows"] for e in first]
+
+
+def _job_counter(spark):
+    """Spark jobs run since the call, read from the AppStatusStore once
+    the listener bus has delivered every event. Counted by job id, not
+    by list length: the store drops its oldest jobs past
+    ``spark.ui.retainedJobs``."""
+    sc = spark.sparkContext._jsc.sc()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def job_ids():
+        sc.listenerBus().waitUntilEmpty()
+        return {j.jobId() for j in as_java(sc.statusStore().jobsList(None))}
+
+    before = job_ids()
+    return lambda: len(job_ids() - before)
+
+
+@pytest.fixture(scope="module")
+def fresh_e2e(spark, sf_dir, tmp_path_factory):
+    """One fresh run_e2e, its report and the jobs it ran; tests re-run
+    it on their own copy of the run dir."""
+    from social_media_ai_engineering_etl_spark.plans.pipeline import run_e2e
+
+    run_dir = str(tmp_path_factory.mktemp("e2e") / "run")
+    jobs = _job_counter(spark)
+    report = run_e2e(spark, sf_dir, run_dir)
+    return run_dir, report, jobs()
+
+
+def _rerun(spark, sf_dir, fresh_e2e, tmp_path, edit=None):
+    """Re-run run_e2e on a copy of the fresh run dir, after ``edit``
+    (called with the copy) if given; returns (report, jobs ran)."""
+    import shutil
+
+    from social_media_ai_engineering_etl_spark.plans.pipeline import run_e2e
+
+    run_dir = str(tmp_path / "run")
+    shutil.copytree(fresh_e2e[0], run_dir)
+    if edit is not None:
+        edit(run_dir)
+    jobs = _job_counter(spark)
+    report = run_e2e(spark, sf_dir, run_dir)
+    return report, jobs()
+
+
+def test_staged_e2e_job_budget(spark, sf_dir, fresh_e2e, tmp_path):
+    """A fresh run costs one job per write plus the validate gate and
+    the documents schema inference; a memoized re-run costs none and
+    reports the same rows."""
+    _, first, fresh_jobs = fresh_e2e
+    assert all(not e["skipped"] for e in first)
+    assert fresh_jobs <= 10
+    again, memo_jobs = _rerun(spark, sf_dir, fresh_e2e, tmp_path)
+    assert memo_jobs == 0
+    assert all(e["skipped"] for e in again)
+    assert [(e["stage"], e["rows"]) for e in again] == \
+        [(e["stage"], e["rows"]) for e in first]
+
+
+def test_staged_e2e_snapshot_schema_is_inferred_schema(spark, fresh_e2e):
+    """The schema each manifest entry records, which every later read
+    of the snapshot uses, is what schema inference reports."""
+    from pyspark.sql.types import StructType
+
+    run_dir, first, _ = fresh_e2e
+    man = mf.Manifest(run_dir)
+    for e in first:
+        entry = man.doc["stages"][e["stage"]]
+        assert entry["row_count"] == e["rows"]
+        assert StructType.fromJson(entry["schema"]) == \
+            spark.read.parquet(man.stage_output(e["stage"])).schema
+        assert entry["sha256"] == mf.artifact_hasher(
+            [man.stage_output(e["stage"])]).hexdigest()
+
+
+def test_staged_e2e_overwritten_snapshot_reruns_suffix(spark, sf_dir,
+                                                       fresh_e2e, tmp_path):
+    """A snapshot whose bytes no longer match its record is counted
+    again, and every stage downstream of it re-runs on the new bytes."""
+    import shutil
+
+    first = fresh_e2e[1]
+    n_pairs = first[1]["rows"]
+    keep = max(1, n_pairs // 3)
+
+    def overwrite_pairs(run_dir):
+        pairs = os.path.join(run_dir, "22-pairs")
+        tmp = str(tmp_path / "pairs_subset")
+        spark.read.parquet(pairs).orderBy("doc_id", "pair_idx") \
+            .limit(keep).write.parquet(tmp)
+        shutil.rmtree(pairs)
+        shutil.move(tmp, pairs)
+
+    report, _ = _rerun(spark, sf_dir, fresh_e2e, tmp_path, overwrite_pairs)
+    assert [(e["stage"], e["skipped"]) for e in report] == [
+        ("01-posts", True), ("22-pairs", True),
+        ("23-split", False), ("24-negatives", False)]
+    assert report[0]["rows"] == first[0]["rows"]
+    assert report[1]["rows"] == report[2]["rows"] == keep < n_pairs
+    assert report[3]["rows"] <= keep
+
+
+def test_staged_e2e_legacy_manifest_memoizes_by_counting(spark, sf_dir,
+                                                         fresh_e2e, tmp_path):
+    """A manifest committed without sha256/schema still skips every
+    stage, re-deriving each snapshot's schema and row count with jobs."""
+    def strip_new_fields(run_dir):
+        path = os.path.join(run_dir, "manifest.json")
+        with open(path) as f:
+            doc = json.load(f)
+        for entry in doc["stages"].values():
+            del entry["sha256"], entry["schema"]
+        with open(path, "w") as f:
+            json.dump(doc, f)
+
+    report, jobs = _rerun(spark, sf_dir, fresh_e2e, tmp_path,
+                          strip_new_fields)
+    assert all(e["skipped"] for e in report)
+    assert [e["rows"] for e in report] == [e["rows"] for e in fresh_e2e[1]]
+    assert jobs > 0
+
+
+def test_run_stage_zero_rows_commits_zero(spark, tmp_path):
+    """A stage whose frame is empty commits row_count 0: the observed
+    count arrives even though the write job writes no row."""
+    import threading
+
+    man = mf.Manifest(str(tmp_path / "run"))
+    result = {}
+
+    def run():
+        result["snap"] = mf.run_stage(
+            spark, man, "empty", [], {},
+            lambda sp: sp.range(10).filter(F.col("id") < 0))
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "run_stage blocked on the observed row count"
+    assert result["snap"].rows == 0
+    assert man.doc["stages"]["empty"]["row_count"] == 0
+    assert result["snap"].df.count() == 0
+
+
+def test_run_stage_snapshot_schema_nested_types(spark, tmp_path):
+    """The schema-known read of a snapshot with non-nullable nested
+    fields matches what schema inference reports."""
+    man = mf.Manifest(str(tmp_path / "run"))
+    snap = mf.run_stage(
+        spark, man, "nested", [], {},
+        lambda sp: sp.range(3).select(
+            "id", F.array("id").alias("a"),
+            F.create_map(F.lit("k"), F.col("id")).alias("m"),
+            F.struct(F.col("id").alias("x"),
+                     F.array(F.struct(F.col("id").alias("y"))).alias("z"))
+            .alias("s")))
+    assert snap.df.schema == \
+        spark.read.parquet(man.stage_output("nested")).schema
+    assert sorted(snap.df.collect()) == sorted(
+        spark.read.parquet(man.stage_output("nested")).collect())
 
 
 def test_e2e_written_artifacts_oracle_checked(tmp_path):

@@ -552,7 +552,12 @@ def test_q26_rewards_scalar_codegen_compiles(spark, sf_dir):
 _EVAL_NODE = re.compile(
     r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython)\n"
     r"((?:(?!\n\(\d+\) ).)*)", re.M | re.S)
-_UDF_CALLS = re.compile(r"Arguments: \[(.*?)\], \[", re.S)
+# ``Arguments: [<udf calls>], [pythonUDF0#12L, ...]``: the greedy
+# capture runs to the result-attribute list, so a ``], [`` nested in a
+# UDF argument (array literals, for one) cannot cut the calls short
+_UDF_CALLS = re.compile(
+    r"^Arguments: \[(.*)\], "
+    r"\[pythonUDF\d+#\d+L?(?:, pythonUDF\d+#\d+L?)*\]", re.M | re.S)
 
 
 def _normalized_udf_evals(plan: str) -> list[str]:
@@ -562,13 +567,12 @@ def _normalized_udf_evals(plan: str) -> list[str]:
     physical operator once even when two cached-relation scans
     reference it, so two entries with identical normalized text mean
     the optimizer truly duplicated the evaluation (guide §4.4) —
-    every surviving row pays the UDF twice."""
+    every surviving row pays the UDF twice.  An eval node whose
+    arguments do not parse fails the guard rather than drop out."""
     out = []
     for m in _EVAL_NODE.finditer(plan):
-        detail = m.group(1)
-        call = _UDF_CALLS.search(detail)
-        if not call:
-            continue
+        call = _UDF_CALLS.search(m.group(1))
+        assert call, f"unparsed Python-eval node: {m.group(0)[:300]}"
         norm = re.sub(r"#\d+[L]?", "#", call.group(1))
         norm = re.sub(r"lambda [a-z_]+#?\d*", "lambda", norm)
         norm = re.sub(r"plan_id=\d+", "plan_id=", norm)
@@ -582,12 +586,16 @@ def test_no_benched_plan_duplicates_a_python_udf(spark, sf_dir):
     q07's JSON-unwrap pandas UDF running twice per row).  This pins
     the fix class in CI: build every benched plan (plus q07, the
     fixed unbenched path) fresh and fail if any single UDF evaluation
-    appears in more than one ArrowEvalPython/BatchEvalPython node."""
+    appears in more than one ArrowEvalPython/BatchEvalPython node.
+    A sweep that finds no eval node at all fails too: that means the
+    plan format moved, not that the plans are clean."""
     from social_media_ai_engineering_etl_spark.registry import BENCH
 
+    n_evals = 0
     for name in sorted(set(BENCH) | {"q07_clean_topics"}):
         df = QUERIES[name](spark, sf_dir)
         evals = _normalized_udf_evals(plan_of(df))
+        n_evals += len(evals)
         dupes = {e for e in evals if evals.count(e) > 1}
         spark.catalog.clearCache()
         assert not dupes, (
@@ -595,3 +603,36 @@ def test_no_benched_plan_duplicates_a_python_udf(spark, sf_dir):
             f"duplicates — optimizer re-evaluation (guide §4.4); "
             f"mark the UDF nondeterministic or cache the column: "
             f"{sorted(dupes)[:1]}")
+    assert n_evals > 0, "no ArrowEvalPython/BatchEvalPython node parsed"
+
+
+def test_duplicated_udf_guard_fires(spark):
+    """The guard's parser on plans built to exercise it: a filter on a
+    pandas-UDF column is pushed below the projection, so the UDF is
+    evaluated in two ArrowEvalPython nodes and the guard reports it;
+    UDF calls whose arguments hold ``], [`` (array literals) are
+    captured whole, so two calls that differ only after it stay
+    distinct."""
+    import pandas as pd
+
+    @F.pandas_udf("long")
+    def plus(a: pd.Series, b: pd.Series) -> pd.Series:
+        return a + b
+
+    @F.udf("long")
+    def heads_plus(a, b, c):
+        return a[0] + b[0] + c
+
+    ids = spark.range(10)
+    pushed = ids.select(plus("id", "id").alias("p")).filter(F.col("p") > 1)
+    evals = _normalized_udf_evals(plan_of(pushed))
+    assert len(evals) == 2 and evals[0] == evals[1], evals
+
+    # the second call reads the first's result, so each gets its own
+    # eval node; both start ``heads_plus([1], [``
+    chained = ids.select(heads_plus(
+        F.array(F.lit(1)), F.array(F.lit(2)), "id").alias("a")).select(
+        heads_plus(F.array(F.lit(1)), F.array(F.lit(3)), "a").alias("b"))
+    evals = _normalized_udf_evals(plan_of(chained))
+    assert len(evals) == 2 and evals[0] != evals[1], evals
+    assert "heads_plus([1], [3]" in evals[1], evals
