@@ -167,6 +167,19 @@ def repetition_profile(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 
 
+def _gram_rows(df: DataFrame, id_col: str, text_col: str, n: int,
+               id_alias: str) -> DataFrame:
+    """(id_alias, gram) rows: one row per distinct word n-gram of a
+    document.  Called once per join side, so each side's ``gram`` is
+    its own explode/alias expression and the join does not lean on the
+    analyzer to split one shared attribute id.  The shingle tree under
+    it is built once per gateway by ``shingle_col`` (the
+    split+slice+zip tree costs ~40 ms of py4j round-trips per build)."""
+    from .dedup import shingle_col
+    return df.select(F.col(id_col).alias(id_alias),
+                     F.explode(shingle_col(text_col, n)).alias("gram"))
+
+
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                   id_col: str, text_col: str, n: int = 5) -> DataFrame:
     """Training docs sharing >= 1 distinct n-gram with any benchmark
@@ -179,14 +192,8 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     corpus text at all, and the per-doc rollup partial-aggregates
     map-side. Returns (doc_id, n_shared_grams, n_bench_docs_hit).
     """
-    from .dedup import shingle_col  # distinct n-grams, build-cached
-    # shingle_col = word_shingles over the NAMED column via the
-    # per-gateway constant-tree cache (r9 build sweep): the
-    # split+slice+zip tree costs ~40 ms of py4j round-trips per build
-    # and this operator used to build it twice per call
-    grams = F.explode(shingle_col(text_col, n)).alias("gram")
-    bench = benchmark.select(F.col(id_col).alias("bench_id"), grams)
-    corp = corpus.select(F.col(id_col).alias("doc_id"), grams)
+    bench = _gram_rows(benchmark, id_col, text_col, n, "bench_id")
+    corp = _gram_rows(corpus, id_col, text_col, n, "doc_id")
     hits = corp.join(F.broadcast(bench), "gram")
     return (hits.groupBy("doc_id")
             .agg(F.count_distinct("gram").alias("n_shared_grams"),
@@ -473,12 +480,10 @@ def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
     grams, so the result is bit-identical to :func:`decontaminate`
     (same oracle) — the bloom can only let extra candidates INTO the
     verify join, never drop a true hit."""
-    from .dedup import shingle_col
-    grams = F.explode(shingle_col(text_col, n)).alias("gram")
-    bench = benchmark.select(F.col(id_col).alias("bench_id"), grams)
+    bench = _gram_rows(benchmark, id_col, text_col, n, "bench_id")
     bitmap = bloom_bitmap(bench.select("gram").distinct(), "gram",
                           m_bits, k)
-    corp = (corpus.select(F.col(id_col).alias("doc_id"), grams)
+    corp = (_gram_rows(corpus, id_col, text_col, n, "doc_id")
             .filter(bloom_might_contain("gram", bitmap, m_bits, k)))
     hits = corp.join(bench, "gram")
     return (hits.groupBy("doc_id")

@@ -4,9 +4,12 @@ Defaults target local[$SPARK_GRAFT_CPUS] for tests/bench, but every
 setting is chosen for a multi-executor cluster at ~100 TB:
 
 - AQE on (runtime coalescing, skew-join splitting, plan re-opt),
-- shuffle partitions sized to cores locally (on a real cluster AQE
-  coalesces from a high initial number, so we set a high initial and
-  let AQE shrink),
+- shuffle partitions start high (``max(cores, 32)``): AQE coalesces
+  down from that initial number at runtime, never up,
+- default parallelism left at Spark's own value, the task slots
+  (cores in ``local[n]``, total executor cores on a cluster): that is
+  the width :func:`widen_scan` widens a narrow scan to, so a Python
+  UDF stage runs one task per slot, never more tasks than slots,
 - Arrow enabled for every pandas UDF boundary,
 - UTC session timezone so results compare bit-for-bit with the
   DuckDB oracle (DuckDB timestamps are UTC-naive),
@@ -76,7 +79,6 @@ def get_spark(app_name: str = "social-media-ai-engineering-etl-spark",
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         # initial shuffle parallelism; AQE coalesces down at runtime.
         .config("spark.sql.shuffle.partitions", str(max(n, 32)))
-        .config("spark.default.parallelism", str(max(n, 32)))
         # --- oracle parity -------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet has carried TIMESTAMP(NANOS) in some driver
@@ -196,10 +198,15 @@ def widen_scan(df, path: str | None = None):
     be a catastrophic full shuffle — so this estimates the scan split
     count from file size / maxPartitionBytes (pure metadata, no
     planning round-trip) and only repartitions when the scan comes
-    back narrower than the cluster's parallelism. Filters and column
-    pruning still reach the parquet scan: Catalyst pushes both
-    through RepartitionOperation nodes, so the exchange carries only
-    the pruned/filtered rows.
+    back narrower than the cluster's task slots
+    (``defaultParallelism``, Spark's own value: cores in ``local[n]``,
+    total executor cores on a cluster).  The target is the slot count,
+    not the shuffle-partition count, which starts high for AQE: every
+    extra Python task pays the worker's per-task setup floor
+    (SCALING.md "Python tasks per slot") with no core to run it on.
+    Filters and column pruning still reach the parquet scan: Catalyst
+    pushes both through RepartitionOperation nodes, so the exchange
+    carries only the pruned/filtered rows.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism

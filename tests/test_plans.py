@@ -3,6 +3,7 @@ engine is designed around. These assert on explain() output, so a
 refactor that silently reintroduces a cartesian product, breaks
 column pruning, or drops a broadcast fails CI, not the 100 TB run."""
 
+import os
 import re
 
 import pytest
@@ -636,3 +637,40 @@ def test_duplicated_udf_guard_fires(spark):
     evals = _normalized_udf_evals(plan_of(chained))
     assert len(evals) == 2 and evals[0] != evals[1], evals
     assert "heads_plus([1], [3]" in evals[1], evals
+
+
+def test_session_confs_keep_aqe_initial_and_spark_default_slots(
+        monkeypatch):
+    """get_spark sets the high AQE initial shuffle-partition count but
+    leaves default parallelism to Spark (the task slots).  Read from
+    the builder's options: the session fixture overrides the shuffle
+    count, and a second real session would cost a JVM start."""
+    from pyspark.sql import SparkSession
+
+    from social_media_ai_engineering_etl_spark import session
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: dict(self._options))
+    opts = session.get_spark("conf-probe")
+    assert opts["spark.sql.shuffle.partitions"] == str(max(session.cpus(),
+                                                            32))
+    assert "spark.default.parallelism" not in opts
+
+
+def test_widen_scan_targets_the_task_slots(spark, sf_dir):
+    """A narrow local scan widens to one partition per task slot — not
+    to the 32-partition shuffle initial — so the Python GEMM of
+    qx_similarity_topk_gemm runs one task per core."""
+    import pyarrow.parquet as pq
+
+    from social_media_ai_engineering_etl_spark import session
+    if not spark.sparkContext.master.startswith("local"):
+        pytest.skip("task slots equal session.cpus() only in local mode")
+    slots = spark.sparkContext.defaultParallelism
+    assert slots == session.cpus()
+    path = os.path.join(sf_dir, "documents.parquet")
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    wide = session.widen_scan(spark.read.parquet(path), path)
+    assert wide.rdd.getNumPartitions() == slots
+    plan = plan_of(QUERIES["qx_similarity_topk_gemm"](spark, sf_dir))
+    assert f"RoundRobinPartitioning({slots})" in plan
+
