@@ -9,11 +9,20 @@ running.  Methodology otherwise identical to bench.py (untimed warmup
 pass, checksum action, clearCache between queries, build included in
 the timing).
 
-Usage: python scripts/bench_ab.py [n_passes] [sf_dir]
+``--only a,b`` keeps the benched queries whose name contains any of
+the given substrings.  ``--plans DIR`` also writes each query's
+formatted physical plan to ``DIR/<query>_<tag>.txt`` and adds its
+operator counts (Exchange, Python eval nodes, join strategies, ...)
+to the JSON as ``shape``.
+
+Usage: python scripts/bench_ab.py [n_passes] [sf_dir] [--only a,b]
+                                  [--plans DIR] [--tag TAG]
 Writes /tmp/bench_ab.json and prints a markdown band table.
 """
+import argparse
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -23,15 +32,38 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
 from social_media_ai_engineering_etl_spark.registry import BENCH, QUERIES  # noqa: E402
 from social_media_ai_engineering_etl_spark.session import get_spark  # noqa: E402
-from bench import materialize  # noqa: E402
+from bench import SF_DIR, materialize  # noqa: E402
+
+MARKS = ("Exchange", "BatchEvalPython", "ArrowEvalPython", "MapInArrow",
+         "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+         "BroadcastNestedLoopJoin", "CartesianProduct", "Window",
+         "WindowGroupLimit", "Generate", "InMemoryTableScan")
+
+
+def plan_shape(plan: str) -> dict:
+    # count operator list entries like "(3) Exchange", not detail lines
+    ops = re.findall(r"^\(\d+\) ([A-Za-z]+)", plan, re.M)
+    return {m: ops.count(m) for m in MARKS if m in ops}
+
+
+def formatted_plan(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ap = argparse.ArgumentParser()
+    ap.add_argument("n", nargs="?", type=int, default=5)
+    ap.add_argument("sf_dir", nargs="?", default=SF_DIR)
+    ap.add_argument("--only", type=lambda v: v.split(","))
+    ap.add_argument("--plans", help="directory for formatted plans")
+    ap.add_argument("--tag", default="plan")
+    args = ap.parse_args()
+    n, sf_dir = args.n, args.sf_dir
     spark = get_spark("bench-ab")
-    names = BENCH or sorted(QUERIES)
+    names = [q for q in (BENCH or sorted(QUERIES))
+             if args.only is None or any(p in q for p in args.only)]
 
     for name in names:  # untimed warmup
         materialize(QUERIES[name](spark, sf_dir))
@@ -57,6 +89,14 @@ def main() -> None:
                        "min": min(xs), "max": max(xs), "samples": xs}
         print(f"| {name} | {m:.3f} | {sd:.3f} | {min(xs):.3f} "
               f"| {max(xs):.3f} |")
+        if args.plans:
+            os.makedirs(args.plans, exist_ok=True)
+            plan = formatted_plan(spark, QUERIES[name](spark, sf_dir))
+            spark.catalog.clearCache()
+            with open(os.path.join(args.plans, f"{name}_{args.tag}.txt"),
+                      "w") as f:
+                f.write(plan)
+            stats[name]["shape"] = plan_shape(plan)
     total_mean = sum(s["mean"] for s in stats.values())
     print(f"| TOTAL (sum of means) | {total_mean:.3f} | | | |")
     out = {"n_passes": n, "sf_dir": sf_dir, "stats": stats,

@@ -38,14 +38,16 @@ ROTATIONS = ["abcdefghij", "bcdefghija", "cdefghijab", "defghijabc",
 
 def multiply_docs(docs, m: int):
     """m deterministic dissimilar replicas: ids shifted, text
-    vowel-rotated per replica so shingle sets diverge."""
+    vowel-rotated per replica so shingle sets diverge, other columns
+    kept.  Past 16 replicas the rotations cycle: texts repeat, ids
+    stay distinct."""
     n = 1_000_000
     parts = []
     for i in range(m):
-        parts.append(docs.select(
-            (F.col("doc_id") + i * n).alias("doc_id"),
-            F.translate(F.col("text"), ROTATIONS[0], ROTATIONS[i])
-             .alias("text")))
+        parts.append(docs.withColumns({
+            "doc_id": F.col("doc_id") + i * n,
+            "text": F.translate(F.col("text"), ROTATIONS[0],
+                                ROTATIONS[i % len(ROTATIONS)])}))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

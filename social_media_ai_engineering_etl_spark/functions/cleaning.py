@@ -175,19 +175,6 @@ def normalize_tone_list(tones: Column, max_tones: int = 3,
     return F.when(F.size(capped) > 0, joined).otherwise(F.lit(fallback))
 
 
-def constrain_to_domain(tones: Column, allowed: tuple[str, ...],
-                        max_tones: int = 3,
-                        fallback: str = "Unknown") -> Column:
-    """Same, but drop entries outside the allowed tone domain first
-    (guided-decoding constraint as post-hoc validation, SURVEY §2.13)."""
-    allowed_arr = F.array(*[F.lit(a) for a in allowed])
-    norm = F.transform(tones, lambda x: F.lower(py_strip(x)))
-    kept = F.filter(norm, lambda x: F.array_contains(allowed_arr, x))
-    capped = F.slice(F.array_distinct(kept), 1, max_tones)
-    return F.when(F.size(capped) > 0,
-                  F.array_join(capped, ", ")).otherwise(F.lit(fallback))
-
-
 # ---------------------------------------------------------------------------
 # stage 18/23: label normalizers + prompt-type classifier
 # ---------------------------------------------------------------------------

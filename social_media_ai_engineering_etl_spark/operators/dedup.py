@@ -542,71 +542,12 @@ def _candidates_from_banded(banded: DataFrame,
              .distinct())
 
 
-def minhash_signature_oph(shingles: Column, num_hashes: int = 64,
-                          seed: int = 42) -> Column:
-    """One-permutation hashing (Li/Owen/Zhang, NIPS 2012) with
-    rotation densification (Shrivastava/Li, ICML 2014): ONE xxhash64
-    per shingle scattered into ``num_hashes`` bins (bin = h mod k,
-    value = min h in bin); empty bins borrow from the next non-empty
-    bin to the right (circular), offset by hops * C so borrowed cells
-    stay decorrelated across bins. O(|shingles|) work per row vs the
-    K-permutation form's O(|shingles| * k) — the asymptotic win for
-    long documents at corpus scale.
-
-    A DIFFERENT hash family than minhash_signature/_arrow (bin
-    occupancy replaces independent permutations), so its pair sets are
-    its own: recall-vs-exact is contract-tested separately; do not mix
-    impl= values across a stored signature artifact.
-
-    Measured honestly: end-to-end at sf0.1 the dedup pipeline is
-    SHINGLE-bound (regex split + zip + distinct dominates), so OPH's
-    asymptotic signature win over the vectorized K-perm twin is
-    marginal here (~4.1s vs ~3.9s signature pass on 2k-shingle docs,
-    k=128); it becomes the right choice when k grows (bands x rows)
-    or shingling is amortized via a stored artifact."""
-    prime = (1 << 31) - 1
-    big = np.int64(_LONG_MAX)
-    offset_c = np.int64(0x9E3779B1)   # golden-ratio odd constant
-
-    @pandas_udf("array<long>")
-    def _sig(hashed: pd.Series) -> pd.Series:
-        k = num_hashes
-        base = np.arange(k)
-        out = []
-        for arr in hashed:
-            if arr is None or len(arr) == 0:
-                out.append(np.full(k, _LONG_MAX, dtype=np.int64))
-                continue
-            h = np.asarray(arr, dtype=np.int64)
-            sig = np.full(k, big, dtype=np.int64)
-            np.minimum.at(sig, h % k, h // k)
-            filled = sig != big
-            if filled.any() and not filled.all():
-                f2 = np.concatenate([filled, filled])
-                pos = np.arange(2 * k)
-                cand = np.where(f2, pos, 2 * k)
-                nxt = np.minimum.accumulate(cand[::-1])[::-1][:k]
-                hops = nxt - base
-                src = nxt % k
-                sig = np.where(filled, sig,
-                               (sig[src] + hops * offset_c) % prime)
-            out.append(sig)
-        return pd.Series(out)
-
-    hashed = F.transform(
-        shingles,
-        lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF).cast("long")))
-    return _sig(hashed)
-
-
 def _sig_fn(impl: str):
     if impl == "arrow":
         return minhash_signature_arrow
     if impl == "jvm":
         return minhash_signature
-    if impl == "oph":
-        return minhash_signature_oph
-    raise ValueError(f"unknown minhash impl {impl!r} (arrow|jvm|oph)")
+    raise ValueError(f"unknown minhash impl {impl!r} (arrow|jvm)")
 
 
 def _sig_col(impl: str, num_hashes: int, base_hash=None) -> Column:
@@ -687,45 +628,6 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
 LSH_GUARD_CROSSOVER = 256
 
 
-def lsh_bucket_profile(sig: DataFrame, num_hashes: int,
-                       bands: int) -> dict:
-    """Skew diagnostic for the banded LSH join — the (band, bucket)
-    analogue of qx_key_skew_profile: width of the hottest bucket,
-    bucket count, banded row count.  One map-side-combined groupBy
-    plus a 1-row aggregate; O(1) driver rows."""
-    return _profile_from_banded(banded_rows(sig, num_hashes, bands))
-
-
-def _profile_from_banded(banded: DataFrame) -> dict:
-    row = (banded
-           .groupBy("band", "bucket")
-           .agg(F.count(F.lit(1)).alias("w"))
-           .agg(F.max("w").alias("top"),
-                F.count(F.lit(1)).alias("n_buckets"),
-                F.sum("w").alias("n_rows")).collect()[0])
-    return {"top_bucket_width": int(row.top or 0),
-            "n_buckets": int(row.n_buckets or 0),
-            "n_banded_rows": int(row.n_rows or 0)}
-
-
-def choose_lsh_guard(profile: dict,
-                     crossover: int = LSH_GUARD_CROSSOVER) -> dict:
-    """Diagnose-then-enable policy (VERDICT r5 ask #5): enable the
-    hot-bucket guard only when the MEASURED top bucket width exceeds
-    the documented crossover — a guard below it costs a count pass
-    for nothing, a missing guard above it is the measured 21 s
-    straggler.  Returns the decision with its evidence."""
-    top = profile["top_bucket_width"]
-    on = top > crossover
-    return {"max_bucket": crossover if on else None,
-            "top_bucket_width": top,
-            "crossover": crossover,
-            "reason": (f"top bucket width {top} > crossover {crossover}: "
-                       "hot-cluster guard ON" if on else
-                       f"top bucket width {top} <= crossover {crossover}: "
-                       "exact candidate semantics kept")}
-
-
 def _guard_banded_width(banded: DataFrame, max_bucket: int) -> DataFrame:
     """The IN-PLAN hot-bucket guard: a ``count() over (partition by
     band, bucket)`` window annotates each banded row with its bucket
@@ -764,15 +666,6 @@ def _pairs_from_bucketed(rel: DataFrame) -> DataFrame:
              .distinct())
 
 
-def _candidates_from_banded_guarded(banded: DataFrame,
-                                    max_bucket: int) -> DataFrame:
-    """:func:`_guard_banded_width` + :func:`_pairs_from_bucketed` in
-    one unpersisted plan (library entry point; the auto query path
-    persists the guarded relation between the two instead — see
-    :func:`minhash_dedup_pairs_auto`)."""
-    return _pairs_from_bucketed(_guard_banded_width(banded, max_bucket))
-
-
 def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
                              n: int = 3, num_hashes: int = 128,
                              bands: int = 32, threshold: float = 0.8,
@@ -784,7 +677,7 @@ def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
     from pair generation by an in-plan width window — provably the
     same pair set as the old measure->decide pre-pass (the filter is
     vacuous exactly when the old profile chose guard-off; see
-    :func:`_candidates_from_banded_guarded`), with zero extra driver
+    :func:`_guard_banded_width`), with zero extra driver
     actions.  The policy + crossover are stamped into the result
     schema's column metadata under ``lsh_guard`` so the evidence
     travels with the plan and any parquet the caller writes."""

@@ -94,6 +94,27 @@ def generate_negative(chosen: Column, length_req: Column,
              .otherwise(text))
 
 
+def rejected_from_prompt(prompt_col: str, chosen_col: str) -> Column:
+    """:func:`generate_negative` over ``chosen_col``, with the length
+    and emoji constraints parsed from the prompt's
+    ``**Suggested Post Length**:`` and ``**Emoji Usage**:`` lines.
+
+    A constant tree per column-name pair, built once per JVM gateway
+    (``cached_exprs``): the violation-surgery concat chain costs ~300 ms
+    of py4j round-trips per build."""
+    from ..session import cached_exprs
+
+    def build():
+        prompt = F.col(prompt_col)
+        length_req = F.trim(F.regexp_extract(
+            prompt, r"\*\*Suggested Post Length\*\*:\s*([^\n]*)", 1))
+        emoji_usage = F.lower(F.trim(F.regexp_extract(
+            prompt, r"\*\*Emoji Usage\*\*:\s*([^\n]*)", 1)))
+        return generate_negative(F.col(chosen_col), length_req, emoji_usage)
+
+    return cached_exprs(("rejected", prompt_col, chosen_col), build)
+
+
 # ---------------------------------------------------------------------------
 # P19/P20 — training-pair filter + chat-template wrap
 # ---------------------------------------------------------------------------

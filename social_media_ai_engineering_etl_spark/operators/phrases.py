@@ -322,21 +322,6 @@ def author_uncommon_words_auto(df: DataFrame, author_col: str,
     return out.select(*cols)
 
 
-def attach_author_phrases(posts: DataFrame, phrases: DataFrame,
-                          author_col: str) -> DataFrame:
-    """J1: left broadcast-join author phrase lists back onto posts
-    (17-writing-style.py:700-702). ``phrases`` is (author, word, freq);
-    aggregated to an array first."""
-    lists = (phrases.groupBy(author_col)
-             .agg(F.sort_array(F.collect_list(
-                 F.struct((-F.col("freq")).alias("nf"),
-                          F.col("word")))).alias("__s"))
-             .select(author_col,
-                     F.transform(F.col("__s"), lambda s: s.getField("word"))
-                      .alias("common_phrases")))
-    return posts.join(F.broadcast(lists), author_col, "left")
-
-
 def author_uncommon_words_grouped(df: DataFrame, author_col: str,
                                   text_col: str, id_col: str,
                                   stopwords: tuple[str, ...] = STOPWORDS_EN,

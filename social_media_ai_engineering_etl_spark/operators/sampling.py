@@ -170,17 +170,6 @@ def percent_gate_hash(df: DataFrame, key: Column,
     return df.filter(bucket < F.lit(int(round(sample_percent * 100))))
 
 
-def top_n_per_group(df: DataFrame, keys: list[str], order: list[Column],
-                    n: int) -> DataFrame:
-    """A6: keep the top-N rows per group under a deterministic order
-    (17-writing-style.py:776-802 keeps the 20 longest posts/author).
-    Callers must pass a total order (e.g. length desc, id asc) so the
-    result is engine-independent."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (df.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") <= n).drop("__rn"))
-
-
 def prefer_downsample_balance(df: DataFrame, keys: list[str],
                               band: float = 0.05,
                               seed: int = 42) -> DataFrame:

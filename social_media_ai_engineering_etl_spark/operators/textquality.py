@@ -57,10 +57,6 @@ def token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit("\\w+|[^\\w\\s]"))
 
 
-def whitespace_token_count(text: Column) -> Column:
-    return F.size(F.split(F.trim(text), "\\s+"))
-
-
 def quality_score(text: Column,
                   stopwords: tuple[str, ...] = LANG_MARKERS["en"],
                   ideal_len: int = 1000) -> Column:

@@ -16,8 +16,8 @@ output's sha256 and the schema the write produced (the frame's schema
 with every field nullable, as parquet stores it).
 
 Job budget of :func:`run_stage`: a fresh stage costs one job — the
-write, which also yields the row count — plus whatever its validate
-gate runs; the snapshot is read back with the recorded schema, which
+write, which also yields the row count and its gate's violation
+count; the snapshot is read back with the recorded schema, which
 costs none. A memo hit whose output bytes still hash to the recorded
 sha256 costs no job at all. Only a snapshot whose bytes no longer
 match its record (edited, or committed by an older manifest without
@@ -34,11 +34,12 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
                                StructType)
 
-from ..operators.observability import observe_quality
+from ..operators.observability import quality_metrics
 
 STAGE_VERSION = "1"  # bump to invalidate every memoized stage
 
@@ -177,13 +178,18 @@ class Manifest:  # S8 manifest read/write (utils/manifest.py:12-29)
 def run_stage(spark: SparkSession, manifest: Manifest, stage: str,
               input_paths: list[str], config: dict,
               fn: Callable[..., DataFrame],
-              validate: Callable[[DataFrame], None] | None = None,
+              invalid: Column | None = None,
               signature: str | None = None) -> Snapshot:
     """Memoized stage execution: compute the signature; if unchanged
     and the snapshot exists, reuse it (skip); otherwise run
     ``fn(spark, *input_paths)``, write the parquet snapshot, validate
     (gating the manifest update, §1.3), then commit the manifest.
     Either way the snapshot's output files are content-hashed once.
+
+    ``invalid`` is a row predicate over the stage's output: the write
+    job counts the rows it holds true for, alongside the row count,
+    and a nonzero count raises before the manifest commit (the
+    snapshot files stay on disk, uncommitted).
 
     ``signature`` lets a driver that already hashed the inputs (e.g.
     run_e2e's skip report) pass it in — content-hashing a stage's
@@ -202,14 +208,18 @@ def run_stage(spark: SparkSession, manifest: Manifest, stage: str,
         # re-derive both from the files
         snapshot = spark.read.parquet(out)
         return Snapshot(snapshot, snapshot.count(), h, True)
-    df, observed = observe_quality(fn(spark, *input_paths), [],
-                                   name=f"stage {stage}")
+    checks = [] if invalid is None else [F.count_if(invalid).alias("n_invalid")]
+    observed = Observation(f"stage {stage}")
+    df = fn(spark, *input_paths).observe(observed, *quality_metrics([]),
+                                         *checks)
     df.write.mode("overwrite").parquet(out)
+    metrics = observed.get
+    if metrics.get("n_invalid"):
+        raise ValueError(f"{metrics['n_invalid']} rows failed the "
+                         f"{stage} gate")
+    rows = metrics["n_rows"]
     schema = written_schema(df.schema)
     snapshot = spark.read.schema(schema).parquet(out)
-    if validate is not None:
-        validate(snapshot)   # raising aborts BEFORE the manifest commit
-    rows = observed.get["n_rows"]
     h = artifact_hasher([out])
     manifest.update_stage(stage, sig, input_paths, rows, h.hexdigest(),
                           schema)

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cleaning
@@ -52,32 +52,26 @@ def _stage_split(pairs: DataFrame) -> DataFrame:
 
 def _stage_negatives(df: DataFrame) -> DataFrame:
     """Stage 24: DPO rows get a violation-composed 'rejected'."""
-    length_req = F.trim(F.regexp_extract(
-        F.col("prompt"), r"\*\*Suggested Post Length\*\*:\s*([^\n]*)", 1))
-    emoji_usage = F.lower(F.trim(F.regexp_extract(
-        F.col("prompt"), r"\*\*Emoji Usage\*\*:\s*([^\n]*)", 1)))
     return (df.filter(F.col("split") == "dpo")
-            .withColumn("rejected", neg.generate_negative(
-                F.col("chosen"), length_req, emoji_usage)))
+            .withColumn("rejected",
+                        neg.rejected_from_prompt("prompt", "chosen")))
 
 
-def _validate_split(df: DataFrame) -> None:
-    """P18-style gate: every row must land in a known split bucket
-    with a non-empty prompt — raising aborts the manifest commit.
-    Null-safe: a NULL split or NULL prompt makes both predicates NULL,
-    which a plain filter silently drops — exactly the rows the gate
-    exists to catch (ADVICE r1) — so both are coalesced first."""
-    bad = df.filter(
-        ~F.coalesce(F.col("split").isin("sft", "dpo"), F.lit(False))
-        | (F.coalesce(F.trim(F.col("prompt")), F.lit("")) == "")).count()
-    if bad:
-        raise ValueError(f"{bad} rows failed the split-domain gate")
+def _split_violation() -> Column:
+    """P18-style gate: a row violates it unless it lands in a known
+    split bucket with a non-empty prompt; any violation aborts the
+    manifest commit.  Null-safe: a NULL split or NULL prompt makes
+    both predicates NULL, which a plain filter silently drops —
+    exactly the rows the gate exists to catch (ADVICE r1) — so both
+    are coalesced first."""
+    return (~F.coalesce(F.col("split").isin("sft", "dpo"), F.lit(False))
+            | (F.coalesce(F.trim(F.col("prompt")), F.lit("")) == ""))
 
 
 STAGES = (
     ("01-posts", _stage_posts, None),
     ("22-pairs", _stage_pairs, None),
-    ("23-split", _stage_split, _validate_split),
+    ("23-split", _stage_split, _split_violation),
     ("24-negatives", _stage_negatives, None),
 )
 
@@ -90,8 +84,8 @@ def run_e2e(spark: SparkSession, sf_dir: str, run_dir: str,
     snapshot or the config re-runs exactly the affected suffix.
 
     Spark jobs: a fresh run costs one job per write (four snapshots,
-    the CSV and its parquet mirror), the split stage's validate gate,
-    and the schema inference of ``documents.parquet``. Row counts come
+    the CSV and its parquet mirror) and the schema inference of
+    ``documents.parquet``. Row counts and the split stage's gate come
     from the writes and every snapshot is read with the schema its
     manifest entry records, so no job re-derives either. A memoized
     re-run whose snapshots still match their recorded sha256 costs no
@@ -106,14 +100,14 @@ def run_e2e(spark: SparkSession, sf_dir: str, run_dir: str,
     # doubled incremental-rerun I/O)
     inp_h = artifact_hasher([inp])
     snap = None
-    for stage, transform, validate in STAGES:
+    for stage, transform, violation in STAGES:
         # a stage reads its input only when it runs: documents by path,
         # every later input as the previous snapshot's schema-known read
         def fn(sp, path, transform=transform, prev=snap):
             return transform(prev.df if prev else sp.read.parquet(path))
 
         snap = run_stage(spark, manifest, stage, [inp], config, fn,
-                         validate=validate,
+                         invalid=violation() if violation else None,
                          signature=signature_from_hasher(inp_h, config))
         inp, inp_h = manifest.stage_output(stage), snap.hasher
         # S9 contract sidecar per stage (deterministic content — a

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators import negatives as neg
 from ..registry import register
-from ..session import cached_exprs, read_parquet_cached, widen_scan
+from ..session import read_parquet_cached, widen_scan
 from .rewards_scoring import _RP_CTE, _derive_reward_pairs
 
 
@@ -87,18 +87,7 @@ def q24_negatives(spark, sf_dir):
     prompt constraints; byte-exact via md5 per row."""
     pairs = _derive_reward_pairs(_docs(spark, sf_dir))
 
-    # constant tree over (prompt, completion): the violation-surgery
-    # concat chain costs ~300 ms of py4j round-trips per build — built
-    # once per JVM gateway (cached_exprs, the q26 idiom)
-    def _build_rejected():
-        length_req = F.trim(F.regexp_extract(
-            F.col("prompt"), r"\*\*Suggested Post Length\*\*:\s*([^\n]*)", 1))
-        emoji_usage = F.lower(F.trim(F.regexp_extract(
-            F.col("prompt"), r"\*\*Emoji Usage\*\*:\s*([^\n]*)", 1)))
-        return neg.generate_negative(F.col("completion"), length_req,
-                                     emoji_usage)
-
-    rejected = cached_exprs("q24_rejected", _build_rejected)
+    rejected = neg.rejected_from_prompt("prompt", "completion")
     # materialize the (expensive) negative ONCE in its own projection:
     # md5 + length below then reference the column — referenced twice,
     # non-cheap, so CollapseProject keeps the stages apart and the

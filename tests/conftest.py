@@ -101,7 +101,6 @@ SLOW_TESTS = {
     "test_dedup.py::test_ivfpq_recall_and_exact_scores",  # 7.7s
     "test_dedup.py::test_lsh_topk_subset_of_bruteforce_scores",  # 14.3s
     "test_dedup.py::test_minhash_recall_vs_exact",  # 16.4s
-    "test_dedup.py::test_oph_minhash_recall_vs_exact",  # 8.3s
     "test_dedup.py::test_semantic_contamination_blocked_path_matches_broadcast",  # 9.8s
     "test_dedup.py::test_semantic_contamination_flags_planted_leak",  # 5.3s
     "test_dedup.py::test_simhash_wide_production_path_finds_near_not_far",  # 25.4s

@@ -364,27 +364,6 @@ def test_ivfpq_recall_and_exact_scores(emb):
             assert abs(r.cosine_sim - true_score[key]) < 1e-6
 
 
-def test_oph_minhash_recall_vs_exact(docs):
-    """One-permutation-hashing impl: same recall/precision contract as
-    the K-permutation family — every exact pair at j >= 0.8 surfaces
-    (banding on densified OPH signatures), verify keeps precision
-    exact; and the densified signature has no sentinel cells left for
-    any non-trivial document."""
-    exact = {(r.id1, r.id2)
-             for r in dedup.ngram_jaccard_pairs(
-                 docs, "doc_id", "text", threshold=0.8).collect()}
-    found = {(r.id1, r.id2)
-             for r in dedup.minhash_dedup_pairs(
-                 docs, "doc_id", "text", threshold=0.8,
-                 impl="oph").collect()}
-    assert exact and exact <= found and found <= exact
-    sig = docs.limit(50).select(
-        dedup.minhash_signature_oph(
-            dedup.word_shingles(F.col("text"), 3), 128).alias("s"))
-    max_cell = sig.agg(F.max(F.array_max("s"))).collect()[0][0]
-    assert max_cell < (1 << 31), "densified cells must stay in hash range"
-
-
 def test_prefix_join_equals_inverted_index(spark, sf_dir):
     """The prefix-filtered set-similarity join must emit EXACTLY the
     inverted-index pair set (both are exact algorithms) at two

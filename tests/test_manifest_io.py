@@ -77,12 +77,9 @@ def test_validation_gates_manifest_commit(spark, tmp_path):
     def stage(sp, inp):
         return sio.read_jsonl(sp, inp, POST_SCHEMA)
 
-    def validate(df):
-        if df.filter(F.col("post_text") == "").count() > 0:
-            raise ValueError("empty post_text")
-
     try:
-        mf.run_stage(spark, man, "s", [src], {}, stage, validate=validate)
+        mf.run_stage(spark, man, "s", [src], {}, stage,
+                     invalid=F.col("post_text") == "")
         raise AssertionError("expected validation failure")
     except ValueError:
         pass
@@ -284,12 +281,13 @@ def _rerun(spark, sf_dir, fresh_e2e, tmp_path, edit=None):
 
 
 def test_staged_e2e_job_budget(spark, sf_dir, fresh_e2e, tmp_path):
-    """A fresh run costs one job per write plus the validate gate and
-    the documents schema inference; a memoized re-run costs none and
-    reports the same rows."""
+    """A fresh run costs one job per write (four snapshots, the CSV
+    and its parquet mirror) plus the documents schema inference; the
+    split gate rides on its stage's write.  A memoized re-run costs
+    none and reports the same rows."""
     _, first, fresh_jobs = fresh_e2e
     assert all(not e["skipped"] for e in first)
-    assert fresh_jobs <= 10
+    assert fresh_jobs <= 7
     again, memo_jobs = _rerun(spark, sf_dir, fresh_e2e, tmp_path)
     assert memo_jobs == 0
     assert all(e["skipped"] for e in again)
@@ -362,7 +360,8 @@ def test_staged_e2e_legacy_manifest_memoizes_by_counting(spark, sf_dir,
 
 def test_run_stage_zero_rows_commits_zero(spark, tmp_path):
     """A stage whose frame is empty commits row_count 0: the observed
-    count arrives even though the write job writes no row."""
+    count arrives even though the write job writes no row, and a gate
+    that every row would fail counts 0 violations."""
     import threading
 
     man = mf.Manifest(str(tmp_path / "run"))
@@ -371,7 +370,8 @@ def test_run_stage_zero_rows_commits_zero(spark, tmp_path):
     def run():
         result["snap"] = mf.run_stage(
             spark, man, "empty", [], {},
-            lambda sp: sp.range(10).filter(F.col("id") < 0))
+            lambda sp: sp.range(10).filter(F.col("id") < 0),
+            invalid=F.col("id") < 0)
 
     t = threading.Thread(target=run, daemon=True)
     t.start()
