@@ -16,13 +16,18 @@ session it runs in.  Fixtures:
   under ``--out``; at m=1 the ``--sf`` tables run beside them as the
   anchor;
 * skewed replicas: zipfian authors, a single hot author, boilerplate
-  shingles, a hot LSH cluster, a hot join key.
+  shingles, a hot LSH cluster, a hot join key;
+* 1000*m rows (``id`` plus 16 doubles) checkpointed at 4 and at 32
+  partitions, for the per-task cost of a Python stage.
 
 Each session runs in its own child process, because heap size is
 fixed when the JVM starts.  Every case is timed as build + the bench
 checksum action (best of ``--passes``), inside ``cache_scope``; task
-time and spill come from the AppStatusStore's finished stages, and
-``e`` is the growth exponent t ~ n^e against the previous scale.
+time, task count and spill come from the AppStatusStore's finished
+stages, worker CPU is the user+system CPU of the Python processes under
+the session's JVM (``/proc``; the daemon, its live workers and the
+workers it has reaped), and ``e`` is the growth exponent t ~ n^e
+against the previous scale.
 
 Usage:
   python scripts/scale_curve.py --list
@@ -318,6 +323,17 @@ def shuffle_inputs(spark, sf, m, out):
 
 
 
+def checkpointed_rows(spark, sf, m, out):
+    """1000*m rows of ``id`` plus a 16-double array, checkpointed at 4
+    and at 32 partitions, so a case's action runs one task per
+    partition straight off the blocks."""
+    df = spark.range(1000 * m).select(
+        "id", F.array(*[(F.col("id") * i).cast("double")
+                        for i in range(16)]).alias("v"))
+    return {f"{n}_parts": df.repartition(n).localCheckpoint()
+            for n in (4, 32)}
+
+
 # ------------------------------------------------------------------ cases
 
 def _table(spark, d, table):
@@ -380,6 +396,10 @@ def sessions(ev):
         "sess", F.sum(F.coalesce(F.col("new"), F.lit(0))).over(w))
     return sess.groupBy("user_id", "sess").agg(
         F.count(F.lit(1)).alias("n"))
+
+
+def identity(batches):
+    yield from batches
 
 
 def join(inp, salted):
@@ -468,6 +488,14 @@ SHAPES = {
             d, "doc_id", "text", threshold=0.5),
         "max_bucket_256": lambda s, d: dedup.minhash_dedup_pairs(
             d, "doc_id", "text", threshold=0.5, max_bucket=256)}),
+    # each Python stage pays the worker's per-task setup whatever the
+    # task holds (SCALING.md "Python tasks per slot")
+    "python_tasks_per_slot": Shape(checkpointed_rows, {
+        "map_in_pandas": lambda s, d: d.mapInPandas(identity, d.schema),
+        "map_in_arrow": lambda s, d: d.mapInArrow(identity, d.schema),
+        "rdd_map_partitions": lambda s, d: s.createDataFrame(
+            d.rdd.mapPartitions(identity), d.schema),
+        "jvm_only": lambda s, d: d.agg(F.sum("id").alias("sum_id"))}),
     "hot_join_key": Shape(hot_key_events, {
         "plain_join": lambda s, d: join(d, salted=False),
         "salted_join": lambda s, d: join(d, salted=True)},
@@ -477,11 +505,33 @@ SHAPES = {
 
 # ----------------------------------------------------------------- runner
 
+def worker_cpu_s(jvm_pid: int) -> float:
+    """User+system CPU seconds, own and of reaped children, of every
+    process under ``jvm_pid``: the Python worker daemon and its
+    workers."""
+    parent, cpu = {}, {}
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                stat = f.read()
+        except OSError:   # exited while listing
+            continue
+        fields = stat[stat.rindex(")") + 2:].split()
+        parent[int(pid)] = int(fields[1])
+        cpu[int(pid)] = sum(map(int, fields[11:15]))
+    under, frontier = set(), {jvm_pid}
+    while frontier:
+        frontier = {p for p, pp in parent.items() if pp in frontier} - under
+        under |= frontier
+    return sum(cpu[p] for p in under) / os.sysconf("SC_CLK_TCK")
+
+
 def stage_totals(spark):
-    """``snap()`` -> (executor task seconds, spilled bytes) of the stage
-    attempts that finished since the previous call, read from the
-    driver's AppStatusStore the way bench.py's task_time_reader reads
-    task time (a seen-set of finished attempts, no UI needed)."""
+    """``snap()`` -> (executor task seconds, tasks, spilled bytes,
+    worker CPU seconds) since the previous call: the stage attempts
+    that finished, read from the driver's AppStatusStore the way
+    bench.py's task_time_reader reads task time (a seen-set of
+    finished attempts, no UI needed), and :func:`worker_cpu_s`."""
     sc = spark.sparkContext
     jsc, gw = sc._jsc.sc(), sc._gateway
     statuses = gw.jvm.java.util.ArrayList()
@@ -490,20 +540,25 @@ def stage_totals(spark):
                      .valueOf(status))
     no_quantiles = gw.new_array(gw.jvm.double, 0)
     seen = set()
+    last_cpu = worker_cpu_s(gw.proc.pid)
 
     def snap():
+        nonlocal last_cpu
         jsc.listenerBus().waitUntilEmpty()
         stages = jsc.statusStore().stageList(statuses, False, False,
                                              no_quantiles, None)
-        run_ms = spilled = 0
+        run_ms = tasks = spilled = 0
         for i in range(stages.size()):
             st = stages.apply(i)
             key = (st.stageId(), st.attemptId())
             if key not in seen:
                 seen.add(key)
                 run_ms += st.executorRunTime()
+                tasks += st.numCompleteTasks()
                 spilled += st.memoryBytesSpilled() + st.diskBytesSpilled()
-        return run_ms / 1000.0, spilled
+        cpu = worker_cpu_s(gw.proc.pid)
+        cpu_s, last_cpu = cpu - last_cpu, cpu
+        return run_ms / 1000.0, tasks, spilled, cpu_s
 
     return snap
 
@@ -520,7 +575,7 @@ def run_session(session, names, args) -> None:
                 inputs = shape.fixture(spark, args.sf, m, args.out)
                 for variant, inp in inputs.items():
                     for case, build in shape.cases.items():
-                        best, rows, task_s, spill = math.inf, 0, 0.0, 0
+                        best, rows, totals = math.inf, 0, (0.0, 0, 0, 0.0)
                         for _ in range(args.passes):
                             snap()
                             t0 = time.perf_counter()
@@ -529,7 +584,8 @@ def run_session(session, names, args) -> None:
                             took = time.perf_counter() - t0
                             if took < best:
                                 best = took
-                                task_s, spill = snap()
+                                totals = snap()
+                        task_s, tasks, spill, cpu_s = totals
                         key = (variant, case)
                         e = ""
                         if key in previous:
@@ -537,7 +593,8 @@ def run_session(session, names, args) -> None:
                             e = f"{math.log(best / t_prev) / math.log(m / m0):.2f}"
                         previous[key] = (m, best)
                         print(f"| {name} | {variant} | {case} | {m}x | {rows} "
-                              f"| {best:.2f} | {e} | {task_s:.2f} "
+                              f"| {best:.2f} | {e} | {task_s:.2f} | {tasks} "
+                              f"| {1000 * cpu_s / max(tasks, 1):.0f} "
                               f"| {spill / 2**20:.1f} |", flush=True)
     spark.stop()
 
@@ -572,9 +629,9 @@ def main() -> int:
 
     print(f"# scale curve (base {args.sf}, scales {args.scales}, "
           f"best of {args.passes})\n")
-    print("| shape | variant | case | scale | rows | s | e | task s "
-          "| spill MB |")
-    print("|---|---|---|---|---|---|---|---|---|", flush=True)
+    print("| shape | variant | case | scale | rows | s | e | task s | tasks "
+          "| worker cpu/task ms | spill MB |")
+    print("|---|---|---|---|---|---|---|---|---|---|---|", flush=True)
     for session, (env, _) in SESSIONS.items():
         group = [n for n in names if SHAPES[n].session == session]
         if group:
