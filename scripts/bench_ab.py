@@ -13,7 +13,9 @@ the timing).
 the given substrings.  ``--plans DIR`` also writes each query's
 formatted physical plan to ``DIR/<query>_<tag>.txt`` and adds its
 operator counts (Exchange, Python eval nodes, join strategies, ...)
-to the JSON as ``shape``.
+to the JSON as ``shape``, and the size of its optimized logical plan
+as ``plan_chars`` and ``md5_calls`` (the characters and ``md5(``
+calls of its string form).
 
 Usage: python scripts/bench_ab.py [n_passes] [sf_dir] [--only a,b]
                                   [--plans DIR] [--tag TAG]
@@ -91,12 +93,16 @@ def main() -> None:
               f"| {max(xs):.3f} |")
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            plan = formatted_plan(spark, QUERIES[name](spark, sf_dir))
+            df = QUERIES[name](spark, sf_dir)
+            plan = formatted_plan(spark, df)
+            optimized = df._jdf.queryExecution().optimizedPlan().toString()
             spark.catalog.clearCache()
             with open(os.path.join(args.plans, f"{name}_{args.tag}.txt"),
                       "w") as f:
                 f.write(plan)
-            stats[name]["shape"] = plan_shape(plan)
+            stats[name].update(shape=plan_shape(plan),
+                               plan_chars=len(optimized),
+                               md5_calls=optimized.count("md5("))
     total_mean = sum(s["mean"] for s in stats.values())
     print(f"| TOTAL (sum of means) | {total_mean:.3f} | | | |")
     out = {"n_passes": n, "sf_dir": sf_dir, "stats": stats,

@@ -12,7 +12,7 @@ of pairs never leaves the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # utils/violations.py:5 emoji alphabet (31 codepoints)
@@ -40,13 +40,14 @@ def violate_names(text: Column) -> Column:
     return F.concat(text, F.lit("\n\nShout out to "), name, F.lit("!"))
 
 
-def violate_emoji(text: Column, n: int = 10) -> Column:
+def violate_emoji(text: Column, digest: Column, n: int = 10) -> Column:
     """violations.py:16-21 severity=high: append 10 emojis, md5-hex
-    stream indexed into the 30-char alphabet."""
-    h = F.md5(text.cast("binary"))
+    stream indexed into the 30-char alphabet. ``digest`` is
+    ``md5(text)``, projected as a column by the caller so the ten
+    picks index one digest."""
     alphabet = F.array(*[F.lit(e) for e in EMOJI_ALPHABET])
     picks = [F.element_at(alphabet,
-                          _hex_byte(h, i) % len(EMOJI_ALPHABET) + 1)
+                          _hex_byte(digest, i) % len(EMOJI_ALPHABET) + 1)
              for i in range(n)]
     return F.concat(text, F.lit("\n\n"), *picks)
 
@@ -75,44 +76,70 @@ def violate_length(text: Column, target: str) -> Column:
                                    reps))
 
 
-def generate_negative(chosen: Column, length_req: Column,
-                      emoji_usage: Column) -> Column:
-    """violations.py:39-62 composition order: urls -> names -> emoji
-    (when usage none/infrequent) -> hashtags (always) -> length (over
-    for 'up to', under for 'between'). Constraint defaults follow
-    24-add-negatives.py:113-116 (urls/names disallowed, hashtag
-    limit 3 -> 6 tags)."""
-    text = violate_urls(chosen)
-    text = violate_names(text)
-    usage = F.lower(F.coalesce(emoji_usage, F.lit("")))
-    text = F.when(usage.isin("none", "infrequent"),
-                  violate_emoji(text)).otherwise(text)
-    text = violate_hashtags(text, count=6)  # max(6, limit 3 + 3)
-    lr = F.lower(F.coalesce(length_req, F.lit("")))
-    return (F.when(lr.contains("up to"), violate_length(text, "over"))
-             .when(lr.contains("between"), violate_length(text, "under"))
-             .otherwise(text))
+# working columns of :func:`with_rejected`, dropped before it returns
+_TEXT, _DIGEST = "__neg_text", "__neg_digest"
+_LENGTH, _EMOJI = "__neg_length", "__neg_emoji"
 
 
-def rejected_from_prompt(prompt_col: str, chosen_col: str) -> Column:
-    """:func:`generate_negative` over ``chosen_col``, with the length
-    and emoji constraints parsed from the prompt's
-    ``**Suggested Post Length**:`` and ``**Emoji Usage**:`` lines.
-
-    A constant tree per column-name pair, built once per JVM gateway
-    (``cached_exprs``): the violation-surgery concat chain costs ~300 ms
-    of py4j round-trips per build."""
+def _violation_steps(prompt_col: str, chosen_col: str,
+                     out: str) -> tuple[dict[str, Column], ...]:
+    """The projections of :func:`with_rejected`, one per step. A
+    constant tree per column-name triple, built once per JVM gateway
+    (``cached_exprs``): building the steps' concat chains costs about
+    0.1 s of py4j round-trips per call."""
     from ..session import cached_exprs
 
     def build():
-        prompt = F.col(prompt_col)
-        length_req = F.trim(F.regexp_extract(
-            prompt, r"\*\*Suggested Post Length\*\*:\s*([^\n]*)", 1))
-        emoji_usage = F.lower(F.trim(F.regexp_extract(
-            prompt, r"\*\*Emoji Usage\*\*:\s*([^\n]*)", 1)))
-        return generate_negative(F.col(chosen_col), length_req, emoji_usage)
+        prompt, text, lr = F.col(prompt_col), F.col(_TEXT), F.col(_LENGTH)
+        emoji_low = F.col(_EMOJI).isin("none", "infrequent")
 
-    return cached_exprs(("rejected", prompt_col, chosen_col), build)
+        def constraint(label: str) -> Column:
+            return F.lower(F.coalesce(F.trim(F.regexp_extract(
+                prompt, rf"\*\*{label}\*\*:\s*([^\n]*)", 1)), F.lit("")))
+
+        return (
+            {_LENGTH: constraint("Suggested Post Length"),
+             _EMOJI: constraint("Emoji Usage"),
+             _TEXT: violate_urls(F.col(chosen_col))},
+            {_TEXT: violate_names(text)},
+            {_DIGEST: F.when(emoji_low, F.md5(text.cast("binary")))},
+            {_TEXT: F.when(emoji_low, violate_emoji(text, F.col(_DIGEST)))
+                     .otherwise(text)},
+            {_TEXT: violate_hashtags(text, count=6)},  # max(6, limit 3 + 3)
+            {out: F.when(lr.contains("up to"), violate_length(text, "over"))
+                   .when(lr.contains("between"),
+                         violate_length(text, "under"))
+                   .otherwise(text)},
+        )
+
+    return cached_exprs(("rejected", prompt_col, chosen_col, out), build)
+
+
+def with_rejected(df: DataFrame, prompt_col: str, chosen_col: str,
+                  out: str = "rejected") -> DataFrame:
+    """``df`` plus ``out``: the violation-composed negative of
+    ``chosen_col`` under the length and emoji constraints parsed from
+    the prompt's ``**Suggested Post Length**:`` and ``**Emoji
+    Usage**:`` lines.
+
+    violations.py:39-62 composition order: urls -> names -> emoji
+    (when usage none/infrequent) -> hashtags (always) -> length (over
+    for 'up to', under for 'between'). Constraint defaults follow
+    24-add-negatives.py:113-116 (urls/names disallowed, hashtag
+    limit 3 -> 6 tags).
+
+    One projection per step, each reading the text the step before it
+    produced as a column, and one more for the digest the emoji step
+    indexes ten times (computed only on the rows that step changes).
+    Every step but hashtags refers to its input more than once, so
+    ``CollapseProject`` keeps those projections apart and each
+    intermediate text and digest is computed once per row (3 ``md5``
+    calls in the plan). Composed into one Column, the
+    steps would inline every earlier step's whole tree at each use
+    (230 ``md5`` calls)."""
+    for cols in _violation_steps(prompt_col, chosen_col, out):
+        df = df.withColumns(cols)
+    return df.drop(_TEXT, _DIGEST, _LENGTH, _EMOJI)
 
 
 # ---------------------------------------------------------------------------

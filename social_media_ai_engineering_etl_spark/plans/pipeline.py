@@ -15,6 +15,7 @@ re-run one changed stage, not the pipeline.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,7 +23,6 @@ from pyspark.sql import functions as F
 from ..functions import cleaning
 from ..operators import fanout
 from ..operators import negatives as neg
-from ..sources.io import write_csv_with_parquet_mirror
 from .manifest import (STAGE_VERSION, Manifest, artifact_hasher, run_stage,
                        signature_from_hasher, write_contract)
 
@@ -52,9 +52,8 @@ def _stage_split(pairs: DataFrame) -> DataFrame:
 
 def _stage_negatives(df: DataFrame) -> DataFrame:
     """Stage 24: DPO rows get a violation-composed 'rejected'."""
-    return (df.filter(F.col("split") == "dpo")
-            .withColumn("rejected",
-                        neg.rejected_from_prompt("prompt", "chosen")))
+    return neg.with_rejected(df.filter(F.col("split") == "dpo"),
+                             "prompt", "chosen")
 
 
 def _split_violation() -> Column:
@@ -83,13 +82,14 @@ def run_e2e(spark: SparkSession, sf_dir: str, run_dir: str,
     skips every stage (reuses the snapshots); editing any upstream
     snapshot or the config re-runs exactly the affected suffix.
 
-    Spark jobs: a fresh run costs one job per write (four snapshots,
-    the CSV and its parquet mirror) and the schema inference of
-    ``documents.parquet``. Row counts and the split stage's gate come
-    from the writes and every snapshot is read with the schema its
-    manifest entry records, so no job re-derives either. A memoized
-    re-run whose snapshots still match their recorded sha256 costs no
-    job at all (see plans/manifest.py)."""
+    Spark jobs: a fresh run costs 6, one per write (four snapshots and
+    the CSV) and the schema inference of ``documents.parquet``. The
+    CSV's parquet mirror is a file copy of the terminal snapshot, not
+    a second write of its rows. Row counts and the split stage's gate
+    come from the writes and every snapshot is read with the schema
+    its manifest entry records, so no job re-derives either. A
+    memoized re-run whose snapshots still match their recorded sha256
+    costs no job at all (see plans/manifest.py)."""
     config = config or {}
     manifest = Manifest(run_dir)
     report = []
@@ -117,8 +117,12 @@ def run_e2e(spark: SparkSession, sf_dir: str, run_dir: str,
         report.append({"stage": stage, "rows": snap.rows,
                        "skipped": snap.skipped})
     # S5/S6 terminal CSV + parquet mirror for downstream consumers;
-    # only rewritten when the terminal stage actually ran
+    # only rewritten when the terminal stage actually ran. The mirror
+    # holds the terminal snapshot's rows, so it is a copy of its files
     csv_out = os.path.join(run_dir, "training-mix.csv")
     if not snap.skipped or not os.path.exists(csv_out):
-        write_csv_with_parquet_mirror(snap.df, csv_out)
+        snap.df.write.mode("overwrite").option("header", "true").csv(csv_out)
+        mirror = csv_out + ".parquet"
+        shutil.rmtree(mirror, ignore_errors=True)
+        shutil.copytree(inp, mirror)
     return report

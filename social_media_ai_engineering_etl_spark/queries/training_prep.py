@@ -87,12 +87,11 @@ def q24_negatives(spark, sf_dir):
     prompt constraints; byte-exact via md5 per row."""
     pairs = _derive_reward_pairs(_docs(spark, sf_dir))
 
-    rejected = neg.rejected_from_prompt("prompt", "completion")
-    # materialize the (expensive) negative ONCE in its own projection:
-    # md5 + length below then reference the column — referenced twice,
-    # non-cheap, so CollapseProject keeps the stages apart and the
-    # string-surgery tree is not evaluated per consumer
-    built = pairs.select("doc_id", rejected.alias("__rejected"))
+    # md5 + length below both reference the negative's column, so
+    # CollapseProject keeps its projection apart and the string-surgery
+    # tree is not evaluated per consumer
+    built = neg.with_rejected(pairs, "prompt", "completion",
+                              out="__rejected")
     return built.select(
         "doc_id",
         F.md5(F.col("__rejected").cast("binary")).alias("rejected_md5"),

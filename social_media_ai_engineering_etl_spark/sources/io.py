@@ -128,9 +128,11 @@ def write_csv_with_parquet_mirror(df: DataFrame, csv_path: str,
                                   parquet_path: str | None = None,
                                   mode: str = "overwrite") -> None:
     """S5+S6 (22:122-124, 208-216): CSV sink with header plus a
-    parquet mirror next to it. NOTE: the reference's run-id mode
-    writes every row TWICE (Q2, 22:127+145-147); that defect is not
-    replicated."""
+    parquet mirror next to it, for the CLI's ``--format csv``. The
+    staged pipeline no longer calls it: ``run_e2e`` copies its mirror
+    from the terminal snapshot's files. NOTE: the reference's run-id
+    mode writes every row TWICE (Q2, 22:127+145-147); that defect is
+    not replicated."""
     df.write.mode(mode).option("header", "true").csv(csv_path)
     df.write.mode(mode).parquet(parquet_path or csv_path + ".parquet")
 

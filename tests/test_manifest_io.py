@@ -281,18 +281,94 @@ def _rerun(spark, sf_dir, fresh_e2e, tmp_path, edit=None):
 
 
 def test_staged_e2e_job_budget(spark, sf_dir, fresh_e2e, tmp_path):
-    """A fresh run costs one job per write (four snapshots, the CSV
-    and its parquet mirror) plus the documents schema inference; the
-    split gate rides on its stage's write.  A memoized re-run costs
-    none and reports the same rows."""
+    """A fresh run costs one job per write (four snapshots and the
+    CSV) plus the documents schema inference; the split gate rides on
+    its stage's write and the parquet mirror is a file copy.  A
+    memoized re-run costs none and reports the same rows."""
     _, first, fresh_jobs = fresh_e2e
     assert all(not e["skipped"] for e in first)
-    assert fresh_jobs <= 7
+    assert fresh_jobs <= 6
     again, memo_jobs = _rerun(spark, sf_dir, fresh_e2e, tmp_path)
     assert memo_jobs == 0
     assert all(e["skipped"] for e in again)
     assert [(e["stage"], e["rows"]) for e in again] == \
         [(e["stage"], e["rows"]) for e in first]
+
+
+def _checksum(df):
+    """(rows, bit_xor of xxhash64 over every column)."""
+    row = df.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*df.columns))) \
+        .collect()[0]
+    return row[0], row[1]
+
+
+def _data_files(path):
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+def _assert_mirror_is_terminal_snapshot(spark, run_dir):
+    """The parquet mirror holds exactly the terminal snapshot's files,
+    and so its rows."""
+    snap = os.path.join(run_dir, "24-negatives")
+    mirror = os.path.join(run_dir, "training-mix.csv.parquet")
+    assert _data_files(mirror) == _data_files(snap) != []
+    assert _checksum(spark.read.parquet(mirror)) == \
+        _checksum(spark.read.parquet(snap))
+
+
+def test_staged_e2e_mirror_is_terminal_snapshot(spark, fresh_e2e):
+    """After a fresh run the mirror's rows and checksum are the
+    24-negatives snapshot's."""
+    run_dir, first, _ = fresh_e2e
+    _assert_mirror_is_terminal_snapshot(spark, run_dir)
+    assert _checksum(spark.read.parquet(
+        os.path.join(run_dir, "24-negatives")))[0] == first[-1]["rows"]
+
+
+def test_staged_e2e_rerun_mirror_holds_only_new_files(spark, sf_dir,
+                                                      fresh_e2e, tmp_path):
+    """An upstream edit re-runs the terminal stage; the mirror is
+    replaced by the new snapshot's files, none of the old ones kept."""
+    import shutil
+
+    old = set(_data_files(os.path.join(fresh_e2e[0],
+                                       "training-mix.csv.parquet")))
+
+    def edit_split(run_dir):
+        split = os.path.join(run_dir, "23-split")
+        tmp = str(tmp_path / "split_subset")
+        spark.read.parquet(split).orderBy("doc_id", "pair_idx") \
+            .limit(fresh_e2e[1][2]["rows"] // 2).write.parquet(tmp)
+        shutil.rmtree(split)
+        shutil.move(tmp, split)
+
+    report, _ = _rerun(spark, sf_dir, fresh_e2e, tmp_path, edit_split)
+    assert not report[-1]["skipped"]
+    run_dir = str(tmp_path / "run")
+    assert not old & set(_data_files(
+        os.path.join(run_dir, "training-mix.csv.parquet")))
+    _assert_mirror_is_terminal_snapshot(spark, run_dir)
+
+
+def test_staged_e2e_skipped_terminal_rewrites_missing_csv(spark, sf_dir,
+                                                          fresh_e2e,
+                                                          tmp_path):
+    """With every stage memoized but the CSV gone, the run writes the
+    CSV (its only job) and the mirror again."""
+    import shutil
+
+    def drop_outputs(run_dir):
+        shutil.rmtree(os.path.join(run_dir, "training-mix.csv"))
+        shutil.rmtree(os.path.join(run_dir, "training-mix.csv.parquet"))
+
+    report, jobs = _rerun(spark, sf_dir, fresh_e2e, tmp_path, drop_outputs)
+    assert all(e["skipped"] for e in report)
+    assert jobs == 1
+    run_dir = str(tmp_path / "run")
+    csv = spark.read.option("header", "true").option("multiLine", "true") \
+        .csv(os.path.join(run_dir, "training-mix.csv"))
+    assert csv.count() == report[-1]["rows"]
+    _assert_mirror_is_terminal_snapshot(spark, run_dir)
 
 
 def test_staged_e2e_snapshot_schema_is_inferred_schema(spark, fresh_e2e):

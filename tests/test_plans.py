@@ -674,3 +674,35 @@ def test_widen_scan_targets_the_task_slots(spark, sf_dir):
     plan = plan_of(QUERIES["qx_similarity_topk_gemm"](spark, sf_dir))
     assert f"RoundRobinPartitioning({slots})" in plan
 
+
+def _assert_negatives_stepwise(plan: str) -> None:
+    """The negatives' optimized plan projects each violation step's
+    text once: a handful of ``md5`` calls (a composed tree inlined 230)
+    spread over at least four projections.  No ``md5`` at all means
+    the plan holds no negatives, which fails too."""
+    n_md5 = plan.count("md5(")
+    assert 1 <= n_md5 <= 12, f"{n_md5} md5 calls"
+    n_projects = len(re.findall(r"^[\s+:-]*Project \[", plan, re.M))
+    assert n_projects >= 4, f"{n_projects} Project nodes"
+
+
+def test_negatives_plans_project_each_step_once(spark, sf_dir, tmp_path):
+    """Stage 24 over a stage-23-shaped snapshot read, and q24, keep the
+    violation steps in separate projections; the guard rejects a plan
+    without them."""
+    from social_media_ai_engineering_etl_spark.plans import pipeline
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    schema = pipeline._stage_split(pipeline._stage_pairs(
+        pipeline._stage_posts(docs))).schema
+    os.makedirs(tmp_path / "23-split")
+    split = spark.read.schema(schema).parquet(str(tmp_path / "23-split"))
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    _assert_negatives_stepwise(optimized(pipeline._stage_negatives(split)))
+    _assert_negatives_stepwise(optimized(
+        QUERIES["q24_negatives"](spark, sf_dir)))
+    with pytest.raises(AssertionError, match="0 md5 calls"):
+        _assert_negatives_stepwise(optimized(split))

@@ -930,13 +930,9 @@ def _check_stage24(spark, arts: dict, min_exact: int = 20,
         "prompt string, chosen string")
     length_req = F.trim(F.regexp_extract(
         F.col("prompt"), r"\*\*Suggested Post Length\*\*:\s*([^\n]*)", 1))
-    emoji_usage = F.lower(F.trim(F.regexp_extract(
-        F.col("prompt"), r"\*\*Emoji Usage\*\*:\s*([^\n]*)", 1)))
-    eng = df.select(
+    eng = neg.with_rejected(df, "prompt", "chosen").select(
         "prompt", "chosen",
-        F.lower(length_req).alias("lreq"),
-        neg.generate_negative(F.col("chosen"), length_req,
-                              emoji_usage).alias("rejected")).collect()
+        F.lower(length_req).alias("lreq"), "rejected").collect()
 
     n_exact = n_halved = 0
     for erow, i in zip(eng, postgen):
