@@ -344,10 +344,9 @@ def _queries(*names):
     return {q: lambda s, d, q=q: QUERIES[q](s, d) for q in names}
 
 
-def topk(emb, every=25, k=5):
-    return similarity.cosine_topk_gemm(
-        emb, emb.filter(F.col("vec_id") % every == 0),
-        "vec_id", "embedding", k=k)
+def topk(emb, every=25, k=5, op=similarity.cosine_topk_gemm, **kw):
+    return op(emb, emb.filter(F.col("vec_id") % every == 0),
+              "vec_id", "embedding", k=k, **kw)
 
 
 def phash_wide(d):
@@ -416,10 +415,13 @@ SHAPES = {
         "bpe_learn": lambda s, d: textquality.bpe_learn(
             d, "text", num_merges=8)}),
     "filtered_topk": Shape(replicated_vectors, {
-        "filtered_gemm": lambda s, e: similarity.cosine_topk_gemm_filtered(
-            e, e.filter(F.col("vec_id") % 25 == 0), "vec_id",
-            "embedding", "label", k=5),
-        "global_gemm": lambda s, e: topk(e)}),
+        "filtered_gemm": lambda s, e: topk(
+            e, op=similarity.cosine_topk_gemm_filtered, filter_col="label"),
+        "global_gemm": lambda s, e: topk(e),
+        "pq": lambda s, e: topk(e, op=similarity.cosine_topk_pq,
+                                rerank_factor=4),
+        "ivfpq": lambda s, e: topk(e, op=similarity.cosine_topk_ivfpq,
+                                   n_probe=6)}),
     "media_neardup": Shape(planted_docs, {
         "phash": lambda s, d: mm.phash_neardup_pairs(
             mm.media_phash(mm.attach_fake_media(d, text_col="text"))),

@@ -22,12 +22,92 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
+
+
+def _unit_rows(X):
+    """Rows scaled to unit L2 norm; zero rows stay zero (cosine 0)."""
+    n = np.linalg.norm(X, axis=1, keepdims=True)
+    return X / np.where(n == 0, 1.0, n)
+
+
+def _query_matrix(queries: DataFrame, id_col: str, vec_col: str, *extra):
+    """Collect the query set driver-side (small by ANN contract):
+    ``(frame of qid, qv and the extra columns, float64 matrix, its
+    unit rows)``, or None when no query has a vector."""
+    qpd = (queries.filter(F.col(vec_col).isNotNull())
+           .select(F.col(id_col).alias("qid"),
+                   _as_double(F.col(vec_col)).alias("qv"), *extra)
+           .toPandas())
+    if qpd.empty:    # np.stack needs >= 1 row
+        return None
+    Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
+    return qpd, Q, _unit_rows(Q)
+
+
+def _no_neighbours(spark, col: str = "cosine_sim") -> DataFrame:
+    """The empty top-k result, with the standard schema."""
+    return spark.createDataFrame(
+        [], f"query_id long, rank int, corpus_id long, {col} double")
+
+
+def _topk_mask(key, k: int):
+    """Partial top-k of a queries x candidates key matrix: True where an
+    entry is >= its row's k-th largest key (``np.partition``, no sort).
+    Ties at the boundary all survive; the global window ranks them and
+    breaks ties by corpus_id.  NaN orders above every number, as in
+    Spark; -inf (the callers' self-pair mask) is never kept."""
+    key = np.where(np.isnan(key), np.inf, key)
+    keep = key > -np.inf
+    n = key.shape[1]
+    if k < n:
+        keep &= key >= np.partition(key, n - k, axis=1)[:, [n - k]]
+    return keep
+
+
+def _batch_topk(qids, ids, scores, k: int, rounded: bool = False):
+    """One Arrow batch's partial top-k from a queries x candidates score
+    matrix, self pairs excluded: the kept ``(query_id, corpus_id,
+    score)`` arrays.  ``ids`` names the candidates of every row, or of
+    each row when it has the matrix's shape.  The cut ranks by the
+    score, or by its 6-dp rounding when ``rounded`` — the same key the
+    caller's :func:`_ranked` window orders by.  Kept per batch:
+    n_queries * k entries plus boundary ties."""
+    ids = np.broadcast_to(ids, scores.shape)
+    key = np.round(scores, 6) if rounded else scores.copy()
+    key[qids[:, None] == ids] = -np.inf
+    qi, ci = np.nonzero(_topk_mask(key, k))
+    return qids[qi], ids[qi, ci], scores[qi, ci]
+
+
+def _partial_frame(parts, col: str) -> pd.DataFrame:
+    """The mapInPandas output of :func:`_batch_topk` parts.  The score
+    is Arrow-backed: mapInPandas turns a numpy NaN into NULL, which the
+    window ranks last; Spark (and the bruteforce twin) rank NaN first."""
+    q, c, s = (np.concatenate(a) for a in zip(*parts))
+    return pd.DataFrame({"query_id": q, "corpus_id": c,
+                         col: pd.arrays.ArrowExtensionArray(pa.array(s))})
+
+
+def _ranked(scored: DataFrame, k: int, col: str = "cosine_sim",
+            rounded: bool = False) -> DataFrame:
+    """The per-query top-k window: score DESC (its 6-dp rounding when
+    ``rounded``), ties by corpus_id; the score is output at 6 dp."""
+    key = F.round(col, 6) if rounded else F.col(col)
+    w = Window.partitionBy("query_id").orderBy(key.desc(),
+                                               F.col("corpus_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "corpus_id",
+                    F.round(col, 6).alias(col)))
 
 
 def _safe_cosine(dot: Column) -> Column:
@@ -61,12 +141,7 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame,
                       F.lit(0.0), lambda acc, v: acc + v)
     scored = (c.join(F.broadcast(q), F.col("corpus_id") != F.col("query_id"))
               .withColumn("cosine_sim", _safe_cosine(dot)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return _ranked(scored, k)
 
 
 def hyperplane_planes(dim: int, num_planes: int, seed: int = 42) -> list[list[float]]:
@@ -137,12 +212,7 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, id_col: str,
               .filter(F.col("corpus_id") != F.col("query_id"))
               .dropDuplicates(["query_id", "corpus_id"])
               .withColumn("cosine_sim", _safe_cosine(dot)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return _ranked(scored, k)
 
 
 def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -165,9 +235,7 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
     if n_avail == 0 or queries.isEmpty():
         # empty slice (or no queries): no codebook/centroids can be
         # trained -> empty result with the standard top-k schema
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, rank int, corpus_id long, "
-                "cosine_sim double")
+        return _no_neighbours(corpus.sparkSession)
     # tiny corpora: KMeans refuses k > points (FAISS clamps the same
     # way) and requires k >= 2 — below that, cells are meaningless and
     # exact GEMM over the whole corpus IS the flat-index fallback
@@ -212,12 +280,7 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
     scored = (assigned.join(F.broadcast(probes), "cell")
               .filter(F.col("corpus_id") != F.col("query_id"))
               .withColumn("cosine_sim", _safe_cosine(dot)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return _ranked(scored, k)
 
 
 def cosine_topk_ivf_fixed(corpus: DataFrame, queries: DataFrame,
@@ -281,12 +344,7 @@ def cosine_topk_ivf_fixed(corpus: DataFrame, queries: DataFrame,
     scored = (c.join(F.broadcast(probes), "cell")
               .filter(F.col("corpus_id") != F.col("query_id"))
               .withColumn("cosine_sim", _safe_cosine(dot)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return _ranked(scored, k)
 
 
 def cosine_topk_ivfpq_fixed(corpus: DataFrame, queries: DataFrame,
@@ -308,28 +366,19 @@ def cosine_topk_ivfpq_fixed(corpus: DataFrame, queries: DataFrame,
     per-batch partial top-k — the same shuffle contract as
     cosine_topk_pq/gemm.  No rerank (rerank_factor composes exactly
     as in cosine_topk_pq when wanted)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
     cents = np.asarray(centroids, dtype=np.float64)
     n_cent = len(cents)
     n_probe = min(n_probe, n_cent)
     m, kc, dsub = codebooks.shape
-    out_schema = "query_id long, rank int, corpus_id long, approx_sim double"
 
     c = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("id"),
         _as_double(F.col(vec_col)).alias("v"))
-    qpd = (queries.filter(F.col(vec_col).isNotNull())
-           .select(F.col(id_col).alias("qid"),
-                   _as_double(F.col(vec_col)).alias("qv")).toPandas())
-    if qpd.empty or c.isEmpty():
-        return spark.createDataFrame([], out_schema)
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None or c.isEmpty():
+        return _no_neighbours(corpus.sparkSession, "approx_sim")
+    qpd, Q, Qn = qm
     qids = qpd["qid"].to_numpy()
-    Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn == 0, 1.0, qn)
     lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub),
                     codebooks)
     # probe cells driver-side: rounded d2, first-min = smallest cell
@@ -350,8 +399,7 @@ def cosine_topk_ivfpq_fixed(corpus: DataFrame, queries: DataFrame,
             d2 = np.round(((X[:, None, :] - cents[None, :, :]) ** 2)
                           .sum(-1), 6)
             cell = d2.argmin(1)
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(n == 0, 1.0, n)
+            Xn = _unit_rows(X)
             codes = np.empty((len(Xn), m), dtype=np.int64)
             for j in range(m):
                 S = Xn[:, j * dsub:(j + 1) * dsub]
@@ -393,12 +441,7 @@ def cosine_topk_ivfpq_fixed(corpus: DataFrame, queries: DataFrame,
 
     scored = enc.mapInPandas(
         scan, "query_id long, corpus_id long, approx_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("approx_sim", 6).desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("approx_sim", 6).alias("approx_sim")))
+    return _ranked(scored, k, "approx_sim", rounded=True)
 
 
 def cosine_topk_gemm(corpus: DataFrame, queries: DataFrame,
@@ -414,24 +457,17 @@ def cosine_topk_gemm(corpus: DataFrame, queries: DataFrame,
     collected driver-side (queries are small by ANN contract) and
     shipped in the closure; each corpus batch emits only its partial
     top-k, so the shuffle into the global per-query window is
-    ``num_batches * n_queries * k`` rows, independent of corpus size.
+    ``num_batches * n_queries * k`` rows (plus ties at a batch's k-th
+    score), independent of corpus size.
 
     Output contract identical to ``cosine_topk_bruteforce`` (same
     rounding, same tie-break) — parity is asserted in tests.
     """
-    import numpy as np
-    import pandas as pd
-
-    qpd = (queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("qid"),
-                          _as_double(F.col(vec_col)).alias("qv"))
-           .toPandas())
-    out_schema = "query_id long, rank int, corpus_id long, cosine_sim double"
-    if qpd.empty:    # np.stack needs >=1 row; empty queries -> empty result
-        return corpus.sparkSession.createDataFrame([], out_schema)
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None:
+        return _no_neighbours(corpus.sparkSession)
+    qpd, _, Qn = qm
     qids = qpd["qid"].to_numpy()
-    Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn == 0, 1.0, qn)   # zero vectors stay zero -> cos 0
 
     c = corpus.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("corpus_id"),
                       _as_double(F.col(vec_col)).alias("cv"))
@@ -440,31 +476,15 @@ def cosine_topk_gemm(corpus: DataFrame, queries: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            ids = pdf["corpus_id"].to_numpy()
-            cn = np.linalg.norm(C, axis=1, keepdims=True)
-            Cn = C / np.where(cn == 0, 1.0, cn)
-            sims = Cn @ Qn.T                       # (n_corpus, n_queries)
-            n_c, n_q = sims.shape
-            out = pd.DataFrame({
-                "query_id": np.repeat(qids, n_c),
-                "corpus_id": np.tile(ids, n_q),
-                "cosine_sim": sims.T.ravel(),
-            })
-            out = out[out.query_id != out.corpus_id]
-            out = (out.sort_values(["query_id", "cosine_sim", "corpus_id"],
-                                   ascending=[True, False, True])
-                   .groupby("query_id").head(k))   # per-batch partial top-k
-            yield out
+            Cn = _unit_rows(np.stack(pdf["cv"].to_numpy()).astype(np.float64))
+            sims = (Cn @ Qn.T).T                   # (n_queries, n_corpus)
+            yield _partial_frame(
+                [_batch_topk(qids, pdf["corpus_id"].to_numpy(), sims, k)],
+                "cosine_sim")
 
     scored = c.mapInPandas(
         score, "query_id long, corpus_id long, cosine_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return _ranked(scored, k)
 
 
 def cosine_topk_gemm_filtered(corpus: DataFrame, queries: DataFrame,
@@ -487,22 +507,12 @@ def cosine_topk_gemm_filtered(corpus: DataFrame, queries: DataFrame,
     Contract (rounding, tie-break, self-exclusion) identical to
     :func:`cosine_topk_gemm`.
     """
-    import numpy as np
-    import pandas as pd
-
-    qpd = (queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("qid"),
-                          F.col(filter_col).alias("fv"),
-                          _as_double(F.col(vec_col)).alias("qv"))
-           .toPandas())
-    out_schema = "query_id long, rank int, corpus_id long, cosine_sim double"
-    if qpd.empty:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    groups: dict = {}
-    for fv, g in qpd.groupby("fv"):
-        Q = np.stack(g["qv"].to_numpy()).astype(np.float64)
-        qn = np.linalg.norm(Q, axis=1, keepdims=True)
-        groups[fv] = (g["qid"].to_numpy(),
-                      Q / np.where(qn == 0, 1.0, qn))
+    qm = _query_matrix(queries, id_col, vec_col, F.col(filter_col).alias("fv"))
+    if qm is None:
+        return _no_neighbours(corpus.sparkSession)
+    qpd, _, Qn = qm
+    groups = {fv: (g["qid"].to_numpy(), Qn[g.index])
+              for fv, g in qpd.groupby("fv")}
 
     c = (corpus
          .filter(F.col(vec_col).isNotNull())
@@ -516,38 +526,20 @@ def cosine_topk_gemm_filtered(corpus: DataFrame, queries: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            outs = []
+            parts = []
             for fv, g in pdf.groupby("fv"):
                 if fv not in groups:
                     continue
                 qids, Qn = groups[fv]
-                C = np.stack(g["cv"].to_numpy()).astype(np.float64)
-                ids = g["corpus_id"].to_numpy()
-                cn = np.linalg.norm(C, axis=1, keepdims=True)
-                Cn = C / np.where(cn == 0, 1.0, cn)
-                sims = Cn @ Qn.T
-                n_c, n_q = sims.shape
-                out = pd.DataFrame({
-                    "query_id": np.repeat(qids, n_c),
-                    "corpus_id": np.tile(ids, n_q),
-                    "cosine_sim": sims.T.ravel(),
-                })
-                out = out[out.query_id != out.corpus_id]
-                outs.append(
-                    out.sort_values(["query_id", "cosine_sim", "corpus_id"],
-                                    ascending=[True, False, True])
-                    .groupby("query_id").head(k))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                Cn = _unit_rows(np.stack(g["cv"].to_numpy()).astype(np.float64))
+                parts.append(_batch_topk(qids, g["corpus_id"].to_numpy(),
+                                         (Cn @ Qn.T).T, k))
+            if parts:
+                yield _partial_frame(parts, "cosine_sim")
 
     scored = c.mapInPandas(
         score, "query_id long, corpus_id long, cosine_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return _ranked(scored, k)
 
 
 def embedding_pairs_blocked(df: DataFrame, id_col: str, vec_col: str,
@@ -570,9 +562,6 @@ def embedding_pairs_blocked(df: DataFrame, id_col: str, vec_col: str,
     (:func:`..dedup.embedding_dedup_pairs`, kept as the semantic spec)
     and the full-corpus ``toPandas`` GEMM (VERDICT r1 #3/#4).
     """
-    import numpy as np
-    import pandas as pd
-
     v = (df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).cast("long").alias("id"),
                    _as_double(F.col(vec_col)).alias("v"))
          .withColumn("b", F.pmod(F.hash("id"), F.lit(n_blocks))))
@@ -651,9 +640,6 @@ def embedding_pairs_lsh(df: DataFrame, id_col: str, vec_col: str,
     measured 25s for 2,000x64 at P=2/L=24 (where wide buckets make
     candidates near-exhaustive); this form is ~3s on the same input
     and its per-task memory is one bucket."""
-    import numpy as np
-    import pandas as pd
-
     planes = hyperplane_planes(dim, num_planes * num_tables, seed)
     v = df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).cast("long").alias("id"),
                   _as_double(F.col(vec_col)).alias("v"))
@@ -702,8 +688,6 @@ def pq_train_codebooks(corpus: DataFrame, vec_col: str, m: int = 8,
     codebooks are an (m, k, dim/m) array, a few KB that ships in the
     encode/scan closures. Deterministic: seeded init, fixed
     iterations."""
-    import numpy as np
-
     pdf = (corpus.filter(F.col(vec_col).isNotNull()).select(_as_double(F.col(vec_col)).alias("v"))
            .limit(sample_size).toPandas())
     X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
@@ -740,9 +724,6 @@ def pq_encode(corpus: DataFrame, id_col: str, vec_col: str,
     precision BEFORE the argmin (first-min = smallest code on ties) —
     the cross-engine-stable assignment the DuckDB PQ oracle replays
     (same argmin lesson as semantic_contamination / IVF-fixed)."""
-    import numpy as np
-    import pandas as pd
-
     m, k, dsub = codebooks.shape
 
     def enc(batches):
@@ -785,31 +766,18 @@ def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
     fixture: recall@5 0.83 raw -> 0.99+ at rerank_factor=4, while
     the float corpus is touched for only n_q * rerank_factor * k
     rows. Recall-vs-exact contract in tests/test_dedup.py."""
-    import numpy as np
-    import pandas as pd
-
+    col = "cosine_sim" if rerank_factor > 0 else "approx_sim"
+    qm = _query_matrix(queries, id_col, vec_col)
     # all-NULL vectors would reach pq_train_codebooks as an empty
     # pandas frame (np.stack crash) — skip-null convention applies to
     # the TRAINABLE rows, not mere row count
-    if corpus.filter(F.col(vec_col).isNotNull()).isEmpty():
-        # no trainable corpus -> no codebooks, nothing to retrieve
-        col = "cosine_sim" if rerank_factor > 0 else "approx_sim"
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id long, rank int, corpus_id long, {col} double")
+    if qm is None or corpus.filter(F.col(vec_col).isNotNull()).isEmpty():
+        return _no_neighbours(corpus.sparkSession, col)
     if codebooks is None:
         codebooks = pq_train_codebooks(corpus, vec_col, m=m, k=kc)
     m_, kc_, dsub = codebooks.shape
-
-    qpd = (queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("qid"),
-                          _as_double(F.col(vec_col)).alias("qv"))
-           .toPandas())
-    out_schema = "query_id long, rank int, corpus_id long, approx_sim double"
-    if qpd.empty:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+    qpd, _, Qn = qm
     qids = qpd["qid"].to_numpy()
-    Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn == 0, 1.0, qn)
     # LUT[q, j, c] = <q_sub_j, centroid_jc>; sum over j approximates cos
     lut = np.einsum("qjd,jcd->qjc",
                     Qn.reshape(len(Qn), m_, dsub), codebooks)
@@ -825,54 +793,41 @@ def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
             if not len(pdf):
                 continue
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["id"].to_numpy()
-            scores = np.zeros((len(qids), len(ids)))
+            scores = np.zeros((len(qids), len(codes)))
             for j in range(m_):
                 scores += lut[:, j, codes[:, j]]
-            n_q, n_c = scores.shape
-            out = pd.DataFrame({
-                "query_id": np.repeat(qids, n_c),
-                "corpus_id": np.tile(ids, n_q),
-                "approx_sim": scores.ravel(),
-            })
-            out = out[out.query_id != out.corpus_id]
             # cut at the 6-dp OUTPUT precision: ranking by raw floats
             # lets accumulation-order ulps (engine-specific) reorder
             # scores that round to the same value — on near-constant
             # data the ulps ARE the order (r5 degenerate-parity
             # finding); id-tiebreak at rounded precision is portable
-            out["__r6"] = out["approx_sim"].round(6)
-            out = (out.sort_values(["query_id", "__r6", "corpus_id"],
-                                   ascending=[True, False, True])
-                   .groupby("query_id").head(k_scan).drop(columns="__r6"))
-            yield out
+            yield _partial_frame(
+                [_batch_topk(qids, pdf["id"].to_numpy(), scores, k_scan,
+                             rounded=True)], "approx_sim")
 
     scored = enc.mapInPandas(
         scan, "query_id long, corpus_id long, approx_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("approx_sim", 6).desc(), F.col("corpus_id"))
-    shortlist = (scored.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_scan))
+    shortlist = _ranked(scored, k_scan, "approx_sim", rounded=True)
     if rerank_factor <= 0:
-        return shortlist.select("query_id", "rank", "corpus_id",
-                                F.round("approx_sim", 6)
-                                .alias("approx_sim"))
+        return shortlist
+    return _exact_rerank(shortlist, corpus, id_col, vec_col, qids, Qn, k)
 
-    # exact refinement: fetch floats for the shortlist only
+
+def _exact_rerank(shortlist: DataFrame, corpus: DataFrame, id_col: str,
+                  vec_col: str, qids, Qn, k: int) -> DataFrame:
+    """PQ refinement: fetch the float vectors of the (query_id,
+    corpus_id) shortlist rows only, recompute exact cosines, re-top-k."""
     qrow = {int(q): i for i, q in enumerate(qids)}
 
     def exact(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            cn = np.linalg.norm(C, axis=1, keepdims=True)
-            Cn = C / np.where(cn == 0, 1.0, cn)
+            Cn = _unit_rows(np.stack(pdf["cv"].to_numpy()).astype(np.float64))
             qi = pdf["query_id"].map(qrow).to_numpy()
-            sims = (Cn * Qn[qi]).sum(axis=1)
             yield pd.DataFrame({"query_id": pdf["query_id"].to_numpy(),
                                 "corpus_id": pdf["corpus_id"].to_numpy(),
-                                "cosine_sim": sims})
+                                "cosine_sim": (Cn * Qn[qi]).sum(axis=1)})
 
     cand = shortlist.select("query_id", "corpus_id").join(
         corpus.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("corpus_id"),
@@ -880,12 +835,7 @@ def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
         "corpus_id")
     rescored = cand.mapInPandas(
         exact, "query_id long, corpus_id long, cosine_sim double")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return _ranked(rescored, k)
 
 
 def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -905,8 +855,6 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
     the code table; scoring is LUT adds inside mapInPandas with
     per-batch partial top-k — the same shuffle contract as
     cosine_topk_gemm/pq."""
-    import numpy as np
-    import pandas as pd
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -915,11 +863,10 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
     # not the raw corpus — see cosine_topk_ivf's k-clamp note
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     n_avail = corpus.limit(n_centroids).count()
-    if n_avail == 0 or queries.isEmpty():
+    qm = _query_matrix(queries, id_col, vec_col)
+    if n_avail == 0 or qm is None:
         # empty slice: neither codebooks nor centroids can be trained
-        return spark.createDataFrame(
-            [], "query_id long, rank int, corpus_id long, "
-                "cosine_sim double")
+        return _no_neighbours(spark)
     n_centroids = min(n_centroids, n_avail)
     if n_centroids < 2:  # flat-index fallback, same as cosine_topk_ivf
         return cosine_topk_gemm(corpus, queries, id_col, vec_col, k=k)
@@ -935,16 +882,8 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
         "id", F.col("prediction").alias("cell"))
     enc = pq_encode(corpus, id_col, vec_col, codebooks).join(cells, "id")
 
-    qpd = (queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("qid"),
-                          _as_double(F.col(vec_col)).alias("qv"))
-           .toPandas())
-    out_schema = "query_id long, rank int, corpus_id long, cosine_sim double"
-    if qpd.empty:
-        return spark.createDataFrame([], out_schema)
+    qpd, Q, Qn = qm
     qids = qpd["qid"].to_numpy()
-    Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn == 0, 1.0, qn)
     lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m_, dsub),
                     codebooks)
     # probe cells driver-side: centroid matrix is tiny
@@ -964,59 +903,33 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
             if not len(pdf):
                 continue
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+            q = pdf["query_id"].to_numpy()
             qi = pdf["query_id"].map(qrow).to_numpy()
             s = np.zeros(len(pdf))
             for j in range(m_):
                 s += lut[qi, j, codes[:, j]]
-            out = pd.DataFrame({"query_id": pdf["query_id"].to_numpy(),
-                                "corpus_id": pdf["id"].to_numpy(),
-                                "approx_sim": s})
-            out = out[out.query_id != out.corpus_id]
-            # cut at the 6-dp OUTPUT precision: ranking by raw floats
-            # lets accumulation-order ulps (engine-specific) reorder
-            # scores that round to the same value — on near-constant
-            # data the ulps ARE the order (r5 degenerate-parity
-            # finding); id-tiebreak at rounded precision is portable
-            out["__r6"] = out["approx_sim"].round(6)
-            out = (out.sort_values(["query_id", "__r6", "corpus_id"],
-                                   ascending=[True, False, True])
-                   .groupby("query_id").head(k_scan).drop(columns="__r6"))
-            yield out
+            # the probe join mixes queries in one batch: each query's
+            # rows become one row of a -inf-padded matrix, cut at the
+            # 6-dp key as in cosine_topk_pq
+            order = np.argsort(q, kind="stable")
+            uq, first, n = np.unique(q[order], return_index=True,
+                                     return_counts=True)
+            g = np.repeat(np.arange(len(uq)), n)
+            at = (g, np.arange(len(order)) - first[g])
+            S = np.full((len(uq), n.max()), -np.inf)
+            S[at] = s[order]
+            ids = np.zeros(S.shape, np.int64)
+            ids[at] = pdf["id"].to_numpy()[order]
+            yield _partial_frame(
+                [_batch_topk(uq, ids, S, k_scan, rounded=True)],
+                "approx_sim")
 
     cand_codes = enc.join(F.broadcast(probes), "cell") \
         .select("query_id", "id", "codes")
     scored = cand_codes.mapInPandas(
         scan, "query_id long, corpus_id long, approx_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("corpus_id"))
-    shortlist = (scored.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_scan)
-                 .select("query_id", "corpus_id"))
-
-    def exact(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            cn = np.linalg.norm(C, axis=1, keepdims=True)
-            Cn = C / np.where(cn == 0, 1.0, cn)
-            qi = pdf["query_id"].map(qrow).to_numpy()
-            sims = (Cn * Qn[qi]).sum(axis=1)
-            yield pd.DataFrame({"query_id": pdf["query_id"].to_numpy(),
-                                "corpus_id": pdf["corpus_id"].to_numpy(),
-                                "cosine_sim": sims})
-
-    cand = shortlist.join(
-        corpus.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("corpus_id"),
-                      _as_double(F.col(vec_col)).alias("cv")), "corpus_id")
-    rescored = cand.mapInPandas(
-        exact, "query_id long, corpus_id long, cosine_sim double")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    shortlist = _ranked(scored, k_scan, "approx_sim", rounded=True)
+    return _exact_rerank(shortlist, corpus, id_col, vec_col, qids, Qn, k)
 
 
 def hybrid_retrieval_topk(docs: DataFrame, emb: DataFrame,
@@ -1118,8 +1031,6 @@ def semantic_contamination(corpus: DataFrame, benchmark: DataFrame,
     so last-ulp float noise between BLAS and DuckDB accumulation
     orders cannot flip the reported id.
     """
-    import numpy as np
-
     out_schema = (f"{id_col} long, nearest_benchmark_id long, "
                   "max_benchmark_cosine double, contaminated int")
     spark = corpus.sparkSession
@@ -1151,7 +1062,6 @@ def semantic_contamination(corpus: DataFrame, benchmark: DataFrame,
         bcast = spark.sparkContext.broadcast((bids, B))
 
         def score(batches):
-            import pandas as pd
             bids_, B_ = bcast.value
             for pdf in batches:
                 if pdf.empty:
@@ -1169,8 +1079,6 @@ def semantic_contamination(corpus: DataFrame, benchmark: DataFrame,
         return c.mapInPandas(score, out_schema)
 
     # --- large-benchmark path: distributed blocked GEMM -------------
-    import pandas as pd
-
     blocks = F.array(*[F.lit(i) for i in range(n_blocks)])
     tagged = (b.withColumn("blk", F.pmod(F.hash("bid"), F.lit(n_blocks)))
               .select("blk", F.col("bid").alias("rid"),

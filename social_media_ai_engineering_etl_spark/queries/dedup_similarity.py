@@ -34,6 +34,13 @@ def _emb_narrow(spark, sf_dir):
     return read_parquet_cached(spark, os.path.join(sf_dir, "embeddings.parquet"))
 
 
+def _query_vectors(spark, sf_dir):
+    # every 25th vector: the query set the GEMM/PQ operators collect
+    # to the driver.  Read unwidened, so the 40-row collect is one job,
+    # not widen_scan's round-robin shuffle plus the job that reads it
+    return _emb_narrow(spark, sf_dir).filter(F.col("vec_id") % 25 == 0)
+
+
 # --------------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------------
@@ -435,7 +442,7 @@ def qx_similarity_topk_gemm(spark, sf_dir):
     contract and oracle as qx_similarity_topk; the arithmetic path
     that wins once corpus x queries dwarfs Arrow transfer cost."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    queries = _query_vectors(spark, sf_dir)
     return similarity.cosine_topk_gemm(emb, queries, "vec_id", "embedding",
                                        k=5).orderBy("query_id", "rank")
 
@@ -474,7 +481,7 @@ def qx_similarity_topk_filtered(spark, sf_dir):
     group-wise matmul against the matching query sub-matrix.  Same
     contract as qx_similarity_topk_gemm."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    queries = _query_vectors(spark, sf_dir)
     return similarity.cosine_topk_gemm_filtered(
         emb, queries, "vec_id", "embedding", "label", k=5
     ).orderBy("query_id", "rank")
@@ -1821,7 +1828,7 @@ def qx_similarity_topk_pq_fixed(spark, sf_dir):
     the codebook trainer is the only difference."""
     import numpy as np
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    queries = _query_vectors(spark, sf_dir)
     cb = np.array(similarity.hyperplane_planes(8, 128, seed=11)) \
         .reshape(8, 16, 8)
     return similarity.cosine_topk_pq(
@@ -1840,7 +1847,7 @@ def qx_similarity_topk_pq(spark, sf_dir):
     Rows-only (model-derived codebooks); recall contract vs exact in
     tests/test_dedup.py (measured 0.99 @ rerank_factor=4)."""
     emb = _emb_narrow(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    queries = _query_vectors(spark, sf_dir)
     return similarity.cosine_topk_pq(emb, queries, "vec_id", "embedding",
                                      k=5, rerank_factor=4
                                      ).orderBy("query_id", "rank")
@@ -2024,7 +2031,7 @@ def qx_similarity_topk_ivfpq_fixed(spark, sf_dir):
     fits, recall-contracted)."""
     import numpy as np
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    queries = _query_vectors(spark, sf_dir)
     cents = similarity.hyperplane_planes(64, 16, seed=7)
     cb = np.array(similarity.hyperplane_planes(8, 128, seed=11)) \
         .reshape(8, 16, 8)
@@ -2044,7 +2051,7 @@ def qx_similarity_topk_ivfpq(spark, sf_dir):
     PQ layer loses nothing after rerank; measured equal to IVF-only
     at the same n_probe)."""
     emb = _emb_narrow(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    queries = _query_vectors(spark, sf_dir)
     return similarity.cosine_topk_ivfpq(emb, queries, "vec_id", "embedding",
                                         k=5, n_probe=6
                                         ).orderBy("query_id", "rank")
@@ -2097,7 +2104,7 @@ def qx_hard_negatives(spark, sf_dir):
     the similarity oracles already rest on."""
     from pyspark.sql import Window
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    queries = _query_vectors(spark, sf_dir)
     top = similarity.cosine_topk_gemm(emb, queries, "vec_id",
                                       "embedding", k=10)
     w = Window.partitionBy("query_id").orderBy(

@@ -1,6 +1,7 @@
 """Recall/precision contracts for the hash-based (non-SQL-oracle)
 dedup and ANN operators, checked against their exact counterparts."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -161,6 +162,115 @@ def test_gemm_topk_matches_bruteforce(emb):
         emb, queries, "vec_id", "embedding", k=5
     ).orderBy("query_id", "rank").collect()
     assert [tuple(r) for r in brute] == [tuple(r) for r in gemm]
+
+
+def _rows(df):
+    """Collected top-k rows with NaN as a comparable token."""
+    return [tuple("nan" if v != v else v for v in r)
+            for r in df.orderBy("query_id", "rank").collect()]
+
+
+def test_gemm_topk_ranks_nan_like_bruteforce(spark):
+    """A NaN similarity orders above every number in Spark, so the
+    bruteforce twin ranks the pair with the NaN vector first; the GEMM
+    batch cut (and the filtered GEMM's, one label here) must keep it."""
+    nan = float("nan")
+    vecs = [[1.0, 0.0], [0.9, 0.1], [0.0, 1.0], [nan, 1.0],
+            [0.5, 0.5], [-1.0, 0.0], [0.7, 0.7]]
+    emb = spark.createDataFrame(
+        [(i, 0, v) for i, v in enumerate(vecs)],
+        "vec_id long, label long, embedding array<double>")
+    brute = _rows(similarity.cosine_topk_bruteforce(
+        emb, emb, "vec_id", "embedding", k=3))
+    assert brute[0] == (0, 1, 3, "nan")
+    assert _rows(similarity.cosine_topk_gemm(
+        emb, emb, "vec_id", "embedding", k=3)) == brute
+    assert _rows(similarity.cosine_topk_gemm_filtered(
+        emb, emb, "vec_id", "embedding", "label", k=3)) == brute
+
+
+def test_gemm_topk_keeps_boundary_ties_across_arrow_batches(spark):
+    """Equal similarities at the k-th boundary, the lower corpus_id in
+    a LATER Arrow batch: each batch's cut keeps its tied rows and the
+    global window breaks the tie by corpus_id, as bruteforce does."""
+    tie = [0.6, 0.8]
+    rows = [(0, [1.0, 0.0]), (9, [1.0, 0.1]), (7, tie), (8, tie),
+            (5, [0.0, 1.0]), (6, [-1.0, 0.0]), (2, tie), (4, tie)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>").coalesce(1)
+    queries = emb.filter("vec_id = 0")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        def tag(batches):
+            for i, pdf in enumerate(batches):
+                yield pdf[["vec_id"]].assign(batch=i)
+        batch = {r.vec_id: r.batch for r in emb.mapInPandas(
+            tag, "vec_id long, batch int").collect()}
+        assert batch[2] == batch[4] > batch[7] == batch[8] == batch[0]
+        got = _rows(similarity.cosine_topk_gemm(
+            emb, queries, "vec_id", "embedding", k=3))
+    finally:
+        spark.conf.set(key, old)
+    assert [r[2] for r in got] == [9, 2, 4]
+    assert got == _rows(similarity.cosine_topk_bruteforce(
+        emb, queries, "vec_id", "embedding", k=3))
+
+
+def _reference_topk_mask(key, k):
+    """Row-wise top-k by (NaN first, key DESC, column), plus every
+    entry equal to the k-th; -inf entries are never candidates."""
+    keep = np.zeros(key.shape, bool)
+    for r, row in enumerate(key):
+        cols = np.arange(len(row))
+        nan = np.isnan(row)
+        order = np.lexsort((cols, -np.where(nan, 0.0, row), ~nan))
+        top = [c for c in order if row[c] != -np.inf][:k]
+        keep[r, top] = True
+        if len(top) == k:
+            kth = row[top[-1]]
+            keep[r] |= (row == kth) | (nan & np.isnan(kth))
+    return keep
+
+
+def test_topk_mask_matches_lexsort_reference():
+    """The partial top-k kernel against a full-sort reference on random
+    matrices: forced ties (keys on a coarse grid), NaN, -inf self-pair
+    masks, k >= the candidate count, and empty batches."""
+    from social_media_ai_engineering_etl_spark.operators.similarity import (
+        _batch_topk, _topk_mask)
+    rng = np.random.default_rng(7)
+    for trial in range(200):
+        n_q, n_c = rng.integers(0, 6), rng.integers(0, 12)
+        key = rng.integers(-3, 4, (n_q, n_c)) / 4.0
+        key[rng.random(key.shape) < 0.1] = np.nan
+        key[rng.random(key.shape) < 0.15] = -np.inf
+        for k in (1, 2, 3, n_c, n_c + 2):
+            if k < 1:
+                continue
+            got = _topk_mask(key, k)
+            assert got.shape == key.shape
+            assert np.array_equal(got, _reference_topk_mask(key, k)), \
+                (trial, k, key)
+    assert _topk_mask(np.empty((3, 0)), 5).shape == (3, 0)
+    assert _topk_mask(np.empty((0, 4)), 2).shape == (0, 4)
+
+    # the batch cut drops self pairs and keeps every true top-k row
+    qids = np.array([3, 5, 8])
+    ids = np.arange(10)
+    scores = rng.integers(0, 5, (3, 10)) / 5.0
+    q, c, _ = _batch_topk(qids, ids, scores, 2)
+    assert not (q == c).any()
+    for i, qid in enumerate(qids):
+        top = [j for j in np.lexsort((ids, -scores[i])) if ids[j] != qid][:2]
+        assert set(ids[top]) <= set(c[q == qid])
+
+    # per-row candidates (the IVF-PQ layout): -inf padding never survives
+    S = np.array([[0.5, 0.25, -np.inf], [0.1, 0.3, 0.2]])
+    ids = np.array([[4, 3, 0], [3, 7, 9]])
+    q, c, _ = _batch_topk(np.array([3, 7]), ids, S, 2, rounded=True)
+    assert sorted(zip(q, c)) == [(3, 4), (7, 3), (7, 9)]
 
 
 def test_corpus_stats_sketch_error_bounds(spark, sf_dir):
