@@ -40,11 +40,10 @@ _WRAPPER = re.compile(r"^\s*[+:|\- ]*\s*(Project|Filter) ")
 # statically — each reviewed and bounded by construction:
 #   q21_separability  — per-cluster centroid table (k <= n_centroids)
 #   qx_ab_test_welch  — per-variant moment table (2 buckets)
-#   qx_similarity_topk / _ivf — query / centroid tables, small by the
-#   ANN contract (documented in operators/similarity.py)
+#   qx_similarity_topk — the query table, small by the ANN contract
+#   (documented in operators/similarity.py)
 BOUNDED_BROADCAST_OK = {
-    "q21_separability", "qx_ab_test_welch",
-    "qx_similarity_topk", "qx_similarity_topk_ivf",
+    "q21_separability", "qx_ab_test_welch", "qx_similarity_topk",
 }
 
 

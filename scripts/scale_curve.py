@@ -22,12 +22,13 @@ session it runs in.  Fixtures:
 
 Each session runs in its own child process, because heap size is
 fixed when the JVM starts.  Every case is timed as build + the bench
-checksum action (best of ``--passes``), inside ``cache_scope``; task
-time, task count and spill come from the AppStatusStore's finished
-stages, worker CPU is the user+system CPU of the Python processes under
-the session's JVM (``/proc``; the daemon, its live workers and the
-workers it has reaped), and ``e`` is the growth exponent t ~ n^e
-against the previous scale.
+checksum action (best of ``--passes``), inside ``cache_scope``; a case
+that trains a quantizer first reports those seconds apart (``train
+s``, included in ``s``).  Task time, task count and spill come from
+the AppStatusStore's finished stages, worker CPU is the user+system
+CPU of the Python processes under the session's JVM (``/proc``; the
+daemon, its live workers and the workers it has reaped), and ``e`` is
+the growth exponent t ~ n^e against the previous scale.
 
 Usage:
   python scripts/scale_curve.py --list
@@ -97,8 +98,15 @@ TEMPLATE = " ".join(f"w{i}token" for i in range(60))
 
 class Shape(NamedTuple):
     fixture: Callable   # (spark, sf, m, out) -> {variant: input}
-    cases: dict         # case -> (spark, input) -> DataFrame
+    cases: dict         # case -> (spark, input) -> DataFrame, or Trained
     session: str = "default"
+
+
+class Trained(NamedTuple):
+    """A case that trains its quantizer before it searches; the row
+    reports the training seconds apart from the total."""
+    train: Callable     # (spark, input) -> the search's keyword args
+    search: Callable    # (spark, input, **kw) -> DataFrame
 
 
 # ---------------------------------------------------------------- fixtures
@@ -349,6 +357,20 @@ def topk(emb, every=25, k=5, op=similarity.cosine_topk_gemm, **kw):
               "vec_id", "embedding", k=k, **kw)
 
 
+def trained_topk(op, cells=False, codes=False, **kw):
+    """The trained ANN case of ``op``: KMeans centroids and/or PQ
+    codebooks (the trained queries' settings), then the search."""
+    def train(spark, emb):
+        q = {}
+        if cells:
+            q["centroids"] = similarity.kmeans_centroids(emb, "embedding", 16)
+        if codes:
+            q["codebooks"] = similarity.pq_train_codebooks(
+                emb, "embedding", m=32, k=64)
+        return q
+    return Trained(train, lambda s, e, **q: topk(e, op=op, **q, **kw))
+
+
 def phash_wide(d):
     hashed = mm.media_phash_wide_arrow(
         mm.attach_fake_media(d), content_col="content", bits=128,
@@ -418,10 +440,12 @@ SHAPES = {
         "filtered_gemm": lambda s, e: topk(
             e, op=similarity.cosine_topk_gemm_filtered, filter_col="label"),
         "global_gemm": lambda s, e: topk(e),
-        "pq": lambda s, e: topk(e, op=similarity.cosine_topk_pq,
-                                rerank_factor=4),
-        "ivfpq": lambda s, e: topk(e, op=similarity.cosine_topk_ivfpq,
-                                   n_probe=6)}),
+        "ivf": trained_topk(similarity.cosine_topk_ivf, cells=True,
+                            n_probe=6),
+        "pq": trained_topk(similarity.cosine_topk_pq, codes=True,
+                           rerank_factor=4),
+        "ivfpq": trained_topk(similarity.cosine_topk_ivfpq, cells=True,
+                              codes=True, n_probe=6)}),
     "media_neardup": Shape(planted_docs, {
         "phash": lambda s, d: mm.phash_neardup_pairs(
             mm.media_phash(mm.attach_fake_media(d, text_col="text"))),
@@ -578,15 +602,24 @@ def run_session(session, names, args) -> None:
                 for variant, inp in inputs.items():
                     for case, build in shape.cases.items():
                         best, rows, totals = math.inf, 0, (0.0, 0, 0, 0.0)
+                        train_s = ""
                         for _ in range(args.passes):
                             snap()
                             t0 = time.perf_counter()
                             with cache_scope(spark):
-                                rows = materialize(build(spark, inp))
+                                if isinstance(build, Trained):
+                                    q = build.train(spark, inp)
+                                    trained = time.perf_counter() - t0
+                                    df = build.search(spark, inp, **q)
+                                else:
+                                    df = build(spark, inp)
+                                rows = materialize(df)
                             took = time.perf_counter() - t0
                             if took < best:
                                 best = took
                                 totals = snap()
+                                if isinstance(build, Trained):
+                                    train_s = f"{trained:.2f}"
                         task_s, tasks, spill, cpu_s = totals
                         key = (variant, case)
                         e = ""
@@ -595,7 +628,8 @@ def run_session(session, names, args) -> None:
                             e = f"{math.log(best / t_prev) / math.log(m / m0):.2f}"
                         previous[key] = (m, best)
                         print(f"| {name} | {variant} | {case} | {m}x | {rows} "
-                              f"| {best:.2f} | {e} | {task_s:.2f} | {tasks} "
+                              f"| {best:.2f} | {train_s} | {e} "
+                              f"| {task_s:.2f} | {tasks} "
                               f"| {1000 * cpu_s / max(tasks, 1):.0f} "
                               f"| {spill / 2**20:.1f} |", flush=True)
     spark.stop()
@@ -631,9 +665,9 @@ def main() -> int:
 
     print(f"# scale curve (base {args.sf}, scales {args.scales}, "
           f"best of {args.passes})\n")
-    print("| shape | variant | case | scale | rows | s | e | task s | tasks "
-          "| worker cpu/task ms | spill MB |")
-    print("|---|---|---|---|---|---|---|---|---|---|---|", flush=True)
+    print("| shape | variant | case | scale | rows | s | train s | e | task s "
+          "| tasks | worker cpu/task ms | spill MB |")
+    print("|---|---|---|---|---|---|---|---|---|---|---|---|", flush=True)
     for session, (env, _) in SESSIONS.items():
         group = [n for n in names if SHAPES[n].session == session]
         if group:

@@ -1,20 +1,24 @@
 """Similarity search over embedding columns (north-star extension).
 
-Five paths, trading exactness for different scale bottlenecks:
+Six paths, trading exactness for different scale bottlenecks:
   * brute-force cosine top-k — interpreted JVM fold per pair; exact,
     the correctness baseline;
   * GEMM top-k — exact, one BLAS matmul per Arrow batch, per-batch
     partial top-k (compute-bound scale path);
   * hyperplane-LSH bucketed top-k — deterministic seeded planes,
     candidates only within matching buckets (collision-bound path);
-  * IVF — KMeans cells + n_probe nearest-cell rerank (cluster-pruned
-    path);
+  * IVF — cells + n_probe nearest-cell rerank (cluster-pruned path);
   * PQ + exact rerank — corpus as m centroid codes (16-32x memory
     cut), lookup-table scan, shortlist reranked with true floats
     (memory-bound path);
   * IVF-PQ — cells prune WHICH rows are scanned, codes shrink WHAT
     is scanned, rerank restores true scores (the FAISS-style
     production composition).
+The quantized indexes take their quantizer as an argument: training
+is a separate call (:func:`kmeans_centroids`,
+:func:`pq_train_codebooks`) whose output feeds the same search as a
+fixed quantizer does, so the oracle-checked fixed queries and the
+trained ones run one plan per index type.
 Near-dup pair generation: exact blocked GEMM and in-bucket-GEMM LSH.
 """
 
@@ -121,6 +125,22 @@ def _norm(vec: Column) -> Column:
     return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _dot(a: Column, b: Column) -> Column:
+    """Inner product of two array columns, folded left to right."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _nearest(X, C, n: int = 1):
+    """Per row of ``X``, the indices of its ``n`` nearest rows of ``C``,
+    nearest first: squared L2 rounded to 6 dp, ties to the smaller
+    index.  Unrounded argmins flip between engines on last-ulp ties,
+    so this is the rule the DuckDB oracles replay; IVF cells, query
+    probes and PQ codes all follow it."""
+    d = np.stack([((X - c) ** 2).sum(1) for c in C], axis=1)
+    return np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :n]
+
+
 def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame,
                            id_col: str, vec_col: str, k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query (excluding self), deterministic
@@ -136,11 +156,9 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame,
     q = queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("query_id"),
                        _as_double(F.col(vec_col)).alias("qv"))
     q = q.withColumn("qn", _norm(F.col("qv")))
-    dot = F.aggregate(F.zip_with(F.col("cv"), F.col("qv"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
     scored = (c.join(F.broadcast(q), F.col("corpus_id") != F.col("query_id"))
-              .withColumn("cosine_sim", _safe_cosine(dot)))
+              .withColumn("cosine_sim",
+                          _safe_cosine(_dot(F.col("cv"), F.col("qv")))))
     return _ranked(scored, k)
 
 
@@ -163,9 +181,7 @@ def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-bit bucket id: bit i set iff dot(vec, plane_i) >= 0."""
     bucket = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(F.zip_with(vec, lit_plane, lambda a, b: a * b),
-                          F.lit(0.0), lambda acc, v: acc + v)
+        dot = _dot(vec, F.array(*[F.lit(float(x)) for x in plane]))
         bucket = bucket.bitwiseOR(
             F.when(dot >= 0, F.shiftleft(F.lit(1).cast("long"), i))
              .otherwise(F.lit(0).cast("long")))
@@ -205,243 +221,81 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, id_col: str,
                        _as_double(F.col(vec_col)).alias("qv"))
     q = q.withColumn("qn", _norm(F.col("qv"))).withColumn("tb", F.explode(
         _table_buckets(F.col("qv"), planes, num_tables, num_planes)))
-    dot = F.aggregate(F.zip_with(F.col("cv"), F.col("qv"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
     scored = (c.join(F.broadcast(q), "tb")
               .filter(F.col("corpus_id") != F.col("query_id"))
               .dropDuplicates(["query_id", "corpus_id"])
-              .withColumn("cosine_sim", _safe_cosine(dot)))
+              .withColumn("cosine_sim",
+                          _safe_cosine(_dot(F.col("cv"), F.col("qv")))))
     return _ranked(scored, k)
 
 
-def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
-                    vec_col: str, k: int = 5, n_centroids: int = 16,
-                    n_probe: int = 4, seed: int = 42) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: KMeans partitions the
-    corpus into ``n_centroids`` cells; each query probes only its
-    ``n_probe`` nearest cells and reranks those candidates exactly.
-
-    Scale shape: the centroid table is tiny (n_centroids rows) and
-    broadcast twice — once to assign query probes, never to the
-    corpus (cell ids are precomputed by the fitted model). Candidate
-    generation is a (cell) equi-join touching ~n_probe/n_centroids of
-    the corpus per query; recall/latency trades via n_probe."""
-    # the k-clamp must count the SAME frame KMeans is fit on (the
-    # null-filtered one) — a corpus dominated by null vectors would
-    # otherwise pass a k > actual-points to MLlib and crash the fit
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    n_avail = corpus.limit(n_centroids).count()
-    if n_avail == 0 or queries.isEmpty():
-        # empty slice (or no queries): no codebook/centroids can be
-        # trained -> empty result with the standard top-k schema
-        return _no_neighbours(corpus.sparkSession)
-    # tiny corpora: KMeans refuses k > points (FAISS clamps the same
-    # way) and requires k >= 2 — below that, cells are meaningless and
-    # exact GEMM over the whole corpus IS the flat-index fallback
-    n_centroids = min(n_centroids, n_avail)
-    if n_centroids < 2:
-        return cosine_topk_gemm(corpus, queries, id_col, vec_col, k=k)
-    n_probe = min(n_probe, n_centroids)
+def kmeans_centroids(corpus: DataFrame, vec_col: str, n: int = 16,
+                     seed: int = 42):
+    """Train an IVF coarse quantizer: the centres of an MLlib KMeans
+    fit, an (n, dim) array for :func:`cosine_topk_ivf` and
+    :func:`cosine_topk_ivfpq`.  ``n`` is clamped to the trainable
+    (non-null) vectors, as FAISS clamps.  An empty corpus trains no
+    centre, so the searches return no neighbours; a single vector is
+    its own one cell (KMeans needs k >= 2), and one cell is the flat
+    index, an exact scan."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    v = corpus.filter(F.col(vec_col).isNotNull()).select(
+        _as_double(F.col(vec_col)).alias("v"))
+    head = [r.v for r in v.limit(n).collect()]
+    if len(head) < 2:
+        return np.array(head, dtype=np.float64)
+    model = KMeans(k=len(head), seed=seed, featuresCol="features").fit(
+        v.withColumn("features", array_to_vector(F.col("v"))))
+    return np.array(model.clusterCenters())
+
+
+def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
+                    vec_col: str, centroids, k: int = 5,
+                    n_probe: int = 4) -> DataFrame:
+    """IVF (inverted-file) approximate top-k: the ``centroids``, a
+    coarse quantizer trained by :func:`kmeans_centroids` or fixed
+    (FAISS's IndexIVF takes any quantizer), cut the corpus into cells;
+    each query probes only its ``n_probe`` nearest cells and reranks
+    those candidates by exact cosine.
+
+    Plan: one narrow numpy pass gives every corpus row its cell; the
+    probes are picked driver-side against the tiny centroid matrix and
+    broadcast with the query vectors; candidate generation is a (cell)
+    equi-join touching ~n_probe/n_centroids of the corpus per query.
+    Cells and probes follow :func:`_nearest`, so with fixed centroids
+    (e.g. the LCG unit vectors of :func:`hyperplane_planes`) the whole
+    plan replays in DuckDB; recall/latency trades via n_probe."""
     spark = corpus.sparkSession
-    c = corpus.select(F.col(id_col).alias("corpus_id"),
-                      _as_double(F.col(vec_col)).alias("cv"))
-    data = c.withColumn("features", array_to_vector(F.col("cv")))
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(data)
-    assigned = (model.transform(data)
-                .select("corpus_id", "cv",
-                        F.col("prediction").alias("cell"))
-                .withColumn("cn", _norm(F.col("cv"))))
+    cents = np.asarray(centroids, dtype=np.float64)
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None or not len(cents):
+        return _no_neighbours(spark)
+    qpd, Q, _ = qm
+    probes = spark.createDataFrame(
+        [(q, qv, int(cell)) for q, qv, cells in
+         zip(qpd["qid"].tolist(), Q.tolist(), _nearest(Q, cents, n_probe))
+         for cell in cells],
+        "query_id long, qv array<double>, cell int"
+    ).withColumn("qn", _norm(F.col("qv")))
 
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in
-         enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>")
-    q = queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("qv"))
-    q = q.withColumn("qn", _norm(F.col("qv")))
-    cdist = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"),
-                   lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, v: acc + v)
-    wq = Window.partitionBy("query_id").orderBy(F.col("d"), F.col("cell"))
-    probes = (q.crossJoin(F.broadcast(cents))
-              .withColumn("d", cdist)
-              .withColumn("pr", F.row_number().over(wq))
-              .filter(F.col("pr") <= n_probe)
-              .select("query_id", "qv", "qn", "cell"))
+    def assign(batches):
+        for pdf in batches:
+            if len(pdf):
+                X = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
+                yield pdf.assign(cell=_nearest(X, cents)[:, 0])
 
-    dot = F.aggregate(F.zip_with(F.col("cv"), F.col("qv"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    scored = (assigned.join(F.broadcast(probes), "cell")
-              .filter(F.col("corpus_id") != F.col("query_id"))
-              .withColumn("cosine_sim", _safe_cosine(dot)))
-    return _ranked(scored, k)
-
-
-def cosine_topk_ivf_fixed(corpus: DataFrame, queries: DataFrame,
-                          id_col: str, vec_col: str,
-                          centroids: list[list[float]], k: int = 5,
-                          n_probe: int = 4) -> DataFrame:
-    """IVF top-k with a FIXED coarse quantizer — the pluggable-
-    quantizer form of :func:`cosine_topk_ivf` (FAISS's IndexIVF takes
-    any coarse quantizer; k-means is merely the common trainer).  With
-    deterministic centroid literals (e.g. the LCG unit vectors of
-    :func:`hyperplane_planes`) the ENTIRE pipeline — cell assignment,
-    query probing, candidate equi-join, exact rerank — is
-    value-checkable cross-engine, which the KMeans-trained variant
-    can never be (MLlib's fit is engine-specific).
-
-    Cell assignment is argmin squared-L2 ROUNDED to 6 decimals with a
-    smallest-cell tie-break (the r4 decontamination lesson: unrounded
-    float argmins flip between engines on last-ulp ties).  Same plan
-    shape as cosine_topk_ivf: centroids are literals (nothing
-    broadcast), candidate generation is a (cell) equi-join touching
-    ~n_probe/n_centroids of the corpus per query."""
-    spark = corpus.sparkSession
-    n_cent = len(centroids)
-    n_probe = min(n_probe, n_cent)
-
-    def d2(vec):
-        return [F.round(F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(float(x)) for x in ctr]),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, v: acc + v), 6)
-            for ctr in centroids]
-
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("corpus_id"),
-        _as_double(F.col(vec_col)).alias("cv"))
-    cd = F.array(*d2(F.col("cv")))
-    # first index of the min = smallest cell id on ties
-    c = (c.withColumn("cell",
-                      F.array_position(cd, F.array_min(cd)).cast("int") - 1)
+    c = (corpus.filter(F.col(vec_col).isNotNull())
+         .select(F.col(id_col).cast("long").alias("corpus_id"),
+                 _as_double(F.col(vec_col)).alias("cv"))
+         .mapInPandas(assign, "corpus_id long, cv array<double>, cell int")
          .withColumn("cn", _norm(F.col("cv"))))
-
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"))
-    qd = F.array(*d2(F.col("qv")))
-    probes = (q.withColumn("qn", _norm(F.col("qv")))
-              .withColumn("dc", F.explode(F.arrays_zip(
-                  F.sequence(F.lit(0), F.lit(n_cent - 1)).alias("cell"),
-                  qd.alias("d"))))
-              .select("query_id", "qv", "qn",
-                      F.col("dc.cell").cast("int").alias("cell"),
-                      F.col("dc.d").alias("d")))
-    wq = Window.partitionBy("query_id").orderBy(F.col("d"), F.col("cell"))
-    probes = (probes.withColumn("pr", F.row_number().over(wq))
-              .filter(F.col("pr") <= n_probe)
-              .select("query_id", "qv", "qn", "cell"))
-
-    dot = F.aggregate(F.zip_with(F.col("cv"), F.col("qv"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
     scored = (c.join(F.broadcast(probes), "cell")
               .filter(F.col("corpus_id") != F.col("query_id"))
-              .withColumn("cosine_sim", _safe_cosine(dot)))
+              .withColumn("cosine_sim",
+                          _safe_cosine(_dot(F.col("cv"), F.col("qv")))))
     return _ranked(scored, k)
-
-
-def cosine_topk_ivfpq_fixed(corpus: DataFrame, queries: DataFrame,
-                            id_col: str, vec_col: str,
-                            centroids: list[list[float]], codebooks,
-                            k: int = 5, n_probe: int = 4) -> DataFrame:
-    """IVF-PQ with FIXED coarse quantizer AND codebooks — the
-    deterministic form of the FAISS-style composition
-    (:func:`cosine_topk_ivfpq`): cells prune WHICH corpus rows are
-    scanned, PQ codes shrink WHAT is scanned, and with both
-    quantizers as literals the whole composed pipeline is
-    value-checkable cross-engine.  Assignments use 6-dp-ROUNDED
-    argmins with smallest-index ties (the portable convention shared
-    with cosine_topk_ivf_fixed / pq_encode(portable=True)).
-
-    Plan: ONE narrow mapInPandas pass computes (id, cell, codes) per
-    corpus row; query probes are picked driver-side against the tiny
-    centroid matrix; scoring is LUT adds inside mapInPandas with
-    per-batch partial top-k — the same shuffle contract as
-    cosine_topk_pq/gemm.  No rerank (rerank_factor composes exactly
-    as in cosine_topk_pq when wanted)."""
-    cents = np.asarray(centroids, dtype=np.float64)
-    n_cent = len(cents)
-    n_probe = min(n_probe, n_cent)
-    m, kc, dsub = codebooks.shape
-
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("id"),
-        _as_double(F.col(vec_col)).alias("v"))
-    qm = _query_matrix(queries, id_col, vec_col)
-    if qm is None or c.isEmpty():
-        return _no_neighbours(corpus.sparkSession, "approx_sim")
-    qpd, Q, Qn = qm
-    qids = qpd["qid"].to_numpy()
-    lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub),
-                    codebooks)
-    # probe cells driver-side: rounded d2, first-min = smallest cell
-    qd = np.round(((Q[:, None, :] - cents[None, :, :]) ** 2).sum(-1), 6)
-    # stable sort: exact ties of the rounded distance keep index
-    # order, i.e. the smallest cell id wins (the portable tie-break)
-    probe_cells = np.argsort(qd, axis=1, kind="stable")[:, :n_probe]
-    probed = {int(q): set(map(int, cs))
-              for q, cs in zip(qids, probe_cells)}
-
-    def index(batches):
-        """(id, cell, codes): rounded-argmin cell + portable PQ codes
-        in one pass."""
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            d2 = np.round(((X[:, None, :] - cents[None, :, :]) ** 2)
-                          .sum(-1), 6)
-            cell = d2.argmin(1)
-            Xn = _unit_rows(X)
-            codes = np.empty((len(Xn), m), dtype=np.int64)
-            for j in range(m):
-                S = Xn[:, j * dsub:(j + 1) * dsub]
-                dj = np.round(((S[:, None, :]
-                                - codebooks[j][None, :, :]) ** 2).sum(-1),
-                              6)
-                codes[:, j] = dj.argmin(1)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "cell": cell, "codes": list(codes)})
-
-    enc = c.mapInPandas(index, "id long, cell int, codes array<long>")
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            out_q, out_c, out_s = [], [], []
-            for qi, q in enumerate(qids):
-                mask = np.fromiter((int(cl) in probed[int(q)]
-                                    for cl in cells), bool, len(cells))
-                mask &= ids != q
-                if not mask.any():
-                    continue
-                sub = codes[mask]
-                s = np.zeros(len(sub))
-                for j in range(m):
-                    s += lut[qi, j, sub[:, j]]
-                cand_ids = ids[mask]
-                # rank at the 6-dp output precision (see cosine_topk_pq)
-                order = np.lexsort((cand_ids, -np.round(s, 6)))[:k]
-                out_q.extend([q] * len(order))
-                out_c.extend(cand_ids[order])
-                out_s.extend(s[order])
-            yield pd.DataFrame({"query_id": out_q, "corpus_id": out_c,
-                                "approx_sim": out_s})
-
-    scored = enc.mapInPandas(
-        scan, "query_id long, corpus_id long, approx_sim double")
-    return _ranked(scored, k, "approx_sim", rounded=True)
 
 
 def cosine_topk_gemm(corpus: DataFrame, queries: DataFrame,
@@ -587,10 +441,7 @@ def embedding_pairs_blocked(df: DataFrame, id_col: str, vec_col: str,
         Bm = np.stack(right["v"].to_numpy()).astype(np.float64)
         aid = left["id"].to_numpy()
         bid = right["id"].to_numpy()
-        an = np.linalg.norm(A, axis=1, keepdims=True)
-        bn = np.linalg.norm(Bm, axis=1, keepdims=True)
-        S = (A / np.where(an == 0, 1.0, an)) @ \
-            (Bm / np.where(bn == 0, 1.0, bn)).T
+        S = _unit_rows(A) @ _unit_rows(Bm).T
         if bi == bj:
             # diagonal block: both sides are the same rows — strict
             # upper triangle by id dedupes mirror pairs and the diagonal
@@ -655,9 +506,7 @@ def embedding_pairs_lsh(df: DataFrame, id_col: str, vec_col: str,
         if len(pdf) < 2:
             return empty
         ids = pdf["id"].to_numpy()
-        X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        nn = np.linalg.norm(X, axis=1, keepdims=True)
-        Xn = X / np.where(nn == 0, 1.0, nn)
+        Xn = _unit_rows(np.stack(pdf["v"].to_numpy()).astype(np.float64))
         S = Xn @ Xn.T
         rows, cols = np.nonzero((S >= threshold)
                                 & (ids[:, None] < ids[None, :]))
@@ -687,12 +536,13 @@ def pq_train_codebooks(corpus: DataFrame, vec_col: str, m: int = 8,
     (same documented small-by-contract collect as the viz sample) —
     codebooks are an (m, k, dim/m) array, a few KB that ships in the
     encode/scan closures. Deterministic: seeded init, fixed
-    iterations."""
+    iterations.  No trainable vector trains an empty codebook, so the
+    searches return no neighbours."""
     pdf = (corpus.filter(F.col(vec_col).isNotNull()).select(_as_double(F.col(vec_col)).alias("v"))
            .limit(sample_size).toPandas())
-    X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    n = np.linalg.norm(X, axis=1, keepdims=True)
-    Xn = X / np.where(n == 0, 1.0, n)
+    if pdf.empty:    # np.stack needs >= 1 row
+        return np.empty((m, 0, 0))
+    Xn = _unit_rows(np.stack(pdf["v"].to_numpy()).astype(np.float64))
     dim = Xn.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -713,110 +563,59 @@ def pq_train_codebooks(corpus: DataFrame, vec_col: str, m: int = 8,
     return books
 
 
-def pq_encode(corpus: DataFrame, id_col: str, vec_col: str,
-              codebooks, portable: bool = False) -> DataFrame:
-    """Encode each (normalized) vector as ``m`` centroid indices —
-    64 float64 dims compress to m small ints (m=8: 32x memory cut),
-    which is what lets a 100 TB embedding corpus live in scan-speed
-    storage. Narrow mapInPandas, no shuffle.
+def _pq_codes(X, codebooks):
+    """PQ codes of the rows of ``X``, normalized first: in each of the
+    m sub-spaces, the nearest codeword (:func:`_nearest`)."""
+    Xn = _unit_rows(X)
+    m, _, dsub = codebooks.shape
+    return np.stack([_nearest(Xn[:, j * dsub:(j + 1) * dsub],
+                              codebooks[j])[:, 0] for j in range(m)], axis=1)
 
-    ``portable=True`` rounds the sub-distance to the 6-decimal output
-    precision BEFORE the argmin (first-min = smallest code on ties) —
-    the cross-engine-stable assignment the DuckDB PQ oracle replays
-    (same argmin lesson as semantic_contamination / IVF-fixed)."""
-    m, k, dsub = codebooks.shape
 
-    def enc(batches):
+def _pq_index(corpus: DataFrame, id_col: str, vec_col: str, codebooks,
+              cents=None) -> DataFrame:
+    """The index build, one narrow mapInPandas pass over the corpus:
+    each vector as ``m`` codeword indices (64 float64 dims to m small
+    ints, a 32x memory cut at m=8, which is what lets a 100 TB
+    embedding corpus live in scan-speed storage) and, given coarse
+    centroids, its IVF cell: ``(id, codes)`` or ``(id, cell, codes)``."""
+    def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(n == 0, 1.0, n)
-            codes = np.empty((len(Xn), m), dtype=np.int64)
-            for j in range(m):
-                S = Xn[:, j * dsub:(j + 1) * dsub]
-                d = ((S[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(-1)
-                if portable:
-                    d = np.round(d, 6)
-                codes[:, j] = d.argmin(1)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "codes": list(codes)})
+            out = {"id": pdf["id"].to_numpy()}
+            if cents is not None:
+                out["cell"] = _nearest(X, cents)[:, 0]
+            out["codes"] = list(_pq_codes(X, codebooks))
+            yield pd.DataFrame(out)
 
-    v = corpus.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("id"),
-                      _as_double(F.col(vec_col)).alias("v"))
-    return v.mapInPandas(enc, "id long, codes array<long>")
+    cell = "" if cents is None else "cell int, "
+    return (corpus.filter(F.col(vec_col).isNotNull())
+            .select(F.col(id_col).cast("long").alias("id"),
+                    _as_double(F.col(vec_col)).alias("v"))
+            .mapInPandas(encode, f"id long, {cell}codes array<long>"))
 
 
-def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
-                   vec_col: str, k: int = 5, m: int = 32, kc: int = 64,
-                   codebooks=None, rerank_factor: int = 0,
-                   portable_encode: bool = False) -> DataFrame:
-    """Approximate top-k via PQ asymmetric distance: queries stay
-    exact (normalized floats), the corpus is scanned as codes; each
-    query precomputes an (m, kc) inner-product lookup table against
-    the codebooks, and a corpus row's score is m table lookups summed
-    — no per-pair arithmetic beyond adds. Same partial-top-k shuffle
-    contract as cosine_topk_gemm (num_batches * n_queries * k rows).
+def _lut(Qn, codebooks):
+    """LUT[q, j, c] = <q_sub_j, codeword_jc>: summed over j at a corpus
+    row's codes, it approximates the row's cosine to query q."""
+    m, _, dsub = codebooks.shape
+    return np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub),
+                     codebooks)
 
-    ``rerank_factor > 0`` adds the standard PQ refinement: keep the
-    PQ top (rerank_factor * k) per query, fetch EXACT vectors for
-    that shortlist only (a candidate-sized join, not a corpus scan
-    of floats), recompute exact cosine, re-top-k — measured on the
-    fixture: recall@5 0.83 raw -> 0.99+ at rerank_factor=4, while
-    the float corpus is touched for only n_q * rerank_factor * k
-    rows. Recall-vs-exact contract in tests/test_dedup.py."""
-    col = "cosine_sim" if rerank_factor > 0 else "approx_sim"
-    qm = _query_matrix(queries, id_col, vec_col)
-    # all-NULL vectors would reach pq_train_codebooks as an empty
-    # pandas frame (np.stack crash) — skip-null convention applies to
-    # the TRAINABLE rows, not mere row count
-    if qm is None or corpus.filter(F.col(vec_col).isNotNull()).isEmpty():
-        return _no_neighbours(corpus.sparkSession, col)
-    if codebooks is None:
-        codebooks = pq_train_codebooks(corpus, vec_col, m=m, k=kc)
-    m_, kc_, dsub = codebooks.shape
-    qpd, _, Qn = qm
-    qids = qpd["qid"].to_numpy()
-    # LUT[q, j, c] = <q_sub_j, centroid_jc>; sum over j approximates cos
-    lut = np.einsum("qjd,jcd->qjc",
-                    Qn.reshape(len(Qn), m_, dsub), codebooks)
 
-    enc = pq_encode(corpus, id_col, vec_col, codebooks,
-                    portable=portable_encode)
-    # per-batch partial top-k must keep the WIDER rerank shortlist,
-    # or batch-level truncation silently caps recall at the raw-PQ@k
-    k_scan = k * rerank_factor if rerank_factor > 0 else k
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            scores = np.zeros((len(qids), len(codes)))
-            for j in range(m_):
-                scores += lut[:, j, codes[:, j]]
-            # cut at the 6-dp OUTPUT precision: ranking by raw floats
-            # lets accumulation-order ulps (engine-specific) reorder
-            # scores that round to the same value — on near-constant
-            # data the ulps ARE the order (r5 degenerate-parity
-            # finding); id-tiebreak at rounded precision is portable
-            yield _partial_frame(
-                [_batch_topk(qids, pdf["id"].to_numpy(), scores, k_scan,
-                             rounded=True)], "approx_sim")
-
-    scored = enc.mapInPandas(
-        scan, "query_id long, corpus_id long, approx_sim double")
-    shortlist = _ranked(scored, k_scan, "approx_sim", rounded=True)
+def _refined(scored: DataFrame, k: int, rerank_factor: int,
+             corpus: DataFrame, id_col: str, vec_col: str,
+             qids, Qn) -> DataFrame:
+    """The PQ tail: the approx_sim top-(k * rerank_factor) shortlist,
+    ranked at 6 dp like the scans' cut; with ``rerank_factor > 0``, the
+    float vectors of its (query_id, corpus_id) rows only are fetched
+    and their exact cosines re-top-k'd."""
+    shortlist = _ranked(scored, k * max(rerank_factor, 1), "approx_sim",
+                        rounded=True)
     if rerank_factor <= 0:
         return shortlist
-    return _exact_rerank(shortlist, corpus, id_col, vec_col, qids, Qn, k)
-
-
-def _exact_rerank(shortlist: DataFrame, corpus: DataFrame, id_col: str,
-                  vec_col: str, qids, Qn, k: int) -> DataFrame:
-    """PQ refinement: fetch the float vectors of the (query_id,
-    corpus_id) shortlist rows only, recompute exact cosines, re-top-k."""
     qrow = {int(q): i for i, q in enumerate(qids)}
 
     def exact(batches):
@@ -838,65 +637,94 @@ def _exact_rerank(shortlist: DataFrame, corpus: DataFrame, id_col: str,
     return _ranked(rescored, k)
 
 
+def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
+                   vec_col: str, codebooks, k: int = 5,
+                   rerank_factor: int = 0) -> DataFrame:
+    """Approximate top-k via PQ asymmetric distance: queries stay
+    exact (normalized floats), the corpus is scanned as codes; each
+    query precomputes an (m, kc) inner-product lookup table against
+    the ``codebooks`` (trained by :func:`pq_train_codebooks` or fixed),
+    and a corpus row's score is m table lookups summed — no per-pair
+    arithmetic beyond adds. Same partial-top-k shuffle contract as
+    cosine_topk_gemm (num_batches * n_queries * k rows).  Codes follow
+    :func:`_nearest`, so with fixed codebooks and no rerank the whole
+    scan replays in DuckDB.
+
+    ``rerank_factor > 0`` adds the standard PQ refinement: keep the
+    PQ top (rerank_factor * k) per query, fetch EXACT vectors for
+    that shortlist only (a candidate-sized join, not a corpus scan
+    of floats), recompute exact cosine, re-top-k — measured on the
+    fixture: recall@5 0.83 raw -> 0.99+ at rerank_factor=4, while
+    the float corpus is touched for only n_q * rerank_factor * k
+    rows. Recall-vs-exact contract in tests/test_dedup.py."""
+    qm = _query_matrix(queries, id_col, vec_col)
+    if qm is None or not codebooks.size:
+        return _no_neighbours(corpus.sparkSession, "cosine_sim"
+                              if rerank_factor > 0 else "approx_sim")
+    qpd, _, Qn = qm
+    qids = qpd["qid"].to_numpy()
+    lut = _lut(Qn, codebooks)
+    # per-batch partial top-k must keep the WIDER rerank shortlist,
+    # or batch-level truncation silently caps recall at the raw-PQ@k
+    k_scan = k * max(rerank_factor, 1)
+
+    def scan(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+            scores = np.zeros((len(qids), len(codes)))
+            for j in range(len(codebooks)):
+                scores += lut[:, j, codes[:, j]]
+            # cut at the 6-dp OUTPUT precision: ranking by raw floats
+            # lets accumulation-order ulps (engine-specific) reorder
+            # scores that round to the same value — on near-constant
+            # data the ulps ARE the order (r5 degenerate-parity
+            # finding); id-tiebreak at rounded precision is portable
+            yield _partial_frame(
+                [_batch_topk(qids, pdf["id"].to_numpy(), scores, k_scan,
+                             rounded=True)], "approx_sim")
+
+    scored = _pq_index(corpus, id_col, vec_col, codebooks).mapInPandas(
+        scan, "query_id long, corpus_id long, approx_sim double")
+    return _refined(scored, k, rerank_factor, corpus, id_col, vec_col,
+                    qids, Qn)
+
+
 def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
-                      vec_col: str, k: int = 5, n_centroids: int = 16,
-                      n_probe: int = 4, m: int = 32, kc: int = 64,
-                      rerank_factor: int = 4, seed: int = 42) -> DataFrame:
+                      vec_col: str, centroids, codebooks, k: int = 5,
+                      n_probe: int = 4, rerank_factor: int = 4) -> DataFrame:
     """IVF-PQ composition (the FAISS-style production ANN index):
     IVF cells prune WHICH corpus rows are scanned (~n_probe/n_centroids
     of the corpus per query), PQ codes shrink WHAT is scanned (m small
     ints per row instead of the float vector), and the exact rerank of
-    the shortlist restores true cosines. The float corpus is touched
-    only for shortlist rows.
+    the shortlist (``rerank_factor > 0``) restores true cosines,
+    touching the float corpus only for shortlist rows.  Both
+    quantizers are inputs, trained (:func:`kmeans_centroids`,
+    :func:`pq_train_codebooks`) or fixed; with fixed ones and no rerank
+    the whole composition replays in DuckDB.
 
-    Plan: cell assignment + PQ codes are one narrow pass over the
-    corpus (the index build a daily job checkpoints); per query the
-    probed (query_id, cell) pairs broadcast into an equi-join against
-    the code table; scoring is LUT adds inside mapInPandas with
-    per-batch partial top-k — the same shuffle contract as
-    cosine_topk_gemm/pq."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
+    Plan: one narrow pass over the corpus gives (id, cell, codes), the
+    index build a daily job checkpoints; the probed (query_id, cell)
+    pairs, picked driver-side against the tiny centroid matrix,
+    broadcast into an equi-join against it; scoring is LUT adds inside
+    mapInPandas with per-batch partial top-k — the same shuffle
+    contract as cosine_topk_gemm/pq."""
     spark = corpus.sparkSession
-    # count the null-filtered frame (what KMeans/PQ actually train on),
-    # not the raw corpus — see cosine_topk_ivf's k-clamp note
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    n_avail = corpus.limit(n_centroids).count()
+    cents = np.asarray(centroids, dtype=np.float64)
     qm = _query_matrix(queries, id_col, vec_col)
-    if n_avail == 0 or qm is None:
-        # empty slice: neither codebooks nor centroids can be trained
-        return _no_neighbours(spark)
-    n_centroids = min(n_centroids, n_avail)
-    if n_centroids < 2:  # flat-index fallback, same as cosine_topk_ivf
-        return cosine_topk_gemm(corpus, queries, id_col, vec_col, k=k)
-    n_probe = min(n_probe, n_centroids)
-    codebooks = pq_train_codebooks(corpus, vec_col, m=m, k=kc, seed=seed)
-    m_, kc_, dsub = codebooks.shape
-
-    c = corpus.select(F.col(id_col).cast("long").alias("id"),
-                      _as_double(F.col(vec_col)).alias("v"))
-    data = c.withColumn("features", array_to_vector(F.col("v")))
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(data)
-    cells = model.transform(data).select(
-        "id", F.col("prediction").alias("cell"))
-    enc = pq_encode(corpus, id_col, vec_col, codebooks).join(cells, "id")
-
+    if qm is None or not len(cents) or not codebooks.size:
+        return _no_neighbours(spark, "cosine_sim"
+                              if rerank_factor > 0 else "approx_sim")
     qpd, Q, Qn = qm
     qids = qpd["qid"].to_numpy()
-    lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m_, dsub),
-                    codebooks)
-    # probe cells driver-side: centroid matrix is tiny
-    cents = np.array([list(map(float, ct))
-                      for ct in model.clusterCenters()])
-    d2 = ((Q[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-    probe_rows = [(int(qids[i]), int(cell))
-                  for i in range(len(qids))
-                  for cell in np.argsort(d2[i], kind="stable")[:n_probe]]
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell int")
-
+    lut = _lut(Qn, codebooks)
+    probes = spark.createDataFrame(
+        [(int(q), int(cell)) for q, cells in
+         zip(qids, _nearest(Q, cents, n_probe)) for cell in cells],
+        "query_id long, cell int")
     qrow = {int(q): i for i, q in enumerate(qids)}
-    k_scan = k * rerank_factor if rerank_factor > 0 else k
+    k_scan = k * max(rerank_factor, 1)
 
     def scan(batches):
         for pdf in batches:
@@ -906,7 +734,7 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
             q = pdf["query_id"].to_numpy()
             qi = pdf["query_id"].map(qrow).to_numpy()
             s = np.zeros(len(pdf))
-            for j in range(m_):
+            for j in range(len(codebooks)):
                 s += lut[qi, j, codes[:, j]]
             # the probe join mixes queries in one batch: each query's
             # rows become one row of a -inf-padded matrix, cut at the
@@ -924,12 +752,14 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
                 [_batch_topk(uq, ids, S, k_scan, rounded=True)],
                 "approx_sim")
 
-    cand_codes = enc.join(F.broadcast(probes), "cell") \
-        .select("query_id", "id", "codes")
-    scored = cand_codes.mapInPandas(
-        scan, "query_id long, corpus_id long, approx_sim double")
-    shortlist = _ranked(scored, k_scan, "approx_sim", rounded=True)
-    return _exact_rerank(shortlist, corpus, id_col, vec_col, qids, Qn, k)
+    enc = _pq_index(corpus, id_col, vec_col, codebooks, cents)
+    scored = (enc.join(F.broadcast(probes), "cell")
+              .select("query_id", "id", "codes")
+              .mapInPandas(scan,
+                           "query_id long, corpus_id long, approx_sim double"))
+    return _refined(scored, k, rerank_factor, corpus, id_col, vec_col,
+                    qids, Qn)
+
 
 
 def hybrid_retrieval_topk(docs: DataFrame, emb: DataFrame,
@@ -981,10 +811,7 @@ def hybrid_retrieval_topk(docs: DataFrame, emb: DataFrame,
     # scored expression is one cached tree
     scored_expr = cached_exprs(
         ("hybrid_cosine",),
-        lambda: _safe_cosine(
-            F.aggregate(F.zip_with(F.col("cv"), F.col("qv"),
-                                   lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, v_: acc + v_)))
+        lambda: _safe_cosine(_dot(F.col("cv"), F.col("qv"))))
     scored = (shortlist.join(qv, "query_id").join(cv, "cand_id")
               .withColumn("cosine_sim", scored_expr))
     w = Window.partitionBy("query_id").orderBy(

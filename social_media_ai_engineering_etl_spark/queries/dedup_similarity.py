@@ -35,7 +35,7 @@ def _emb_narrow(spark, sf_dir):
 
 
 def _query_vectors(spark, sf_dir):
-    # every 25th vector: the query set the GEMM/PQ operators collect
+    # every 25th vector: the query set the GEMM/IVF/PQ operators collect
     # to the driver.  Read unwidened, so the 40-row collect is one job,
     # not widen_scan's round-robin shuffle plus the job that reads it
     return _emb_narrow(spark, sf_dir).filter(F.col("vec_id") % 25 == 0)
@@ -1241,27 +1241,28 @@ def qx_similarity_topk_ivf_fixed(spark, sf_dir):
     argmin L2, smallest-cell ties), query probing, the (cell)
     candidate equi-join and the exact cosine rerank all replay in
     DuckDB (_ivf_fixed_oracle_sql).  The KMeans-trained variant
-    (qx_similarity_topk_ivf) stays rows-only with its recall
-    contract — MLlib's fit is engine-specific; the quantizer is the
-    only difference between the two plans."""
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    (qx_similarity_topk_ivf) runs the same operator with trained
+    centroids and stays rows-only with its recall contract — MLlib's
+    fit is engine-specific; the quantizer is the only input that
+    differs."""
     cents = similarity.hyperplane_planes(64, 16, seed=7)
-    return similarity.cosine_topk_ivf_fixed(
-        emb, queries, "vec_id", "embedding", centroids=cents,
-        k=5, n_probe=6).orderBy("query_id", "rank")
+    return similarity.cosine_topk_ivf(
+        _emb(spark, sf_dir), _query_vectors(spark, sf_dir), "vec_id",
+        "embedding", centroids=cents, k=5, n_probe=6
+    ).orderBy("query_id", "rank")
 
 
 @register("qx_similarity_topk_ivf")
 def qx_similarity_topk_ivf(spark, sf_dir):
-    """IVF-partitioned approximate top-5 (KMeans cells + n_probe=6
-    rerank); rows-only + recall-vs-bruteforce test in
-    tests/test_scale.py."""
+    """IVF-partitioned approximate top-5: 16 KMeans centroids are
+    trained first (similarity.kmeans_centroids), then the same search
+    as qx_similarity_topk_ivf_fixed runs with n_probe=6; rows-only +
+    recall-vs-bruteforce test in tests/test_scale.py."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    return similarity.cosine_topk_ivf(emb, queries, "vec_id", "embedding",
-                                      k=5, n_centroids=16, n_probe=6
-                                      ).orderBy("query_id", "rank")
+    cents = similarity.kmeans_centroids(emb, "embedding", 16)
+    return similarity.cosine_topk_ivf(
+        emb, _query_vectors(spark, sf_dir), "vec_id", "embedding",
+        centroids=cents, k=5, n_probe=6).orderBy("query_id", "rank")
 
 
 # --------------------------------------------------------------------------
@@ -1824,16 +1825,15 @@ def qx_similarity_topk_pq_fixed(spark, sf_dir):
     normalization, per-sub-space code assignment, the LUT scan's
     sum-of-sub-dot scores and the top-k rerank all replay in DuckDB
     (_pq_fixed_oracle_sql).  The k-means-trained variant
-    (qx_similarity_topk_pq) stays rows-only with its recall contract —
-    the codebook trainer is the only difference."""
+    (qx_similarity_topk_pq) runs the same operator with trained
+    codebooks and stays rows-only with its recall contract — the
+    codebook trainer is the only difference."""
     import numpy as np
-    emb = _emb(spark, sf_dir)
-    queries = _query_vectors(spark, sf_dir)
     cb = np.array(similarity.hyperplane_planes(8, 128, seed=11)) \
         .reshape(8, 16, 8)
     return similarity.cosine_topk_pq(
-        emb, queries, "vec_id", "embedding", k=5, m=8, kc=16,
-        codebooks=cb, rerank_factor=0, portable_encode=True
+        _emb(spark, sf_dir), _query_vectors(spark, sf_dir), "vec_id",
+        "embedding", codebooks=cb, k=5, rerank_factor=0
     ).orderBy("query_id", "rank")
 
 
@@ -1844,13 +1844,15 @@ def qx_similarity_topk_pq(spark, sf_dir):
     lookup-table adds, PQ top-20 shortlist reranked exactly (floats
     touched for shortlist rows only). The memory-bound 100 TB path —
     codes fit in scan-speed storage where the float corpus cannot.
+    The codebooks are trained first (similarity.pq_train_codebooks),
+    then the same search as qx_similarity_topk_pq_fixed runs.
     Rows-only (model-derived codebooks); recall contract vs exact in
     tests/test_dedup.py (measured 0.99 @ rerank_factor=4)."""
     emb = _emb_narrow(spark, sf_dir)
-    queries = _query_vectors(spark, sf_dir)
-    return similarity.cosine_topk_pq(emb, queries, "vec_id", "embedding",
-                                     k=5, rerank_factor=4
-                                     ).orderBy("query_id", "rank")
+    cb = similarity.pq_train_codebooks(emb, "embedding", m=32, k=64)
+    return similarity.cosine_topk_pq(
+        emb, _query_vectors(spark, sf_dir), "vec_id", "embedding",
+        codebooks=cb, k=5, rerank_factor=4).orderBy("query_id", "rank")
 
 
 @register("qv_constraints_report", oracle="""
@@ -2028,16 +2030,16 @@ def qx_similarity_topk_ivfpq_fixed(spark, sf_dir):
     composition replays in DuckDB.  Completes the ANN oracle ladder:
     GEMM / LSH / IVF / PQ / IVF-PQ each have a value-hash-checked
     row; only the k-means TRAINERS remain rows-only (engine-specific
-    fits, recall-contracted)."""
+    fits, recall-contracted).  qx_similarity_topk_ivfpq runs this
+    same operator with trained quantizers and the exact rerank."""
     import numpy as np
-    emb = _emb(spark, sf_dir)
-    queries = _query_vectors(spark, sf_dir)
     cents = similarity.hyperplane_planes(64, 16, seed=7)
     cb = np.array(similarity.hyperplane_planes(8, 128, seed=11)) \
         .reshape(8, 16, 8)
-    return similarity.cosine_topk_ivfpq_fixed(
-        emb, queries, "vec_id", "embedding", centroids=cents,
-        codebooks=cb, k=5, n_probe=6).orderBy("query_id", "rank")
+    return similarity.cosine_topk_ivfpq(
+        _emb(spark, sf_dir), _query_vectors(spark, sf_dir), "vec_id",
+        "embedding", centroids=cents, codebooks=cb, k=5, n_probe=6,
+        rerank_factor=0).orderBy("query_id", "rank")
 
 
 @register("qx_similarity_topk_ivfpq")
@@ -2045,16 +2047,20 @@ def qx_similarity_topk_ivfpq(spark, sf_dir):
     """IVF-PQ ANN (the FAISS-style composition): KMeans cells prune
     WHICH rows are scanned (n_probe=6 of 16), PQ codes shrink WHAT is
     scanned (m=32 small ints per row), exact rerank restores true
-    cosines for the shortlist only. Rows-only (model-derived);
+    cosines for the shortlist only.  Both quantizers are trained
+    first, then the same search as qx_similarity_topk_ivfpq_fixed
+    runs, with the rerank. Rows-only (model-derived);
     tests/test_dedup.py pins recall >= 0.7 vs brute force and
     true-cosine scores — recall is bounded by the IVF probe set (the
     PQ layer loses nothing after rerank; measured equal to IVF-only
     at the same n_probe)."""
     emb = _emb_narrow(spark, sf_dir)
-    queries = _query_vectors(spark, sf_dir)
-    return similarity.cosine_topk_ivfpq(emb, queries, "vec_id", "embedding",
-                                        k=5, n_probe=6
-                                        ).orderBy("query_id", "rank")
+    return similarity.cosine_topk_ivfpq(
+        emb, _query_vectors(spark, sf_dir), "vec_id", "embedding",
+        centroids=similarity.kmeans_centroids(emb, "embedding", 16),
+        codebooks=similarity.pq_train_codebooks(emb, "embedding",
+                                                m=32, k=64),
+        k=5, n_probe=6).orderBy("query_id", "rank")
 
 
 _HARDNEG_SQL = """

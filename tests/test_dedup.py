@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from social_media_ai_engineering_etl_spark.operators import dedup, similarity
+from social_media_ai_engineering_etl_spark.session import cache_scope
 
 
 @pytest.fixture(scope="module")
@@ -299,8 +300,9 @@ def test_duplicate_components_chain_propagation(spark):
     pairs = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1), (1, 0), (10, 11)],
         "id1 long, id2 long")
-    comp = {r.id: r.label
-            for r in dedup.duplicate_components(pairs).collect()}
+    with cache_scope(spark):   # releases the localCheckpoint blocks
+        comp = {r.id: r.label
+                for r in dedup.duplicate_components(pairs).collect()}
     assert {k: v for k, v in comp.items() if k <= 5} == \
         {i: 0 for i in range(6)}
     assert comp[10] == comp[11] == 10
@@ -312,8 +314,9 @@ def test_dedup_keep_representatives(spark, docs):
     base = docs.select("doc_id", "text").limit(10)
     pairs = spark.createDataFrame([(0, 1), (1, 2), (5, 7)],
                                   "id1 long, id2 long")
-    kept = dedup.dedup_keep_representatives(base, pairs, "doc_id")
-    ids = sorted(r.doc_id for r in kept.collect())
+    with cache_scope(spark):   # releases the localCheckpoint blocks
+        kept = dedup.dedup_keep_representatives(base, pairs, "doc_id")
+        ids = sorted(r.doc_id for r in kept.collect())
     assert ids == [0, 3, 4, 5, 6, 8, 9]   # dropped 1, 2 (rep 0), 7 (rep 5)
 
 
@@ -353,8 +356,9 @@ def test_duplicate_components_long_chain_converges(spark):
     (pointer jumping makes rounds O(log diameter))."""
     pairs = spark.createDataFrame([(i, i + 1) for i in range(40)],
                                   "id1 long, id2 long")
-    comp = {r.id: r.label
-            for r in dedup.duplicate_components(pairs).collect()}
+    with cache_scope(spark):   # releases the localCheckpoint blocks
+        comp = {r.id: r.label
+                for r in dedup.duplicate_components(pairs).collect()}
     assert comp == {i: 0 for i in range(41)}
 
 
@@ -430,8 +434,10 @@ def test_pq_topk_recall_and_exact_scores(emb):
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     brute = similarity.cosine_topk_bruteforce(
         emb, queries, "vec_id", "embedding", k=5).collect()
+    cb = similarity.pq_train_codebooks(emb, "embedding", m=32, k=64)
     pq = similarity.cosine_topk_pq(
-        emb, queries, "vec_id", "embedding", k=5, rerank_factor=4).collect()
+        emb, queries, "vec_id", "embedding", codebooks=cb, k=5,
+        rerank_factor=4).collect()
     exact_sets: dict = {}
     for r in brute:
         exact_sets.setdefault(r.query_id, set()).add(r.corpus_id)
@@ -456,7 +462,11 @@ def test_ivfpq_recall_and_exact_scores(emb):
     brute = similarity.cosine_topk_bruteforce(
         emb, queries, "vec_id", "embedding", k=5).collect()
     out = similarity.cosine_topk_ivfpq(
-        emb, queries, "vec_id", "embedding", k=5, n_probe=6).collect()
+        emb, queries, "vec_id", "embedding",
+        centroids=similarity.kmeans_centroids(emb, "embedding", 16),
+        codebooks=similarity.pq_train_codebooks(emb, "embedding",
+                                                m=32, k=64),
+        k=5, n_probe=6).collect()
     exact_sets: dict = {}
     for r in brute:
         exact_sets.setdefault(r.query_id, set()).add(r.corpus_id)
@@ -641,20 +651,29 @@ def test_ann_ladder_survives_null_dominated_corpus(spark):
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = spark.createDataFrame(
         [(99, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>")
-    for fn in (similarity.cosine_topk_ivf, similarity.cosine_topk_ivfpq):
-        got = fn(corpus, queries, "vec_id", "embedding",
-                 k=3, n_centroids=16).collect()
-        # one trainable point < 2 centroids -> exact-GEMM fallback
+
+    def ladder(corpus):
+        cents = similarity.kmeans_centroids(corpus, "embedding", 16)
+        cb = similarity.pq_train_codebooks(corpus, "embedding", m=2, k=4)
+        return [lambda: similarity.cosine_topk_ivf(
+                    corpus, queries, "vec_id", "embedding", cents, k=3),
+                lambda: similarity.cosine_topk_ivfpq(
+                    corpus, queries, "vec_id", "embedding", cents, cb, k=3),
+                lambda: similarity.cosine_topk_pq(
+                    corpus, queries, "vec_id", "embedding", cb, k=3)]
+
+    ivf, ivfpq, pq = ladder(corpus)
+    for fn in (ivf, ivfpq):
+        got = fn().collect()
+        # one trainable point < 2 centroids -> one cell, the flat index
         assert [r["corpus_id"] for r in got] == [31]
-    got = similarity.cosine_topk_pq(corpus, queries, "vec_id",
-                                    "embedding", k=3, m=2, kc=4).collect()
+    got = pq().collect()
     assert [r["corpus_id"] for r in got] == [31]
     # all-NULL corpora: empty result with the standard schema, no crash
     all_null = spark.createDataFrame(
         [(i, None) for i in range(8)], "vec_id long, embedding array<double>")
-    for fn in (similarity.cosine_topk_ivf, similarity.cosine_topk_ivfpq,
-               similarity.cosine_topk_pq):
-        assert fn(all_null, queries, "vec_id", "embedding", k=3).count() == 0
+    for fn in ladder(all_null):
+        assert fn().count() == 0
 
 
 def test_semantic_contamination_blocked_path_matches_broadcast(spark):
@@ -749,17 +768,69 @@ def test_fixed_quantizer_ann_recall_floors(spark, sf_dir):
     cents = similarity.hyperplane_planes(64, 16, seed=7)
     cb = np.array(similarity.hyperplane_planes(8, 128, seed=11)) \
         .reshape(8, 16, 8)
-    assert recall(similarity.cosine_topk_ivf_fixed(
+    assert recall(similarity.cosine_topk_ivf(
         emb, queries, "vec_id", "embedding", centroids=cents,
         k=5, n_probe=6).collect()) >= 0.5
     raw = recall(similarity.cosine_topk_pq(
-        emb, queries, "vec_id", "embedding", k=5, m=8, kc=16,
-        codebooks=cb, rerank_factor=0, portable_encode=True).collect())
+        emb, queries, "vec_id", "embedding", k=5,
+        codebooks=cb, rerank_factor=0).collect())
     rr = recall(similarity.cosine_topk_pq(
-        emb, queries, "vec_id", "embedding", k=5, m=8, kc=16,
-        codebooks=cb, rerank_factor=4, portable_encode=True).collect())
+        emb, queries, "vec_id", "embedding", k=5,
+        codebooks=cb, rerank_factor=4).collect())
     assert raw >= 0.15
     assert rr > raw, "exact rerank must recover recall over raw PQ"
-    assert recall(similarity.cosine_topk_ivfpq_fixed(
+    assert recall(similarity.cosine_topk_ivfpq(
         emb, queries, "vec_id", "embedding", centroids=cents,
-        codebooks=cb, k=5, n_probe=6).collect()) >= 0.1
+        codebooks=cb, k=5, n_probe=6, rerank_factor=0).collect()) >= 0.1
+
+
+@pytest.mark.parametrize("name", ["qx_similarity_topk_ivf",
+                                  "qx_similarity_topk_pq",
+                                  "qx_similarity_topk_ivfpq"])
+def test_trained_ann_query_shape(spark, sf_dir, emb, name):
+    """The trained ANN queries (a trainer, then the operator their
+    oracle-checked _fixed twins run) are rows-only, so their default-
+    tier contract is shape: k=5 neighbours ranked 1..5 for every
+    query vector (100 rows at sf0.001) with finite true cosines."""
+    import math
+
+    import social_media_ai_engineering_etl_spark.queries  # noqa: F401
+    from social_media_ai_engineering_etl_spark.registry import ORACLES, QUERIES
+    assert name in QUERIES and name not in ORACLES
+    n_queries = emb.filter((F.col("vec_id") % 25 == 0)
+                           & F.col("embedding").isNotNull()).count()
+    with cache_scope(spark):
+        rows = QUERIES[name](spark, sf_dir).collect()
+    assert len(rows) == 5 * n_queries
+    ranks: dict = {}
+    for r in rows:
+        ranks.setdefault(r.query_id, []).append(r.rank)
+    assert len(ranks) == n_queries
+    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in ranks.values())
+    assert all(math.isfinite(r.cosine_sim) and -1.0 <= r.cosine_sim <= 1.0
+               for r in rows)
+
+
+def test_nearest_rounds_to_6dp_and_breaks_ties_low():
+    """The one assignment rule behind IVF cells, query probes and PQ
+    codes: squared L2 rounded to 6 dp, ties to the lower index — the
+    rule the DuckDB oracles replay.  In each tie below, the unrounded
+    argmin would pick the other index."""
+    from social_media_ai_engineering_etl_spark.operators.similarity import (
+        _nearest, _pq_codes)
+    # cell: d2 0.25 + 1e-9 (cell 0) vs 0.25 - 1e-9 (cell 1) round equal
+    X = np.array([[0.5 + 1e-9, 0.0]])
+    C = np.array([[0.0, 0.0], [1.0, 0.0]])
+    assert ((X - C) ** 2).sum(1).argmin() == 1
+    assert _nearest(X, C).tolist() == [[0]]
+    # probes: d2 1, 0.25 + 1e-9, 4, 0.25 -> rounded, cell 1 ties cell 3
+    # and goes first; the full probe order keeps that tie-break
+    Q = np.array([[0.0, 0.0]])
+    C = np.array([[1.0, 0.0], [0.5 + 1e-9, 0.0], [2.0, 0.0], [0.0, 0.5]])
+    assert _nearest(Q, C, 2).tolist() == [[1, 3]]
+    assert _nearest(Q, C, 4).tolist() == [[1, 3, 0, 2]]
+    # PQ codes of the unit row [0.6, 0.8], m=2 sub-spaces of one dim:
+    # sub-space 0 ties 0.6 + 1e-4 (d2 1e-8) with 0.6 itself -> code 0;
+    # sub-space 1 has no tie at 6 dp -> the nearest, code 1
+    books = np.array([[[0.6 + 1e-4], [0.6]], [[0.0], [0.8 + 5e-4]]])
+    assert _pq_codes(np.array([[3.0, 4.0]]), books).tolist() == [[0, 1]]

@@ -101,8 +101,10 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     brute = similarity.cosine_topk_bruteforce(emb, queries, "vec_id",
                                               "embedding", k=5).collect()
-    ivf = similarity.cosine_topk_ivf(emb, queries, "vec_id", "embedding",
-                                     k=5, n_centroids=16, n_probe=6).collect()
+    ivf = similarity.cosine_topk_ivf(
+        emb, queries, "vec_id", "embedding",
+        centroids=similarity.kmeans_centroids(emb, "embedding", 16),
+        k=5, n_probe=6).collect()
     brute_best = {r.query_id: r.cosine_sim for r in brute if r.rank == 1}
     ivf_best = {r.query_id: r.cosine_sim for r in ivf if r.rank == 1}
     assert ivf_best
