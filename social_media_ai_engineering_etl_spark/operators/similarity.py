@@ -7,7 +7,8 @@ Six paths, trading exactness for different scale bottlenecks:
     partial top-k (compute-bound scale path);
   * hyperplane-LSH bucketed top-k — deterministic seeded planes,
     candidates only within matching buckets (collision-bound path);
-  * IVF — cells + n_probe nearest-cell rerank (cluster-pruned path);
+  * IVF — cells + n_probe nearest-cell exact rerank (cluster-pruned
+    path);
   * PQ + exact rerank — corpus as m centroid codes (16-32x memory
     cut), lookup-table scan, shortlist reranked with true floats
     (memory-bound path);
@@ -19,6 +20,13 @@ is a separate call (:func:`kmeans_centroids`,
 :func:`pq_train_codebooks`) whose output feeds the same search as a
 fixed quantizer does, so the oracle-checked fixed queries and the
 trained ones run one plan per index type.
+The scans are two kernels, each grouped: inside every Arrow batch the
+rows are grouped by a key and each group meets only the queries that
+ask for it, one GEMM (exact) or one lookup-table sum (PQ) per group,
+then the per-query window merges the batch partials.  The key is
+constant for the plain GEMM and PQ scans, the filter value for the
+filtered GEMM, and the cell for IVF and IVF-PQ: the probe is a
+driver-side map from cell to queries, not a join.
 Near-dup pair generation: exact blocked GEMM and in-bucket-GEMM LSH.
 """
 
@@ -141,6 +149,50 @@ def _nearest(X, C, n: int = 1):
     return np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :n]
 
 
+def _grouped(pdf, keys, groups):
+    """The ``(groups[key], row positions)`` of each key in one Arrow
+    batch that some query asks for; rows of other keys are skipped."""
+    for g, at in pdf.groupby(keys).indices.items():
+        if g in groups:
+            yield groups[g], at
+
+
+def _probed(probes, *cols):
+    """Per IVF cell, ``cols`` cut to the queries that probe it: the
+    scans' query groups, a query sitting in each of its n_probe."""
+    return {int(c): tuple(col[(probes == c).any(axis=1)] for col in cols)
+            for c in np.unique(probes)}
+
+
+def _exact_topk(corpus: DataFrame, id_col: str, vec_col: str, key,
+                groups, k: int, *extra: Column) -> DataFrame:
+    """The exact GEMM scan of the corpus vectors (corpus_id, cv and the
+    ``extra`` columns), local search then merge (REPOSE, ICDE 2021): in
+    each Arrow batch, ``key(pdf, X)`` puts every row in a group, each
+    group's unit rows meet its queries ``groups[key] = (qids, Qn)`` in
+    one GEMM, and :func:`_batch_topk` cuts the result; the
+    :func:`_ranked` window merges the partials.  One group is the plain
+    exact scan."""
+    c = corpus.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("corpus_id"),
+        _as_double(F.col(vec_col)).alias("cv"), *extra)
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
+            Cn, ids = _unit_rows(X), pdf["corpus_id"].to_numpy()
+            parts = [_batch_topk(qids, ids[at], (Cn[at] @ Qn.T).T, k)
+                     for (qids, Qn), at in _grouped(pdf, key(pdf, X),
+                                                    groups)]
+            if parts:
+                yield _partial_frame(parts, "cosine_sim")
+
+    return _ranked(c.mapInPandas(
+        score, "query_id long, corpus_id long, cosine_sim double"), k)
+
+
 def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame,
                            id_col: str, vec_col: str, k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query (excluding self), deterministic
@@ -260,42 +312,23 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
     each query probes only its ``n_probe`` nearest cells and reranks
     those candidates by exact cosine.
 
-    Plan: one narrow numpy pass gives every corpus row its cell; the
-    probes are picked driver-side against the tiny centroid matrix and
-    broadcast with the query vectors; candidate generation is a (cell)
-    equi-join touching ~n_probe/n_centroids of the corpus per query.
-    Cells and probes follow :func:`_nearest`, so with fixed centroids
-    (e.g. the LCG unit vectors of :func:`hyperplane_planes`) the whole
-    plan replays in DuckDB; recall/latency trades via n_probe."""
-    spark = corpus.sparkSession
+    Plan: the grouped GEMM scan of :func:`cosine_topk_gemm_filtered`
+    with the cell as the group: inside each Arrow batch, every corpus
+    row gets its cell, and each cell's rows meet the queries probing
+    it in one GEMM (~n_probe/n_centroids of the corpus per query), no
+    join and no per-pair row.  Probes are picked driver-side against
+    the tiny centroid matrix from the raw query vectors.  Cells and
+    probes follow :func:`_nearest`, so with fixed centroids (e.g. the
+    LCG unit vectors of :func:`hyperplane_planes`) the search replays
+    in DuckDB; recall/latency trades via n_probe."""
     cents = np.asarray(centroids, dtype=np.float64)
     qm = _query_matrix(queries, id_col, vec_col)
     if qm is None or not len(cents):
-        return _no_neighbours(spark)
-    qpd, Q, _ = qm
-    probes = spark.createDataFrame(
-        [(q, qv, int(cell)) for q, qv, cells in
-         zip(qpd["qid"].tolist(), Q.tolist(), _nearest(Q, cents, n_probe))
-         for cell in cells],
-        "query_id long, qv array<double>, cell int"
-    ).withColumn("qn", _norm(F.col("qv")))
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-                yield pdf.assign(cell=_nearest(X, cents)[:, 0])
-
-    c = (corpus.filter(F.col(vec_col).isNotNull())
-         .select(F.col(id_col).cast("long").alias("corpus_id"),
-                 _as_double(F.col(vec_col)).alias("cv"))
-         .mapInPandas(assign, "corpus_id long, cv array<double>, cell int")
-         .withColumn("cn", _norm(F.col("cv"))))
-    scored = (c.join(F.broadcast(probes), "cell")
-              .filter(F.col("corpus_id") != F.col("query_id"))
-              .withColumn("cosine_sim",
-                          _safe_cosine(_dot(F.col("cv"), F.col("qv")))))
-    return _ranked(scored, k)
+        return _no_neighbours(corpus.sparkSession)
+    qpd, Q, Qn = qm
+    return _exact_topk(
+        corpus, id_col, vec_col, lambda pdf, X: _nearest(X, cents)[:, 0],
+        _probed(_nearest(Q, cents, n_probe), qpd["qid"].to_numpy(), Qn), k)
 
 
 def cosine_topk_gemm(corpus: DataFrame, queries: DataFrame,
@@ -321,24 +354,9 @@ def cosine_topk_gemm(corpus: DataFrame, queries: DataFrame,
     if qm is None:
         return _no_neighbours(corpus.sparkSession)
     qpd, _, Qn = qm
-    qids = qpd["qid"].to_numpy()
-
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("corpus_id"),
-                      _as_double(F.col(vec_col)).alias("cv"))
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Cn = _unit_rows(np.stack(pdf["cv"].to_numpy()).astype(np.float64))
-            sims = (Cn @ Qn.T).T                   # (n_queries, n_corpus)
-            yield _partial_frame(
-                [_batch_topk(qids, pdf["corpus_id"].to_numpy(), sims, k)],
-                "cosine_sim")
-
-    scored = c.mapInPandas(
-        score, "query_id long, corpus_id long, cosine_sim double")
-    return _ranked(scored, k)
+    return _exact_topk(corpus, id_col, vec_col,
+                       lambda pdf, X: np.zeros(len(pdf), np.int64),
+                       {0: (qpd["qid"].to_numpy(), Qn)}, k)
 
 
 def cosine_topk_gemm_filtered(corpus: DataFrame, queries: DataFrame,
@@ -368,32 +386,11 @@ def cosine_topk_gemm_filtered(corpus: DataFrame, queries: DataFrame,
     groups = {fv: (g["qid"].to_numpy(), Qn[g.index])
               for fv, g in qpd.groupby("fv")}
 
-    c = (corpus
-         .filter(F.col(vec_col).isNotNull())
-         .filter(F.col(filter_col).isin([v.item() if hasattr(v, "item")
-                                         else v for v in groups]))
-         .select(F.col(id_col).alias("corpus_id"),
-                 F.col(filter_col).alias("fv"),
-                 _as_double(F.col(vec_col)).alias("cv")))
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            parts = []
-            for fv, g in pdf.groupby("fv"):
-                if fv not in groups:
-                    continue
-                qids, Qn = groups[fv]
-                Cn = _unit_rows(np.stack(g["cv"].to_numpy()).astype(np.float64))
-                parts.append(_batch_topk(qids, g["corpus_id"].to_numpy(),
-                                         (Cn @ Qn.T).T, k))
-            if parts:
-                yield _partial_frame(parts, "cosine_sim")
-
-    scored = c.mapInPandas(
-        score, "query_id long, corpus_id long, cosine_sim double")
-    return _ranked(scored, k)
+    used = F.col(filter_col).isin([v.item() if hasattr(v, "item") else v
+                                   for v in groups])
+    return _exact_topk(corpus.filter(used), id_col, vec_col,
+                       lambda pdf, X: pdf["fv"], groups, k,
+                       F.col(filter_col).alias("fv"))
 
 
 def embedding_pairs_blocked(df: DataFrame, id_col: str, vec_col: str,
@@ -577,32 +574,63 @@ def _pq_index(corpus: DataFrame, id_col: str, vec_col: str, codebooks,
     """The index build, one narrow mapInPandas pass over the corpus:
     each vector as ``m`` codeword indices (64 float64 dims to m small
     ints, a 32x memory cut at m=8, which is what lets a 100 TB
-    embedding corpus live in scan-speed storage) and, given coarse
-    centroids, its IVF cell: ``(id, codes)`` or ``(id, cell, codes)``."""
+    embedding corpus live in scan-speed storage) and its IVF cell
+    under the coarse ``cents`` (cell 0, the flat index's one cell,
+    without them): ``(id, cell, codes)``."""
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            out = {"id": pdf["id"].to_numpy()}
-            if cents is not None:
-                out["cell"] = _nearest(X, cents)[:, 0]
-            out["codes"] = list(_pq_codes(X, codebooks))
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({
+                "id": pdf["id"].to_numpy(),
+                "cell": 0 if cents is None else _nearest(X, cents)[:, 0],
+                "codes": list(_pq_codes(X, codebooks))})
 
-    cell = "" if cents is None else "cell int, "
     return (corpus.filter(F.col(vec_col).isNotNull())
             .select(F.col(id_col).cast("long").alias("id"),
                     _as_double(F.col(vec_col)).alias("v"))
-            .mapInPandas(encode, f"id long, {cell}codes array<long>"))
+            .mapInPandas(encode, "id long, cell int, codes array<long>"))
 
 
 def _lut(Qn, codebooks):
-    """LUT[q, j, c] = <q_sub_j, codeword_jc>: summed over j at a corpus
-    row's codes, it approximates the row's cosine to query q."""
+    """LUT[j, c, q] = <q_sub_j, codeword_jc>: summed over j at a corpus
+    row's codes, it approximates the row's cosine to query q.  Laid out
+    so that a sub-space's gather at a batch's codes copies whole rows."""
     m, _, dsub = codebooks.shape
-    return np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub),
-                     codebooks)
+    return np.ascontiguousarray(np.einsum(
+        "qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub),
+        codebooks).transpose(1, 2, 0))
+
+
+def _pq_topk(enc: DataFrame, groups, lut, k_scan: int) -> DataFrame:
+    """The PQ scan of the index ``enc`` (id, cell, codes), grouped as
+    :func:`_exact_topk` is: each cell's rows in a batch are scored
+    against its queries ``groups[cell] = (qids, their LUT columns)`` by
+    m lookups summed, then cut at the 6-dp OUTPUT precision: ranking by
+    raw floats lets accumulation-order ulps (engine-specific) reorder
+    scores that round to the same value — on near-constant data the
+    ulps ARE the order (r5 degenerate-parity finding); the id
+    tie-break at rounded precision is portable."""
+    def scan(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+            ids = pdf["id"].to_numpy()
+            parts = []
+            for (qids, qi), at in _grouped(pdf, pdf["cell"], groups):
+                L = lut[:, :, qi]
+                scores = np.zeros((len(at), len(qi)))
+                for j in range(len(L)):
+                    scores += L[j][codes[at, j]]
+                parts.append(_batch_topk(qids, ids[at], scores.T, k_scan,
+                                         rounded=True))
+            if parts:
+                yield _partial_frame(parts, "approx_sim")
+
+    return enc.mapInPandas(
+        scan, "query_id long, corpus_id long, approx_sim double")
 
 
 def _refined(scored: DataFrame, k: int, rerank_factor: int,
@@ -663,30 +691,11 @@ def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
                               if rerank_factor > 0 else "approx_sim")
     qpd, _, Qn = qm
     qids = qpd["qid"].to_numpy()
-    lut = _lut(Qn, codebooks)
     # per-batch partial top-k must keep the WIDER rerank shortlist,
     # or batch-level truncation silently caps recall at the raw-PQ@k
-    k_scan = k * max(rerank_factor, 1)
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            scores = np.zeros((len(qids), len(codes)))
-            for j in range(len(codebooks)):
-                scores += lut[:, j, codes[:, j]]
-            # cut at the 6-dp OUTPUT precision: ranking by raw floats
-            # lets accumulation-order ulps (engine-specific) reorder
-            # scores that round to the same value — on near-constant
-            # data the ulps ARE the order (r5 degenerate-parity
-            # finding); id-tiebreak at rounded precision is portable
-            yield _partial_frame(
-                [_batch_topk(qids, pdf["id"].to_numpy(), scores, k_scan,
-                             rounded=True)], "approx_sim")
-
-    scored = _pq_index(corpus, id_col, vec_col, codebooks).mapInPandas(
-        scan, "query_id long, corpus_id long, approx_sim double")
+    scored = _pq_topk(_pq_index(corpus, id_col, vec_col, codebooks),
+                      {0: (qids, np.arange(len(qids)))},
+                      _lut(Qn, codebooks), k * max(rerank_factor, 1))
     return _refined(scored, k, rerank_factor, corpus, id_col, vec_col,
                     qids, Qn)
 
@@ -705,61 +714,26 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
     the whole composition replays in DuckDB.
 
     Plan: one narrow pass over the corpus gives (id, cell, codes), the
-    index build a daily job checkpoints; the probed (query_id, cell)
-    pairs, picked driver-side against the tiny centroid matrix,
-    broadcast into an equi-join against it; scoring is LUT adds inside
-    mapInPandas with per-batch partial top-k — the same shuffle
-    contract as cosine_topk_gemm/pq."""
-    spark = corpus.sparkSession
+    index build a daily job checkpoints; the PQ scan of
+    :func:`cosine_topk_pq` then runs with the cell as the group: in
+    each Arrow batch, each cell's codes meet only the LUT columns of
+    the queries probing it (picked driver-side against the tiny
+    centroid matrix from the raw query vectors), no join and no
+    per-pair row; per-group partial top-k keeps the shuffle contract
+    of cosine_topk_gemm/pq."""
     cents = np.asarray(centroids, dtype=np.float64)
     qm = _query_matrix(queries, id_col, vec_col)
     if qm is None or not len(cents) or not codebooks.size:
-        return _no_neighbours(spark, "cosine_sim"
+        return _no_neighbours(corpus.sparkSession, "cosine_sim"
                               if rerank_factor > 0 else "approx_sim")
     qpd, Q, Qn = qm
     qids = qpd["qid"].to_numpy()
-    lut = _lut(Qn, codebooks)
-    probes = spark.createDataFrame(
-        [(int(q), int(cell)) for q, cells in
-         zip(qids, _nearest(Q, cents, n_probe)) for cell in cells],
-        "query_id long, cell int")
-    qrow = {int(q): i for i, q in enumerate(qids)}
-    k_scan = k * max(rerank_factor, 1)
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            q = pdf["query_id"].to_numpy()
-            qi = pdf["query_id"].map(qrow).to_numpy()
-            s = np.zeros(len(pdf))
-            for j in range(len(codebooks)):
-                s += lut[qi, j, codes[:, j]]
-            # the probe join mixes queries in one batch: each query's
-            # rows become one row of a -inf-padded matrix, cut at the
-            # 6-dp key as in cosine_topk_pq
-            order = np.argsort(q, kind="stable")
-            uq, first, n = np.unique(q[order], return_index=True,
-                                     return_counts=True)
-            g = np.repeat(np.arange(len(uq)), n)
-            at = (g, np.arange(len(order)) - first[g])
-            S = np.full((len(uq), n.max()), -np.inf)
-            S[at] = s[order]
-            ids = np.zeros(S.shape, np.int64)
-            ids[at] = pdf["id"].to_numpy()[order]
-            yield _partial_frame(
-                [_batch_topk(uq, ids, S, k_scan, rounded=True)],
-                "approx_sim")
-
-    enc = _pq_index(corpus, id_col, vec_col, codebooks, cents)
-    scored = (enc.join(F.broadcast(probes), "cell")
-              .select("query_id", "id", "codes")
-              .mapInPandas(scan,
-                           "query_id long, corpus_id long, approx_sim double"))
+    scored = _pq_topk(
+        _pq_index(corpus, id_col, vec_col, codebooks, cents),
+        _probed(_nearest(Q, cents, n_probe), qids, np.arange(len(qids))),
+        _lut(Qn, codebooks), k * max(rerank_factor, 1))
     return _refined(scored, k, rerank_factor, corpus, id_col, vec_col,
                     qids, Qn)
-
 
 
 def hybrid_retrieval_topk(docs: DataFrame, emb: DataFrame,

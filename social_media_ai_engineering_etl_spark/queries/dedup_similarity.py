@@ -1238,9 +1238,12 @@ def qx_similarity_topk_ivf_fixed(spark, sf_dir):
     quantizer (16 LCG unit-vector centroids, n_probe=6) — the
     pluggable-quantizer IVF form, and therefore the first
     ORACLE-CHECKED row of the IVF family: cell assignment (rounded
-    argmin L2, smallest-cell ties), query probing, the (cell)
-    candidate equi-join and the exact cosine rerank all replay in
-    DuckDB (_ivf_fixed_oracle_sql).  The KMeans-trained variant
+    argmin L2, smallest-cell ties), query probing and the exact
+    cosine rerank of the probed cells' rows all replay in DuckDB
+    (_ivf_fixed_oracle_sql).  The oracle states the probe rule as a
+    (cell) join; the engine runs no join, it groups each Arrow batch
+    by cell and scores each cell against its probing queries in one
+    GEMM.  The KMeans-trained variant
     (qx_similarity_topk_ivf) runs the same operator with trained
     centroids and stays rows-only with its recall contract — MLlib's
     fit is engine-specific; the quantizer is the only input that

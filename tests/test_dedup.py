@@ -784,6 +784,61 @@ def test_fixed_quantizer_ann_recall_floors(spark, sf_dir):
         codebooks=cb, k=5, n_probe=6, rerank_factor=0).collect()) >= 0.1
 
 
+def test_ivf_scans_are_the_exact_and_pq_scans_keyed_by_cell(spark):
+    """IVF is the grouped GEMM scan keyed by cell, IVF-PQ the grouped
+    PQ scan: probing every cell they equal the exact GEMM and the PQ
+    scan row for row (6-dp scores, NaN first, self pairs excluded);
+    probing one cell, IVF equals the filtered GEMM whose filter value
+    is the corpus row's cell and the query's probe.  Four-row Arrow
+    batches put several cells, and cells no query probes, in one
+    batch; the fixture asserts that it does."""
+    nan = float("nan")
+    # centroids of unequal norms: cells and probes of raw vectors
+    # differ from those of unit vectors (5 rows and 1 query here)
+    cents = np.array([[2.0, 0, 0, 0], [0, 1.0, 0, 0],
+                      [0, 0, 3.0, 0], [-1.0, -1.0, -1.0, 1.0]])
+    vecs = np.random.default_rng(3).normal(size=(30, 4))
+    vecs[5] = 0.0
+    vecs[11] = [nan, 0.5, -0.5, 1.0]
+    cell = similarity._nearest(vecs, cents)[:, 0]
+    emb = spark.createDataFrame(
+        [(i, int(c), v.tolist()) for i, (c, v) in enumerate(zip(cell, vecs))],
+        "vec_id long, cell long, embedding array<double>").coalesce(1)
+    qvecs = [vecs[i].tolist() for i in (0, 7, 14)] + [[0.3, -1.0, 0.2, 0.1]]
+    probe = similarity._nearest(np.array(qvecs), cents)[:, 0]
+    queries = spark.createDataFrame(
+        [(q, int(c), v) for q, c, v in zip((0, 7, 14, 100), probe, qvecs)],
+        "vec_id long, cell long, embedding array<double>")
+    cb = np.array(similarity.hyperplane_planes(2, 8, seed=11)).reshape(2, 4, 2)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        def tag(batches):
+            for i, pdf in enumerate(batches):
+                yield pdf[["cell"]].assign(batch=i)
+        batches = {}
+        for r in emb.mapInPandas(tag, "cell long, batch int").collect():
+            batches.setdefault(r.batch, set()).add(r.cell)
+        assert len(set(cell)) >= 2 and len(batches) >= 2
+        assert any(b - set(probe) for b in batches.values()), \
+            "no batch holds a cell that no query probes"
+
+        def ann(fn, *a, **kw):
+            return _rows(fn(emb, queries, "vec_id", "embedding", *a, k=3,
+                            **kw))
+        exact = ann(similarity.cosine_topk_gemm)
+        assert exact[0] == (0, 1, 11, "nan")
+        assert ann(similarity.cosine_topk_ivf, cents, n_probe=4) == exact
+        assert ann(similarity.cosine_topk_ivfpq, cents, cb, n_probe=4,
+                   rerank_factor=0) == ann(similarity.cosine_topk_pq, cb,
+                                           rerank_factor=0)
+        assert ann(similarity.cosine_topk_ivf, cents, n_probe=1) == ann(
+            similarity.cosine_topk_gemm_filtered, "cell")
+    finally:
+        spark.conf.set(key, old)
+
+
 @pytest.mark.parametrize("name", ["qx_similarity_topk_ivf",
                                   "qx_similarity_topk_pq",
                                   "qx_similarity_topk_ivfpq"])

@@ -19,3 +19,14 @@ def test_every_query_runs(spark, sf_dir):
         df = fn(spark, sf_dir)
         assert df.columns, name
         df.limit(1).collect()
+
+
+@pytest.mark.parametrize("name", ["qb7_train_test_split", "qx_dedup_simhash",
+                                  "qx_dedup_incremental"])
+def test_oracle_free_query_runs(name, spark, sf_dir):
+    """Default-tier smoke for oracle-free queries no other test names:
+    registered, no oracle, and a bounded action yields a row."""
+    assert name in QUERIES and name not in ORACLES
+    df = QUERIES[name](spark, sf_dir)
+    assert df.columns, name
+    assert len(df.limit(1).collect()) == 1, name

@@ -436,6 +436,20 @@ def test_large_orders_aggregates_fact_before_join(spark, sf_dir):
     assert m and "l_quantity" in m.group(0), "lineitem scan not pruned"
 
 
+@pytest.mark.parametrize("name", ["qx_similarity_topk_ivf_fixed",
+                                  "qx_similarity_topk_ivfpq_fixed"])
+def test_ivf_scans_cells_without_a_join(spark, sf_dir, name):
+    """IVF and IVF-PQ group each Arrow batch by cell inside the Python
+    scan, the probes a driver-side map from cell to queries: the plan
+    has the scan node and no join at all (a probe join emits one row
+    per (query, candidate) pair)."""
+    plan = plan_of(QUERIES[name](spark, sf_dir))
+    assert "MapInPandas" in plan, plan
+    for join in ("BroadcastHashJoin", "SortMergeJoin",
+                 "BroadcastNestedLoopJoin"):
+        assert join not in plan, f"{name}: {join}"
+
+
 def test_hybrid_retrieval_is_funnel_not_scan(spark, sf_dir):
     """Hybrid retrieval: candidates come from the gram equi-join
     (inverted index) — no cartesian/nested-loop pairing anywhere, and
