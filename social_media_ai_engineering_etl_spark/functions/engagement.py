@@ -53,15 +53,9 @@ def quantile_cutoffs(df: DataFrame, ratio_col: str = "engagement_ratio",
     a tight accuracy knob; the tier contract is distributional, so
     approx is acceptable at scale — keep exact for parity tests.
     """
-    from ..session import cached_exprs
-
-    # constant name-referencing trees per (ratio_col, qs) — the q26
-    # build-cache idiom (r9 build-cost sweep)
-    top, bot = cached_exprs(
-        ("tier_cutoffs", ratio_col, top_q, bot_q),
-        lambda: (F.expr(f"percentile({ratio_col}, {top_q})").alias("top_cut"),
-                 F.expr(f"percentile({ratio_col}, {bot_q})").alias("bot_cut")))
-    return df.select(top, bot)
+    return df.select(
+        F.expr(f"percentile({ratio_col}, {top_q})").alias("top_cut"),
+        F.expr(f"percentile({ratio_col}, {bot_q})").alias("bot_cut"))
 
 
 def with_tiers(df: DataFrame, ratio_col: str = "engagement_ratio",
@@ -73,17 +67,11 @@ def with_tiers(df: DataFrame, ratio_col: str = "engagement_ratio",
     un-shuffled (scan -> map). The only shuffle in the whole tiering
     plan is the final aggregation the caller adds.
     """
-    from ..session import cached_exprs
-
     cutoffs = quantile_cutoffs(df, ratio_col, top_q, bot_q)
-    tier = cached_exprs(
-        ("tier_expr", ratio_col),
-        lambda: tier_expr(F.col(ratio_col),
-                          F.col("top_cut"), F.col("bot_cut")))
+    tier = tier_expr(F.col(ratio_col), F.col("top_cut"), F.col("bot_cut"))
     out = (df.crossJoin(F.broadcast(cutoffs))
              .withColumn("tier", tier)
              .drop("top_cut", "bot_cut"))
     if not keep_bottom:
-        out = out.filter(
-            cached_exprs("tier_not_c", lambda: F.col("tier") != TIER_C))
+        out = out.filter(F.col("tier") != TIER_C)
     return out

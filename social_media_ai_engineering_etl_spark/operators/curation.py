@@ -167,17 +167,15 @@ def repetition_profile(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 
 
-def _gram_rows(df: DataFrame, id_col: str, text_col: str, n: int,
+def _gram_rows(df: DataFrame, id_col: str, shingles: Column,
                id_alias: str) -> DataFrame:
     """(id_alias, gram) rows: one row per distinct word n-gram of a
-    document.  Called once per join side, so each side's ``gram`` is
-    its own explode/alias expression and the join does not lean on the
-    analyzer to split one shared attribute id.  The shingle tree under
-    it is built once per gateway by ``shingle_col`` (the
-    split+slice+zip tree costs ~40 ms of py4j round-trips per build)."""
-    from .dedup import shingle_col
+    document.  Called once per join side with the same ``shingles``
+    tree (built once by the caller), so each side's ``gram`` is its
+    own explode/alias expression and the join does not lean on the
+    analyzer to split one shared attribute id."""
     return df.select(F.col(id_col).alias(id_alias),
-                     F.explode(shingle_col(text_col, n)).alias("gram"))
+                     F.explode(shingles).alias("gram"))
 
 
 def decontaminate(corpus: DataFrame, benchmark: DataFrame,
@@ -192,8 +190,10 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     corpus text at all, and the per-doc rollup partial-aggregates
     map-side. Returns (doc_id, n_shared_grams, n_bench_docs_hit).
     """
-    bench = _gram_rows(benchmark, id_col, text_col, n, "bench_id")
-    corp = _gram_rows(corpus, id_col, text_col, n, "doc_id")
+    from .dedup import word_shingles
+    shingles = word_shingles(F.col(text_col), n)
+    bench = _gram_rows(benchmark, id_col, shingles, "bench_id")
+    corp = _gram_rows(corpus, id_col, shingles, "doc_id")
     hits = corp.join(F.broadcast(bench), "gram")
     return (hits.groupBy("doc_id")
             .agg(F.count_distinct("gram").alias("n_shared_grams"),
@@ -480,10 +480,12 @@ def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
     grams, so the result is bit-identical to :func:`decontaminate`
     (same oracle) — the bloom can only let extra candidates INTO the
     verify join, never drop a true hit."""
-    bench = _gram_rows(benchmark, id_col, text_col, n, "bench_id")
+    from .dedup import word_shingles
+    shingles = word_shingles(F.col(text_col), n)
+    bench = _gram_rows(benchmark, id_col, shingles, "bench_id")
     bitmap = bloom_bitmap(bench.select("gram").distinct(), "gram",
                           m_bits, k)
-    corp = (_gram_rows(corpus, id_col, text_col, n, "doc_id")
+    corp = (_gram_rows(corpus, id_col, shingles, "doc_id")
             .filter(bloom_might_contain("gram", bitmap, m_bits, k)))
     hits = corp.join(bench, "gram")
     return (hits.groupBy("doc_id")

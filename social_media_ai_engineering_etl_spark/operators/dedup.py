@@ -83,19 +83,6 @@ def word_shingle_hashes(text: Column, n: int = 3) -> Column:
         zipped, lambda s: F.xxhash64(*[s[str(j)] for j in range(n)])))
 
 
-def shingle_col(text_col: str, n: int, hashed: bool = False) -> Column:
-    """:func:`word_shingles` / :func:`word_shingle_hashes` over a
-    NAMED column, built once per gateway (cached_exprs): the
-    split+slice+zip+transform tree costs ~30-60 ms of py4j
-    round-trips per build and every dedup-family query rebuilds it
-    (r8 optimization round — plan-fragment cache, never data)."""
-    from ..session import cached_exprs
-
-    fn = word_shingle_hashes if hashed else word_shingles
-    return cached_exprs(("shingles", text_col, n, hashed),
-                        lambda: fn(F.col(text_col), n))
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over two distinct-element arrays; 0.0 when both
     are empty (ANSI mode would otherwise raise DIVIDE_BY_ZERO the
@@ -163,7 +150,7 @@ def ngram_jaccard_pairs_inverted(df: DataFrame, id_col: str, text_col: str,
     set is byte-identical on the fixtures).
     """
     sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n, hashed=True).alias("sh"))
+                   word_shingle_hashes(F.col(text_col), n).alias("sh"))
     # the shingle table feeds sizes (x2 joins), the explode, and both
     # sides of the self-join — persist or the shingling (regex split +
     # n-way zip + distinct) recomputes per branch (no DAG CSE; the
@@ -229,7 +216,7 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
     from pyspark.sql import Window
 
     sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n, hashed=True).alias("sh"))
+                   word_shingle_hashes(F.col(text_col), n).alias("sh"))
     sh = (sh.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
           .persist())
     sizes = sh.select("id", "sz")
@@ -242,11 +229,8 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
     # 1e-9 slack as the join prunes below — float ceil rounding UP here
     # would SHORTEN the prefix (the lossy direction), slack only ever
     # lengthens it by one token.
-    from ..session import cached_exprs
-    plen = cached_exprs(
-        ("prefix_plen", threshold),
-        lambda: F.col("sz")
-        - F.ceil(F.lit(threshold) * F.col("sz") - F.lit(1e-9)) + 1)
+    plen = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")
+                                - F.lit(1e-9)) + 1
     prefix = (ranked.filter(F.col("rk") <= plen)
               .select("id", "s", "sz", "rk").persist())
     # two more LOSSLESS PPJoin prunes applied inside the token join,
@@ -275,24 +259,18 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
     # t.  Subtracting/adding 1e-9 weakens each prune by at most one
     # candidate — still lossless, since the exact-Jaccard verify below
     # decides membership.
-    # the prune conjunction is a constant tree per threshold (~40
-    # py4j round-trips) — built once per gateway (r8)
-    def _build_cond():
-        olap = F.ceil(F.lit(t / (1.0 + t))
-                      * (F.col("a.sz") + F.col("b.sz")) - F.lit(1e-9))
-        return ((F.col("a.s") == F.col("b.s"))
-                & (F.col("a.id") < F.col("b.id"))
-                & (F.col("b.sz") * t <= F.col("a.sz") + F.lit(1e-9))
-                & (F.col("a.sz") * t <= F.col("b.sz") + F.lit(1e-9))
-                & (F.least(F.col("a.rk"), F.col("b.rk"))
-                   + F.least(F.col("a.sz") - F.col("a.rk"),
-                             F.col("b.sz") - F.col("b.rk"))
-                   >= olap))
-
+    olap = F.ceil(F.lit(t / (1.0 + t))
+                  * (F.col("a.sz") + F.col("b.sz")) - F.lit(1e-9))
+    cond = ((F.col("a.s") == F.col("b.s"))
+            & (F.col("a.id") < F.col("b.id"))
+            & (F.col("b.sz") * t <= F.col("a.sz") + F.lit(1e-9))
+            & (F.col("a.sz") * t <= F.col("b.sz") + F.lit(1e-9))
+            & (F.least(F.col("a.rk"), F.col("b.rk"))
+               + F.least(F.col("a.sz") - F.col("a.rk"),
+                         F.col("b.sz") - F.col("b.rk"))
+               >= olap))
     cand = (prefix.alias("a")
-            .join(prefix.alias("b"),
-                  cached_exprs(("prefix_join_cond", threshold),
-                               _build_cond))
+            .join(prefix.alias("b"), cond)
             .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
             .distinct())
     # verify: per-candidate exact Jaccard over the two hashed-shingle
@@ -338,7 +316,7 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     candidate pass.  Same ``max_df`` stopword-shingle skew guard.
     """
     sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n).alias("sh"))
+                   word_shingles(F.col(text_col), n).alias("sh"))
     sh = (sh.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
           .persist())
     sizes = sh.select("id", "sz")
@@ -481,22 +459,16 @@ def banded_rows(sig: DataFrame, num_hashes: int, bands: int,
     band — bucket = hash of the band's signature slice. The shared
     front half of LSH candidate generation (batch self-join below,
     per-bucket state keying in streaming.neardup)."""
-    from ..session import cached_exprs
-
     r = num_hashes // bands
     extra = ["sig"] if keep_sig else []
-    # constant tree over col("sig") (~0.17 s of py4j round-trips per
-    # build) — built once per gateway (cached_exprs, the q26 idiom)
-    bb = cached_exprs(
-        ("banded_rows", num_hashes, bands),
-        lambda: F.explode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(F.concat_ws(
-                    ",", F.transform(F.slice(F.col("sig"), b * r + 1, r),
-                                     lambda x: x.cast("string"))))
-                 .alias("bucket")))))
+    bb = F.explode(F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.xxhash64(F.concat_ws(
+                ",", F.transform(F.slice(F.col("sig"), b * r + 1, r),
+                                 lambda x: x.cast("string"))))
+             .alias("bucket"))))
     return (sig.select("id", *extra, bb.alias("bb"))
             .select("id", *extra, "bb.band", "bb.bucket"))
 
@@ -550,20 +522,6 @@ def _sig_fn(impl: str):
     raise ValueError(f"unknown minhash impl {impl!r} (arrow|jvm)")
 
 
-def _sig_col(impl: str, num_hashes: int, base_hash=None) -> Column:
-    """Signature Column over ``col("sh")`` — a constant tree per
-    (impl, num_hashes) when the default base hash is used (the
-    coefficient arrays alone are 256 literals = 256 py4j round-trips),
-    so the production path builds it once per gateway (cached_exprs,
-    the q26 idiom).  Custom ``base_hash`` callables (portable twins)
-    are not cached — their identity isn't a stable key."""
-    if base_hash is not None:
-        return _sig_fn(impl)(F.col("sh"), num_hashes, base_hash=base_hash)
-    from ..session import cached_exprs
-    return cached_exprs(("minhash_sig", impl, num_hashes),
-                        lambda: _sig_fn(impl)(F.col("sh"), num_hashes))
-
-
 def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
                            n: int = 3, num_hashes: int = 128,
                            bands: int = 32, impl: str = "arrow") -> DataFrame:
@@ -601,9 +559,9 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     banding.  ``max_bucket`` passes through to the hot-bucket guard
     (see :func:`_lsh_candidates_from_sig`)."""
     sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n).alias("sh")).persist()
-    sig = sh.select("id", _sig_col(impl, num_hashes,
-                                   base_hash).alias("sig"))
+                   word_shingles(F.col(text_col), n).alias("sh")).persist()
+    sig = sh.select("id", _sig_fn(impl)(
+        F.col("sh"), num_hashes, base_hash=base_hash).alias("sig"))
     # persist the banded table: BOTH sides of the candidate self-join
     # read it, so without materialization the explode + 32-slice
     # xxhash64 banding (and the signature map above it) runs twice —
@@ -682,9 +640,9 @@ def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
     schema's column metadata under ``lsh_guard`` so the evidence
     travels with the plan and any parquet the caller writes."""
     sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n).alias("sh")).persist()
-    sig = sh.select("id", _sig_col(impl, num_hashes,
-                                   base_hash).alias("sig"))
+                   word_shingles(F.col(text_col), n).alias("sh")).persist()
+    sig = sh.select("id", _sig_fn(impl)(
+        F.col("sh"), num_hashes, base_hash=base_hash).alias("sig"))
     # persist the GUARDED (width-windowed) banded relation, not the
     # raw banded table (VERDICT r8 ask #3): both self-join sides read
     # it, so persisting below the window made each side re-run the
@@ -1170,23 +1128,16 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     from .textquality import (gram_hashes, winnow_fingerprint,
                               winnow_fingerprint_arrow)
 
-    from ..session import cached_exprs
-
     winnow = {"arrow": winnow_fingerprint_arrow,
               "jvm": winnow_fingerprint}[impl]
-    # gram-hash and winnow columns are constant trees per knob set —
-    # built once per gateway (cached_exprs, r8)
-    hs_col = cached_exprs(("gram_hashes", text_col, k, mirrorable),
-                          lambda: gram_hashes(F.col(text_col), k,
-                                              mirrorable=mirrorable))
-    fps_col = cached_exprs(("winnow_fp", impl, w),
-                           lambda: winnow(F.col("hs"), w))
-    hashed = df.select(F.col(id_col).alias("id"), hs_col.alias("hs"))
+    hashed = df.select(F.col(id_col).alias("id"),
+                       gram_hashes(F.col(text_col), k,
+                                   mirrorable=mirrorable).alias("hs"))
     # the fingerprint table feeds FOUR branches (both sides of the
     # self-join + two size joins); without persist the whole
     # hash+winnow pipeline recomputes per branch (no DAG CSE — the
     # minhash shingle-table lesson; measured ~4x on the scale probe)
-    fp = (hashed.select("id", fps_col.alias("fps"))
+    fp = (hashed.select("id", winnow(F.col("hs"), w).alias("fps"))
           .withColumn("n_fp", F.size("fps")).filter(F.col("n_fp") > 0)
           .persist())
     sizes = fp.select("id", "n_fp")

@@ -1,6 +1,6 @@
 """Multimodal columns for a training-data pipeline: image/audio/video
 as opaque ``binary`` columns with typed metadata structs, and
-decode / feature-extract / resize / frame-sample operators over
+decode / feature-extract operators over
 ``mapInPandas`` (Arrow-batched, one decoder instance per partition).
 
 Decode comes in two layers.  METADATA decode is REAL and
@@ -150,34 +150,6 @@ def extract_media_features_arrow(df: DataFrame,
     return df.mapInArrow(fn, out_schema)
 
 
-def resize_metadata(df: DataFrame, max_side: int = 256,
-                    media_col: str = "media") -> DataFrame:
-    """Resize plan (native): clamp the longer side to ``max_side``
-    preserving aspect ratio — pure metadata arithmetic; the pixel
-    resample would live in the decoder."""
-    w = F.col(f"{media_col}.width").cast("double")
-    h = F.col(f"{media_col}.height").cast("double")
-    scale = F.least(F.lit(1.0), max_side / F.greatest(w, h, F.lit(1.0)))
-    return df.withColumns({
-        "resized_width": F.floor(w * scale).cast("int"),
-        "resized_height": F.floor(h * scale).cast("int"),
-    })
-
-
-def sample_frames(df: DataFrame, every_n: int = 24,
-                  media_col: str = "media") -> DataFrame:
-    """Frame-sampling fan-out for video rows: one output row per
-    sampled frame index (0, n, 2n, ...) — the UDTF-shaped explode;
-    non-video rows pass through with frame_idx NULL."""
-    n_frames = F.col(f"{media_col}.n_frames")
-    idxs = F.when(
-        F.col(f"{media_col}.media_type") == "video",
-        F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)))
-    return df.withColumn(
-        "frame_idx",
-        F.explode_outer(F.coalesce(idxs, F.array(F.lit(None).cast("int")))))
-
-
 def read_media_dir(spark, path: str, glob: str = "*") -> DataFrame:
     """Real-world media ingestion: Spark's built-in ``binaryFile``
     source scans a directory tree into (path, modificationTime,
@@ -186,7 +158,7 @@ def read_media_dir(spark, path: str, glob: str = "*") -> DataFrame:
     blobs (each task reads whole files; maxPartitionBytes groups
     small files per task).  Metadata is inferred from the extension
     into the same MEDIA_METADATA struct the synthetic fixture uses,
-    so everything downstream (feature extraction, resize planning,
+    so everything downstream (feature extraction,
     content-digest dedup) is source-agnostic."""
     raw = (spark.read.format("binaryFile")
            .option("pathGlobFilter", glob).load(path))

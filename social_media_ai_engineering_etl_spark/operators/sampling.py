@@ -109,11 +109,6 @@ def grouped_split(df: DataFrame, group_col: Column, sft_pct: float = 0.8,
               .drop("__grp", "__rn", "__n"))
 
 
-def global_shuffle(df: DataFrame, seed: int = 42) -> DataFrame:
-    """B5: deterministic-seed global shuffle (23-split.py:446)."""
-    return df.orderBy(F.rand(seed))
-
-
 def train_test_split(df: DataFrame, test_frac: float = 0.2,
                      seed: int = 42) -> tuple[DataFrame, DataFrame]:
     """B7: randomSplit (20:321; 25-train-sft.py:181-183)."""

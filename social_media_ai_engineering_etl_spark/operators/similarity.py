@@ -754,10 +754,9 @@ def hybrid_retrieval_topk(docs: DataFrame, emb: DataFrame,
     stages break ties deterministically (count/cos DESC, id ASC), so
     the result is value-hash stable cross-engine.
     """
-    from ..session import cached_exprs
-    from .dedup import shingle_col
+    from .dedup import word_shingles
     sh = docs.select(F.col(doc_id).alias("did"),
-                     F.explode(shingle_col(text_col, 3)).alias("s"))
+                     F.explode(word_shingles(F.col(text_col), 3)).alias("s"))
     qsh = (sh.filter(F.col("did") % query_mod == 0)
            .select(F.col("did").alias("query_id"), "s"))
     cand = (sh.join(qsh, "s")
@@ -773,21 +772,14 @@ def hybrid_retrieval_topk(docs: DataFrame, emb: DataFrame,
     v = emb.filter(F.col(vec_col).isNotNull()).select(
         F.col(vec_id).alias("vid"),
         _as_double(F.col(vec_col)).alias("vec"))
-    # norm HOF tree over col("vec") — constant per gateway (r9 sweep)
-    v = v.withColumn("n", cached_exprs(
-        ("hybrid_norm",), lambda: _norm(F.col("vec"))))
+    v = v.withColumn("n", _norm(F.col("vec")))
     qv = v.select(F.col("vid").alias("query_id"),
                   F.col("vec").alias("qv"), F.col("n").alias("qn"))
     cv = v.select(F.col("vid").alias("cand_id"),
                   F.col("vec").alias("cv"), F.col("n").alias("cn"))
-    # constant HOF tree over (cv, qv) — built once per gateway (r8);
-    # r9 extends the cache through the cosine guard so the whole
-    # scored expression is one cached tree
-    scored_expr = cached_exprs(
-        ("hybrid_cosine",),
-        lambda: _safe_cosine(_dot(F.col("cv"), F.col("qv"))))
     scored = (shortlist.join(qv, "query_id").join(cv, "cand_id")
-              .withColumn("cosine_sim", scored_expr))
+              .withColumn("cosine_sim",
+                          _safe_cosine(_dot(F.col("cv"), F.col("qv")))))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("cand_id"))
     return (scored.withColumn("rank", F.row_number().over(w))

@@ -37,7 +37,9 @@ def order_engagement(lineitem: DataFrame, orders: DataFrame,
              .join(per_order, orders.o_orderkey == per_order.l_orderkey)
              .join(F.broadcast(customer),
                    orders.o_custkey == customer.c_custkey))
-    # constant name-referencing ratio tree per clamp (r9 build sweep)
+    # constant name-referencing ratio tree per clamp: about 70 py4j
+    # calls to build, more than the rest of q01_engagement_ratio's
+    # build (SCALING.md "Which cached_exprs sites still pay")
     ratio = cached_exprs(
         ("order_engagement_ratio", clamp),
         lambda: engagement_ratio(F.col("qty"), F.col("items"), F.lit(0),

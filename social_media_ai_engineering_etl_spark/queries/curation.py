@@ -239,16 +239,11 @@ def qx_pack_sequences(spark, sf_dir):
     bins, sharded per (lang, doc_id % 8) — packing is inherently
     order-sequential, so the distributed shape packs per shard; the
     oracle replays the identical walk with a recursive CTE."""
-    from ..session import cached_exprs
-
     docs = _docs(spark, sf_dir).withColumn(
-        "shard", cached_exprs("pack_shard",
-                              lambda: (F.col("doc_id") % 8).cast("long")))
+        "shard", (F.col("doc_id") % 8).cast("long"))
     packed = curation.pack_sequences(
         docs, ["lang", "shard"], "doc_id",
-        cached_exprs("pack_tok_len",
-                     lambda: F.size(curation.words(F.col("text")))),
-        budget=512)
+        F.size(curation.words(F.col("text"))), budget=512)
     return packed.orderBy("lang", "shard", "bin_id")
 
 

@@ -475,7 +475,7 @@ _TEXT_REWARDS = ["r_length", "r_punct", "r_linebreaks", "r_vocab",
 
 def _build_scalar_stage_cols():
     """Constant Column trees for q26_rewards_scalar's three stages
-    (see cached_exprs — ~8,200 py4j round-trips, built once).
+    (built once per gateway, see cached_exprs).
 
     The cache carries the emoji COUNTS (total + distinct), not the
     match array: R3/R4 need only the count and R5's variety ratio is

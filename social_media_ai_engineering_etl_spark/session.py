@@ -11,6 +11,9 @@ setting is chosen for a multi-executor cluster at ~100 TB:
   the width :func:`widen_scan` widens a narrow scan to, so a Python
   UDF stage runs one task per slot, never more tasks than slots,
 - Arrow enabled for every pandas UDF boundary,
+- no Python call-site capture per Column call
+  (``spark.python.sql.dataFrameDebugging.enabled=false``), which
+  otherwise adds several py4j round-trips to every ``F.*`` call,
 - Python workers launched through :mod:`.pydaemon`
   (``spark.python.daemon.module``), which imports PySpark from its
   installed directory instead of ``$SPARK_HOME``'s archives, so a
@@ -117,6 +120,14 @@ def get_spark(app_name: str = "social-media-ai-engineering-etl-spark",
         # --- python/arrow boundary -----------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # no Python call-site capture per Column call: with it on, each
+        # F.col/F.when/operator call also sets and clears a JVM origin,
+        # looks up the session and reads a conf over py4j (F.col: 13
+        # py4j commands instead of 3).  The one thing lost: an
+        # execution error's DataFrame query context no longer names
+        # the Python file:line that built the failing Column; nothing in
+        # the package, its tests or its scripts reads that context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # workers import pyspark from its installed directory, not from
         # $SPARK_HOME's archives (pydaemon.py); the daemon module, like
         # every package name a Python stage's function refers to, must
@@ -332,14 +343,22 @@ def cached_exprs(key: str, builder):
     """Build-once cache for CONSTANT Column expression trees.
 
     In classic (py4j) PySpark every ``F.when``/``F.col``/operator call
-    is a blocking JVM round-trip, so rebuilding a large constant tree
-    on every query invocation pays the same milliseconds again and
-    again — q26's reward tree is ~8,200 round-trips = ~1.4 s per build
-    (measured, cProfile r4).  Catalyst Column objects are immutable
-    and reference columns by NAME (unresolved attributes), so a tree
-    built once is valid for any DataFrame with those column names, for
-    the lifetime of the JVM gateway.  This caches ``builder()``'s
-    result per (key, gateway), making repeat builds O(1).
+    is a blocking JVM round-trip: with :func:`get_spark`'s call-site
+    capture off, ``F.col`` sends 3 py4j commands and ``col == 1`` one,
+    so a large constant tree still costs milliseconds to rebuild on
+    every query invocation (a whole ``q26_rewards_scalar`` build sends
+    about 2,200 py4j calls uncached and 111 cached).
+    Catalyst Column objects are immutable and reference columns by
+    NAME (unresolved attributes), so a tree built once is valid for
+    any DataFrame with those column names, for the lifetime of the JVM
+    gateway.  This caches ``builder()``'s result per (key, gateway),
+    making repeat builds O(1).
+
+    A call site stays only while a measured build win backs it: once
+    an interleaved same-session A/B of warm builds shows every query
+    that reaches it building no slower without the cache, the site
+    goes (SCALING.md "Which cached_exprs sites still pay" lists the
+    sites kept and the number that keeps each).
 
     Use ONLY for trees that are genuinely constant: no data-dependent
     literals, no session confs baked in, no nondeterministic exprs

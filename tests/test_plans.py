@@ -196,20 +196,14 @@ def test_embedding_pairs_blocked_plan_shape(spark, sf_dir):
 
 
 def test_sampling_shuffles_never_single_partition(spark, sf_dir):
-    """B5/B6 guard (r1 VERDICT #10): the global shuffle must plan as a
-    distributed range sort (Exchange rangepartitioning + Sort), never
-    an unpartitioned row_number window; the grouped 80/20 split's
-    windows must all carry the group partition key."""
+    """B6 guard (r1 VERDICT #10): the grouped 80/20 split's windows
+    must all carry the group partition key, never an unpartitioned
+    row_number window."""
     import os
 
     from social_media_ai_engineering_etl_spark.operators import sampling
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    shuf = sampling.global_shuffle(docs.select("doc_id", "lang"))
-    p = plan_of(shuf)
-    assert "rangepartitioning" in p
-    assert "windowspecdefinition" not in p
-
     split = sampling.grouped_split(docs.select("doc_id", "lang"),
                                    F.col("lang"))
     p2 = plan_of(split)

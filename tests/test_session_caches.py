@@ -1,9 +1,12 @@
 """Contracts for the r4 driver-side caches (session.cached_exprs and
 session.read_parquet_cached): hit identity, gateway keying, and the
-immutability assumptions they rest on."""
+immutability assumptions they rest on; and for the session conf that
+makes an uncached Column call cheap (no per-call call-site capture)."""
 
 import os
 
+import py4j.clientserver
+import pyspark.errors.utils as pyspark_errors_utils
 from pyspark.sql import functions as F
 
 from social_media_ai_engineering_etl_spark import session as S
@@ -77,3 +80,25 @@ def test_caches_sweep_stale_gateway_entries(spark):
     assert "__test_dead_path" not in S._SCAN_CACHE, "stale scan entry swept"
     # live entries survive the sweep
     assert "__test_live" in S._EXPR_CACHE
+
+
+def test_column_calls_capture_no_call_site(spark, monkeypatch):
+    """get_spark turns off PySpark's per-Column call-site capture, so
+    building a Column sends no origin set/clear to the JVM."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # the flag is read once per process, from the first active session
+    monkeypatch.setattr(pyspark_errors_utils, "_enable_debugging_cache", None)
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection,
+                        "send_command", counting_send)
+    F.when(F.col("x") == 1, F.lit(2.0)).otherwise(F.lit(3.0))
+    monkeypatch.undo()
+    assert sent, "the probe counted no py4j command at all"
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c]
