@@ -153,13 +153,10 @@ _PUNCT_THRESHOLDS: dict[str, tuple[str, str, float, float, float]] = {
 }
 
 
-def punctuation_usage(prompt: Column, completion: Column,
-                      field: Column | None = None) -> Column:
+def punctuation_usage(prompt: Column, completion: Column) -> Column:
     """R6: requested heavy/normal per mark vs actual per-char
-    frequency; mean of the five per-type scores. ``field`` = the
-    pre-lowered extracted style field, optional."""
-    if field is None:
-        field = F.lower(style_field(prompt, "Punctuation"))
+    frequency; mean of the five per-type scores."""
+    field = F.lower(style_field(prompt, "Punctuation"))
     n = F.length(completion)
     type_scores = []
     for _name, (ch, heavy_sub, low, normal, heavy) in _PUNCT_THRESHOLDS.items():
@@ -185,12 +182,9 @@ def punctuation_usage(prompt: Column, completion: Column,
 # ---------------------------------------------------------------------------
 
 
-def line_break_usage(prompt: Column, completion: Column,
-                     field: Column | None = None) -> Column:
-    """R7: line-break ratio per 100 chars vs the requested style.
-    ``field`` = the pre-lowered extracted style field, optional."""
-    t = (F.lower(style_field(prompt, "Line Break Usage"))
-         if field is None else field)
+def line_break_usage(prompt: Column, completion: Column) -> Column:
+    """R7: line-break ratio per 100 chars vs the requested style."""
+    t = F.lower(style_field(prompt, "Line Break Usage"))
     style = (F.when(t.contains("frequent"), F.lit("frequent"))
               .when(t.contains("fewer") | t.contains("compact"), F.lit("fewer"))
               .when(t.contains("no ") | t.contains("continuous"), F.lit("none"))
@@ -225,24 +219,15 @@ def line_break_usage(prompt: Column, completion: Column,
 # ---------------------------------------------------------------------------
 
 
-def _alpha_tokens(text: Column) -> Column:
-    return F.regexp_extract_all(F.lower(text), F.lit("[a-z]+"), 0)
-
-
-def vocabulary_usage(prompt: Column, completion: Column,
-                     field: Column | None = None,
-                     words: Column | None = None) -> Column:
-    """R15: unique/total alpha-token ratio vs requested richness.
-    ``field``/``words`` = precomputed primitives, optional."""
-    t = (F.lower(style_field(prompt, "Vocabulary Usage"))
-         if field is None else field)
+def vocabulary_usage(prompt: Column, completion: Column) -> Column:
+    """R15: unique/total alpha-token ratio vs requested richness."""
+    t = F.lower(style_field(prompt, "Vocabulary Usage"))
     req = (F.when(t.contains("rich"), F.lit("rich"))
             .when(t.contains("developed"), F.lit("developed"))
             .when(t.contains("normal"), F.lit("normal"))
             .when(t.contains("conservative") | t.contains("narrow"),
                   F.lit("conservative")))
-    if words is None:
-        words = _alpha_tokens(completion)
+    words = F.regexp_extract_all(F.lower(completion), F.lit("[a-z]+"), 0)
     total = F.size(words)
     ratio = F.size(F.array_distinct(words)).cast("double") / total
     rich = (F.when(ratio > 0.5, 1.0).when(ratio > 0.4, 0.8)
@@ -384,12 +369,9 @@ def emoji_usage_coarse(prompt: Column, completion: Column,
                  F.when(simple_actual == "infrequent", 0.7).otherwise(F.lit(0.0))))
 
 
-def emoji_variety(completion: Column,
-                  emojis: Column | None = None) -> Column:
-    """R5 (emoji_variety.py:6-21): unique/total emoji ratio bins.
-    ``emojis`` = the precomputed emoji match array, optional."""
-    all_emoji = (F.regexp_extract_all(completion, F.lit(EMOJI_CLASS), 0)
-                 if emojis is None else emojis)
+def emoji_variety(completion: Column) -> Column:
+    """R5 (emoji_variety.py:6-21): unique/total emoji ratio bins."""
+    all_emoji = F.regexp_extract_all(completion, F.lit(EMOJI_CLASS), 0)
     total = F.size(all_emoji)
     ratio = F.size(F.array_distinct(all_emoji)).cast("double") / total
     return (F.when(total == 0, F.lit(0.0))
@@ -520,8 +502,13 @@ _TONE_MAP = {
 
 
 def tone_alignment(prompt: Column, completion: Column) -> Column:
-    """R8: requested tones -> pos/neg/neutral targets vs sentiment arc;
-    mean of per-tone 1.0/0.6 scores.
+    """R8 of a pair: ``tone_fit`` against the completion's arc."""
+    return tone_fit(prompt, sentiment_arc(sentiment_scores(completion)))
+
+
+def tone_fit(prompt: Column, arc: Column) -> Column:
+    """R8: requested tones -> pos/neg/neutral targets vs the
+    ``sentiment_arc`` label ``arc``; mean of per-tone 1.0/0.6 scores.
 
     The field parse mirrors CPython re (tone.py:12-15): ``\\s*`` is
     unicode whitespace (and may cross newlines), and each
@@ -538,7 +525,6 @@ def tone_alignment(prompt: Column, completion: Column) -> Column:
     tones = F.filter(F.transform(F.split(raw, ","),
                                  lambda t: F.lower(py_strip(t))),
                      lambda t: t != "")
-    arc = sentiment_arc(sentiment_scores(completion))
 
     def desired(t: Column) -> Column:
         expr = F.lit("neutral")
@@ -714,25 +700,37 @@ def divider_style(prompt: Column, completion: Column) -> Column:
 
 
 def narrative_structure(completion: Column) -> Column:
-    """R12 (narrative.py:6-23): 0.4*pacing-ok + 0.3*arc!=Neutral +
-    0.3 flow bonus (constant — see module docstring)."""
-    p = pacing(completion)
-    arc = sentiment_arc(sentiment_scores(completion))
-    return (F.when(p != "Short/Not Enough Data", 0.4).otherwise(F.lit(0.0))
+    """R12 of a completion: ``narrative_fit`` of its labels."""
+    return narrative_fit(sentiment_arc(sentiment_scores(completion)),
+                         pacing(completion))
+
+
+def narrative_fit(arc: Column, pace: Column) -> Column:
+    """R12 (narrative.py:6-23) over the ``sentiment_arc`` and
+    ``pacing`` labels: 0.4*pacing-ok + 0.3*arc!=Neutral + 0.3 flow
+    bonus (constant — see module docstring)."""
+    return (F.when(pace != "Short/Not Enough Data", 0.4).otherwise(F.lit(0.0))
             + F.when(arc != "Neutral", 0.3).otherwise(F.lit(0.0))
             + F.lit(0.3))
 
 
 def semantic_coherence(completion: Column) -> Column:
+    """R14 of a completion: ``coherence_fit`` of its labels."""
+    return coherence_fit(F.size(sentences(completion)),
+                         sentiment_arc(sentiment_scores(completion)),
+                         pacing(completion))
+
+
+def coherence_fit(n_sentences: Column, arc: Column, pace: Column) -> Column:
     """R14 (semantic.py:8-25): 0.5 + 0.25*pacing-ok + 0.25*arc-ok;
-    <3 sentences -> 0.6 (>=1) else 0.5."""
-    ns = F.size(sentences(completion))
-    p = pacing(completion)
-    arc = sentiment_arc(sentiment_scores(completion))
+    <3 sentences -> 0.6 (>=1) else 0.5.  ``n_sentences`` counts the
+    whole completion; ``arc``/``pace`` are labels over ``text[:5000]``,
+    as in the reference."""
     full = (F.lit(0.5)
-            + F.when(p != "Short/Not Enough Data", 0.25).otherwise(F.lit(0.0))
+            + F.when(pace != "Short/Not Enough Data", 0.25).otherwise(F.lit(0.0))
             + F.when(arc != "Neutral", 0.25).otherwise(F.lit(0.0)))
-    return (F.when(ns < 3, F.when(ns >= 1, F.lit(0.6)).otherwise(F.lit(0.5)))
+    return (F.when(n_sentences < 3,
+                   F.when(n_sentences >= 1, F.lit(0.6)).otherwise(F.lit(0.5)))
              .otherwise(F.least(F.lit(1.0), F.greatest(F.lit(0.0), full))))
 
 

@@ -72,7 +72,8 @@ def _pick(d, options, mod):
 
 def _derive_reward_pairs(df):
     # constant tree over (doc_id, text, source): built once per JVM
-    # gateway, shared by all four q26 reward queries (cached_exprs).
+    # gateway and shared by every query over the derived pairs — the
+    # q26 rewards, q24_negatives and q25_chat_template (cached_exprs).
     # A doc with NULL text/source derives a NULL prompt or completion
     # (Spark concat null-propagates) — there is no pair to score, so
     # it is dropped at this boundary rather than letting every reward
@@ -493,16 +494,9 @@ def _build_scalar_stage_cols():
         rw.precise_post_length(
             p, c, req=F.trim(rw.style_field(p, "Suggested Post Length"))
         ).alias("r_length"),
-        rw.punctuation_usage(
-            p, c, field=F.lower(rw.style_field(p, "Punctuation"))
-        ).alias("r_punct"),
-        rw.line_break_usage(
-            p, c, field=F.lower(rw.style_field(p, "Line Break Usage"))
-        ).alias("r_linebreaks"),
-        rw.vocabulary_usage(
-            p, c, field=F.lower(rw.style_field(p, "Vocabulary Usage")),
-            words=rw._alpha_tokens(c)
-        ).alias("r_vocab"),
+        rw.punctuation_usage(p, c).alias("r_punct"),
+        rw.line_break_usage(p, c).alias("r_linebreaks"),
+        rw.vocabulary_usage(p, c).alias("r_vocab"),
         rw.hashtag_limit(c).alias("r_hashtags"),
         rw.chinese_character_guard(c).alias("r_cjk"),
         rw.scenario_type(p).alias("scenario_id"),
@@ -747,16 +741,23 @@ FROM toned
 def q26_rewards_sentiment(spark, sf_dir):
     """Sentiment arc + pacing labels and the rewards built on them:
     R8 tone alignment, R12 narrative structure, R14 semantic
-    coherence."""
-    pairs = _derive_reward_pairs(_docs(spark, sf_dir))
-    p, c = F.col("prompt"), F.col("completion")
-    return pairs.select(
-        "doc_id",
+    coherence.  The labels are projected once: repeated label trees
+    mint fresh lambda variables that Catalyst cannot merge, and the
+    rewards read each label more than once, so CollapseProject keeps
+    the label projection apart."""
+    c = F.col("completion")
+    labels = _derive_reward_pairs(_docs(spark, sf_dir)).select(
+        "doc_id", "prompt",
         rw.sentiment_arc(rw.sentiment_scores(c)).alias("arc"),
         rw.pacing(c).alias("pacing"),
-        F.round(rw.tone_alignment(p, c), 6).alias("r_tone"),
-        F.round(rw.narrative_structure(c), 6).alias("r_narrative"),
-        F.round(rw.semantic_coherence(c), 6).alias("r_semantic"))
+        F.size(rw.sentences(c)).alias("n_sents"))
+    arc, pace = F.col("arc"), F.col("pacing")
+    return labels.select(
+        "doc_id", "arc", "pacing",
+        F.round(rw.tone_fit(F.col("prompt"), arc), 6).alias("r_tone"),
+        F.round(rw.narrative_fit(arc, pace), 6).alias("r_narrative"),
+        F.round(rw.coherence_fit(F.col("n_sents"), arc, pace),
+                6).alias("r_semantic"))
 
 
 # --------------------------------------------------------------------------

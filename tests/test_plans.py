@@ -536,7 +536,9 @@ def test_anti_join_shapes(spark, sf_dir):
         assert "CartesianProduct" not in plan, name
 
 
-def test_q26_rewards_scalar_codegen_compiles(spark, sf_dir):
+@pytest.mark.parametrize("name", ["q26_rewards_scalar",
+                                  "q26_rewards_sentiment"])
+def test_q26_rewards_scalar_codegen_compiles(spark, sf_dir, name):
     """VERDICT r3 #1 regression pin: the reward projection must
     whole-stage-compile.  ``spark.sql.codegen.fallback=false`` turns
     any Janino failure ('Code grows beyond 64 KB') into a hard error
@@ -547,11 +549,40 @@ def test_q26_rewards_scalar_codegen_compiles(spark, sf_dir):
     old = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
-        rows = QUERIES["q26_rewards_scalar"](spark, sf_dir).collect()
+        rows = QUERIES[name](spark, sf_dir).collect()
         assert len(rows) > 0
     finally:
         spark.conf.set("spark.sql.codegen.fallback", old)
         spark.catalog.clearCache()
+
+
+def test_q26_sentiment_projects_the_arc_once(spark, sf_dir):
+    """q26_rewards_sentiment scores each sentence once: its optimized
+    plan names a lexicon word no more often than the sentiment arc
+    alone does over the same pairs (the arc rebuilt inside each reward
+    named it 9x as often).  Its rows are the pair-form rewards' rows."""
+    from social_media_ai_engineering_etl_spark.functions import rewards as rw
+    from social_media_ai_engineering_etl_spark.queries.rewards_scoring import (
+        _derive_reward_pairs, _docs)
+
+    def lexicon_words(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(
+            "wonderful")
+
+    pairs = _derive_reward_pairs(_docs(spark, sf_dir))
+    p, c = F.col("prompt"), F.col("completion")
+    arc = rw.sentiment_arc(rw.sentiment_scores(c)).alias("arc")
+    n_arc = lexicon_words(pairs.select(arc))
+    assert n_arc >= 1
+    got = QUERIES["q26_rewards_sentiment"](spark, sf_dir)
+    assert lexicon_words(got) <= n_arc
+    want = pairs.select(
+        "doc_id", arc, rw.pacing(c).alias("pacing"),
+        F.round(rw.tone_alignment(p, c), 6).alias("r_tone"),
+        F.round(rw.narrative_structure(c), 6).alias("r_narrative"),
+        F.round(rw.semantic_coherence(c), 6).alias("r_semantic"))
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
 # ---------------------------------------------------------------------------
