@@ -481,13 +481,15 @@ SHAPES = {
     "pipeline_queries": Shape(generated_dir, {
         **_queries("q17_author_words", "q26_rewards_scalar",
                    "q22_fanout_pairs"),
-        "minhash_auto": lambda s, d: dedup.minhash_dedup_pairs_auto(
-            _table(s, d, "documents"), "doc_id", "text", threshold=0.5)}),
+        "minhash_auto": lambda s, d: dedup.minhash_dedup_pairs(
+            _table(s, d, "documents"), "doc_id", "text", threshold=0.5,
+            max_bucket=dedup.LSH_GUARD_CROSSOVER)}),
     "starved_shuffles": Shape(shuffle_inputs, {
         "prefix": lambda s, x: dedup.ngram_jaccard_pairs_prefix(
             x["docs"], "doc_id", "text", threshold=0.5),
-        "minhash_hot": lambda s, x: dedup.minhash_dedup_pairs_auto(
-            x["hot"], "doc_id", "text", threshold=0.8),
+        "minhash_hot": lambda s, x: dedup.minhash_dedup_pairs(
+            x["hot"], "doc_id", "text", threshold=0.8,
+            max_bucket=dedup.LSH_GUARD_CROSSOVER),
         "authors": lambda s, x: phrases.author_texts(
             x["docs"], "source", "text", "doc_id", max_posts=20),
         "gemm": lambda s, x: topk(x["vectors"], every=1600, k=10),

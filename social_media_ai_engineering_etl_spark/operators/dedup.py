@@ -100,8 +100,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     """Blocked self-join exact n-gram Jaccard pairs (id1 < id2,
     jaccard >= threshold). With ``block_col`` the join is an
     equi-join per block; without it, a full cross product — only for
-    small inputs or in-bucket verification. At scale, generate
-    candidates with :func:`minhash_lsh_candidates` instead."""
+    small inputs or in-bucket verification. At scale use
+    :func:`ngram_jaccard_pairs_inverted` (exact) or
+    :func:`minhash_dedup_pairs` (LSH candidates) instead."""
     sh = df.select(F.col(id_col).alias("id"),
                    *( [F.col(block_col).alias("blk")] if block_col else [] ),
                    word_shingles(F.col(text_col), n).alias("sh"))
@@ -118,26 +119,64 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
             .select("id1", "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
 
 
+def _overlap_counts(sets: DataFrame, elems: Column,
+                    max_df: int | None) -> DataFrame:
+    """The count-based inverted index the overlap scores share:
+    ``(id1, id2, inter, sz1, sz2)`` for every pair (id1 < id2) of
+    non-empty sets that share at least one element.
+
+    ``sets`` is an (id, sh) table of distinct-element arrays; ``elems``
+    is the array over ``sh`` whose elements are indexed (``sh`` itself
+    or an element-wise re-hash of it, so ``size(sh)`` is the set size).
+    Explode the elements, self-join on element equality (only
+    documents that actually share one ever meet), and
+    ``groupBy(id1, id2).count()`` IS the intersection size. Plan
+    shape: one shuffle on the element, one map-side-combinable shuffle
+    on the pair key, two equi-joins against the tiny (id, sz) table
+    (auto-broadcast / AQE). No cross product anywhere.
+
+    Skew: an element shared by m documents yields C(m, 2) pair rows —
+    boilerplate shingles / fingerprints are the hot keys. ``max_df``
+    drops elements with document frequency > max_df from pair
+    generation; ``inter`` then UNDER-counts for pairs relying on them.
+    None keeps exact counts.
+    """
+    # the set table feeds sizes (x2 joins), the explode, and both
+    # sides of the self-join — persist or the set expression (regex
+    # split + n-way zip + distinct, or the winnow UDF) recomputes per
+    # branch (no DAG CSE — measured 15.3s -> 9.5s at 16x sf0.1 on the
+    # Jaccard path, ~4x on winnow's scale probe)
+    sets = (sets.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
+            .persist())
+    sizes = sets.select("id", "sz")
+    tok = sets.select("id", F.explode(elems).alias("s"))
+    if max_df is not None:
+        dfreq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+        tok = tok.join(dfreq.filter(F.col("df") <= max_df), "s", "leftsemi")
+    inter = (tok.alias("a")
+             .join(tok.alias("b"),
+                   (F.col("a.s") == F.col("b.s"))
+                   & (F.col("a.id") < F.col("b.id")))
+             .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+             .agg(F.count(F.lit(1)).alias("inter")))
+    return (inter
+            .join(sizes.select(F.col("id").alias("id1"),
+                               F.col("sz").alias("sz1")), "id1")
+            .join(sizes.select(F.col("id").alias("id2"),
+                               F.col("sz").alias("sz2")), "id2"))
+
+
 def ngram_jaccard_pairs_inverted(df: DataFrame, id_col: str, text_col: str,
                                  n: int = 3, threshold: float = 0.2,
                                  max_df: int | None = None) -> DataFrame:
     """EXACT n-gram Jaccard pairs (>= threshold) without the O(n^2)
     cross join — the scale path for exact near-dup mining.
 
-    Count-based inverted index: explode distinct shingles, self-join
-    on shingle equality (only docs that actually share a shingle ever
-    meet), then ``groupBy(id1, id2).count()`` IS the intersection
-    size, so Jaccard = cnt / (sz1 + sz2 - cnt) arithmetically — no
-    array materialization, no verify pass. Plan shape: one shuffle on
-    shingle + one map-side-combinable shuffle on the pair key + two
-    equi-joins against the tiny (id, size) table (auto-broadcast /
-    AQE). Pairs sharing zero shingles (J = 0 < threshold) are never
-    generated.
-
-    Skew: a shingle appearing in m docs yields C(m, 2) pair rows.
-    ``max_df`` drops shingles with document frequency > max_df from
-    pair generation (stopword-shingle guard); this UNDER-counts
-    intersections for pairs relying on those shingles — leave None
+    The intersection size comes from :func:`_overlap_counts`, so
+    Jaccard = inter / (sz1 + sz2 - inter) arithmetically — no array
+    materialization, no verify pass. Pairs sharing zero shingles
+    (J = 0 < threshold) are never generated. ``max_df`` is the
+    stopword-shingle guard (see :func:`_overlap_counts`): leave None
     for exactness, set it at web scale where boilerplate shingles
     would otherwise dominate the shuffle.
 
@@ -151,31 +190,10 @@ def ngram_jaccard_pairs_inverted(df: DataFrame, id_col: str, text_col: str,
     """
     sh = df.select(F.col(id_col).alias("id"),
                    word_shingle_hashes(F.col(text_col), n).alias("sh"))
-    # the shingle table feeds sizes (x2 joins), the explode, and both
-    # sides of the self-join — persist or the shingling (regex split +
-    # n-way zip + distinct) recomputes per branch (no DAG CSE; the
-    # minhash/winnow lesson — measured 15.3s -> 9.5s at 16x sf0.1)
-    sh = (sh.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
-          .persist())
-    sizes = sh.select("id", "sz")
-    tok = sh.select("id", F.explode("sh").alias("s"))
-    if max_df is not None:
-        dfreq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-        tok = (tok.join(dfreq.filter(F.col("df") <= max_df), "s", "leftsemi"))
-    inter = (tok.alias("a")
-             .join(tok.alias("b"),
-                   (F.col("a.s") == F.col("b.s"))
-                   & (F.col("a.id") < F.col("b.id")))
-             .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-             .agg(F.count(F.lit(1)).alias("inter")))
-    res = (inter
-           .join(sizes.select(F.col("id").alias("id1"),
-                              F.col("sz").alias("sz1")), "id1")
-           .join(sizes.select(F.col("id").alias("id2"),
-                              F.col("sz").alias("sz2")), "id2")
-           .withColumn("jaccard_sim",
-                       F.col("inter").cast("double")
-                       / (F.col("sz1") + F.col("sz2") - F.col("inter"))))
+    res = _overlap_counts(sh, F.col("sh"), max_df).withColumn(
+        "jaccard_sim",
+        F.col("inter").cast("double")
+        / (F.col("sz1") + F.col("sz2") - F.col("inter")))
     return (res.filter(F.col("jaccard_sim") >= threshold)
             .select("id1", "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
 
@@ -309,36 +327,17 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     corpora (the near-dup literature calls this the containment /
     overlap coefficient).
 
-    Plan shape is identical to the inverted-index Jaccard path (one
-    shingle-hash shuffle, one pair-count shuffle, two broadcast size
-    joins) because the scoring difference is pure arithmetic on the
-    same (inter, sz1, sz2) triple — at 100 TB both run off one shared
-    candidate pass.  Same ``max_df`` stopword-shingle skew guard.
+    It runs on the same :func:`_overlap_counts` pass as the
+    inverted-index Jaccard path (same plan shape, same ``max_df``
+    stopword-shingle guard); only the score arithmetic on the
+    (inter, sz1, sz2) triple differs.
     """
     sh = df.select(F.col(id_col).alias("id"),
                    word_shingles(F.col(text_col), n).alias("sh"))
-    sh = (sh.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
-          .persist())
-    sizes = sh.select("id", "sz")
-    tok = sh.select("id", F.explode(
-        F.transform("sh", lambda s: F.xxhash64(s))).alias("s"))
-    if max_df is not None:
-        dfreq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-        tok = tok.join(dfreq.filter(F.col("df") <= max_df), "s", "leftsemi")
-    inter = (tok.alias("a")
-             .join(tok.alias("b"),
-                   (F.col("a.s") == F.col("b.s"))
-                   & (F.col("a.id") < F.col("b.id")))
-             .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-             .agg(F.count(F.lit(1)).alias("inter")))
-    res = (inter
-           .join(sizes.select(F.col("id").alias("id1"),
-                              F.col("sz").alias("sz1")), "id1")
-           .join(sizes.select(F.col("id").alias("id2"),
-                              F.col("sz").alias("sz2")), "id2")
-           .withColumn("containment",
-                       F.col("inter").cast("double")
-                       / F.least("sz1", "sz2")))
+    res = _overlap_counts(
+        sh, F.transform("sh", lambda s: F.xxhash64(s)), max_df).withColumn(
+        "containment",
+        F.col("inter").cast("double") / F.least("sz1", "sz2"))
     return (res.filter(F.col("containment") >= threshold)
             .select("id1", "id2", "inter",
                     F.round("containment", 6).alias("containment")))
@@ -399,7 +398,11 @@ def minhash_signature(shingles: Column, num_hashes: int = 64,
     (expensive) shingle array is evaluated ONCE per row. The naive
     'transform over hash indices, min over shingles' form re-inlines
     the whole shingle expression per index (no CSE across HOF
-    lambdas) — 64x the work, measured 13x slower end-to-end."""
+    lambdas) — 64x the work, measured 13x slower end-to-end.
+
+    The JVM reference form: the operators below run
+    :func:`minhash_signature_arrow`, which tests pin bit-identical to
+    this one."""
     a_coef, b_coef = _minhash_coeffs(num_hashes, seed)
     a_arr = F.array(*[F.lit(a).cast("long") for a in a_coef])
     b_arr = F.array(*[F.lit(b).cast("long") for b in b_coef])
@@ -473,38 +476,11 @@ def banded_rows(sig: DataFrame, num_hashes: int, bands: int,
             .select("id", *extra, "bb.band", "bb.bucket"))
 
 
-def _lsh_candidates_from_sig(sig: DataFrame, num_hashes: int,
-                             bands: int,
-                             max_bucket: int | None = None) -> DataFrame:
-    """Banded bucket join over a precomputed (id, sig) table.
-
-    ``max_bucket`` is the HOT-BUCKET guard (r5 skew probe): a cluster
-    of m near-identical documents maps to ONE bucket in EVERY band,
-    so candidate generation emits ~bands * C(m,2) join rows before
-    the cross-band distinct — cost that grows with the square of the
-    largest duplicate cluster, not the corpus.  With ``max_bucket``
-    set, buckets wider than it are dropped from pair generation (one
-    cheap count per (band, bucket), same move as the inverted index's
-    max_df): a true near-dup cluster still pairs through its OTHER
-    bands unless it exceeds max_bucket in ALL of them, at which point
-    the honest production answer is handling the pathological cluster
-    out of band (it is, by construction, a single boilerplate
-    template).  None (default) keeps the exact candidate semantics.
-    """
-    return _candidates_from_banded(banded_rows(sig, num_hashes, bands),
-                                   max_bucket)
-
-
-def _candidates_from_banded(banded: DataFrame,
-                            max_bucket: int | None = None) -> DataFrame:
-    """The join half of :func:`_lsh_candidates_from_sig`, split out so
-    callers that already hold (and persist) a banded table — the auto
-    variant profiles it first — don't re-band."""
-    if max_bucket is not None:
-        width = (banded.groupBy("band", "bucket")
-                 .agg(F.count(F.lit(1)).alias("__w")))
-        banded = (banded.join(width.filter(F.col("__w") <= max_bucket),
-                              ["band", "bucket"], "leftsemi"))
+def _bucket_pairs(banded: DataFrame) -> DataFrame:
+    """In-bucket candidate self-join over an (id, band, bucket) table:
+    the pairs (id1 < id2) that share a bucket in at least one band,
+    distinct across bands.  One shuffle on (band, bucket), equi-keyed,
+    so AQE skew-splits a hot bucket; no O(n^2) stage."""
     a = banded.alias("a")
     b = banded.alias("b")
     return (a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -514,60 +490,11 @@ def _candidates_from_banded(banded: DataFrame,
              .distinct())
 
 
-def _sig_fn(impl: str):
-    if impl == "arrow":
-        return minhash_signature_arrow
-    if impl == "jvm":
-        return minhash_signature
-    raise ValueError(f"unknown minhash impl {impl!r} (arrow|jvm)")
-
-
-def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
-                           n: int = 3, num_hashes: int = 128,
-                           bands: int = 32, impl: str = "arrow") -> DataFrame:
-    """Candidate pairs from banded MinHash buckets (id1 < id2).
-
-    rows-per-band r = num_hashes // bands; detection probability
-    1 - (1 - s^r)^bands (s = true Jaccard). Defaults (r=4, b=32)
-    catch s >= 0.8 w.p. > 0.99999 — headroom for the multiply-shift
-    hash family being only approximately min-wise independent.
-
-    Plan shape: one narrow map to signatures, explode to ``bands``
-    rows each, shuffle on (band, band_hash), in-bucket pairing. No
-    O(n^2) stage; hot buckets are bounded by banding width.
-    """
-    sig = df.select(
-        F.col(id_col).alias("id"),
-        _sig_fn(impl)(word_shingles(F.col(text_col), n),
-                      num_hashes).alias("sig"))
-    return _lsh_candidates_from_sig(sig, num_hashes, bands)
-
-
-def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
-                        n: int = 3, num_hashes: int = 128, bands: int = 32,
-                        threshold: float = 0.8,
-                        impl: str = "arrow", base_hash=None,
-                        max_bucket: int | None = None) -> DataFrame:
-    """LSH candidates verified by exact Jaccard >= threshold.
-
-    The shingle table is computed ONCE and persisted: it feeds the
-    signature map and BOTH sides of the verify join, and without
-    materialization each consumer re-evaluates (and re-codegens) the
-    expensive shingling expression — measured ~3x slower cold at
-    sf0.1. At 100 TB this persisted (id, shingles) table is the same
-    artifact a production MinHash pipeline would checkpoint before
-    banding.  ``max_bucket`` passes through to the hot-bucket guard
-    (see :func:`_lsh_candidates_from_sig`)."""
-    sh = df.select(F.col(id_col).alias("id"),
-                   word_shingles(F.col(text_col), n).alias("sh")).persist()
-    sig = sh.select("id", _sig_fn(impl)(
-        F.col("sh"), num_hashes, base_hash=base_hash).alias("sig"))
-    # persist the banded table: BOTH sides of the candidate self-join
-    # read it, so without materialization the explode + 32-slice
-    # xxhash64 banding (and the signature map above it) runs twice —
-    # measured ~0.5 s of the plain path's 2.8 s at sf0.1 (r7)
-    banded = banded_rows(sig, num_hashes, bands).persist()
-    cands = _candidates_from_banded(banded, max_bucket=max_bucket)
+def _verify_jaccard(cands: DataFrame, sh: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs (id1, id2) against the
+    (id, sh) shingle table: two equi-joins fetch each side's shingles,
+    so precision is exact whatever generated the candidates."""
     joined = (cands
               .join(sh.select(F.col("id").alias("id1"),
                               F.col("sh").alias("sh1")), "id1")
@@ -592,19 +519,14 @@ def _guard_banded_width(banded: DataFrame, max_bucket: int) -> DataFrame:
     width and rows in buckets wider than ``max_bucket`` are dropped —
     no driver-blocking profile action.
 
-    r8 (optimization round): this replaces the measure->decide
-    pre-pass of the old auto path.  The two are RESULT-IDENTICAL for
-    any input: when no bucket exceeds ``max_bucket`` the width filter
-    drops nothing (exactly the profile's guard-off branch), and when
-    some bucket does, both drop precisely the buckets wider than the
-    crossover.  Folding the guard into the single DAG removed the
-    profile's collect() job and its early double materialization —
-    measured 3.4 s -> 2.5 s (min-of-5) on qx_dedup_minhash at sf0.1;
-    the count+leftsemi form of the same filter was SLOWER than the
-    pre-pass (4.7 s mean: it re-exchanges the banded table), which is
-    why the window form is the one that ships.  At scale the width
-    window rides one hash exchange of the narrow (id, band, bucket)
-    table and AQE still skew-splits the downstream joins."""
+    When no bucket exceeds ``max_bucket`` the filter drops nothing;
+    otherwise it drops exactly the buckets wider than it.  The window
+    form replaced a measure->decide pre-pass (3.4 s -> 2.5 s min-of-5
+    on qx_dedup_minhash at sf0.1, r8); the count+leftsemi form of the
+    same filter was slower still (4.7 s mean: it re-exchanges the
+    banded table).  At scale the width window rides one hash exchange
+    of the narrow (id, band, bucket) table and AQE still skew-splits
+    the downstream joins."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("band", "bucket")
@@ -612,67 +534,68 @@ def _guard_banded_width(banded: DataFrame, max_bucket: int) -> DataFrame:
             .filter(F.col("__w") <= max_bucket).drop("__w"))
 
 
-def _pairs_from_bucketed(rel: DataFrame) -> DataFrame:
-    """In-bucket candidate self-join over any (id, band, bucket)
-    relation (id1 < id2, distinct across bands)."""
-    a = rel.alias("a")
-    b = rel.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.id") < F.col("b.id")))
-             .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-             .distinct())
+def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
+                        n: int = 3, num_hashes: int = 128, bands: int = 32,
+                        threshold: float = 0.8, base_hash=None,
+                        max_bucket: int | None = None) -> DataFrame:
+    """Banded MinHash LSH candidates (id1 < id2) verified by exact
+    Jaccard >= threshold.
 
+    rows-per-band r = num_hashes // bands; detection probability
+    1 - (1 - s^r)^bands (s = true Jaccard). Defaults (r=4, b=32)
+    catch s >= 0.8 w.p. > 0.99999 — headroom for the multiply-shift
+    hash family being only approximately min-wise independent.
 
-def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
-                             n: int = 3, num_hashes: int = 128,
-                             bands: int = 32, threshold: float = 0.8,
-                             impl: str = "arrow", base_hash=None,
-                             crossover: int = LSH_GUARD_CROSSOVER
-                             ) -> DataFrame:
-    """:func:`minhash_dedup_pairs` with the hot-bucket guard applied
-    STRUCTURALLY (r8): buckets wider than ``crossover`` are excluded
-    from pair generation by an in-plan width window — provably the
-    same pair set as the old measure->decide pre-pass (the filter is
-    vacuous exactly when the old profile chose guard-off; see
-    :func:`_guard_banded_width`), with zero extra driver
-    actions.  The policy + crossover are stamped into the result
-    schema's column metadata under ``lsh_guard`` so the evidence
-    travels with the plan and any parquet the caller writes."""
+    The shingle table is computed ONCE and persisted: it feeds the
+    signature map and BOTH sides of the verify join, and without
+    materialization each consumer re-evaluates (and re-codegens) the
+    expensive shingling expression — measured ~3x slower cold at
+    sf0.1. At 100 TB this persisted (id, shingles) table is the same
+    artifact a production MinHash pipeline would checkpoint before
+    banding.
+
+    ``max_bucket`` is the HOT-BUCKET guard (r5 skew probe): a cluster
+    of m near-identical documents maps to ONE bucket in EVERY band,
+    so candidate generation emits ~bands * C(m,2) join rows before
+    the cross-band distinct — cost that grows with the square of the
+    largest duplicate cluster, not the corpus.  With ``max_bucket``
+    set, buckets wider than it are dropped from pair generation by
+    :func:`_guard_banded_width`: a true near-dup cluster still pairs
+    through its OTHER bands unless it exceeds max_bucket in ALL of
+    them, at which point the honest production answer is handling the
+    pathological cluster out of band (it is, by construction, a single
+    boilerplate template).  The policy and bound are stamped into the
+    ``id1`` column's metadata under ``lsh_guard``, so the evidence
+    travels with the plan and any parquet the caller writes.  None
+    (default) keeps the exact candidate semantics."""
     sh = df.select(F.col(id_col).alias("id"),
                    word_shingles(F.col(text_col), n).alias("sh")).persist()
-    sig = sh.select("id", _sig_fn(impl)(
+    sig = sh.select("id", minhash_signature_arrow(
         F.col("sh"), num_hashes, base_hash=base_hash).alias("sig"))
-    # persist the GUARDED (width-windowed) banded relation, not the
-    # raw banded table (VERDICT r8 ask #3): both self-join sides read
-    # it, so persisting below the window made each side re-run the
-    # width Window + Filter (2x the window's exchange+sort — two
-    # Window nodes in the r8 plan).  Persisting above it computes
-    # banding + width window ONCE; the join sides read the cached,
-    # already-(band, bucket)-partitioned rows.
-    guarded = _guard_banded_width(
-        banded_rows(sig, num_hashes, bands), crossover).persist()
-    cands = _pairs_from_bucketed(guarded)
-    joined = (cands
-              .join(sh.select(F.col("id").alias("id1"),
-                              F.col("sh").alias("sh1")), "id1")
-              .join(sh.select(F.col("id").alias("id2"),
-                              F.col("sh").alias("sh2")), "id2"))
-    meta = {"policy": "structural-width-filter", "max_bucket": crossover,
-            "crossover": crossover,
-            "reason": (f"in-plan guard: buckets wider than {crossover} "
+    banded = banded_rows(sig, num_hashes, bands)
+    if max_bucket is not None:
+        banded = _guard_banded_width(banded, max_bucket)
+    # persist the (guarded) banded table: BOTH sides of the candidate
+    # self-join read it, so without materialization the explode +
+    # 32-slice xxhash64 banding, the signature map above it and the
+    # width window all run twice — measured ~0.5 s of the plain
+    # path's 2.8 s at sf0.1 (r7), and two Window nodes in the guarded
+    # plan (r8)
+    pairs = _verify_jaccard(_bucket_pairs(banded.persist()), sh, threshold)
+    if max_bucket is None:
+        return pairs
+    meta = {"policy": "structural-width-filter", "max_bucket": max_bucket,
+            "crossover": max_bucket,
+            "reason": (f"in-plan guard: buckets wider than {max_bucket} "
                        "excluded from pair generation (vacuous below "
                        "the crossover — identical to measure->decide)")}
-    return (joined.withColumn("jaccard_sim",
-                              jaccard(F.col("sh1"), F.col("sh2")))
-            .filter(F.col("jaccard_sim") >= threshold)
-            .select(F.col("id1").alias("id1", metadata={"lsh_guard": meta}),
-                    "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
+    return pairs.select(F.col("id1").alias("id1", metadata={"lsh_guard": meta}),
+                        "id2", "jaccard_sim")
 
 
 def minhash_artifact(df: DataFrame, id_col: str, text_col: str,
                      n: int = 3, num_hashes: int = 128,
-                     impl: str = "arrow", base_hash=None) -> DataFrame:
+                     base_hash=None) -> DataFrame:
     """The checkpointable dedup artifact: (id, sh, sig) — shingle sets
     and minhash signatures. A daily pipeline writes this table once
     per corpus generation (parquet round-trips both array columns) and
@@ -681,16 +604,14 @@ def minhash_artifact(df: DataFrame, id_col: str, text_col: str,
     pinned in tests/test_dedup.py."""
     sh = df.select(F.col(id_col).alias("id"),
                    word_shingles(F.col(text_col), n).alias("sh"))
-    kw = {} if base_hash is None else {"base_hash": base_hash}
-    return sh.select("id", "sh",
-                     _sig_fn(impl)(F.col("sh"), num_hashes, **kw).alias("sig"))
+    return sh.select("id", "sh", minhash_signature_arrow(
+        F.col("sh"), num_hashes, base_hash=base_hash).alias("sig"))
 
 
 def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
                               id_col: str, text_col: str,
                               n: int = 3, num_hashes: int = 128,
                               bands: int = 32, threshold: float = 0.8,
-                              impl: str = "arrow",
                               corpus_artifact: DataFrame | None = None,
                               base_hash=None) -> DataFrame:
     """Daily-ingest dedup: flag NEW documents that near-duplicate the
@@ -712,8 +633,7 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
     corpus-sized)."""
     if corpus_artifact is None:
         corpus_artifact = minhash_artifact(corpus, id_col, text_col, n,
-                                           num_hashes, impl,
-                                           base_hash=base_hash)
+                                           num_hashes, base_hash=base_hash)
     c_art = corpus_artifact.select("id", "sh", "sig")
     # the NEW side's artifact is persisted separately and banded from
     # its OWN table: the broadcast subtree must never contain the
@@ -721,11 +641,9 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
     # corpus signatures inside the broadcast build — measured 2.5x
     # slower than the full batch at 16x, the exact failure this
     # operator exists to avoid)
-    n_art = minhash_artifact(new_docs, id_col, text_col, n,
-                             num_hashes, impl,
+    n_art = minhash_artifact(new_docs, id_col, text_col, n, num_hashes,
                              base_hash=base_hash).persist()
     art = c_art.unionByName(n_art).persist()
-    sh = art.select("id", "sh")
     banded = banded_rows(art.select("id", "sig"), num_hashes, bands)
     new_banded = banded_rows(n_art.select("id", "sig"), num_hashes, bands)
     cands = (banded.alias("a")
@@ -736,22 +654,12 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
              .select(F.least("a.id", "b.id").alias("id1"),
                      F.greatest("a.id", "b.id").alias("id2"))
              .distinct())
-    joined = (cands
-              .join(sh.select(F.col("id").alias("id1"),
-                              F.col("sh").alias("sh1")), "id1")
-              .join(sh.select(F.col("id").alias("id2"),
-                              F.col("sh").alias("sh2")), "id2"))
-    return (joined.withColumn("jaccard_sim",
-                              jaccard(F.col("sh1"), F.col("sh2")))
-            .filter(F.col("jaccard_sim") >= threshold)
-            .select("id1", "id2",
-                    F.round("jaccard_sim", 6).alias("jaccard_sim")))
+    return _verify_jaccard(cands, art.select("id", "sh"), threshold)
 
 
 def minhash_agreement_pairs(df: DataFrame, id_col: str, text_col: str,
                             n: int = 3, num_hashes: int = 64,
                             bands: int = 16, threshold: float = 0.5,
-                            impl: str = "arrow",
                             base_hash=None) -> DataFrame:
     """LSH candidates scored by SIGNATURE AGREEMENT (fraction of equal
     minhash positions — the unbiased MinHash estimate of Jaccard)
@@ -761,11 +669,11 @@ def minhash_agreement_pairs(df: DataFrame, id_col: str, text_col: str,
     equal this one on the same corpus (equivalence-tested). Cheaper
     than the verify path at scale — no shingle re-join, just a
     zip_with over two 64-long signatures per candidate."""
-    kw = {} if base_hash is None else {"base_hash": base_hash}
     sig = df.select(F.col(id_col).alias("id"),
-                    _sig_fn(impl)(word_shingles(F.col(text_col), n),
-                                  num_hashes, **kw).alias("sig")).persist()
-    cands = _lsh_candidates_from_sig(sig, num_hashes, bands)
+                    minhash_signature_arrow(
+                        word_shingles(F.col(text_col), n), num_hashes,
+                        base_hash=base_hash).alias("sig")).persist()
+    cands = _bucket_pairs(banded_rows(sig, num_hashes, bands))
     joined = (cands
               .join(sig.select(F.col("id").alias("id1"),
                                F.col("sig").alias("s1")), "id1")
@@ -1102,8 +1010,7 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
                        k: int = 3, w: int = 4,
                        threshold: float = 0.5,
                        max_df: int | None = None,
-                       mirrorable: bool = False,
-                       impl: str = "arrow") -> DataFrame:
+                       mirrorable: bool = False) -> DataFrame:
     """Near-dup pairs by winnowing-fingerprint overlap (the MOSS
     matching scheme on top of textquality.winnow_fingerprint).
 
@@ -1112,53 +1019,20 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     short document is embedded in a longer one; that asymmetry is the
     point of local fingerprints.
 
-    Plan shape mirrors the inverted n-gram path: explode fingerprints,
-    equi-join on the fingerprint value (only docs sharing a
-    fingerprint ever meet — winnowing guarantees any shared run of
-    >= w + k - 1 words produces one), count per pair, broadcast-join
-    the tiny (id, n_fp) table. One shuffle on fingerprint + one on
-    the pair key; no cross product anywhere.
+    The shared-fingerprint counts come from :func:`_overlap_counts`,
+    the inverted index the n-gram paths use: only docs sharing a
+    fingerprint ever meet, and winnowing guarantees any shared run of
+    >= w + k - 1 words produces one.  ``max_df`` drops boilerplate
+    fingerprints from pair generation there (scale probe: flattens
+    the curve at 16x corpus); shared counts then UNDER-count for pairs
+    relying on dropped fingerprints. None keeps exact scoring."""
+    from .textquality import gram_hashes, winnow_fingerprint_arrow
 
-    Skew: a fingerprint shared by m docs yields C(m, 2) pair rows —
-    boilerplate phrases are the hot keys. ``max_df`` drops
-    fingerprints with document frequency > max_df from pair
-    generation (scale probe: flattens the curve at 16x corpus);
-    shared counts then UNDER-count for pairs relying on dropped
-    fingerprints. None keeps exact scoring."""
-    from .textquality import (gram_hashes, winnow_fingerprint,
-                              winnow_fingerprint_arrow)
-
-    winnow = {"arrow": winnow_fingerprint_arrow,
-              "jvm": winnow_fingerprint}[impl]
     hashed = df.select(F.col(id_col).alias("id"),
                        gram_hashes(F.col(text_col), k,
                                    mirrorable=mirrorable).alias("hs"))
-    # the fingerprint table feeds FOUR branches (both sides of the
-    # self-join + two size joins); without persist the whole
-    # hash+winnow pipeline recomputes per branch (no DAG CSE — the
-    # minhash shingle-table lesson; measured ~4x on the scale probe)
-    fp = (hashed.select("id", winnow(F.col("hs"), w).alias("fps"))
-          .withColumn("n_fp", F.size("fps")).filter(F.col("n_fp") > 0)
-          .persist())
-    sizes = fp.select("id", "n_fp")
-    tok = fp.select("id", F.explode("fps").alias("f"))
-    if max_df is not None:
-        freq = tok.groupBy("f").agg(F.count(F.lit(1)).alias("fdf"))
-        tok = tok.join(freq.filter(F.col("fdf") <= max_df), "f", "leftsemi")
-    shared = (tok.alias("a")
-              .join(tok.alias("b"),
-                    (F.col("a.f") == F.col("b.f"))
-                    & (F.col("a.id") < F.col("b.id")))
-              .groupBy(F.col("a.id").alias("id1"),
-                       F.col("b.id").alias("id2"))
-              .agg(F.count(F.lit(1)).alias("shared")))
-    res = (shared
-           .join(sizes.select(F.col("id").alias("id1"),
-                              F.col("n_fp").alias("n1")), "id1")
-           .join(sizes.select(F.col("id").alias("id2"),
-                              F.col("n_fp").alias("n2")), "id2")
-           .withColumn("overlap",
-                       F.col("shared").cast("double")
-                       / F.least(F.col("n1"), F.col("n2"))))
+    fp = hashed.select("id", winnow_fingerprint_arrow(F.col("hs"), w).alias("sh"))
+    res = _overlap_counts(fp, F.col("sh"), max_df).withColumn(
+        "overlap", F.col("inter").cast("double") / F.least("sz1", "sz2"))
     return (res.filter(F.col("overlap") >= threshold)
             .select("id1", "id2", F.round("overlap", 6).alias("overlap")))

@@ -191,8 +191,8 @@ def author_texts_auto(df: DataFrame, author_col: str, text_col: str,
                       total_rows_bound: int | None = None) -> DataFrame:
     """:func:`author_texts` with the shard knob driven by the measured
     key profile; the decision is stamped into the result schema's
-    metadata on ``author_col`` (same convention as
-    dedup.minhash_dedup_pairs_auto).
+    metadata on ``author_col`` (same convention as the ``lsh_guard``
+    stamp of dedup.minhash_dedup_pairs).
 
     ``profile_on`` (VERDICT r7 ask #2): an alternate lineage of the
     SAME rows to profile — key-count profiles are invariant under
@@ -302,8 +302,8 @@ def author_uncommon_words_auto(df: DataFrame, author_col: str,
     sampled pruned-column profile runs as before (``profile_on``,
     ``profile_fraction`` — VERDICT r7 ask #2 trims).  The decision +
     evidence are stamped into the result schema's metadata on
-    ``author_col`` (same convention as dedup.minhash_dedup_pairs_
-    auto)."""
+    ``author_col`` (same convention as the ``lsh_guard`` stamp of
+    dedup.minhash_dedup_pairs)."""
     decision = choose_window_shards(
         bounded_key_profile(total_rows_bound)
         if total_rows_bound is not None and total_rows_bound <= crossover

@@ -58,9 +58,9 @@ def normalize_posts(df: DataFrame, posts_col: str = "posts") -> DataFrame:
     return flat.unionByName(nested)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """S3: JSONL sink (`json.dumps(post) + "\\n"` per record)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def read_csv(spark: SparkSession, path: str,
@@ -124,22 +124,19 @@ def _looks_parquet(path: str) -> bool:
         return False
 
 
-def write_csv_with_parquet_mirror(df: DataFrame, csv_path: str,
-                                  parquet_path: str | None = None,
-                                  mode: str = "overwrite") -> None:
+def write_csv_with_parquet_mirror(df: DataFrame, csv_path: str) -> None:
     """S5+S6 (22:122-124, 208-216): CSV sink with header plus a
     parquet mirror next to it, for the CLI's ``--format csv``. The
     staged pipeline no longer calls it: ``run_e2e`` copies its mirror
     from the terminal snapshot's files. NOTE: the reference's run-id
     mode writes every row TWICE (Q2, 22:127+145-147); that defect is
     not replicated."""
-    df.write.mode(mode).option("header", "true").csv(csv_path)
-    df.write.mode(mode).parquet(parquet_path or csv_path + ".parquet")
+    df.write.mode("overwrite").option("header", "true").csv(csv_path)
+    df.write.mode("overwrite").parquet(csv_path + ".parquet")
 
 
 def write_partitioned_parquet(df: DataFrame, path: str,
-                              partition_cols: tuple[str, ...],
-                              mode: str = "overwrite") -> None:
+                              partition_cols: tuple[str, ...]) -> None:
     """Hive-layout partitioned parquet sink — the run/stage artifact
     layout for 100 TB (SURVEY §7.9 partition pruning): a reader that
     filters on any ``partition_cols`` value scans ONLY the matching
@@ -147,7 +144,7 @@ def write_partitioned_parquet(df: DataFrame, path: str,
     tests/test_manifest_io.py), so per-language / per-stage reads
     never touch the rest of the corpus. Low-cardinality keys only —
     one directory per value combination."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def overwrite_partitions(df: DataFrame, path: str,
@@ -175,11 +172,11 @@ def overwrite_partitions(df: DataFrame, path: str,
         spark.conf.set(key, before)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink (built into Spark, zero extra deps) — the columnar
     alternative where the downstream warehouse is Hive/Trino-first;
     same predicate-pushdown + column-pruning behaviour as parquet."""
-    df.write.mode(mode).orc(path)
+    df.write.mode("overwrite").orc(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -187,12 +184,12 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_xml(df: DataFrame, path: str, row_tag: str = "row",
-              root_tag: str = "rows", mode: str = "overwrite") -> None:
+              root_tag: str = "rows") -> None:
     """XML sink (built into Spark since 4.0 — no spark-xml dependency):
     the interchange format for feed-style exports (sitemaps, RSS-like
     syndication, legacy B2B pipelines).  Row-per-``row_tag`` element;
     nested structs become nested elements."""
-    (df.write.mode(mode).format("xml")
+    (df.write.mode("overwrite").format("xml")
      .option("rootTag", root_tag).option("rowTag", row_tag).save(path))
 
 

@@ -71,8 +71,45 @@ def test_winnow_arrow_jvm_fingerprint_parity(docs):
 
 def test_minhash_candidates_bounded(docs):
     n = docs.count()
-    cands = dedup.minhash_lsh_candidates(docs, "doc_id", "text").count()
+    sig = docs.select(F.col("doc_id").alias("id"),
+                      dedup.minhash_signature_arrow(
+                          dedup.word_shingles(F.col("text"), 3),
+                          128).alias("sig"))
+    cands = dedup._bucket_pairs(dedup.banded_rows(sig, 128, 32)).count()
     assert cands < n * 5, "candidate set should be far below O(n^2)"
+
+
+@pytest.mark.parametrize("op", [
+    lambda df, m: dedup.ngram_jaccard_pairs_inverted(
+        df, "doc_id", "text", threshold=0.3, max_df=m),
+    lambda df, m: dedup.ngram_containment_pairs(
+        df, "doc_id", "text", threshold=0.3, max_df=m),
+    lambda df, m: dedup.winnow_dedup_pairs(
+        df, "doc_id", "text", k=3, w=4, threshold=0.3, max_df=m),
+], ids=["jaccard", "containment", "winnow"])
+def test_overlap_max_df_drops_only_hot_elements(spark, op):
+    """The ``max_df`` guard of the inverted-index counter: eight
+    documents share a 12-word boilerplate footer (their only common
+    elements, document frequency 8) and one near-duplicate pair
+    shares elements nobody else has (frequency 2).  At or above the
+    largest frequency the guard is vacuous; at max_df=2 the
+    boilerplate-only pairs vanish and the other pair keeps its exact
+    score."""
+    footer = " ".join(f"bp{j}" for j in range(12))
+    rows = ([(i, f"d{i}a d{i}b d{i}c {footer}") for i in range(8)]
+            + [(10, " ".join(f"p{j}" for j in range(20))),
+               (11, " ".join(f"p{j}" for j in range(19)) + " q")])
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def pairs(max_df):
+        return {(r[0], r[1]): tuple(r[2:]) for r in op(df, max_df).collect()}
+
+    exact = pairs(None)
+    boiler = {k for k in exact if k[1] < 8}
+    assert len(boiler) == 8 * 7 // 2, "every footer pair scores above t"
+    assert (10, 11) in exact
+    assert pairs(8) == exact
+    assert pairs(2) == {k: v for k, v in exact.items() if k not in boiler}
 
 
 def test_cms_error_bound_and_merge(docs):

@@ -35,16 +35,27 @@ def test_tiering_broadcasts_cutoffs_and_prunes_scan(spark, sf_dir):
     assert len(read_cols.split(",")) <= 6, read_cols
 
 
-def test_ngram_jaccard_has_no_cartesian_product(spark, sf_dir):
-    """The inverted-index exact Jaccard must never plan a cartesian
-    or nested-loop join — candidates come from shingle equi-joins."""
-    plan = plan_of(QUERIES["qx_dedup_ngram_jaccard"](spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+# every registered query whose pairs come from dedup._bucket_pairs,
+# dedup._overlap_counts or the incremental MinHash candidate join, but
+# qx_dedup_components: its builder local-checkpoints the pairs, so its
+# plan holds no join to check (its pairs are
+# ngram_jaccard_pairs_inverted's, checked via qx_dedup_ngram_jaccard)
+DEDUP_CORES = ["qx_dedup_minhash", "qx_dedup_minhash_portable",
+               "qx_dedup_ngram_jaccard", "qx_dedup_incremental",
+               "qx_dedup_incremental_portable", "qs_neardup_pairs",
+               "qs_neardup_pairs_portable", "qx_dedup_winnow",
+               "qx_dedup_winnow_fast", "qx_dedup_containment",
+               "qe2e_corpus_curation"]
 
 
-def test_minhash_candidates_are_equi_join(spark, sf_dir):
-    plan = plan_of(QUERIES["qx_dedup_minhash"](spark, sf_dir))
+@pytest.mark.parametrize("name", DEDUP_CORES)
+def test_dedup_cores_plan_no_cartesian(spark, sf_dir, name):
+    """Dedup pair generation must stay an equi-join (shingle,
+    fingerprint or (band, bucket) keys) — never a cartesian or
+    nested-loop join."""
+    plan = plan_of(QUERIES[name](spark, sf_dir))
+    assert re.search(r"(SortMerge|BroadcastHash|ShuffledHash)Join", plan), \
+        "no equi-join in the plan: the guard would match nothing"
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -120,14 +131,6 @@ def test_author_words_reuses_partitioning(spark, sf_dir):
     assert plan.count("Exchange") - plan.count("RoundRobinPartitioning") \
         <= 2, plan
     assert "WindowGroupLimit" in plan  # top-k pushed below the sort
-
-
-def test_winnow_dedup_no_cartesian(spark, sf_dir):
-    """Winnowing pair generation must stay an equi-join on the
-    fingerprint value — never a cross/nested-loop join."""
-    plan = plan_of(QUERIES["qx_dedup_winnow"](spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_tfidf_topk_uses_window_group_limit(spark, sf_dir):

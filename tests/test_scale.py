@@ -531,13 +531,13 @@ def test_minhash_max_bucket_guard_caps_hot_cluster(spark):
 
 
 def test_lsh_guard_auto_selects_from_measured_profile(spark):
-    """r8 structural guard: the in-plan width filter must equal the
-    old measure->decide semantics in BOTH regimes — on the hot-cluster
-    shape it equals the hand-set knob (buckets wider than the
-    crossover dropped), on the uniform corpus it equals the PLAIN
-    path (the filter is vacuous below the crossover).  Policy +
-    crossover recorded in the result schema metadata; no profile
-    action runs."""
+    """The structural guard (``minhash_dedup_pairs(max_bucket=...)``)
+    in both regimes: on the hot-cluster shape it drops exactly the
+    cluster's intra pairs (its buckets are wider than the bound in
+    every band) and keeps every other unguarded pair; on the uniform
+    corpus it equals the unguarded path (the filter is vacuous below
+    the bound).  Policy + bound are recorded in the result schema
+    metadata; no profile action runs."""
     from social_media_ai_engineering_etl_spark.operators import dedup
 
     template = " ".join(f"tok{i}" for i in range(60))
@@ -547,34 +547,37 @@ def test_lsh_guard_auto_selects_from_measured_profile(spark):
                    (1001, "a completely different document about spark "
                           "joins and shuffle behavior under load tomorrow")])
     hot = spark.createDataFrame(hot_rows, "doc_id long, text string")
-    # crossover lowered to keep the fixture small; the guard algebra
-    # is identical at the production value of 256
-    auto = dedup.minhash_dedup_pairs_auto(hot, "doc_id", "text",
-                                          threshold=0.5, crossover=64)
-    meta = auto.schema["id1"].metadata["lsh_guard"]
+    # bound lowered to keep the fixture small; the guard algebra is
+    # identical at the production value of 256
+    guarded = dedup.minhash_dedup_pairs(hot, "doc_id", "text",
+                                        threshold=0.5, max_bucket=64)
+    meta = guarded.schema["id1"].metadata["lsh_guard"]
     assert meta["max_bucket"] == 64, meta
     assert meta["policy"] == "structural-width-filter", meta
-    got = {(r.id1, r.id2) for r in auto.collect()}
-    want = {(r.id1, r.id2)
-            for r in dedup.minhash_dedup_pairs(
-                hot, "doc_id", "text", threshold=0.5,
-                max_bucket=64).collect()}
-    assert got == want, "structural guard must equal the hand-set guard"
+    got = {(r.id1, r.id2) for r in guarded.collect()}
+    unguarded = {(r.id1, r.id2)
+                 for r in dedup.minhash_dedup_pairs(
+                     hot, "doc_id", "text", threshold=0.5).collect()}
+    assert sum(1 for a, b in unguarded if b < 300) == 300 * 299 // 2, \
+        "the hot cluster pairs fully without the guard"
+    want = {(a, b) for a, b in unguarded if not (a < 300 and b < 300)}
+    assert got == want, \
+        "the guard must drop exactly the hot cluster's intra pairs"
     assert (1000, 1001) in got
 
     uni_rows = [(i, f"doc {i} " + " ".join(
         f"u{i}w{j}" for j in range(25))) for i in range(80)]
     uni = spark.createDataFrame(uni_rows, "doc_id long, text string")
-    auto_u = dedup.minhash_dedup_pairs_auto(uni, "doc_id", "text",
-                                            threshold=0.5, crossover=64)
-    meta_u = auto_u.schema["id1"].metadata["lsh_guard"]
+    guarded_u = dedup.minhash_dedup_pairs(uni, "doc_id", "text",
+                                          threshold=0.5, max_bucket=64)
+    meta_u = guarded_u.schema["id1"].metadata["lsh_guard"]
     assert meta_u["max_bucket"] == 64, meta_u   # always stamped; vacuous here
-    got_u = {(r.id1, r.id2) for r in auto_u.collect()}
+    got_u = {(r.id1, r.id2) for r in guarded_u.collect()}
     want_u = {(r.id1, r.id2)
               for r in dedup.minhash_dedup_pairs(
                   uni, "doc_id", "text", threshold=0.5).collect()}
     assert got_u == want_u, \
-        "below the crossover the width filter must be vacuous"
+        "below the bound the width filter must be vacuous"
 
 
 def test_author_shards_auto_policy_and_equivalence(spark):
@@ -660,11 +663,11 @@ def test_bounded_key_profile_zero_job_decision(spark, sf_dir):
 
 def test_graded_paths_route_through_auto_guards(spark, sf_dir):
     """VERDICT r6 ask #3: the GRADED/benched registrations themselves
-    must run the measure->decide machinery — qx_dedup_minhash rides
-    minhash_dedup_pairs_auto and q17_author_words rides
-    author_uncommon_words_auto.  On the uniform testdata corpus both
-    guards must choose OFF (evidence in the schema metadata) and the
-    rows must equal the plain paths."""
+    must run the guard machinery — qx_dedup_minhash rides
+    minhash_dedup_pairs(max_bucket=LSH_GUARD_CROSSOVER) and
+    q17_author_words rides author_uncommon_words_auto.  On the
+    uniform testdata corpus both guards must choose OFF (evidence in
+    the schema metadata) and the rows must equal the plain paths."""
     import social_media_ai_engineering_etl_spark.queries  # noqa: F401
     from social_media_ai_engineering_etl_spark.operators import (dedup,
                                                                  phrases)
