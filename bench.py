@@ -1,6 +1,6 @@
 """Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
+Prints ONE JSON line last on stdout:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Timing = full query wall time to a CHECKSUM action:
@@ -13,12 +13,28 @@ q26_rewards_scalar's count() plan is ``Aggregate [count(1)] <- Project
 [] <- Relation``).  Hashing every output column forces every output
 cell of every row to be computed while transferring one scalar to the
 driver.
+
+``queries`` holds each query's mean over $SPARK_GRAFT_BENCH_PASSES
+interleaved passes (default 5, after one untimed warm-up pass) and
+``value`` their sum; ``band`` adds sd, min, max, median, inclusive
+quartiles and the samples.  Compare medians and quartiles: the first
+timed passes can still run cold, and a mean carries them.  stderr gets
+the band as a markdown table.
+
+Usage: python bench.py [--only a,b] [--plans DIR] [--tag TAG]
+``--only`` keeps the queries whose name contains one of the substrings;
+``--plans`` writes each formatted physical plan to
+``DIR/<query>_<tag>.txt`` and adds ``plans``: per query its operator
+counts (``shape``) and the characters and ``md5(`` calls of its
+optimized logical plan (``plan_chars``, ``md5_calls``).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -26,10 +42,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
+from social_media_ai_engineering_etl_spark.profile import StatusReader  # noqa: E402
 from social_media_ai_engineering_etl_spark.registry import BENCH, QUERIES  # noqa: E402
 from social_media_ai_engineering_etl_spark.session import cache_scope, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+MARKS = ("Exchange", "BatchEvalPython", "ArrowEvalPython", "MapInArrow",
+         "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+         "BroadcastNestedLoopJoin", "CartesianProduct", "Window",
+         "WindowGroupLimit", "Generate", "InMemoryTableScan")
 
 
 def materialize(df) -> int:
@@ -41,70 +63,16 @@ def materialize(df) -> int:
     return row["n"]
 
 
-FINISHED = ("COMPLETE", "FAILED")
+def plan_shape(plan: str) -> dict:
+    # count operator list entries like "(3) Exchange", not detail lines
+    ops = re.findall(r"^\(\d+\) ([A-Za-z]+)", plan, re.M)
+    return {m: ops.count(m) for m in MARKS if m in ops}
 
 
-def task_time_reader(spark):
-    """Per-query EXECUTOR TASK-TIME totals (VERDICT r8 ask #2): wall
-    time at sf0.1 is fixed-cost bound (~0.4 s job floor), so an
-    8-vs-32-core probe reads ~1 everywhere and cannot distinguish a
-    parallel engine from a serial one.  The sum of task durations CAN:
-    a compute-bound query keeps its task-time roughly constant across
-    core counts while wall shrinks, and task_time/wall >> 1 at 32
-    cores is direct evidence the plan parallelizes.
-
-    Returns a ``snap()`` closure (see :func:`stage_time_counter`) over
-    the driver's AppStatusStore (the always-on listener-bus store that
-    backs the UI — no extra listener, no UI needed).
-    Measurement-only instrumentation: no effect on plans or results.
-    """
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    gw = sc._gateway
-    empty_quantiles = gw.new_array(gw.jvm.double, 0)
-    # the store filters too: skipped and pending stages never cross py4j
-    finished = gw.jvm.java.util.ArrayList()
-    for status in FINISHED:
-        finished.add(gw.jvm.org.apache.spark.status.api.v1.StageStatus
-                     .valueOf(status))
-
-    def list_stages():
-        # flush the async listener bus so the last action's stage
-        # metrics are final before reading
-        jsc.listenerBus().waitUntilEmpty()
-        stages = jsc.statusStore().stageList(
-            finished, False, False, empty_quantiles, None)
-        for i in range(stages.size()):
-            s = stages.apply(i)
-            yield ((s.stageId(), s.attemptId()), s.status().toString(),
-                   s.executorRunTime)
-
-    return stage_time_counter(list_stages)
-
-
-def stage_time_counter(list_stages):
-    """``snap()`` closure: each call returns the summed executor run
-    time (seconds) of the stage attempts that FINISHED (COMPLETE or
-    FAILED) since the previous call.  ``list_stages()`` yields
-    ``((stage_id, attempt), status, run_ms)`` for every retained stage
-    attempt in any order, ``run_ms()`` reading its executorRunTime.
-    Counted attempts are remembered in a set, so a stage that finishes
-    after a higher-numbered one is still counted once, and a stage
-    still running is counted when it ends, not half-counted now.
-    Stage eviction (spark.ui.retainedStages) only removes old stages,
-    which are already counted."""
-    seen: set[tuple[int, int]] = set()
-
-    def snap() -> float:
-        total_ms = 0
-        for key, status, run_ms in list_stages():
-            if key in seen or status not in FINISHED:
-                continue
-            seen.add(key)
-            total_ms += run_ms()
-        return total_ms / 1000.0
-
-    return snap
+def formatted_plan(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted"))
 
 
 def _sf_from_dir(d: str) -> float:
@@ -115,74 +83,96 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
+def _band(ts: list[float]) -> dict:
+    q1, median, q3 = (statistics.quantiles(ts, n=4, method="inclusive")
+                      if len(ts) > 1 else ts * 3)
+    stats = {"mean": statistics.mean(ts),
+             "sd": statistics.stdev(ts) if len(ts) > 1 else 0.0,
+             "min": min(ts), "max": max(ts),
+             "median": median, "q1": q1, "q3": q3}
+    return {**{k: round(v, 4) for k, v in stats.items()}, "samples": ts}
+
+
+def _plan_record(spark, name: str, plans_dir: str, tag: str) -> dict:
+    """Write ``name``'s formatted physical plan and return its shape."""
+    with cache_scope(spark):
+        df = QUERIES[name](spark, SF_DIR)
+        plan = formatted_plan(spark, df)
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
+        f.write(plan)
+    return {"shape": plan_shape(plan), "plan_chars": len(optimized),
+            "md5_calls": optimized.count("md5(")}
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--only", type=lambda v: v.split(","),
+                    help="keep queries whose name contains one of these")
+    ap.add_argument("--plans", help="directory for formatted plans")
+    ap.add_argument("--tag", default="plan", help="plan file name suffix")
+    args = ap.parse_args()
+
     spark = get_spark("bench")
-    names = BENCH or sorted(QUERIES)
+    names = [q for q in (BENCH or sorted(QUERIES))
+             if args.only is None or any(p in q for p in args.only)]
     # untimed warmup pass over EVERY headliner: codegen compilation,
     # JIT, Python-worker spinup and parquet footer reads are one-time
     # session costs, not plan costs — timing warm runs measures the
     # plan (the thing that scales to 100 TB), not the JVM's first
-    # 200ms of Janino per query.  clearCache after each so the timed
-    # passes still pay their own scans.
+    # 200ms of Janino per query.
     for name in names:
         with cache_scope(spark):
             materialize(QUERIES[name](spark, SF_DIR))
 
-    # task-time instrumentation (VERDICT r8 ask #2): absorb the
-    # warmup pass's stages, then read a per-query delta each pass
-    snap_task_time = task_time_reader(spark)
-    snap_task_time()
+    # per-query executor task-time (VERDICT r8 ask #2): roughly constant
+    # across core counts for a compute-bound query while wall shrinks,
+    # and task/wall >> 1 shows the plan parallelizes
+    status = StatusReader(spark)
 
     # r7 (VERDICT r6 ask #6): the recorded artifact is the PER-QUERY
-    # MEAN over n interleaved passes with a per-query band (sd/min/
-    # max) — a single-shot or min-of-2 total sits a coin flip from
-    # any fixed bar on a shared box (measured quiet band 17.3-19.7 s),
-    # so the bar moves to the mean and the band travels with the
-    # number.  Interleaved passes = slow box phases hit every query
-    # equally instead of biasing whichever was running.
+    # MEAN over n interleaved passes with a per-query band — a
+    # single-shot or min-of-2 total sits a coin flip from any fixed bar
+    # on a shared box (measured quiet band 17.3-19.7 s), so the bar
+    # moves to the mean and the band travels with the number.
+    # Interleaved passes = slow box phases hit every query equally
+    # instead of biasing whichever was running.
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
     samples: dict[str, list[float]] = {name: [] for name in names}
     task_samples: dict[str, list[float]] = {name: [] for name in names}
     for p in range(passes):
         for name in names:
-            # cache ownership is centralized at the run loop: operators
-            # persist shared subtrees for their own plan; the scope
-            # releases exactly the blocks this query created (persist
-            # AND localCheckpoint — clearCache misses the latter), so a
-            # 15-query run holds one query's caches, not fifteen
-            # (ADVICE r1; discipline per VERDICT r7 ask #3, pinned in
-            # tests/test_cache_discipline.py).  Scope exit is untimed:
-            # release is bookkeeping, not plan cost.
+            # the scope releases exactly what this query cached, so the
+            # run holds one query's caches and every pass pays its own
+            # persists (tests/test_cache_discipline.py).  Scope exit is
+            # untimed: release is bookkeeping, not plan cost.
             t0 = time.perf_counter()
             with cache_scope(spark):
                 df = QUERIES[name](spark, SF_DIR)
                 n = materialize(df)
                 took = round(time.perf_counter() - t0, 4)
             samples[name].append(took)
-            task_s = snap_task_time()
+            task_s = status.stages().task_s
             task_samples[name].append(task_s)
             print(f"# pass {p + 1} {name}: {took:.3f}s "
                   f"task-time {task_s:.3f}s "
                   f"parallelism {task_s / took:.1f}x ({n} rows)",
                   file=sys.stderr)
 
-    timings = {name: round(statistics.mean(ts), 4)
-               for name, ts in samples.items()}
-    band = {name: {
-        "mean": round(statistics.mean(ts), 4),
-        "sd": round(statistics.stdev(ts), 4) if len(ts) > 1 else 0.0,
-        "min": round(min(ts), 4),
-        "max": round(max(ts), 4),
-    } for name, ts in samples.items()}
+    band = {name: _band(ts) for name, ts in samples.items()}
+    timings = {name: b["mean"] for name, b in band.items()}
     total = round(sum(timings.values()), 4)
-    min_total = round(sum(b["min"] for b in band.values()), 4)
-    # per-query executor task-time (sum of task durations): the
-    # core-scaling signal — roughly constant across core counts for
-    # compute-bound queries while wall shrinks, and task/wall >> 1
-    # demonstrates the plan parallelizes (VERDICT r8 ask #2).
+    cols = ("median", "q1", "q3", "mean", "sd", "min", "max")
+    print(f"| query | {' | '.join(cols)} |\n|---{'|---' * len(cols)}|",
+          file=sys.stderr)
+    for name, b in band.items():
+        print(f"| {name} | {' | '.join(f'{b[c]:.3f}' for c in cols)} |",
+              file=sys.stderr)
+    print(f"| sum of means | | | | {total:.3f} | | | |", file=sys.stderr)
     task_time = {name: round(statistics.mean(ts), 4)
                  for name, ts in task_samples.items()}
-    print(json.dumps({
+    out = {
         "metric": "total_headline_query_time",
         "value": total,
         "unit": "sec",
@@ -190,10 +180,15 @@ def main() -> None:
         "sf": _sf_from_dir(SF_DIR),
         "passes": passes,
         "band": band,
-        "min_sum": min_total,
+        "min_sum": round(sum(b["min"] for b in band.values()), 4),
         "task_sec": task_time,
         "task_sec_sum": round(sum(task_time.values()), 4),
-    }))
+    }
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+        out["plans"] = {name: _plan_record(spark, name, args.plans, args.tag)
+                        for name in names}
+    print(json.dumps(out))
     spark.stop()
 
 

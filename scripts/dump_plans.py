@@ -7,14 +7,13 @@ tests/test_plans.py asserts). Regenerate after plan-affecting changes:
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
+from bench import formatted_plan  # noqa: E402
 from social_media_ai_engineering_etl_spark.registry import QUERIES  # noqa: E402
 from social_media_ai_engineering_etl_spark.session import get_spark  # noqa: E402
 
@@ -151,13 +150,10 @@ def main() -> None:
     print("Generated by scripts/dump_plans.py; the property named for "
           "each plan is regression-tested in tests/test_plans.py.\n")
     for name, note in NOTES.items():
-        df = QUERIES[name](spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
+        plan = formatted_plan(spark, QUERIES[name](spark, SF))
         print(f"## {name}\n\n{note}\n")
         print("```")
-        print(buf.getvalue().strip())
+        print(plan.strip())
         print("```\n")
     spark.stop()
 

@@ -60,7 +60,7 @@ ROOT = os.path.dirname(HERE)
 sys.path[:0] = [ROOT, HERE]
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
-from bench import FINISHED, SF_DIR, materialize  # noqa: E402
+from bench import SF_DIR, materialize  # noqa: E402
 from scale_probe import multiply_docs  # noqa: E402
 from scale_probe_joins import multiply_fact  # noqa: E402
 from social_media_ai_engineering_etl_spark.operators import (  # noqa: E402
@@ -69,6 +69,7 @@ from social_media_ai_engineering_etl_spark.operators import (  # noqa: E402
     multimodal as mm)
 from social_media_ai_engineering_etl_spark.operators.udafs import (  # noqa: E402
     weighted_median_udaf)
+from social_media_ai_engineering_etl_spark.profile import StatusReader  # noqa: E402
 from social_media_ai_engineering_etl_spark.registry import QUERIES  # noqa: E402
 from social_media_ai_engineering_etl_spark.session import (  # noqa: E402
     TABLES, cache_scope, get_spark, widen_scan)
@@ -557,36 +558,18 @@ def worker_cpu_s(jvm_pid: int) -> float:
 def stage_totals(spark):
     """``snap()`` -> (executor task seconds, tasks, spilled bytes,
     worker CPU seconds) since the previous call: the stage attempts
-    that finished, read from the driver's AppStatusStore the way
-    bench.py's task_time_reader reads task time (a seen-set of
-    finished attempts, no UI needed), and :func:`worker_cpu_s`."""
-    sc = spark.sparkContext
-    jsc, gw = sc._jsc.sc(), sc._gateway
-    statuses = gw.jvm.java.util.ArrayList()
-    for status in FINISHED:
-        statuses.add(gw.jvm.org.apache.spark.status.api.v1.StageStatus
-                     .valueOf(status))
-    no_quantiles = gw.new_array(gw.jvm.double, 0)
-    seen = set()
-    last_cpu = worker_cpu_s(gw.proc.pid)
+    that finished, from :class:`profile.StatusReader`, and
+    :func:`worker_cpu_s`."""
+    status = StatusReader(spark)
+    pid = spark.sparkContext._gateway.proc.pid
+    last_cpu = worker_cpu_s(pid)
 
     def snap():
         nonlocal last_cpu
-        jsc.listenerBus().waitUntilEmpty()
-        stages = jsc.statusStore().stageList(statuses, False, False,
-                                             no_quantiles, None)
-        run_ms = tasks = spilled = 0
-        for i in range(stages.size()):
-            st = stages.apply(i)
-            key = (st.stageId(), st.attemptId())
-            if key not in seen:
-                seen.add(key)
-                run_ms += st.executorRunTime()
-                tasks += st.numCompleteTasks()
-                spilled += st.memoryBytesSpilled() + st.diskBytesSpilled()
-        cpu = worker_cpu_s(gw.proc.pid)
+        stages = status.stages()
+        cpu = worker_cpu_s(pid)
         cpu_s, last_cpu = cpu - last_cpu, cpu
-        return run_ms / 1000.0, tasks, spilled, cpu_s
+        return (*stages, cpu_s)
 
     return snap
 

@@ -139,14 +139,26 @@ def _dot(a: Column, b: Column) -> Column:
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
+_NEAREST_ROWS = 2048   # rows per broadcast distance array in _nearest
+
+
 def _nearest(X, C, n: int = 1):
     """Per row of ``X``, the indices of its ``n`` nearest rows of ``C``,
     nearest first: squared L2 rounded to 6 dp, ties to the smaller
     index.  Unrounded argmins flip between engines on last-ulp ties,
     so this is the rule the DuckDB oracles replay; IVF cells, query
-    probes and PQ codes all follow it."""
-    d = np.stack([((X - c) ** 2).sum(1) for c in C], axis=1)
-    return np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :n]
+    probes and PQ codes all follow it.  The nearest alone (``n == 1``:
+    cells and codes) is an ``argmin`` per row chunk, NaN distances
+    last as the sort puts them; probes sort the whole row."""
+    if n > 1:
+        d = np.stack([((X - c) ** 2).sum(1) for c in C], axis=1)
+        return np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :n]
+    out = np.empty((len(X), 1), dtype=np.int64)
+    for lo in range(0, len(X), _NEAREST_ROWS):
+        d = np.round(((X[lo:lo + _NEAREST_ROWS, None, :] - C) ** 2).sum(-1), 6)
+        d[np.isnan(d)] = np.inf
+        out[lo:lo + _NEAREST_ROWS, 0] = d.argmin(1)
+    return out
 
 
 def _grouped(pdf, keys, groups):

@@ -741,14 +741,17 @@ FROM toned
 def q26_rewards_sentiment(spark, sf_dir):
     """Sentiment arc + pacing labels and the rewards built on them:
     R8 tone alignment, R12 narrative structure, R14 semantic
-    coherence.  The labels are projected once: repeated label trees
-    mint fresh lambda variables that Catalyst cannot merge, and the
+    coherence.  The sentence scores and then the labels are projected
+    once each: repeated label trees mint fresh lambda variables that
+    Catalyst cannot merge, the arc reads the scores 19 times and the
     rewards read each label more than once, so CollapseProject keeps
-    the label projection apart."""
+    each projection apart."""
     c = F.col("completion")
     labels = _derive_reward_pairs(_docs(spark, sf_dir)).select(
+        "doc_id", "prompt", "completion",
+        rw.sentiment_scores(c).alias("scores")).select(
         "doc_id", "prompt",
-        rw.sentiment_arc(rw.sentiment_scores(c)).alias("arc"),
+        rw.sentiment_arc(F.col("scores")).alias("arc"),
         rw.pacing(c).alias("pacing"),
         F.size(rw.sentences(c)).alias("n_sents"))
     arc, pace = F.col("arc"), F.col("pacing")

@@ -43,13 +43,19 @@ frame, global_ntile's range slices) either unpersist it themselves
 before returning (pagerank, global_ntile, permutation importance) or
 — when the returned DataFrame's lazy plan still reads the cache —
 leave release to the QUERY BOUNDARY: harness code that runs many
-registered queries in one session (scripts/verify_driver.py, bench.py)
-calls ``spark.catalog.clearCache()`` between queries, so a long
-session holds at most one query's caches.  tests/test_scale.py pins
-this with a 20-query leak test (no net growth of cached blocks across
-a simulated session).  Library callers embedding single operators own
-the same choice: wrap in try/finally unpersist or clear at their own
-batch boundaries.
+registered queries in one session (bench.py, perfbench,
+scripts/scale_curve.py) runs each query inside :func:`cache_scope`,
+which at exit uncaches the CacheManager entries the query added and
+unpersists the RDDs it left persisted (``persist``/``cache`` and
+``localCheckpoint`` blocks), sparing caches made before the scope; so
+a long session holds at most one query's caches, and a repeated build
+of a query caches again (scripts/verify_driver.py still calls
+``spark.catalog.clearCache()`` between queries, which misses
+``localCheckpoint`` blocks).  tests/test_cache_discipline.py pins this for
+every benched query, and tests/test_scale.py with a 20-query leak test
+(no net growth of cached blocks across a simulated session).  Library
+callers embedding single operators own the same choice: wrap in
+try/finally unpersist, or use the scope at their own batch boundaries.
 """
 
 from __future__ import annotations
@@ -308,28 +314,39 @@ def cache_scope(spark: SparkSession):
     action belongs to the CALLER (the dedup candidate tables, q26's
     stage-1 pair cache), so they cannot unpersist inside the operator
     without losing the sharing the persist exists for.  This scope is
-    the boundary that can: it snapshots the persistent-RDD id set at
-    entry and, at exit, unpersists exactly the blocks the scoped work
-    created — persist()/cache() blocks AND localCheckpoint blocks
-    (which ``spark.catalog.clearCache()`` does NOT release; the r3
-    pagerank leak class) — while leaving any pre-existing caches a
-    library caller owns untouched, which blanket ``clearCache`` cannot
-    do.
+    the boundary that can: it snapshots the CacheManager's entries and
+    the persistent-RDD id set at entry and, at exit, releases exactly
+    what the scoped work created — it uncaches every CacheManager entry
+    the scope added (so the next build of the same plan caches again
+    instead of reading a released relation), then unpersists every RDD
+    the scope left persisted: persist()/cache() blocks AND
+    localCheckpoint blocks (which ``spark.catalog.clearCache()`` does
+    NOT release; the r3 pagerank leak class) — while leaving any
+    pre-existing caches a library caller owns untouched, which blanket
+    ``clearCache`` cannot do.
 
     Single-threaded by contract (one scope per session at a time, the
     harness shape); tests/test_cache_discipline.py pins that every
     benched query leaves ZERO persistent RDDs behind under this scope
     alone, with no clearCache involved.
     """
-    sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keys())
+    sc, session = spark.sparkContext._jsc.sc(), spark._jsparkSession
+    cache = session.sharedState().cacheManager()
+    # both are immutable Scala collections, so holding them is the
+    # snapshot: no element crosses py4j, and no py4j iterator runs to
+    # the NoSuchElementException that ends it (PySpark converts that
+    # through classpath reflection, milliseconds per snapshot).
+    # cachedData() is a private accessor; py4j reflection reaches it.
+    entries, rdds = cache.cachedData(), sc.getPersistentRDDs().keySet()
     try:
         yield
     finally:
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in list(jmap.keys()):
-            if rid not in before:
-                jmap[rid].unpersist(False)
+        added = cache.cachedData().diff(entries)
+        for i in range(added.size()):
+            cache.uncacheQuery(session, added.apply(i).plan(), False, False)
+        left = sc.getPersistentRDDs().removedAll(rdds).values().toSeq()
+        for i in range(left.size()):
+            left.apply(i).unpersist(False)
 
 
 # ---------------------------------------------------------------------------

@@ -5,13 +5,15 @@ action is the caller's, so the release point must be the query
 boundary: ``session.cache_scope`` unpersists exactly the blocks the
 scoped work created.  The census here proves every BENCHED query —
 the ones a long-lived session replays — leaves ZERO persistent RDDs
-behind under the scope alone (no ``clearCache`` involved), and that
-the scope spares pre-existing caches a library caller owns (the thing
-blanket ``clearCache`` cannot do).
+behind under the scope alone (no ``clearCache`` involved), that it
+releases the CacheManager entries it created so a repeated build caches
+again, and that the scope spares pre-existing caches a library caller
+owns (the thing blanket ``clearCache`` cannot do).
 """
 
 from __future__ import annotations
 
+import py4j.clientserver
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,3 +74,40 @@ def test_cache_scope_releases_local_checkpoints(spark):
         cp.count()
         assert _persistent_ids(spark) > before
     assert _persistent_ids(spark) == before
+
+
+def test_cache_scope_releases_its_cache_manager_entries(spark, sf_dir):
+    """The scope uncaches the CacheManager entries it made, so a second
+    scoped build persists as many RDDs as the first (a leftover entry
+    answers "already cached" and caches nothing); no entry made inside
+    a scope survives it, and the caller's earlier persist does."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    mine = spark.range(1000).select((F.col("id") * 3).alias("v")).persist()
+    mine.count()
+    owned, persisted = _persistent_ids(spark), []
+    for _ in range(2):
+        with cache_scope(spark):
+            _consume(QUERIES["qx_dedup_minhash"](spark, sf_dir))
+            persisted.append(len(_persistent_ids(spark) - owned))
+        assert cache.cachedData().size() == 1   # the caller's entry alone
+        assert _persistent_ids(spark) == owned
+    assert persisted[0] > 0 and persisted[1] == persisted[0], persisted
+    assert cache.lookupCachedData(mine._jdf).isDefined()
+    mine.unpersist()
+
+
+def test_empty_cache_scope_sends_few_py4j_commands(spark, monkeypatch):
+    """An empty scope costs a fixed handful of py4j commands: the
+    snapshots are held, not copied element by element, and no py4j
+    iterator runs to the JVM exception that ends it."""
+    spark.catalog.clearCache()
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection,
+                        "send_command",
+                        lambda self, c: sent.append(c) or send(self, c))
+    with cache_scope(spark):
+        pass
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 16, len(sent)

@@ -926,3 +926,19 @@ def test_nearest_rounds_to_6dp_and_breaks_ties_low():
     # sub-space 1 has no tie at 6 dp -> the nearest, code 1
     books = np.array([[[0.6 + 1e-4], [0.6]], [[0.0], [0.8 + 5e-4]]])
     assert _pq_codes(np.array([[3.0, 4.0]]), books).tolist() == [[0, 1]]
+
+
+def test_nearest_alone_matches_the_sorted_rule_nan_row_included(monkeypatch):
+    """``_nearest(n=1)`` (IVF cells, PQ codes) takes a chunked argmin in
+    place of the sort and must pick what the stable sort of rounded
+    distances picks: ties low, and index 0 for a NaN row."""
+    from social_media_ai_engineering_etl_spark.operators import similarity
+    monkeypatch.setattr(similarity, "_NEAREST_ROWS", 500)   # 3 chunks
+    C = np.array([[0.0, 0.0], [1.0, 0.0], [0.5, 0.5], [0.0, 0.5]])
+    X = np.random.default_rng(11).choice([0.0, 0.25, 0.5, 1.0], (1200, 2))
+    X[7], X[8] = [np.nan, 0.0], [0.5 + 1e-9, 0.0]   # NaN; rounded tie 0/1
+    d = np.stack([((X - c) ** 2).sum(1) for c in C], axis=1)
+    want = np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :1]
+    got = similarity._nearest(X, C)
+    assert got[7, 0] == 0 and got[8, 0] == 0
+    assert got.shape == want.shape and (got == want).all()

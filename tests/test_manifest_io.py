@@ -12,6 +12,7 @@ from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
                                StructType)
 
 from social_media_ai_engineering_etl_spark.plans import manifest as mf
+from social_media_ai_engineering_etl_spark.profile import StatusReader
 from social_media_ai_engineering_etl_spark.sources import io as sio
 
 
@@ -236,22 +237,6 @@ def test_staged_e2e_pipeline_config_invalidates(spark, sf_dir, tmp_path):
     assert [e["rows"] for e in changed] == [e["rows"] for e in first]
 
 
-def _job_counter(spark):
-    """Spark jobs run since the call, read from the AppStatusStore once
-    the listener bus has delivered every event. Counted by job id, not
-    by list length: the store drops its oldest jobs past
-    ``spark.ui.retainedJobs``."""
-    sc = spark.sparkContext._jsc.sc()
-    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-
-    def job_ids():
-        sc.listenerBus().waitUntilEmpty()
-        return {j.jobId() for j in as_java(sc.statusStore().jobsList(None))}
-
-    before = job_ids()
-    return lambda: len(job_ids() - before)
-
-
 @pytest.fixture(scope="module")
 def fresh_e2e(spark, sf_dir, tmp_path_factory):
     """One fresh run_e2e, its report and the jobs it ran; tests re-run
@@ -259,9 +244,9 @@ def fresh_e2e(spark, sf_dir, tmp_path_factory):
     from social_media_ai_engineering_etl_spark.plans.pipeline import run_e2e
 
     run_dir = str(tmp_path_factory.mktemp("e2e") / "run")
-    jobs = _job_counter(spark)
+    status = StatusReader(spark)
     report = run_e2e(spark, sf_dir, run_dir)
-    return run_dir, report, jobs()
+    return run_dir, report, status.jobs()
 
 
 def _rerun(spark, sf_dir, fresh_e2e, tmp_path, edit=None):
@@ -275,9 +260,9 @@ def _rerun(spark, sf_dir, fresh_e2e, tmp_path, edit=None):
     shutil.copytree(fresh_e2e[0], run_dir)
     if edit is not None:
         edit(run_dir)
-    jobs = _job_counter(spark)
+    status = StatusReader(spark)
     report = run_e2e(spark, sf_dir, run_dir)
-    return report, jobs()
+    return report, status.jobs()
 
 
 def test_staged_e2e_job_budget(spark, sf_dir, fresh_e2e, tmp_path):

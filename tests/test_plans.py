@@ -561,9 +561,10 @@ def test_q26_rewards_scalar_codegen_compiles(spark, sf_dir, name):
 
 def test_q26_sentiment_projects_the_arc_once(spark, sf_dir):
     """q26_rewards_sentiment scores each sentence once: its optimized
-    plan names a lexicon word no more often than the sentiment arc
-    alone does over the same pairs (the arc rebuilt inside each reward
-    named it 9x as often).  Its rows are the pair-form rewards' rows."""
+    plan names a lexicon word exactly as often as the sentence scores
+    alone do over the same pairs (the arc built over the scores tree
+    inlines it 19x, and the arc rebuilt inside each reward named it 9x
+    as often again).  Its rows are the pair-form rewards' rows."""
     from social_media_ai_engineering_etl_spark.functions import rewards as rw
     from social_media_ai_engineering_etl_spark.queries.rewards_scoring import (
         _derive_reward_pairs, _docs)
@@ -575,10 +576,10 @@ def test_q26_sentiment_projects_the_arc_once(spark, sf_dir):
     pairs = _derive_reward_pairs(_docs(spark, sf_dir))
     p, c = F.col("prompt"), F.col("completion")
     arc = rw.sentiment_arc(rw.sentiment_scores(c)).alias("arc")
-    n_arc = lexicon_words(pairs.select(arc))
-    assert n_arc >= 1
+    n_scores = lexicon_words(pairs.select(rw.sentiment_scores(c).alias("s")))
+    assert n_scores >= 1
     got = QUERIES["q26_rewards_sentiment"](spark, sf_dir)
-    assert lexicon_words(got) <= n_arc
+    assert lexicon_words(got) == n_scores
     want = pairs.select(
         "doc_id", arc, rw.pacing(c).alias("pacing"),
         F.round(rw.tone_alignment(p, c), 6).alias("r_tone"),
