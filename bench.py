@@ -21,8 +21,13 @@ quartiles and the samples.  Compare medians and quartiles: the first
 timed passes can still run cold, and a mean carries them.  stderr gets
 the band as a markdown table.
 
+Totals from before ``cache_scope`` released the CacheManager entries
+its scope added ran without the queries' persists and are not
+comparable (SCALING.md, "cache_scope releases its CacheManager entries").
+
 Usage: python bench.py [--only a,b] [--plans DIR] [--tag TAG]
 ``--only`` keeps the queries whose name contains one of the substrings;
+the JSON line then reads ``"metric": "subset_query_time"``.
 ``--plans`` writes each formatted physical plan to
 ``DIR/<query>_<tag>.txt`` and adds ``plans``: per query its operator
 counts (``shape``) and the characters and ``md5(`` calls of its
@@ -131,13 +136,9 @@ def main() -> None:
     # and task/wall >> 1 shows the plan parallelizes
     status = StatusReader(spark)
 
-    # r7 (VERDICT r6 ask #6): the recorded artifact is the PER-QUERY
-    # MEAN over n interleaved passes with a per-query band — a
-    # single-shot or min-of-2 total sits a coin flip from any fixed bar
-    # on a shared box (measured quiet band 17.3-19.7 s), so the bar
-    # moves to the mean and the band travels with the number.
-    # Interleaved passes = slow box phases hit every query equally
-    # instead of biasing whichever was running.
+    # the artifact is the per-query mean over interleaved passes with
+    # its band: slow box phases hit every query equally instead of
+    # biasing whichever was running (README "Bench methodology").
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
     samples: dict[str, list[float]] = {name: [] for name in names}
     task_samples: dict[str, list[float]] = {name: [] for name in names}
@@ -173,7 +174,8 @@ def main() -> None:
     task_time = {name: round(statistics.mean(ts), 4)
                  for name, ts in task_samples.items()}
     out = {
-        "metric": "total_headline_query_time",
+        "metric": ("total_headline_query_time" if args.only is None
+                   else "subset_query_time"),
         "value": total,
         "unit": "sec",
         "queries": timings,

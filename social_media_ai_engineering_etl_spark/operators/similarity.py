@@ -139,7 +139,10 @@ def _dot(a: Column, b: Column) -> Column:
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
-_NEAREST_ROWS = 2048   # rows per broadcast distance array in _nearest
+# floats per broadcast difference array in _nearest (2 MB): PQ codes and
+# IVF cells time the same from 2^16 to 2^20 and slow down at 2^22
+# (SCALING.md "PQ encode without a sort")
+_NEAREST_FLOATS = 1 << 18
 
 
 def _nearest(X, C, n: int = 1):
@@ -147,17 +150,19 @@ def _nearest(X, C, n: int = 1):
     nearest first: squared L2 rounded to 6 dp, ties to the smaller
     index.  Unrounded argmins flip between engines on last-ulp ties,
     so this is the rule the DuckDB oracles replay; IVF cells, query
-    probes and PQ codes all follow it.  The nearest alone (``n == 1``:
-    cells and codes) is an ``argmin`` per row chunk, NaN distances
-    last as the sort puts them; probes sort the whole row."""
-    if n > 1:
-        d = np.stack([((X - c) ** 2).sum(1) for c in C], axis=1)
-        return np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :n]
-    out = np.empty((len(X), 1), dtype=np.int64)
-    for lo in range(0, len(X), _NEAREST_ROWS):
-        d = np.round(((X[lo:lo + _NEAREST_ROWS, None, :] - C) ** 2).sum(-1), 6)
-        d[np.isnan(d)] = np.inf
-        out[lo:lo + _NEAREST_ROWS, 0] = d.argmin(1)
+    probes and PQ codes all follow it.  Distances are one broadcast
+    array per chunk of rows; the nearest alone (``n == 1``: cells and
+    codes) is an ``argmin``, NaN distances last as the sort puts them,
+    and probes stable-sort the row."""
+    rows = max(1, _NEAREST_FLOATS // C.size)
+    out = np.empty((len(X), min(n, len(C))), dtype=np.int64)
+    for lo in range(0, len(X), rows):
+        d = np.round(((X[lo:lo + rows, None, :] - C) ** 2).sum(-1), 6)
+        if n > 1:
+            out[lo:lo + rows] = np.argsort(d, axis=1, kind="stable")[:, :n]
+        else:
+            d[np.isnan(d)] = np.inf
+            out[lo:lo + rows, 0] = d.argmin(1)
     return out
 
 

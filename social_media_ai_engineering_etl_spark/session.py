@@ -336,7 +336,9 @@ def cache_scope(spark: SparkSession):
     # snapshot: no element crosses py4j, and no py4j iterator runs to
     # the NoSuchElementException that ends it (PySpark converts that
     # through classpath reflection, milliseconds per snapshot).
-    # cachedData() is a private accessor; py4j reflection reaches it.
+    # cachedData() is a Spark-internal accessor that py4j reaches by
+    # reflection; tests/test_cache_discipline.py::
+    # test_cache_scope_releases_its_cache_manager_entries guards it.
     entries, rdds = cache.cachedData(), sc.getPersistentRDDs().keySet()
     try:
         yield

@@ -929,16 +929,17 @@ def test_nearest_rounds_to_6dp_and_breaks_ties_low():
 
 
 def test_nearest_alone_matches_the_sorted_rule_nan_row_included(monkeypatch):
-    """``_nearest(n=1)`` (IVF cells, PQ codes) takes a chunked argmin in
-    place of the sort and must pick what the stable sort of rounded
-    distances picks: ties low, and index 0 for a NaN row."""
+    """Chunk by chunk, ``_nearest`` picks what the stable sort of rounded
+    distances picks: the nearest alone (``n=1``: cells, codes, an argmin)
+    ties low and is index 0 for a NaN row; probes (``n > 1``) sort."""
     from social_media_ai_engineering_etl_spark.operators import similarity
-    monkeypatch.setattr(similarity, "_NEAREST_ROWS", 500)   # 3 chunks
+    monkeypatch.setattr(similarity, "_NEAREST_FLOATS", 4000)  # 3 chunks
     C = np.array([[0.0, 0.0], [1.0, 0.0], [0.5, 0.5], [0.0, 0.5]])
     X = np.random.default_rng(11).choice([0.0, 0.25, 0.5, 1.0], (1200, 2))
     X[7], X[8] = [np.nan, 0.0], [0.5 + 1e-9, 0.0]   # NaN; rounded tie 0/1
     d = np.stack([((X - c) ** 2).sum(1) for c in C], axis=1)
-    want = np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :1]
+    want = np.argsort(np.round(d, 6), axis=1, kind="stable")[:, :3]
     got = similarity._nearest(X, C)
     assert got[7, 0] == 0 and got[8, 0] == 0
-    assert got.shape == want.shape and (got == want).all()
+    assert got.shape == (1200, 1) and (got[:, 0] == want[:, 0]).all()
+    assert (similarity._nearest(X, C, 3) == want).all()
