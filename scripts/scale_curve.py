@@ -5,11 +5,10 @@ A shape names what it times (operators or registered queries, its
 session it runs in.  Fixtures:
 
 * replicas of the base tables (``--sf``): documents vowel-rotated so
-  replicas are not near-duplicates (scale_probe.multiply_docs), vectors
-  with circularly shifted dimensions so cross-replica cosines are ~0,
+  replicas are not near-duplicates (multiply_docs), vectors with
+  circularly shifted dimensions so cross-replica cosines are ~0,
   events with users shifted per replica, facts with order keys shifted
-  (scale_probe_joins.multiply_fact) while dimensions stay at catalog
-  size;
+  (multiply_fact) while dimensions stay at catalog size;
 * corpora regenerated at 5000*m docs / 2000*m vectors with the
   measured sf0.1 profile (31-word vocabulary, 8-95 words, ~8% mutated
   near-dup copies; 64-dim gaussian vectors, 10 labels), written once
@@ -61,8 +60,6 @@ sys.path[:0] = [ROOT, HERE]
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
 from bench import SF_DIR, materialize  # noqa: E402
-from scale_probe import multiply_docs  # noqa: E402
-from scale_probe_joins import multiply_fact  # noqa: E402
 from social_media_ai_engineering_etl_spark.operators import (  # noqa: E402
     curation, dedup, phrases, scale, similarity, temporal, textquality)
 from social_media_ai_engineering_etl_spark.operators import (  # noqa: E402
@@ -95,6 +92,10 @@ VOCAB = ("batch part spark line column order small sort fast value scan "
 LANGS = ["en"] * 41 + ["zh"] * 15 + ["es"] * 15 + ["fr"] * 15 + ["de"] * 14
 BOILER = "the quick brown fox jumps over the lazy dog again and again today"
 TEMPLATE = " ".join(f"w{i}token" for i in range(60))
+ROTATIONS = ["abcdefghij", "bcdefghija", "cdefghijab", "defghijabc",
+             "efghijabcd", "fghijabcde", "ghijabcdef", "hijabcdefg",
+             "ijabcdefgh", "jabcdefghi", "kabcdefghj", "lbcdefghij",
+             "mcdefghijb", "ndefghijbc", "oefghijbcd", "pfghijbcde"]
 
 
 class Shape(NamedTuple):
@@ -127,12 +128,51 @@ def _base(spark, sf, table):
     return widen_scan(spark.read.parquet(path), path)
 
 
+def multiply_docs(docs, m: int):
+    """m deterministic dissimilar replicas: ids shifted, text
+    vowel-rotated per replica so shingle sets diverge, other columns
+    kept.  Past 16 replicas the rotations cycle: texts repeat, ids
+    stay distinct."""
+    return _union([docs.withColumns({
+        "doc_id": F.col("doc_id") + i * 1_000_000,
+        "text": F.translate(F.col("text"), ROTATIONS[0],
+                            ROTATIONS[i % len(ROTATIONS)])})
+        for i in range(m)])
+
+
+def multiply_fact(df, m: int, key_cols: tuple[str, ...]):
+    """m replicas with order keys shifted per replica (new orders, same
+    customers/suppliers/parts: organic fact growth)."""
+    return _union([df.withColumns({
+        k: F.col(k) + i * 1_000_000_000 for k in key_cols})
+        for i in range(m)])
+
+
 def _docs(spark, sf, m):
     return multiply_docs(_base(spark, sf, "documents"), m)
 
 
 def replicated_docs(spark, sf, m, out):
     return {"": _kept(spark, _docs(spark, sf, m))}
+
+
+def docs_and_benchmark(spark, sf, m, out):
+    """Doc replicas, and a fixed benchmark: every 20th base doc."""
+    bench = _base(spark, sf, "documents").filter(F.col("doc_id") % 20 == 0)
+    return {"": {"docs": _kept(spark, _docs(spark, sf, m)),
+                 "bench": _kept(spark, bench)}}
+
+
+def ingest_batch(spark, sf, m, out):
+    """Doc replicas split into a corpus and a 5% new batch, with the
+    corpus's MinHash artifact materialized as a daily job reads it."""
+    docs = _kept(spark, _docs(spark, sf, m))
+    corpus = docs.filter(F.col("doc_id") % 20 != 0)
+    art = dedup.minhash_artifact(corpus, "doc_id", "text").persist()
+    art.count()
+    return {"": {"docs": docs, "corpus": corpus,
+                 "batch": docs.filter(F.col("doc_id") % 20 == 0),
+                 "artifact": art}}
 
 
 def planted_docs(spark, sf, m, out):
@@ -160,6 +200,18 @@ def _vectors(spark, sf, m):
 
 def replicated_vectors(spark, sf, m, out):
     return {"": _kept(spark, _vectors(spark, sf, m))}
+
+
+def vectors_at(spark, sf, m, out):
+    """Vector replicas, with ``m`` for the cases whose knobs grow with
+    the corpus."""
+    return {"": {"vectors": _kept(spark, _vectors(spark, sf, m)), "m": m}}
+
+
+def docs_and_vectors(spark, sf, m, out):
+    """Doc and vector replicas (ids shifted alike), with ``m``."""
+    return {"": {"docs": _kept(spark, _docs(spark, sf, m)),
+                 "vectors": _kept(spark, _vectors(spark, sf, m)), "m": m}}
 
 
 def _events(spark, sf, m):
@@ -420,6 +472,27 @@ def sessions(ev):
         F.count(F.lit(1)).alias("n"))
 
 
+def pack(d):
+    """Next-fit packing into 512-token bins, 64 shards by doc_id."""
+    return curation.pack_sequences(
+        d.withColumn("shard", (F.col("doc_id") % 64).cast("long")),
+        ["shard"], "doc_id", F.size(curation.words(F.col("text"))),
+        budget=512)
+
+
+# the classic join reports over lineitem/orders (TPC-H shapes Q1, Q3,
+# Q5, Q18, Q4, Q13, Q6, Q14, Q19, Q10, Q12, Q15, Q11, Q17, Q2, Q21,
+# Q22, Q16, Q20)
+JOIN_REPORTS = (
+    "qg_pricing_summary", "qg_shipping_priority", "qg_local_supplier_volume",
+    "qg_large_orders", "qg_priority_check", "qg_customer_distribution",
+    "qg_forecast_revenue", "qg_promo_revenue", "qg_disjunctive_revenue",
+    "qg_returned_items", "qg_latency_priority_mix", "qg_top_supplier",
+    "qg_important_supply", "qg_small_qty_revenue", "qg_min_cost_supplier",
+    "qg_waiting_suppliers", "qg_sales_opportunity", "qg_supplier_part_count",
+    "qg_potential_promotion")
+
+
 def identity(batches):
     yield from batches
 
@@ -432,6 +505,43 @@ def join(inp, salted):
 
 
 SHAPES = {
+    "text_dedup": Shape(replicated_docs, {
+        "minhash": lambda s, d: dedup.minhash_dedup_pairs(
+            d, "doc_id", "text", threshold=0.5),
+        "ngram_jaccard": lambda s, d: dedup.ngram_jaccard_pairs_inverted(
+            d, "doc_id", "text", threshold=0.2, max_df=200),
+        "simhash": lambda s, d: dedup.simhash_dedup_pairs(
+            d, "doc_id", "text", max_hamming=3),
+        "winnow": lambda s, d: dedup.winnow_dedup_pairs(
+            d, "doc_id", "text", threshold=0.5, max_df=200)}),
+    # near-dup vector pairs at cos >= 0.4; blocks and planes grow with
+    # the corpus (1x/4x/16x: 8/16/32 blocks, 2/3/4 planes)
+    "embedding_pairs": Shape(vectors_at, {
+        "blocked_gemm": lambda s, x: similarity.embedding_pairs_blocked(
+            x["vectors"], "vec_id", "embedding", threshold=0.4,
+            n_blocks=8 * math.isqrt(x["m"])),
+        "lsh": lambda s, x: similarity.embedding_pairs_lsh(
+            x["vectors"], "vec_id", "embedding", threshold=0.4,
+            num_planes=2 + round(math.log(x["m"], 4)))}),
+    "incremental_dedup": Shape(ingest_batch, {
+        "full_batch": lambda s, x: dedup.minhash_dedup_pairs(
+            x["docs"], "doc_id", "text", threshold=0.5),
+        "incremental": lambda s, x: dedup.incremental_minhash_dedup(
+            x["corpus"], x["batch"], "doc_id", "text", threshold=0.5,
+            corpus_artifact=x["artifact"])}),
+    "curation": Shape(docs_and_benchmark, {
+        "gopher": lambda s, x: curation.gopher_quality(
+            x["docs"], "doc_id", "text"),
+        "repetition": lambda s, x: curation.repetition_profile(
+            x["docs"], "doc_id", "text"),
+        "decontaminate": lambda s, x: curation.decontaminate(
+            x["docs"], x["bench"], "doc_id", "text", n=5),
+        "pack": lambda s, x: pack(x["docs"])}),
+    "join_reports": Shape(warehouse_dir, _queries(*JOIN_REPORTS)),
+    # the query count stays ~fixed: every (50*m)th doc asks
+    "hybrid_retrieval": Shape(docs_and_vectors, {
+        "two_stage": lambda s, x: similarity.hybrid_retrieval_topk(
+            x["docs"], x["vectors"], query_mod=50 * x["m"])}),
     "containment_bpe": Shape(replicated_docs, {
         "containment": lambda s, d: dedup.ngram_containment_pairs(
             d, "doc_id", "text", threshold=0.4, max_df=200),
@@ -498,15 +608,10 @@ SHAPES = {
         session="starved"),
     "zipf_authors": Shape(zipf_author_docs, {
         "as_is": lambda s, d: phrases.author_uncommon_words(
-            d, "source", "text", "doc_id"),
-        "sharded32": lambda s, d: phrases.author_uncommon_words(
-            d, "source", "text", "doc_id", shards=32)}),
+            d, "source", "text", "doc_id")}),
     "single_author": Shape(single_author_rows, {
         "as_is": lambda s, d: phrases.author_texts(
-            d, "source", "text", "doc_id", max_posts=5).select("doc_id"),
-        "sharded32": lambda s, d: phrases.author_texts(
-            d, "source", "text", "doc_id", max_posts=5,
-            shards=32).select("doc_id")}),
+            d, "source", "text", "doc_id", max_posts=5).select("doc_id")}),
     "boilerplate_shingles": Shape(boilerplate_docs, {
         "max_df_none": lambda s, d: dedup.ngram_jaccard_pairs_inverted(
             d, "doc_id", "text", threshold=0.2),

@@ -6,9 +6,9 @@ CLIs (1-find-gradient.py, 17-writing-style.py, ...; SURVEY §3.1).
         --sf-dir /root/testdata/sf0.01 --out /tmp/out.parquet \
         --format parquet --explain
 
-Every registered query is addressable; sinks reuse the S3/S5/S6
-connectors so artifacts land exactly as the reference writes them
-(JSONL / CSV-with-parquet-mirror / parquet).
+Every registered query is addressable; sinks write artifacts exactly
+as the reference does (JSONL through the S3 connector, CSV with a
+parquet mirror (S5/S6), parquet).
 """
 
 from __future__ import annotations
@@ -83,12 +83,15 @@ def main(argv: list[str] | None = None) -> int:
     if args.explain:
         df.explain("formatted")
     if args.out:
-        from .sources.io import (write_csv_with_parquet_mirror,
-                                 write_jsonl, write_orc)
+        from .sources.io import write_jsonl, write_orc
         if args.format == "parquet":
             df.write.mode("overwrite").parquet(args.out)
         elif args.format == "csv":
-            write_csv_with_parquet_mirror(df, args.out)
+            # S5+S6 (22:122-124, 208-216): CSV with header plus a
+            # parquet mirror next to it. The reference's run-id mode
+            # writes every row twice (Q2, 22:127+145-147); not replicated.
+            df.write.mode("overwrite").option("header", "true").csv(args.out)
+            df.write.mode("overwrite").parquet(args.out + ".parquet")
         elif args.format == "orc":
             write_orc(df, args.out)
         else:

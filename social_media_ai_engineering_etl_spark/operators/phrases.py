@@ -13,7 +13,10 @@ a total order — and documents the deviation.
 
 Scale: one shuffle on the author key. Per-author state is bounded by
 construction (<=5 texts, <=20k chars), which is also the skew story —
-no author group can exceed ~20KB regardless of post count.
+no author group can exceed ~20KB regardless of post count. The ranking
+window sorts each author's rows in one task; a two-phase (local top-k,
+then merge) form measured slower on every shape tried, up to a
+10M-row single author (SCALING.md §r5.1), so it is not offered.
 """
 
 from __future__ import annotations
@@ -39,192 +42,13 @@ STOPWORDS_EN = (
 
 
 def author_texts(df: DataFrame, author_col: str, text_col: str,
-                 id_col: str, max_posts: int = 20,
-                 shards: int | None = None) -> DataFrame:
+                 id_col: str, max_posts: int = 20) -> DataFrame:
     """A6: keep the ``max_posts`` longest texts per author
-    (17-writing-style.py:776-802), deterministic tie-break on id.
-
-    ``shards`` is the HOT-AUTHOR knob (r5 skew probe): the plain
-    window sorts every row of an author inside ONE task, so a zipfian
-    author holding p% of a 100 TB corpus serializes p% of the sort on
-    one core.  With ``shards=k`` a two-phase top-k runs first — each
-    (author, xxhash64(id) mod k) shard keeps its own top
-    ``max_posts`` under the same order, so no task ever sorts more
-    than ~1/k of the hot author — and the final window ranks only the
-    surviving k * max_posts rows per author.  Output is IDENTICAL to
-    the plain form (every global top-max_posts row is in its shard's
-    top-max_posts; equivalence-pinned in tests/test_scale.py)."""
-    order = (F.length(F.col(text_col)).desc(), F.col(id_col))
-    if shards and shards > 1:
-        wp = Window.partitionBy(
-            author_col,
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards))
-        ).orderBy(*order)
-        df = (df.withColumn("__prn", F.row_number().over(wp))
-              .filter(F.col("__prn") <= max_posts).drop("__prn"))
-    w = Window.partitionBy(author_col).orderBy(*order)
+    (17-writing-style.py:776-802), deterministic tie-break on id."""
+    w = Window.partitionBy(author_col).orderBy(
+        F.length(F.col(text_col)).desc(), F.col(id_col))
     return (df.withColumn("__rn", F.row_number().over(w))
               .filter(F.col("__rn") <= max_posts))
-
-
-# Measured crossover for the hot-author shard knob (SCALING.md §r5.1):
-# the two-phase top-k costs ~+0.6 s fixed and only pays when a single
-# author's rows exceed what one Tungsten sort task absorbs — a 10M-row
-# single author still sorts in 0.71 s unsharded (sharding was SLOWER,
-# 1.19 s), so the measured floor sits orders of magnitude higher.
-AUTHOR_SHARD_CROSSOVER = 100_000_000
-
-
-def key_count_profile(df: DataFrame, key_col: str,
-                      sample_fraction: float | None = None,
-                      seed: int = 42) -> dict:
-    """Skew diagnostic for a window/groupBy key — the same shape as
-    qx_key_skew_profile: hottest key's row count plus key count, from
-    one map-side-combined groupBy and a 1-row aggregate.
-
-    The profile prunes to ``key_col`` FIRST (a parquet scan reads only
-    that column's pages) and, with ``sample_fraction=p``, counts a
-    seeded Bernoulli sample instead of every row (VERDICT r7 ask #2a).
-    Sampled counts are raw observations — :func:`choose_window_shards`
-    scales the DECISION THRESHOLD by ``p`` rather than inflating the
-    estimate, so the comparison happens where the concentration bound
-    is tight: at the boundary ``c = crossover`` the observed count is
-    Binomial(crossover, p) with relative sd
-    ``sqrt((1-p)/(p*crossover))`` — 3e-4 at p=0.1, crossover=1e8, so a
-    flipped decision needs a >1000-sigma fluke.  Callers must keep
-    ``p * crossover >= 1000`` (relative sd under ~3%);
-    :func:`_safe_profile_fraction` enforces that by dropping to the
-    exact profile when the fraction is too small for the crossover.
-
-    r8 (optimization round): the per-(path, mtime) profile memo is
-    GONE — it skipped a real aggregate on repeat runs of an unchanged
-    input, which the bench contract forbids (every invocation must
-    compute from the inputs).  The cheap path for small inputs is now
-    :func:`bounded_key_profile`: a total-row-count UPPER BOUND (e.g.
-    the parquet footer's num_rows, read per invocation) proves no key
-    can exceed the crossover without running any Spark job at all."""
-    if sample_fraction is not None and sample_fraction >= 1.0:
-        sample_fraction = None
-    base = df.select(key_col)
-    if sample_fraction is not None:
-        base = base.sample(fraction=sample_fraction, seed=seed)
-    row = (base.groupBy(key_col).agg(F.count(F.lit(1)).alias("c"))
-           .agg(F.max("c").alias("top"),
-                F.count(F.lit(1)).alias("n_keys")).collect()[0])
-    return {"top_key_rows": int(row.top or 0),
-            "n_keys": int(row.n_keys or 0),
-            "sample_fraction": sample_fraction}
-
-
-def bounded_key_profile(total_rows: int) -> dict:
-    """Zero-job profile from a TOTAL-row-count upper bound: no key can
-    have more rows than the input has rows, so when ``total_rows``
-    is at or under the crossover the guard decision needs no measured
-    per-key counts.  The bound comes from input metadata read on
-    EVERY invocation (parquet footers via
-    :func:`~..session.parquet_num_rows`) — cheaper than any sampled
-    aggregate and exact in the only direction the decision needs."""
-    return {"top_key_rows": int(total_rows), "n_keys": -1,
-            "sample_fraction": None, "bound": "total-rows"}
-
-
-def choose_window_shards(profile: dict,
-                         crossover: int = AUTHOR_SHARD_CROSSOVER,
-                         shards: int = 32) -> dict:
-    """Diagnose-then-enable (VERDICT r5 ask #5, window flavor): turn
-    the lossless two-phase top-k on only when the measured hottest key
-    exceeds the documented crossover.  Sampled profiles (see
-    :func:`key_count_profile`) compare the OBSERVED top against the
-    p-scaled crossover; callers guarantee ``p * crossover >= 1000``
-    via :func:`_safe_profile_fraction`, keeping the decision's
-    relative sd under ~3%."""
-    top = profile["top_key_rows"]
-    if profile.get("bound") == "total-rows":
-        # upper-bound profile (bounded_key_profile): the input has only
-        # ``top`` rows in total, so no key can exceed the crossover —
-        # valid only for the guard-off direction, which is the only one
-        # callers take it for (a bound above the crossover falls back
-        # to the measured profile before reaching here).
-        assert top <= crossover, "bound cannot prove a hot key"
-        return {"shards": None, "top_key_rows": top,
-                "crossover": crossover,
-                "reason": (f"total-row bound {top} <= crossover "
-                           f"{crossover}: no key can exceed it — plain "
-                           "window (zero-job decision)")}
-    p = profile.get("sample_fraction")
-    if p is not None:
-        bar = p * crossover
-        on = top > bar
-        est = int(top / p)
-        return {"shards": shards if on else None,
-                "top_key_rows": est, "crossover": crossover,
-                "sample_fraction": p,
-                "reason": (f"sampled(p={p}) hottest key: {top} observed "
-                           f"(~{est} est.) {'>' if on else '<='} scaled "
-                           f"crossover {bar:.0f}: "
-                           f"{'two-phase top-k ON' if on else 'plain window'}")}
-    on = top > crossover
-    return {"shards": shards if on else None,
-            "top_key_rows": top, "crossover": crossover,
-            "reason": (f"hottest key has {top} rows > crossover "
-                       f"{crossover}: two-phase top-k ON" if on else
-                       f"hottest key has {top} rows <= crossover "
-                       f"{crossover}: plain window")}
-
-
-def _safe_profile_fraction(fraction: float | None,
-                           crossover: int) -> float | None:
-    """Drop to the exact profile when the sample would leave fewer
-    than 1,000 expected rows at the decision boundary (relative sd
-    above ~3% — see :func:`key_count_profile`'s concentration bound)."""
-    if fraction is None or fraction * crossover < 1000:
-        return None
-    return fraction
-
-
-def author_texts_auto(df: DataFrame, author_col: str, text_col: str,
-                      id_col: str, max_posts: int = 20,
-                      crossover: int = AUTHOR_SHARD_CROSSOVER,
-                      shards: int = 32,
-                      profile_on: DataFrame | None = None,
-                      profile_fraction: float | None = 0.1,
-                      total_rows_bound: int | None = None) -> DataFrame:
-    """:func:`author_texts` with the shard knob driven by the measured
-    key profile; the decision is stamped into the result schema's
-    metadata on ``author_col`` (same convention as the ``lsh_guard``
-    stamp of dedup.minhash_dedup_pairs).
-
-    ``profile_on`` (VERDICT r7 ask #2): an alternate lineage of the
-    SAME rows to profile — key-count profiles are invariant under
-    repartitioning, so callers whose ``df`` carries a compute
-    repartition (session.widen_scan, a local-bench artifact) pass the
-    raw pruned scan here and the profile skips the exchange entirely.
-    ``profile_fraction`` applies the seeded-sample profile with the
-    p-scaled threshold (concentration bound in
-    :func:`key_count_profile`).
-
-    ``total_rows_bound`` (r8): a per-invocation upper bound on the
-    input's total rows (parquet footer metadata).  When it is at or
-    under the crossover the guard decision is proven without any
-    Spark job (:func:`bounded_key_profile`); above it, the sampled
-    profile runs as before — at which scale its one pruned-column
-    pass is negligible relative to the query."""
-    decision = choose_window_shards(
-        bounded_key_profile(total_rows_bound)
-        if total_rows_bound is not None and total_rows_bound <= crossover
-        else key_count_profile(
-            profile_on if profile_on is not None else df,
-            author_col,
-            _safe_profile_fraction(profile_fraction, crossover)),
-        crossover, shards)
-    out = author_texts(df, author_col, text_col, id_col, max_posts,
-                       shards=decision["shards"])
-    meta = {k: (v if v is not None else -1)
-            for k, v in decision.items() if k != "reason"}
-    meta["reason"] = decision["reason"]
-    cols = [F.col(c).alias(c, metadata={"window_shards": meta})
-            if c == author_col else F.col(c) for c in out.columns]
-    return out.select(*cols)
 
 
 def author_uncommon_words(df: DataFrame, author_col: str, text_col: str,
@@ -233,16 +57,13 @@ def author_uncommon_words(df: DataFrame, author_col: str, text_col: str,
                           max_texts: int = 5, max_chars: int = 20000,
                           min_freq: int = 2, min_len: int = 4,
                           common_threshold: int = 1000,
-                          top_k: int = 15,
-                          shards: int | None = None) -> DataFrame:
+                          top_k: int = 15) -> DataFrame:
     """A8: per-author uncommon-but-regular words.
 
     Returns (author, word, freq) of the top ``top_k`` words per
-    author under (freq desc, word asc).  ``shards`` passes through to
-    :func:`author_texts`'s hot-author two-phase top-k (result
-    identical; see its docstring)."""
+    author under (freq desc, word asc)."""
     ranked = author_texts(df, author_col, text_col, id_col,
-                          max_posts=max_texts, shards=shards)
+                          max_posts=max_texts)
     # Rebuild the reference's ' '.join(texts[:5])[:20000] with a fixed
     # order: sort_array over (rank, text) structs pins concat order.
     joined = (ranked.groupBy(author_col)
@@ -276,50 +97,6 @@ def author_uncommon_words(df: DataFrame, author_col: str, text_col: str,
                                                F.col("word"))
     return (freq.withColumn("__rk", F.row_number().over(w))
             .filter(F.col("__rk") <= top_k).drop("__rk"))
-
-
-def author_uncommon_words_auto(df: DataFrame, author_col: str,
-                               text_col: str, id_col: str,
-                               crossover: int = AUTHOR_SHARD_CROSSOVER,
-                               shards: int = 32,
-                               profile_on: DataFrame | None = None,
-                               profile_fraction: float | None = 0.1,
-                               total_rows_bound: int | None = None,
-                               **kw) -> DataFrame:
-    """:func:`author_uncommon_words` with the hot-author shard knob
-    driven by the measured key profile (VERDICT r6 ask #3: the
-    measure->decide machinery must run on the graded/benched path,
-    not only in tests/test_scale.py).
-
-    r8 (optimization round): when ``total_rows_bound`` — a
-    per-invocation parquet-footer row count — is at or under the
-    crossover, the decision is PROVEN with zero Spark jobs
-    (:func:`bounded_key_profile`): no key can have more rows than the
-    input has rows.  This replaced both the per-run profile job
-    (q17_author_words −1 job) and the r8-build profile memo, which
-    cached a measured aggregate across runs and violated the
-    compute-every-invocation bench contract.  Above the bound, the
-    sampled pruned-column profile runs as before (``profile_on``,
-    ``profile_fraction`` — VERDICT r7 ask #2 trims).  The decision +
-    evidence are stamped into the result schema's metadata on
-    ``author_col`` (same convention as the ``lsh_guard`` stamp of
-    dedup.minhash_dedup_pairs)."""
-    decision = choose_window_shards(
-        bounded_key_profile(total_rows_bound)
-        if total_rows_bound is not None and total_rows_bound <= crossover
-        else key_count_profile(
-            profile_on if profile_on is not None else df,
-            author_col,
-            _safe_profile_fraction(profile_fraction, crossover)),
-        crossover, shards)
-    out = author_uncommon_words(df, author_col, text_col, id_col,
-                                shards=decision["shards"], **kw)
-    meta = {k: (v if v is not None else -1)
-            for k, v in decision.items() if k != "reason"}
-    meta["reason"] = decision["reason"]
-    cols = [F.col(c).alias(c, metadata={"window_shards": meta})
-            if c == author_col else F.col(c) for c in out.columns]
-    return out.select(*cols)
 
 
 def author_uncommon_words_grouped(df: DataFrame, author_col: str,

@@ -183,14 +183,6 @@ def qx_dedup_minhash(spark, sf_dir):
         max_bucket=dedup.LSH_GUARD_CROSSOVER).orderBy("id1", "id2")
 
 
-@register("qx_dedup_simhash")
-def qx_dedup_simhash(spark, sf_dir):
-    """SimHash-64 near-dup pairs (hamming <= 3) via 4-chunk pigeonhole
-    join. Rows-only (engine-specific hashing)."""
-    return dedup.simhash_dedup_pairs(_docs(spark, sf_dir), "doc_id", "text",
-                                     max_hamming=3).orderBy("id1", "id2")
-
-
 _SIMHASH_PORTABLE_SQL = """
 WITH toks AS (
     SELECT doc_id, unnest(list_distinct(
@@ -227,11 +219,11 @@ ORDER BY id1, id2
 @register("qx_dedup_simhash_portable", oracle=_SIMHASH_PORTABLE_SQL)
 def qx_dedup_simhash_portable(spark, sf_dir):
     """SimHash near-dup pairs (hamming <= 3, 4-chunk pigeonhole) with
-    the PORTABLE 60-bit md5-prefix token hash — the ORACLE-CHECKED
-    twin of the rows-only qx_dedup_simhash: same per-bit majority
-    vote, same chunk equi-join candidates, same exact hamming filter;
-    only the token hash swaps from xxhash64 to a value both engines
-    compute.  With the MinHash (qs_neardup_pairs_portable) and
+    the PORTABLE 60-bit md5-prefix token hash, so the pair set is
+    ORACLE-CHECKED: per-bit majority vote, chunk equi-join candidates,
+    exact hamming filter.  The operator's default xxhash64 token hash
+    differs only in the base hash; tests/test_dedup.py unit-tests it.
+    With the MinHash (qs_neardup_pairs_portable) and
     incremental (qx_dedup_incremental_portable) twins, every
     hash-based dedup family now has a cross-engine value-checked
     path."""
@@ -1577,31 +1569,18 @@ ORDER BY id1, id2
 @register("qs_neardup_pairs_portable", oracle=_NEARDUP_PORTABLE_SQL)
 def qs_neardup_pairs_portable(spark, sf_dir):
     """The MinHash(64)+LSH(16 bands) agreement pair set with the
-    PORTABLE md5-prefix base hash — the ORACLE-CHECKED twin of the
-    rows-only qs_neardup_pairs (r2 VERDICT #8): same shingling, same
-    permutations, same banding, same >= 0.5 agreement score, only the
-    per-shingle base hash swaps from xxhash64 (engine-specific) to the
-    md5 prefix both engines can compute.  tests/test_streaming.py pins
-    the STREAMING stateful operator to this same pair set under the
+    PORTABLE md5-prefix base hash, so the pair set is ORACLE-CHECKED
+    (r2 VERDICT #8); it is the batch twin of the STREAMING stateful
+    near-dup operator (streaming/neardup.py).  tests/test_streaming.py
+    pins the streaming operator to this same pair set under the
     portable hash, closing the chain driver-oracle -> batch twin ->
-    streaming state machine."""
+    streaming state machine, and to the operator's default xxhash64
+    base hash on a small corpus."""
     docs = _docs(spark, sf_dir).filter(
         F.size(F.split(F.trim(F.col("text")), "\\s+")) >= 3)
     return dedup.minhash_agreement_pairs(
         docs, "doc_id", "text",
         base_hash=dedup.portable_hash31).orderBy("id1", "id2")
-
-
-@register("qs_neardup_pairs")
-def qs_neardup_pairs(spark, sf_dir):
-    """Batch twin of the STREAMING stateful near-dup operator
-    (streaming/neardup.py): MinHash(64)+LSH(16 bands) candidates
-    scored by signature agreement >= 0.5. Rows-only (engine-specific
-    hashing); the pytest contract asserts the streamed pair set
-    equals this twin on the same corpus and that cross-micro-batch
-    pairs survive checkpoint recovery."""
-    return dedup.minhash_agreement_pairs(_docs(spark, sf_dir), "doc_id",
-                                         "text").orderBy("id1", "id2")
 
 
 @register("qx_latest_event_per_user", oracle="""
@@ -1709,14 +1688,12 @@ def qx_dedup_minhash_portable(spark, sf_dir):
 @register("qx_dedup_incremental_portable", oracle=_INCREMENTAL_PORTABLE_SQL)
 def qx_dedup_incremental_portable(spark, sf_dir):
     """The daily-ingest MinHash dedup with the PORTABLE md5-prefix
-    base hash — the ORACLE-CHECKED twin of the rows-only
-    qx_dedup_incremental: same 128-permutation signatures, same
-    32-band blocking, same broadcast-new-side candidate join (the
-    corpus never self-joins), same exact-Jaccard verify; only the
-    per-shingle base hash swaps from xxhash64 to the md5 prefix both
-    engines compute.  Completes the portable-hash story: every stage
-    of the flagship ingest-scale dedup operator is value-checked
-    cross-engine, not just row-counted."""
+    base hash, so the pair set is ORACLE-CHECKED: docs with
+    doc_id % 10 == 0 play the new batch against the rest;
+    128-permutation signatures, 32-band blocking, a broadcast-new-side
+    candidate join (the corpus never self-joins), exact-Jaccard
+    verify.  The default xxhash64 base hash differs only in the
+    per-shingle hash; tests/test_dedup.py unit-tests it."""
     docs = _docs(spark, sf_dir).filter(
         F.size(F.split(F.trim(F.col("text")), "\\s+")) >= 3)
     return dedup.incremental_minhash_dedup(
@@ -1724,22 +1701,6 @@ def qx_dedup_incremental_portable(spark, sf_dir):
         docs.filter(F.col("doc_id") % 10 == 0),
         "doc_id", "text", threshold=0.5,
         base_hash=dedup.portable_hash31).orderBy("id1", "id2")
-
-
-@register("qx_dedup_incremental")
-def qx_dedup_incremental(spark, sf_dir):
-    """Daily-ingest dedup: docs with doc_id % 10 == 0 play the 'new
-    batch' arriving against the rest as the existing corpus; pairs
-    touching a new doc at Jaccard >= 0.5. The corpus never self-joins
-    — the new side's banded rows broadcast into candidate generation.
-    Rows-only (engine-specific hashing); the pytest contract asserts
-    equality with the full-batch pair set restricted to new-doc
-    pairs."""
-    docs = _docs(spark, sf_dir)
-    return dedup.incremental_minhash_dedup(
-        docs.filter(F.col("doc_id") % 10 != 0),
-        docs.filter(F.col("doc_id") % 10 == 0),
-        "doc_id", "text", threshold=0.5).orderBy("id1", "id2")
 
 
 def _pq_fixed_oracle_sql(m: int = 8, kc: int = 16, dsub: int = 8,

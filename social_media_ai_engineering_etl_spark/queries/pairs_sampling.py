@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions import cleaning, textstats
 from ..operators import fanout, phrases, sampling
 from ..registry import register
-from ..session import parquet_num_rows, read_parquet_cached, widen_scan
+from ..session import read_parquet_cached, widen_scan
 
 
 def _docs(spark, sf_dir):
@@ -298,30 +298,11 @@ SELECT source, word, freq FROM (
 def q17_author_words(spark, sf_dir):
     """A8: per-author uncommon-but-regular words — 5 longest texts,
     20k-char cap, \\w+ tokens, freq/len/stopword filters, top-15 by
-    (freq desc, word).
-
-    r7 (VERDICT r6 ask #3): routed through the profile-driven auto
-    variant so the hot-author measure->decide guard runs on every
-    graded/benched execution.  On this corpus the hottest author sits
-    far under the measured crossover, the guard keeps the plain
-    window and the rows equal the plain path (same oracle; decision
-    evidence rides the source column's ``window_shards`` metadata).
-
-    r8 optimization round: the guard decision is made from the
-    parquet FOOTER row count, re-read on every invocation
-    (session.parquet_num_rows — pure input metadata, no Spark job):
-    total rows bound every per-author count, so `rows <= crossover`
-    proves the plain window with ZERO pre-pass jobs.  This replaced
-    both the sampled profile job (one fewer collect per run) and the
-    r8-build profile memo (which cached a measured aggregate across
-    runs — disallowed).  Corpora larger than the 1e8-row crossover
-    fall back to the sampled pruned-scan profile of VERDICT r7 ask
-    #2, whose relative cost vanishes at that scale."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    return phrases.author_uncommon_words_auto(
-        _docs(spark, sf_dir), "source", "text", "doc_id",
-        profile_on=read_parquet_cached(spark, path),
-        total_rows_bound=parquet_num_rows(path),
+    (freq desc, word).  One exchange on the author key serves the
+    ranking window, the text collection, the word counts and the top-15
+    window (tests/test_plans.py)."""
+    return phrases.author_uncommon_words(
+        _docs(spark, sf_dir), "source", "text", "doc_id"
     ).orderBy("source", "word")
 
 

@@ -210,34 +210,6 @@ def load_events_cached(spark: SparkSession, path: str):
     return df
 
 
-def parquet_num_rows(path: str) -> int | None:
-    """Total row count from parquet FOOTER metadata — no Spark job, no
-    data pages read, re-read on every call (nothing is memoized, so
-    every invocation still derives its decisions from the input as it
-    is NOW).  Accepts a single file or a directory of part files;
-    returns None for remote schemes / unreadable paths / non-parquet —
-    callers fall back to a measured profile (the safe direction).
-
-    This is the skew-guard analogue of :func:`_scan_bytes`: pure input
-    metadata feeding a plan decision.  An upper bound on total rows
-    bounds every per-key row count, so `rows <= crossover` proves a
-    window-skew guard OFF without any aggregate pass."""
-    try:
-        import pyarrow.parquet as pq
-        if os.path.isdir(path):
-            total = 0
-            for r, _, fs in os.walk(path):
-                for f in fs:
-                    if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                        continue
-                    total += pq.ParquetFile(os.path.join(r, f)) \
-                        .metadata.num_rows
-            return total
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
-
-
 def widen_scan(df, path: str | None = None):
     """Size-adaptive compute repartition for CPU-heavy stages.
 

@@ -4,6 +4,5 @@ from .io import (  # noqa: F401
     normalize_posts,
     read_csv,
     read_jsonl,
-    write_csv_with_parquet_mirror,
     write_jsonl,
 )

@@ -3,7 +3,8 @@
 Source/sink connectors (SURVEY §2.1).
 
 S1 error-tolerant JSONL scan, S2 nested-posts unnest, S3 JSONL sink,
-S4/S5 CSV scan/sink, S6 parquet mirror. The reference streams files
+S4 CSV scan (the S5 CSV sink and S6 parquet mirror are two writes in
+``__main__ run --format csv``). The reference streams files
 line-by-line and silently skips bad lines (1-find-gradient.py:33-41);
 here that is schema-on-read with PERMISSIVE mode + _corrupt_record,
 so bad lines are *observable* (corrupt_records) instead of silently
@@ -122,17 +123,6 @@ def _looks_parquet(path: str) -> bool:
         return any(f.endswith(".parquet") for f in os.listdir(path))
     except OSError:
         return False
-
-
-def write_csv_with_parquet_mirror(df: DataFrame, csv_path: str) -> None:
-    """S5+S6 (22:122-124, 208-216): CSV sink with header plus a
-    parquet mirror next to it, for the CLI's ``--format csv``. The
-    staged pipeline no longer calls it: ``run_e2e`` copies its mirror
-    from the terminal snapshot's files. NOTE: the reference's run-id
-    mode writes every row TWICE (Q2, 22:127+145-147); that defect is
-    not replicated."""
-    df.write.mode("overwrite").option("header", "true").csv(csv_path)
-    df.write.mode("overwrite").parquet(csv_path + ".parquet")
 
 
 def write_partitioned_parquet(df: DataFrame, path: str,

@@ -135,7 +135,6 @@ SLOW_TESTS = {
     "test_rewards.py::test_sentiment_arc_and_tone",  # 18.1s
     "test_sampling_extras.py::test_priority_sample_weight_proportional_and_stable",  # 66.7s
     "test_sampling_extras.py::test_validation_check_and_gate_null_semantics",  # 7.0s
-    "test_scale.py::test_author_shards_auto_policy_and_equivalence",  # 5.4s
     "test_scale.py::test_compaction_plan_and_execute",  # 6.0s
     "test_scale.py::test_hll_mergeable_error_bound_and_union",  # 7.6s
     "test_scale.py::test_ivf_recall_vs_bruteforce",  # 7.3s

@@ -41,8 +41,7 @@ def test_tiering_broadcasts_cutoffs_and_prunes_scan(spark, sf_dir):
 # plan holds no join to check (its pairs are
 # ngram_jaccard_pairs_inverted's, checked via qx_dedup_ngram_jaccard)
 DEDUP_CORES = ["qx_dedup_minhash", "qx_dedup_minhash_portable",
-               "qx_dedup_ngram_jaccard", "qx_dedup_incremental",
-               "qx_dedup_incremental_portable", "qs_neardup_pairs",
+               "qx_dedup_ngram_jaccard", "qx_dedup_incremental_portable",
                "qs_neardup_pairs_portable", "qx_dedup_winnow",
                "qx_dedup_winnow_fast", "qx_dedup_containment",
                "qe2e_corpus_curation"]

@@ -478,29 +478,6 @@ def test_ri_audit_null_count_scheme_survives_dirty_parents(spark, tmp_path):
     assert rows["supplier.s_nationkey->nation"] == (1, 0)
 
 
-def test_sharded_author_topk_equals_plain(spark, sf_dir):
-    """r5 hot-author knob: author_texts/author_uncommon_words with
-    shards=k must return EXACTLY the plain window's rows (two-phase
-    top-k is lossless: every global top-N row is in its shard's
-    top-N)."""
-    import os as _os
-
-    from social_media_ai_engineering_etl_spark.operators import phrases
-    docs = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-    plain = sorted(map(tuple, phrases.author_uncommon_words(
-        docs, "source", "text", "doc_id").collect()))
-    sharded = sorted(map(tuple, phrases.author_uncommon_words(
-        docs, "source", "text", "doc_id", shards=8).collect()))
-    assert plain == sharded
-    a = sorted(map(tuple, phrases.author_texts(
-        docs, "source", "text", "doc_id", max_posts=7)
-        .select("doc_id", "__rn").collect()))
-    b = sorted(map(tuple, phrases.author_texts(
-        docs, "source", "text", "doc_id", max_posts=7, shards=8)
-        .select("doc_id", "__rn").collect()))
-    assert a == b
-
-
 def test_minhash_max_bucket_guard_caps_hot_cluster(spark):
     """r5 hot-bucket knob: a 40-doc near-identical cluster pairs fully
     without the guard; with max_bucket below the cluster width the
@@ -580,97 +557,15 @@ def test_lsh_guard_auto_selects_from_measured_profile(spark):
         "below the bound the width filter must be vacuous"
 
 
-def test_author_shards_auto_policy_and_equivalence(spark):
-    """Window flavor of diagnose-then-enable: the measured profile
-    drives the shard knob; the uniform corpus keeps the plain window;
-    a forced-low crossover enables sharding and the rowset is
-    IDENTICAL (lossless two-phase top-k)."""
-    from social_media_ai_engineering_etl_spark.operators import phrases
-
-    rows = [(f"a{i % 7}", f"text {'x' * (i % 40)} {i}", i)
-            for i in range(200)]
-    df = spark.createDataFrame(rows, "author string, text string, id long")
-    plain = {(r.author, r.id)
-             for r in phrases.author_texts(
-                 df, "author", "text", "id", max_posts=5).collect()}
-
-    auto = phrases.author_texts_auto(df, "author", "text", "id",
-                                     max_posts=5)
-    meta = auto.schema["author"].metadata["window_shards"]
-    assert meta["shards"] == -1, meta          # below crossover -> off
-    assert {(r.author, r.id) for r in auto.collect()} == plain
-
-    forced = phrases.author_texts_auto(df, "author", "text", "id",
-                                       max_posts=5, crossover=10)
-    meta_f = forced.schema["author"].metadata["window_shards"]
-    assert meta_f["shards"] == 32, meta_f      # hottest key ~29 > 10
-    assert {(r.author, r.id) for r in forced.collect()} == plain
-
-    # pure policy at the production crossover
-    on = phrases.choose_window_shards({"top_key_rows": 10**9,
-                                       "n_keys": 5})
-    off = phrases.choose_window_shards({"top_key_rows": 10**6,
-                                        "n_keys": 5})
-    assert on["shards"] == 32 and off["shards"] is None
-
-
-def test_bounded_key_profile_zero_job_decision(spark, sf_dir):
-    """r8: the total-row-count bound (parquet footer, re-read per
-    invocation — no cross-run memo anywhere) proves the shard guard
-    OFF with zero Spark jobs, and the resulting rows equal the plain
-    path; a bound ABOVE the crossover must fall back to the measured
-    profile (the bound can only prove the off direction)."""
-    import os
-
-    from social_media_ai_engineering_etl_spark.operators import phrases
-    from social_media_ai_engineering_etl_spark.session import \
-        parquet_num_rows
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    n = parquet_num_rows(path)
-    assert n is not None and n > 0
-    # the footer count matches the engine's own count
-    assert n == spark.read.parquet(path).count()
-
-    df = spark.createDataFrame(
-        [(f"a{i % 7}", f"text {'x' * (i % 40)} {i}", i)
-         for i in range(200)], "author string, text string, id long")
-    plain = {(r.author, r.id)
-             for r in phrases.author_texts(
-                 df, "author", "text", "id", max_posts=5).collect()}
-    auto = phrases.author_texts_auto(df, "author", "text", "id",
-                                     max_posts=5, total_rows_bound=200)
-    meta = auto.schema["author"].metadata["window_shards"]
-    assert meta["shards"] == -1, meta
-    assert "total-row bound" in meta["reason"], meta
-    assert {(r.author, r.id) for r in auto.collect()} == plain
-
-    # bound above the crossover: falls back to the measured profile
-    forced = phrases.author_texts_auto(df, "author", "text", "id",
-                                       max_posts=5, crossover=10,
-                                       total_rows_bound=200)
-    meta_f = forced.schema["author"].metadata["window_shards"]
-    assert meta_f["shards"] == 32, meta_f      # hottest key ~29 > 10
-    assert "total-row bound" not in meta_f["reason"], meta_f
-    assert {(r.author, r.id) for r in forced.collect()} == plain
-
-    # pure policy: the bound profile refuses the on-direction
-    import pytest
-    with pytest.raises(AssertionError):
-        phrases.choose_window_shards(
-            phrases.bounded_key_profile(10**9), crossover=100)
-
-
 def test_graded_paths_route_through_auto_guards(spark, sf_dir):
     """VERDICT r6 ask #3: the GRADED/benched registrations themselves
     must run the guard machinery — qx_dedup_minhash rides
-    minhash_dedup_pairs(max_bucket=LSH_GUARD_CROSSOVER) and
-    q17_author_words rides author_uncommon_words_auto.  On the
-    uniform testdata corpus both guards must choose OFF (evidence in
-    the schema metadata) and the rows must equal the plain paths."""
+    minhash_dedup_pairs(max_bucket=LSH_GUARD_CROSSOVER).  On the
+    uniform testdata corpus the guard must be vacuous (evidence in the
+    schema metadata) and the rows must equal the plain path.
+    q17_author_words runs the plain window and stamps no guard."""
     import social_media_ai_engineering_etl_spark.queries  # noqa: F401
-    from social_media_ai_engineering_etl_spark.operators import (dedup,
-                                                                 phrases)
+    from social_media_ai_engineering_etl_spark.operators import dedup
     from social_media_ai_engineering_etl_spark.registry import QUERIES
 
     mh = QUERIES["qx_dedup_minhash"](spark, sf_dir)
@@ -687,10 +582,4 @@ def test_graded_paths_route_through_auto_guards(spark, sf_dir):
             == {(r.id1, r.id2, r.jaccard_sim) for r in plain.collect()})
 
     aw = QUERIES["q17_author_words"](spark, sf_dir)
-    wmeta = aw.schema["source"].metadata["window_shards"]
-    assert wmeta["shards"] == -1, wmeta            # plain window kept
-    assert wmeta["top_key_rows"] <= wmeta["crossover"]
-    plain_w = phrases.author_uncommon_words(docs, "source", "text",
-                                            "doc_id")
-    assert ({(r.source, r.word, r.freq) for r in aw.collect()}
-            == {(r.source, r.word, r.freq) for r in plain_w.collect()})
+    assert aw.schema["source"].metadata == {}, aw.schema["source"].metadata
