@@ -17,9 +17,10 @@ driver.
 ``queries`` holds each query's mean over $SPARK_GRAFT_BENCH_PASSES
 interleaved passes (default 5, after one untimed warm-up pass) and
 ``value`` their sum; ``band`` adds sd, min, max, median, inclusive
-quartiles and the samples.  Compare medians and quartiles: the first
-timed passes can still run cold, and a mean carries them.  stderr gets
-the band as a markdown table.
+quartiles and the samples; ``jobs`` the median count of Spark jobs a
+timed pass of the query finished (build and action).  Compare medians
+and quartiles: the first timed passes can still run cold, and a mean
+carries them.  stderr gets the band as a markdown table.
 
 Totals from before ``cache_scope`` released the CacheManager entries
 its scope added ran without the queries' persists and are not
@@ -50,6 +51,7 @@ import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
 from social_media_ai_engineering_etl_spark.profile import StatusReader  # noqa: E402
 from social_media_ai_engineering_etl_spark.registry import BENCH, QUERIES  # noqa: E402
 from social_media_ai_engineering_etl_spark.session import cache_scope, get_spark  # noqa: E402
+from social_media_ai_engineering_etl_spark.verify import checksum  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -57,15 +59,6 @@ MARKS = ("Exchange", "BatchEvalPython", "ArrowEvalPython", "MapInArrow",
          "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
          "BroadcastNestedLoopJoin", "CartesianProduct", "Window",
          "WindowGroupLimit", "Generate", "InMemoryTableScan")
-
-
-def materialize(df) -> int:
-    """Checksum action: rows processed with no projection pruning."""
-    from pyspark.sql import functions as F
-    h = F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h")
-    row = df.select(h).agg(F.count(F.lit(1)).alias("n"),
-                           F.expr("bit_xor(__h)")).collect()[0]
-    return row["n"]
 
 
 def plan_shape(plan: str) -> dict:
@@ -129,7 +122,7 @@ def main() -> None:
     # 200ms of Janino per query.
     for name in names:
         with cache_scope(spark):
-            materialize(QUERIES[name](spark, SF_DIR))
+            checksum(QUERIES[name](spark, SF_DIR))
 
     # per-query executor task-time (VERDICT r8 ask #2): roughly constant
     # across core counts for a compute-bound query while wall shrinks,
@@ -142,6 +135,7 @@ def main() -> None:
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
     samples: dict[str, list[float]] = {name: [] for name in names}
     task_samples: dict[str, list[float]] = {name: [] for name in names}
+    job_samples: dict[str, list[int]] = {name: [] for name in names}
     for p in range(passes):
         for name in names:
             # the scope releases exactly what this query cached, so the
@@ -151,13 +145,14 @@ def main() -> None:
             t0 = time.perf_counter()
             with cache_scope(spark):
                 df = QUERIES[name](spark, SF_DIR)
-                n = materialize(df)
+                n, _ = checksum(df)
                 took = round(time.perf_counter() - t0, 4)
             samples[name].append(took)
             task_s = status.stages().task_s
             task_samples[name].append(task_s)
+            job_samples[name].append(status.jobs())
             print(f"# pass {p + 1} {name}: {took:.3f}s "
-                  f"task-time {task_s:.3f}s "
+                  f"task-time {task_s:.3f}s jobs {job_samples[name][-1]} "
                   f"parallelism {task_s / took:.1f}x ({n} rows)",
                   file=sys.stderr)
 
@@ -185,6 +180,8 @@ def main() -> None:
         "min_sum": round(sum(b["min"] for b in band.values()), 4),
         "task_sec": task_time,
         "task_sec_sum": round(sum(task_time.values()), 4),
+        "jobs": {name: statistics.median(js)
+                 for name, js in job_samples.items()},
     }
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)

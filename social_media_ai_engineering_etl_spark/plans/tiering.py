@@ -52,16 +52,13 @@ def tier_counts(lineitem: DataFrame, orders: DataFrame,
     """Flagship query: tier assignment + Tier-C drop + tier counts.
 
     ``scored`` feeds BOTH the quantile aggregate and the tiering
-    branch; without materialization Catalyst recomputes the whole
-    scan+agg+join subtree twice (no DAG-level CSE across actions).
-    Persist is the two-pass-quantile idiom at any scale: the cached
-    post-grain table is ~1 row per order, orders-of-magnitude smaller
-    than the lineitem input it replaces re-reading. The cache is
-    internal (callers get only the result plan), so it lives until
-    session end — acceptable because the storage level is evictable
-    (MEMORY_AND_DISK under unified memory) and the table is tiny
-    relative to the input."""
-    scored = order_engagement(lineitem, orders, customer).persist()
+    branch, and needs no persist: the two branches plan the same
+    lineitem shuffle (``hashpartitioning(l_orderkey)``), so the final
+    AQE plan computes it once and the quantile branch reads it through
+    a ``ReusedExchange``.  A persist added jobs for the cached relation
+    and cost more than it saved (SCALING.md "Persists with and
+    without")."""
+    scored = order_engagement(lineitem, orders, customer)
     tiered = with_tiers(scored, keep_bottom=keep_bottom)
     return (tiered.groupBy("tier")
             .agg(F.count(F.lit(1)).alias("post_count"))

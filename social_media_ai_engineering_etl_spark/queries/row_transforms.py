@@ -664,23 +664,23 @@ def _pick_mod(d, mod, options):
 @register("qv_record_validation", oracle="""
 SELECT rule, CAST(violations AS BIGINT) AS violations FROM (
     SELECT 'required_doc_id' AS rule,
-           sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS violations
+           count(*) FILTER (WHERE doc_id IS NULL) AS violations
     FROM documents
     UNION ALL
-    SELECT 'required_text',
-           sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) FROM documents
+    SELECT 'required_text', count(*) FILTER (WHERE text IS NULL)
+    FROM documents
     UNION ALL
     SELECT 'non_empty_text',
-           sum(CASE WHEN text IS NULL OR trim(text) = '' THEN 1 ELSE 0 END)
+           count(*) FILTER (WHERE text IS NULL OR trim(text) = '')
     FROM documents
     UNION ALL
     SELECT 'non_empty_source',
-           sum(CASE WHEN source IS NULL OR trim(source) = '' THEN 1 ELSE 0 END)
+           count(*) FILTER (WHERE source IS NULL OR trim(source) = '')
     FROM documents
     UNION ALL
     SELECT 'domain_lang',
-           sum(CASE WHEN lang IS NOT NULL
-                    AND lang NOT IN ('en', 'de', 'fr', 'es') THEN 1 ELSE 0 END)
+           count(*) FILTER (WHERE lang IS NOT NULL
+                            AND lang NOT IN ('en', 'de', 'fr', 'es'))
     FROM documents
 ) ORDER BY rule
 """)
@@ -785,12 +785,13 @@ def q15_clean_context(spark, sf_dir):
             .when(d % 7 == 0, F.lit("unknown"))
             .otherwise(F.col("text")))
     base = _docs(spark, sf_dir).select(ctx.alias("ctx"))
+    # count, not sum: zero documents keep 0, not NULL
     eff = base.agg(F.lit("effective_bug").alias("semantics"),
-                   F.sum(F.when(~cleaning.is_disallowed_context_effective(
-                       F.col("ctx")), 1).otherwise(0)).alias("n_kept"))
+                   F.count(F.when(~cleaning.is_disallowed_context_effective(
+                       F.col("ctx")), 1)).alias("n_kept"))
     intended = base.agg(F.lit("intended").alias("semantics"),
-                        F.sum(F.when(~cleaning.is_disallowed(F.col("ctx")),
-                                     1).otherwise(0)).alias("n_kept"))
+                        F.count(F.when(~cleaning.is_disallowed(F.col("ctx")),
+                                       1)).alias("n_kept"))
     return eff.unionByName(intended).orderBy("semantics")
 
 
@@ -846,7 +847,10 @@ def _b17_derive(df):
     line2 = (F.when(d % 3 == 0, F.lit("• tail point"))
               .when(d % 3 == 1, F.lit("2. tail point"))
               .otherwise(F.lit("plain tail")))
-    return df.select("doc_id", F.concat_ws("\n", line0, line1, line2)
+    # concat, not concat_ws: the oracle's || makes a NULL-text line0
+    # NULL the whole text, where concat_ws would skip it
+    nl = F.lit("\n")
+    return df.select("doc_id", F.concat(line0, nl, line1, nl, line2)
                      .alias("t"))
 
 

@@ -1170,12 +1170,9 @@ WITH latest AS (
 SELECT CAST((SELECT count(*) FROM old) AS BIGINT) AS n_old,
        CAST((SELECT count(*) FROM new) AS BIGINT) AS n_new,
        CAST((SELECT count(*) FROM new) AS BIGINT) AS n_applied,
-       CAST(sum(CASE WHEN ct = 'insert' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_insert,
-       CAST(sum(CASE WHEN ct = 'update' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_update,
-       CAST(sum(CASE WHEN ct = 'delete' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_delete
+       count(*) FILTER (WHERE ct = 'insert') AS n_insert,
+       count(*) FILTER (WHERE ct = 'update') AS n_update,
+       count(*) FILTER (WHERE ct = 'delete') AS n_delete
 FROM diff
 """)
 def qx_cdc_apply_roundtrip(spark, sf_dir):
@@ -1599,12 +1596,12 @@ def qx_referential_integrity(spark, sf_dir):
                 .join(F.broadcast(_k("supplier", "s_suppkey")),
                       li.l_suppkey == F.col("s_suppkey"), "left")
                 .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.when(F.col("_hit_orders").isNull(), 1)
-                           .otherwise(0)).alias("orph_o"),
-                     F.sum(F.when(F.col("_hit_part").isNull(), 1)
-                           .otherwise(0)).alias("orph_p"),
-                     F.sum(F.when(F.col("_hit_supplier").isNull(), 1)
-                           .otherwise(0)).alias("orph_s"))
+                     F.count(F.when(F.col("_hit_orders").isNull(), 1))
+                     .alias("orph_o"),
+                     F.count(F.when(F.col("_hit_part").isNull(), 1))
+                     .alias("orph_p"),
+                     F.count(F.when(F.col("_hit_supplier").isNull(), 1))
+                     .alias("orph_s"))
                 .select(F.expr(
                     "stack(3,"
                     " 'lineitem.l_orderkey->orders', n, orph_o,"
@@ -1620,8 +1617,8 @@ def qx_referential_integrity(spark, sf_dir):
             p = F.broadcast(p)
         return (c.join(p, F.col(child_key) == F.col(parent_key), "left")
                 .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.when(F.col(f"_hit_{parent}").isNull(), 1)
-                           .otherwise(0)).alias("orph"))
+                     F.count(F.when(F.col(f"_hit_{parent}").isNull(), 1))
+                     .alias("orph"))
                 .select(F.lit(f"{child}.{child_key}->{parent}").alias("fk"),
                         F.col("n").alias("n_rows"),
                         F.col("orph").alias("n_orphans")))

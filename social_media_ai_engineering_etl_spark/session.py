@@ -44,18 +44,18 @@ before returning (pagerank, global_ntile, permutation importance) or
 — when the returned DataFrame's lazy plan still reads the cache —
 leave release to the QUERY BOUNDARY: harness code that runs many
 registered queries in one session (bench.py, perfbench,
-scripts/scale_curve.py) runs each query inside :func:`cache_scope`,
-which at exit uncaches the CacheManager entries the query added and
-unpersists the RDDs it left persisted (``persist``/``cache`` and
-``localCheckpoint`` blocks), sparing caches made before the scope; so
-a long session holds at most one query's caches, and a repeated build
-of a query caches again (scripts/verify_driver.py still calls
-``spark.catalog.clearCache()`` between queries, which misses
-``localCheckpoint`` blocks).  tests/test_cache_discipline.py pins this for
-every benched query, and tests/test_scale.py with a 20-query leak test
-(no net growth of cached blocks across a simulated session).  Library
-callers embedding single operators own the same choice: wrap in
-try/finally unpersist, or use the scope at their own batch boundaries.
+scripts/scale_curve.py, scripts/verify_driver.py) runs each query
+inside :func:`cache_scope`, which at exit uncaches the CacheManager
+entries the query added and unpersists the RDDs it left persisted
+(``persist``/``cache`` and ``localCheckpoint`` blocks, which
+``spark.catalog.clearCache()`` misses), sparing caches made before the
+scope; so a long session holds at most one query's caches, and a
+repeated build of a query caches again.  tests/test_cache_discipline.py
+pins this for every benched query, and tests/test_scale.py with a
+20-query leak test (no net growth of cached blocks across a simulated
+session).  Library callers embedding single operators own the same
+choice: wrap in try/finally unpersist, or use the scope at their own
+batch boundaries.
 """
 
 from __future__ import annotations

@@ -20,17 +20,30 @@ Canonical form per cell:
 * arrays/structs -> recursive ``[...]`` / ``{k:v,...}`` (keys sorted)
 * timestamps/dates -> ISO format
 * everything else -> ``str``
+
+A query without an oracle is checked by :func:`checksum`, the action
+bench.py times: it computes every output cell of every row.
+
+:func:`degenerate_tables` writes the degenerate-input fixtures that
+scripts/verify_driver.py ``--regime`` and tests/test_empty_inputs.py
+run the registry over.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import os
 
+import duckdb
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
-__all__ = ["canon_cell", "canon_rows", "exact_value_hash", "exact_diff"]
+from .session import TABLES
+
+__all__ = ["canon_cell", "canon_rows", "exact_value_hash", "exact_diff",
+           "duck_views", "checksum", "KEYS", "REGIMES", "degenerate_tables"]
 
 
 def canon_cell(v) -> str:
@@ -95,3 +108,82 @@ def exact_diff(got: pd.DataFrame, want: pd.DataFrame,
     if not parts:  # same multiset as sets — duplicate-count difference
         parts.append("duplicate-row multiplicity differs")
     return "; ".join(parts)
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``, the
+    oracles' side; a ``<t>.parquet`` that Spark wrote is a directory of
+    part files."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def checksum(df) -> tuple[int, int]:
+    """``(rows, bit_xor(xxhash64(all columns)))`` in one aggregate.  A
+    bare ``count()`` is no substitute: Catalyst prunes the projections
+    it does not read, so an expression that raises (or is slow) would
+    never run."""
+    h = F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h")
+    row = df.select(h).agg(F.count(F.lit(1)),
+                           F.expr("bit_xor(__h)")).collect()[0]
+    return row[0], row[1]
+
+
+# primary and foreign keys of the ten tables: the degenerate regimes
+# keep them, so joins keep their meaning
+KEYS = frozenset({
+    "doc_id", "vec_id", "event_id", "o_orderkey", "l_orderkey",
+    "c_custkey", "s_suppkey", "p_partkey", "n_nationkey", "r_regionkey",
+    "user_id", "o_custkey", "l_partkey", "l_suppkey", "n_regionkey",
+    "s_nationkey", "c_nationkey", "l_linenumber", "ts"})
+
+REGIMES = ("empty", "single", "const", "null")
+
+
+def degenerate_tables(spark, base_dir: str, regime: str,
+                      out_dir: str) -> str:
+    """Write a degenerate copy of every table in ``base_dir`` (same
+    schemas) to ``out_dir/<table>.parquet`` and return ``out_dir``:
+
+    * ``empty``  -- zero rows;
+    * ``single`` -- one row;
+    * ``const``  -- 100 copies of row 1 with fresh values 0..99 in the
+      table's first key column: constant non-key columns are the regime
+      under test, and duplicated primary keys would make GROUP-BY-key
+      oracles diverge from per-row engines for a reason real data
+      cannot produce;
+    * ``null``   -- about 30% NULLs in every non-key column, chosen by
+      a hash of (table, first key, column); keys stay.
+    """
+    if regime not in REGIMES:
+        raise ValueError(f"regime {regime!r} not in {REGIMES}")
+    for t in TABLES:
+        df = spark.read.parquet(os.path.join(base_dir, f"{t}.parquet"))
+        key = [c for c in df.columns if c in KEYS][:1]
+        if regime == "empty":
+            out = df.limit(0)
+        elif regime == "single":
+            out = df.limit(1)
+        elif regime == "const":
+            out = df.limit(1).crossJoin(
+                spark.range(100).select(F.col("id").alias("__i")))
+            if key:
+                out = out.withColumn(
+                    key[0], F.col("__i").cast(df.schema[key[0]].dataType))
+            out = out.drop("__i")
+        else:
+            out = df.select(*[
+                F.col(f.name) if f.name in KEYS else
+                F.when(F.pmod(F.xxhash64(F.lit(t), *map(F.col, key),
+                                         F.lit(f.name)), F.lit(10)) < 3,
+                       F.lit(None).cast(f.dataType))
+                 .otherwise(F.col(f.name)).alias(f.name)
+                for f in df.schema.fields])
+        out.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"{t}.parquet"))
+    return out_dir

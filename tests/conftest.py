@@ -1,14 +1,13 @@
 import os
 import sys
 
-import duckdb
 import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from social_media_ai_engineering_etl_spark.session import TABLES, get_spark
-from social_media_ai_engineering_etl_spark.verify import exact_diff
+from social_media_ai_engineering_etl_spark.session import get_spark
+from social_media_ai_engineering_etl_spark.verify import duck_views, exact_diff
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -27,10 +26,7 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
@@ -122,7 +118,7 @@ SLOW_TESTS = {
     "test_null_semantics.py::test_snapshot_diff_null_fingerprint_is_not_presence",  # 5.3s
     "test_null_semantics.py::test_unicode_alpha_skew_pinned",  # 16.7s
     "test_observability.py::test_streaming_observed_metrics_per_microbatch",  # 5.9s
-    "test_oracle_parity.py::test_every_query_runs",  # 331.1s
+    "test_oracle_parity.py::test_every_query_runs",  # 55.0s: the nine SMOKE_EXCLUDED
     "test_pydatasource.py::test_stateful_op_on_rocksdb_state_store",  # 17.8s
     "test_pydatasource.py::test_statestore_reader_inspects_checkpoint",  # 7.3s
     "test_pydatasource.py::test_stream_restart_is_exactly_once",  # 22.2s

@@ -20,15 +20,11 @@ from pyspark.sql import functions as F
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401
 from social_media_ai_engineering_etl_spark.registry import BENCH, QUERIES
 from social_media_ai_engineering_etl_spark.session import cache_scope
+from social_media_ai_engineering_etl_spark.verify import checksum
 
 
 def _persistent_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-
-def _consume(df):
-    h = F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h")
-    df.select(h).agg(F.count(F.lit(1)), F.expr("bit_xor(__h)")).collect()
 
 
 @pytest.mark.parametrize("name", sorted(BENCH))
@@ -40,7 +36,7 @@ def test_benched_query_leaks_no_cached_blocks(spark, sf_dir, name):
     spark.catalog.clearCache()  # isolate from earlier tests
     before = _persistent_ids(spark)
     with cache_scope(spark):
-        _consume(QUERIES[name](spark, sf_dir))
+        checksum(QUERIES[name](spark, sf_dir))
     assert _persistent_ids(spark) == before, name
 
 
@@ -55,7 +51,7 @@ def test_cache_scope_spares_preexisting_caches(spark, sf_dir):
     owned = _persistent_ids(spark)
     assert owned, "owner cache must be materialized"
     with cache_scope(spark):
-        _consume(QUERIES["qx_dedup_minhash"](spark, sf_dir))
+        checksum(QUERIES["qx_dedup_minhash"](spark, sf_dir))
         assert _persistent_ids(spark) > owned  # scope created blocks
     after = _persistent_ids(spark)
     assert after == owned, (after, owned)
@@ -88,7 +84,7 @@ def test_cache_scope_releases_its_cache_manager_entries(spark, sf_dir):
     owned, persisted = _persistent_ids(spark), []
     for _ in range(2):
         with cache_scope(spark):
-            _consume(QUERIES["qx_dedup_minhash"](spark, sf_dir))
+            checksum(QUERIES["qx_dedup_minhash"](spark, sf_dir))
             persisted.append(len(_persistent_ids(spark) - owned))
         assert cache.cachedData().size() == 1   # the caller's entry alone
         assert _persistent_ids(spark) == owned

@@ -4,17 +4,29 @@ training, the global-ntile offset map, ANSI divisions.  A 100 TB job
 routinely plans over empty date slices / filter survivors, so "no
 data -> empty result", never an exception.
 
-The full-registry version is scripts/empty_input_sweep.py (241/241
-ok); this pins the 13 previously-crashing queries so regressions fail
-fast in CI.
+The full-registry version is ``scripts/verify_driver.py sf_dir
+--regime empty|single|const|null`` (every registered query, oracle
+parity where there is an oracle); this pins the queries that crashed
+in each regime so regressions fail fast in CI.  The four fixtures are
+built by the same recipes, :func:`verify.degenerate_tables`.
 """
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401
 from social_media_ai_engineering_etl_spark.registry import QUERIES
+from social_media_ai_engineering_etl_spark.session import TABLES
+from social_media_ai_engineering_etl_spark.verify import (
+    KEYS, REGIMES, degenerate_tables)
+
+
+def _regime_dir(spark, sf_dir, tmp_path_factory, regime):
+    return degenerate_tables(spark, sf_dir, regime,
+                             str(tmp_path_factory.mktemp(f"{regime}_sf")))
+
 
 PREVIOUSLY_CRASHING = [
     "qx_rfm_segments",            # create_map() on empty offset map
@@ -35,13 +47,7 @@ PREVIOUSLY_CRASHING = [
 
 @pytest.fixture(scope="module")
 def empty_dir(spark, sf_dir, tmp_path_factory):
-    d = tmp_path_factory.mktemp("empty_sf")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        (spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
-         .limit(0).write.mode("overwrite")
-         .parquet(str(d / f"{t}.parquet")))
-    return str(d)
+    return _regime_dir(spark, sf_dir, tmp_path_factory, "empty")
 
 
 @pytest.mark.parametrize("name", PREVIOUSLY_CRASHING)
@@ -51,15 +57,29 @@ def test_query_survives_zero_row_input(spark, empty_dir, name):
     spark.catalog.clearCache()
 
 
+# counts over zero rows are 0 in both engines, not a NULL sum
+ZERO_ROW_COUNTS = ["q15_clean_context", "qv_record_validation",
+                   "qx_cdc_apply_roundtrip", "qx_referential_integrity"]
+
+
+@pytest.mark.parametrize("name", ZERO_ROW_COUNTS)
+def test_zero_row_counts_match_oracle(spark, empty_dir, name):
+    from social_media_ai_engineering_etl_spark.registry import ORACLES
+    from social_media_ai_engineering_etl_spark.verify import (
+        duck_views, exact_diff)
+
+    con = duck_views(empty_dir)
+    got = QUERIES[name](spark, empty_dir).toPandas()
+    want = con.execute(ORACLES[name]).fetchdf()
+    con.close()
+    assert exact_diff(got, want) is None, exact_diff(got, want)
+    assert len(got) and got.notna().all().all(), got
+    spark.catalog.clearCache()
+
+
 @pytest.fixture(scope="module")
 def one_row_dir(spark, sf_dir, tmp_path_factory):
-    d = tmp_path_factory.mktemp("one_sf")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        (spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
-         .limit(1).write.mode("overwrite")
-         .parquet(str(d / f"{t}.parquet")))
-    return str(d)
+    return _regime_dir(spark, sf_dir, tmp_path_factory, "single")
 
 
 ONE_ROW_CRASHERS = [
@@ -86,17 +106,9 @@ def test_query_survives_single_row_input(spark, one_row_dir, name):
 
 @pytest.fixture(scope="module")
 def const_dir(spark, sf_dir, tmp_path_factory):
-    """100 identical rows per table — the constant-column regime
-    (zero variance with n >> 1)."""
-    from pyspark.sql import functions as F
-    d = tmp_path_factory.mktemp("const_sf")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        one = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).limit(1)
-        (one.crossJoin(spark.range(100).select(F.lit(1).alias("__d")))
-         .drop("__d").write.mode("overwrite")
-         .parquet(str(d / f"{t}.parquet")))
-    return str(d)
+    """100 rows per table, constant but for a fresh first key column:
+    the constant-column regime (zero variance with n >> 1)."""
+    return _regime_dir(spark, sf_dir, tmp_path_factory, "const")
 
 
 @pytest.mark.parametrize("name", ["qs_expanding_zscore", "qm_kmeans_sweep"])
@@ -112,27 +124,7 @@ def test_query_survives_constant_columns(spark, const_dir, name):
 def null_dir(spark, sf_dir, tmp_path_factory):
     """~30% NULLs in every non-key column (keys keep join semantics) —
     the null-heavy regime of real-world data lakes."""
-    from pyspark.sql import functions as F
-    KEYS = {"doc_id", "vec_id", "event_id", "o_orderkey", "l_orderkey",
-            "c_custkey", "s_suppkey", "p_partkey", "n_nationkey",
-            "r_regionkey", "user_id", "o_custkey", "l_partkey",
-            "l_suppkey", "n_regionkey", "s_nationkey", "c_nationkey",
-            "l_linenumber", "ts"}
-    d = tmp_path_factory.mktemp("null_sf")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
-        key = [c for c in df.columns if c in KEYS][:1] or None
-        cols = [F.col(f.name) if f.name in KEYS else
-                F.when(F.xxhash64(F.lit(t),
-                                  *(F.col(k) for k in (key or [])),
-                                  F.lit(f.name)) % 10 < 3,
-                       F.lit(None).cast(f.dataType))
-                 .otherwise(F.col(f.name)).alias(f.name)
-                for f in df.schema.fields]
-        df.select(*cols).write.mode("overwrite").parquet(
-            str(d / f"{t}.parquet"))
-    return str(d)
+    return _regime_dir(spark, sf_dir, tmp_path_factory, "null")
 
 
 NULL_REGIME_CRASHERS = [
@@ -155,6 +147,48 @@ def test_query_survives_null_heavy_input(spark, null_dir, name):
     convention applied to every library operator."""
     QUERIES[name](spark, null_dir).collect()
     spark.catalog.clearCache()
+
+
+REGIME_DIRS = {"empty": "empty_dir", "single": "one_row_dir",
+               "const": "const_dir", "null": "null_dir"}
+
+
+@pytest.mark.parametrize("regime", REGIMES)
+def test_degenerate_tables_recipes(spark, sf_dir, request, regime):
+    """Each regime's copy keeps every table's column names and types.
+    empty: 0 rows; single: 1; const: 100 rows, the first key column
+    0..99 and every other column constant; null: keys keep their values'
+    nullness and each non-key column is ~30% NULL (15-45% at >= 100
+    rows, a 3-sigma binomial band below that)."""
+    assert set(REGIME_DIRS) == set(REGIMES)
+    d = request.getfixturevalue(REGIME_DIRS[regime])
+    for t in TABLES:
+        base = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
+        df = spark.read.parquet(os.path.join(d, f"{t}.parquet"))
+        assert df.dtypes == base.dtypes, t
+        n = df.count()
+        keys = [c for c in df.columns if c in KEYS]
+        if regime in ("empty", "single"):
+            assert n == {"empty": 0, "single": 1}[regime], t
+        elif regime == "const":
+            assert n == 100, t
+            distinct = df.agg(*[F.count_distinct(c).alias(c)
+                                for c in df.columns]).first().asDict()
+            assert distinct.pop(keys[0]) == 100, t
+            assert all(v <= 1 for v in distinct.values()), (t, distinct)
+        else:
+            nulls = {c: F.sum(F.col(c).isNull().cast("int")).alias(c)
+                     for c in df.columns}
+            want, got = (x.agg(*nulls.values()).first().asDict()
+                         for x in (base, df))
+            assert n == base.count(), t
+            for c in df.columns:
+                if c in KEYS:
+                    assert got[c] == want[c], (t, c)
+                else:
+                    frac = got[c] / n
+                    band = max(0.15, 3 * (0.21 / n) ** 0.5)
+                    assert abs(frac - 0.3) <= band, (t, c, frac)
 
 
 def test_quality_classifier_train_degenerate_regimes(spark, tmp_path):

@@ -14,6 +14,7 @@ from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
 from social_media_ai_engineering_etl_spark.plans import manifest as mf
 from social_media_ai_engineering_etl_spark.profile import StatusReader
 from social_media_ai_engineering_etl_spark.sources import io as sio
+from social_media_ai_engineering_etl_spark.verify import checksum
 
 
 def _write_input(tmp_path, rows):
@@ -280,13 +281,6 @@ def test_staged_e2e_job_budget(spark, sf_dir, fresh_e2e, tmp_path):
         [(e["stage"], e["rows"]) for e in first]
 
 
-def _checksum(df):
-    """(rows, bit_xor of xxhash64 over every column)."""
-    row = df.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*df.columns))) \
-        .collect()[0]
-    return row[0], row[1]
-
-
 def _data_files(path):
     return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
 
@@ -297,8 +291,8 @@ def _assert_mirror_is_terminal_snapshot(spark, run_dir):
     snap = os.path.join(run_dir, "24-negatives")
     mirror = os.path.join(run_dir, "training-mix.csv.parquet")
     assert _data_files(mirror) == _data_files(snap) != []
-    assert _checksum(spark.read.parquet(mirror)) == \
-        _checksum(spark.read.parquet(snap))
+    assert checksum(spark.read.parquet(mirror)) == \
+        checksum(spark.read.parquet(snap))
 
 
 def test_staged_e2e_mirror_is_terminal_snapshot(spark, fresh_e2e):
@@ -306,7 +300,7 @@ def test_staged_e2e_mirror_is_terminal_snapshot(spark, fresh_e2e):
     24-negatives snapshot's."""
     run_dir, first, _ = fresh_e2e
     _assert_mirror_is_terminal_snapshot(spark, run_dir)
-    assert _checksum(spark.read.parquet(
+    assert checksum(spark.read.parquet(
         os.path.join(run_dir, "24-negatives")))[0] == first[-1]["rows"]
 
 

@@ -1,12 +1,13 @@
-"""Pins for the r5 degenerate-parity engine fixes.
+"""Pins for the degenerate-parity engine fixes.
 
-scripts/oracle_parity_degenerate.py compares every oracle-paired query
-against DuckDB on null-heavy / constant / single-row fixtures; its
-first run surfaced a class of REAL engine bugs where a NULL silently
-took a default instead of propagating (str(None) tokens, least()
-skipping NULL operands, fp-nullness standing in for row presence,
-non-null-safe predicate splits).  Each fix gets a direct pin here so
-the class cannot regress without the full sweep.
+``scripts/verify_driver.py sf_dir --regime null|const|single`` compares
+every oracle-paired query against DuckDB on null-heavy / constant /
+single-row fixtures; its runs surfaced a class of REAL engine bugs
+where a NULL silently took a default instead of propagating (str(None)
+tokens, least() skipping NULL operands, fp-nullness standing in for
+row presence, non-null-safe predicate splits, concat_ws skipping a
+NULL line).  Each fix gets a direct pin here so the class cannot
+regress without the full sweep.
 """
 
 from pyspark.sql import functions as F
@@ -27,6 +28,33 @@ def test_cosine_null_vector_is_null_not_zero(spark):
     assert rows[1] == 1.0
     assert rows[2] is None          # missing vector -> NULL
     assert rows[3] == 0.0           # zero-norm -> 0.0 (unchanged)
+
+
+def test_b17_styles_of_null_text_are_null_like_oracle(spark, tmp_path):
+    """A NULL-text document's derived stage-17 text is NULL, as the
+    oracle's ``||`` makes it, so its bullet style and divider are NULL;
+    concat_ws skipped the NULL first line and labelled the other two."""
+    import duckdb
+
+    import social_media_ai_engineering_etl_spark.queries  # noqa: F401
+    from social_media_ai_engineering_etl_spark.registry import (
+        ORACLES, QUERIES)
+    from social_media_ai_engineering_etl_spark.verify import exact_diff
+
+    spark.createDataFrame(
+        [(0, None, "en", "web", None), (1, "hello world", "en", "web", 11)],
+        "doc_id bigint, text string, lang string, source string, "
+        "n_chars bigint").write.parquet(str(tmp_path / "documents.parquet"))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{tmp_path}/documents.parquet/*.parquet')")
+    for name, col in (("q17_bullet_styles_17", "style"),
+                      ("q17_divider_styles_17", "divider")):
+        got = QUERIES[name](spark, str(tmp_path)).toPandas()
+        assert exact_diff(got, con.execute(ORACLES[name]).fetchdf()) is None
+        counts = dict(zip(got[col], got["n"]))
+        assert counts.get(None) == 1, (name, counts)
+    con.close()
 
 
 def test_avg_word_length_and_quality_null_text(spark):

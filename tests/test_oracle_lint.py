@@ -6,12 +6,11 @@ when the query is RUN; this lint catches it at plan time for every
 registered oracle — DESCRIBE costs ~1 ms per query and no data moves.
 """
 
-import duckdb
 import pytest
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401
 from social_media_ai_engineering_etl_spark.registry import ORACLES
-from social_media_ai_engineering_etl_spark.session import TABLES
+from social_media_ai_engineering_etl_spark.verify import duck_views
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,10 +22,7 @@ BANNED = ("HUGEINT", "UHUGEINT")
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return c
+    return duck_views(SF)
 
 
 def test_no_oracle_emits_hugeint(con):

@@ -26,13 +26,28 @@ def test_tiering_broadcasts_cutoffs_and_prunes_scan(spark, sf_dir):
     """q01: the 1-row quantile aggregate must broadcast (J2), and the
     lineitem scan must read only the engagement columns, not the full
     16-column schema."""
-    plan = plan_of(QUERIES["q01_tier_counts"](spark, sf_dir))
+    # an earlier test's cache of the same subtree (q01_tier_counts_sketch
+    # persists it) would stand in for the plan
+    spark.catalog.clearCache()
+    df = QUERIES["q01_tier_counts"](spark, sf_dir)
+    plan = plan_of(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan
     read_cols = m.group(1)
     assert "l_comment" not in read_cols, "scan reads unneeded columns"
     assert len(read_cols.split(",")) <= 6, read_cols
+    # both branches read one lineitem shuffle: the final AQE plan runs
+    # it once and reuses it, with no persist in between
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    final = executed.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, executed
+    shuffles = [ln for ln in final.splitlines()
+                if "hashpartitioning(l_orderkey" in ln]
+    reused = [ln for ln in shuffles if "ReusedExchange" in ln]
+    assert len(reused) == 1 and len(shuffles) == 2, final
+    assert "InMemoryTableScan" not in executed, final
 
 
 # every registered query whose pairs come from dedup._bucket_pairs,
