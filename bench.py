@@ -17,10 +17,10 @@ driver.
 ``queries`` holds each query's mean over $SPARK_GRAFT_BENCH_PASSES
 interleaved passes (default 5, after one untimed warm-up pass) and
 ``value`` their sum; ``band`` adds sd, min, max, median, inclusive
-quartiles and the samples; ``jobs`` the median count of Spark jobs a
-timed pass of the query finished (build and action).  Compare medians
-and quartiles: the first timed passes can still run cold, and a mean
-carries them.  stderr gets the band as a markdown table.
+quartiles and the samples.  Compare medians and quartiles: the first
+timed passes can still run cold, and a mean carries them.  stderr gets
+the band as a markdown table, and each timed pass's line there counts
+the Spark jobs the pass finished (build and action).
 
 Totals from before ``cache_scope`` released the CacheManager entries
 its scope added ran without the queries' persists and are not
@@ -135,7 +135,6 @@ def main() -> None:
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
     samples: dict[str, list[float]] = {name: [] for name in names}
     task_samples: dict[str, list[float]] = {name: [] for name in names}
-    job_samples: dict[str, list[int]] = {name: [] for name in names}
     for p in range(passes):
         for name in names:
             # the scope releases exactly what this query cached, so the
@@ -150,9 +149,8 @@ def main() -> None:
             samples[name].append(took)
             task_s = status.stages().task_s
             task_samples[name].append(task_s)
-            job_samples[name].append(status.jobs())
             print(f"# pass {p + 1} {name}: {took:.3f}s "
-                  f"task-time {task_s:.3f}s jobs {job_samples[name][-1]} "
+                  f"task-time {task_s:.3f}s jobs {status.jobs()} "
                   f"parallelism {task_s / took:.1f}x ({n} rows)",
                   file=sys.stderr)
 
@@ -180,8 +178,6 @@ def main() -> None:
         "min_sum": round(sum(b["min"] for b in band.values()), 4),
         "task_sec": task_time,
         "task_sec_sum": round(sum(task_time.values()), 4),
-        "jobs": {name: statistics.median(js)
-                 for name, js in job_samples.items()},
     }
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)

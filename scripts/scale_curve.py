@@ -59,7 +59,7 @@ ROOT = os.path.dirname(HERE)
 sys.path[:0] = [ROOT, HERE]
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
-from bench import SF_DIR, materialize  # noqa: E402
+from bench import SF_DIR  # noqa: E402
 from social_media_ai_engineering_etl_spark.operators import (  # noqa: E402
     curation, dedup, phrases, scale, similarity, temporal, textquality)
 from social_media_ai_engineering_etl_spark.operators import (  # noqa: E402
@@ -70,6 +70,7 @@ from social_media_ai_engineering_etl_spark.profile import StatusReader  # noqa: 
 from social_media_ai_engineering_etl_spark.registry import QUERIES  # noqa: E402
 from social_media_ai_engineering_etl_spark.session import (  # noqa: E402
     TABLES, cache_scope, get_spark, widen_scan)
+from social_media_ai_engineering_etl_spark.verify import checksum  # noqa: E402
 
 # (environment, Spark confs) per session
 SESSIONS = {
@@ -703,7 +704,7 @@ def run_session(session, names, args) -> None:
                                     df = build.search(spark, inp, **q)
                                 else:
                                     df = build(spark, inp)
-                                rows = materialize(df)
+                                rows, _ = checksum(df)
                             took = time.perf_counter() - t0
                             if took < best:
                                 best = took

@@ -96,7 +96,9 @@ def main() -> int:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
-    ap.add_argument("--only", type=lambda v: [s for s in v.split(",") if s],
+    ap.add_argument("--only",
+                    type=lambda v: [s.strip() for s in v.split(",")
+                                    if s.strip()],
                     help="keep queries whose name contains one of these")
     ap.add_argument("--regime", choices=REGIMES,
                     help="run over a degenerate copy of sf_dir's tables")

@@ -92,7 +92,9 @@ def q01_tier_counts_sketch(spark, sf_dir):
     ``percentile`` (which buffers EVERY ratio value in one final
     aggregation task — fine at millions of posts, an OOM at
     billions).  Same plan otherwise: 1-row cutoffs broadcast over the
-    persisted post-grain table, CASE tier, Tier-C drop, final counts.
+    post-grain table, CASE tier, Tier-C drop, final counts; like the
+    flagship it needs no persist, as both branches read one reused
+    lineitem exchange.
     Rows-only for the driver (approx cutoffs are accuracy-knob
     dependent); tests/test_analytics.py bounds the tier-count drift
     vs the exact flagship."""
@@ -101,7 +103,7 @@ def q01_tier_counts_sketch(spark, sf_dir):
     from ..functions.engagement import TIER_C, tier_expr
     scored = order_engagement(_t(spark, sf_dir, "lineitem"),
                               _t(spark, sf_dir, "orders"),
-                              _t(spark, sf_dir, "customer")).persist()
+                              _t(spark, sf_dir, "customer"))
     cuts = scored.select(
         F.percentile_approx("engagement_ratio", 0.80, 10000)
          .alias("top_cut"),

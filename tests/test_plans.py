@@ -26,9 +26,6 @@ def test_tiering_broadcasts_cutoffs_and_prunes_scan(spark, sf_dir):
     """q01: the 1-row quantile aggregate must broadcast (J2), and the
     lineitem scan must read only the engagement columns, not the full
     16-column schema."""
-    # an earlier test's cache of the same subtree (q01_tier_counts_sketch
-    # persists it) would stand in for the plan
-    spark.catalog.clearCache()
     df = QUERIES["q01_tier_counts"](spark, sf_dir)
     plan = plan_of(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
