@@ -49,7 +49,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401,E402
 from social_media_ai_engineering_etl_spark.profile import StatusReader  # noqa: E402
-from social_media_ai_engineering_etl_spark.registry import BENCH, QUERIES  # noqa: E402
+from social_media_ai_engineering_etl_spark.registry import (  # noqa: E402
+    BENCH, QUERIES, name_fragments)
 from social_media_ai_engineering_etl_spark.session import cache_scope, get_spark  # noqa: E402
 from social_media_ai_engineering_etl_spark.verify import checksum  # noqa: E402
 
@@ -106,7 +107,7 @@ def _plan_record(spark, name: str, plans_dir: str, tag: str) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--only", type=lambda v: v.split(","),
+    ap.add_argument("--only", type=name_fragments,
                     help="keep queries whose name contains one of these")
     ap.add_argument("--plans", help="directory for formatted plans")
     ap.add_argument("--tag", default="plan", help="plan file name suffix")

@@ -30,6 +30,8 @@ import pandas as pd
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from social_media_ai_engineering_etl_spark.registry import (  # noqa: E402
+    name_fragments)
 from social_media_ai_engineering_etl_spark.session import (  # noqa: E402
     cache_scope, get_spark)
 from social_media_ai_engineering_etl_spark.verify import (  # noqa: E402
@@ -96,9 +98,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
-    ap.add_argument("--only",
-                    type=lambda v: [s.strip() for s in v.split(",")
-                                    if s.strip()],
+    ap.add_argument("--only", type=name_fragments,
                     help="keep queries whose name contains one of these")
     ap.add_argument("--regime", choices=REGIMES,
                     help="run over a degenerate copy of sf_dir's tables")

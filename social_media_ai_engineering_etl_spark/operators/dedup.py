@@ -142,10 +142,10 @@ def _overlap_counts(sets: DataFrame, elems: Column,
     None keeps exact counts.
     """
     # the set table feeds sizes (x2 joins), the explode, and both
-    # sides of the self-join — persist or the set expression (regex
-    # split + n-way zip + distinct, or the winnow UDF) recomputes per
-    # branch (no DAG CSE — measured 15.3s -> 9.5s at 16x sf0.1 on the
-    # Jaccard path, ~4x on winnow's scale probe)
+    # sides of the self-join; each branch shuffles something else, so
+    # no exchange is reused and, unpersisted, the set expression (regex
+    # split + n-way zip + distinct, or the winnow UDF) runs per branch
+    # (PERSISTS in tests/test_cache_discipline.py has the A/B)
     sets = (sets.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
             .persist())
     sizes = sets.select("id", "sz")
@@ -802,7 +802,7 @@ def simhash_dedup_pairs_wide(df: DataFrame, id_col: str, text_col: str,
     mask = (1 << chunk_bits) - 1
     sig = simhash_signatures_wide(df, id_col, text_col,
                                   word_bits=word_bits, n_words=n_words,
-                                  word_hash=word_hash).persist()
+                                  word_hash=word_hash)
     entries = F.array(*[
         F.struct(F.lit(w).alias("w"), F.lit(c).alias("c"),
                  F.shiftrightunsigned(F.element_at("sig", w + 1),
@@ -842,11 +842,8 @@ def simhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     filters.
     """
     width = bits // chunks
-    # both sides of the chunk self-join consume the signature table;
-    # persist or the token explode + bit-vote shuffle runs twice
-    # (measured 15.5s -> ~5s at 16x sf0.1)
     sig = simhash_signatures(df, id_col, text_col, bits=bits,
-                             base_hash=base_hash).persist()
+                             base_hash=base_hash)
     # chunks is a small constant: unroll Python-side (shift amount must
     # be a literal int for shiftrightunsigned)
     chunked = sig.select(

@@ -423,9 +423,10 @@ def phash_neardup_pairs(df: DataFrame, id_col: str = "doc_id",
     mask = (1 << chunk_bits) - 1
     # materialize (id, hash) ONCE before the explode + self-join: the
     # hash may be an expensive expression (media_phash's md5 fold),
-    # and the join would otherwise re-evaluate it on both sides x
-    # n_chunks.  16 bytes/row; released by the harness's per-query
-    # clearCache (session.py cache-ownership contract).
+    # and no exchange sits below the explode for the two join sides to
+    # share, so each would re-evaluate it n_chunks times.  16 bytes/row;
+    # released at the query boundary (session.py cache ownership
+    # contract; PERSISTS in tests/test_cache_discipline.py).
     base = (df.select(F.col(id_col).alias("pid"),
                       F.col(phash_col).alias("ph"))
             .persist())

@@ -388,14 +388,11 @@ def hierarchical_time_rollup(df: DataFrame, ts_col: str,
     sum/count/min/max, same table as merge_rollups); count partials
     re-merge by summing.  Returns all levels unioned with a ``level``
     tag and the bucket as ``bucket`` (timestamp, truncated per
-    level).  The finest partial is persisted (it feeds every coarser
-    level AND appears in the union); release follows the repo's
-    query-boundary cache contract (session.py).
+    level).
     """
     finest = df.groupBy(
         *keys, F.date_trunc(levels[0], F.col(ts_col)).alias("bucket")).agg(
         *[_PARTIAL[fn](c).alias(c) for c, fn in measures.items()])
-    finest = finest.persist()
     merge_aggs = [_MERGE[fn](c).alias(c) for c, fn in measures.items()]
     out = finest.withColumn("level", F.lit(levels[0]))
     prev = finest
@@ -423,8 +420,7 @@ def hierarchical_distinct_rollup(df: DataFrame, ts_col: str,
     not re-aggregate).  Returns level, keys, bucket, estimate."""
     finest = (df.groupBy(
         *keys, F.date_trunc(levels[0], F.col(ts_col)).alias("bucket"))
-        .agg(F.hll_sketch_agg(distinct_col, F.lit(lg_k)).alias("sk"))
-        .persist())
+        .agg(F.hll_sketch_agg(distinct_col, F.lit(lg_k)).alias("sk")))
     out = finest.withColumn("level", F.lit(levels[0]))
     prev = finest
     for lv in levels[1:]:

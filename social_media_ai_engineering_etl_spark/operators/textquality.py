@@ -216,13 +216,7 @@ def tfidf_topk(df, id_col: str, text_col: str, k: int = 5,
         F.explode(F.filter(
             F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
             lambda t: F.length(t) >= min_len)).alias("term"))
-    # tf feeds BOTH docfreq and the scored join; without persist the
-    # explode + (doc,term) shuffle runs twice (no DAG CSE across
-    # branches — the tier_counts lesson). The persisted table is the
-    # distinct-(doc,term) set: far smaller than the raw token stream,
-    # evictable MEMORY_AND_DISK.
-    tf = (toks.groupBy(id_col, "term")
-          .agg(F.count(F.lit(1)).alias("tf")).persist())
+    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
     scored = (tf.join(docfreq, "term")

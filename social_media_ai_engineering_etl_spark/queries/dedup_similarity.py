@@ -878,14 +878,10 @@ def qx_hll_mergeable(spark, sf_dir):
     reusable pre-aggregate)."""
     docs = _docs(spark, sf_dir)
     fp = textquality.fingerprint(F.col("text"))
-    # `per` feeds both the per-source output and the sketch union;
-    # persist the (n_sources)-row table or the fingerprint scan of
-    # documents recomputes per branch
     per = (docs.select("source", fp.alias("fp"))
            .groupBy("source")
            .agg(F.hll_sketch_agg("fp").alias("sk"),
-                F.count_distinct("fp").alias("exact_distinct"))
-           .persist())
+                F.count_distinct("fp").alias("exact_distinct")))
     per_source = per.select(
         "source",
         F.hll_sketch_estimate("sk").alias("est_distinct"),
@@ -913,8 +909,8 @@ ORDER BY source
 """)
 def qx_hll_mergeable_portable(spark, sf_dir):
     """Exact-distinct twin of qx_hll_mergeable, one oracle row per
-    MERGE LEVEL (VERDICT r3 #6): the per-source distinct-fingerprint
-    sets are materialized ONCE, each level counts them, and —
+    MERGE LEVEL (VERDICT r3 #6): each level counts the per-source
+    distinct-fingerprint sets, and —
     exactly like the sketch union — the global level merges the
     per-source sets instead of rescanning documents (cross-source
     duplicate fingerprints must collapse, which is what distinguishes
@@ -926,7 +922,7 @@ def qx_hll_mergeable_portable(spark, sf_dir):
     # a NULL fingerprint (NULL text) is not a distinct fingerprint —
     # SQL count(DISTINCT) skips NULL and so does this exact twin
     sets = (docs.select("source", fp.alias("fp"))
-            .filter(F.col("fp").isNotNull()).distinct().persist())
+            .filter(F.col("fp").isNotNull()).distinct())
     per_source = sets.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_distinct"))
     merged = sets.select("fp").distinct().agg(

@@ -398,7 +398,7 @@ def qx_triangle_count(spark, sf_dir):
     from ..operators import baskets as bk
     e = (bk.copurchase_pairs(_t(spark, sf_dir, "lineitem"),
                              min_orders=2)
-         .select("p1", "p2").persist())
+         .select("p1", "p2"))
     deg = (e.selectExpr("p1 AS p").unionAll(e.selectExpr("p2 AS p"))
            .groupBy("p").agg(F.count(F.lit(1)).alias("d")))
     x = e.selectExpr("p1 AS a", "p2 AS b")

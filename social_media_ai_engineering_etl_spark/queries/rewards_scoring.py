@@ -454,11 +454,9 @@ def q26_rewards_scalar(spark, sf_dir):
         the deepest when-chains — plus rounding and the R19 weighted
         aggregate.
 
-    The cache is also the documented two-pass idiom (see
-    plans/tiering.tier_counts): at scale the derived pairs feed all
-    four q26 reward queries.  Primitives (style-field regexes and the
-    giant emoji codepoint-class regexp_extract_all) are computed once
-    per row inside unit 1.
+    Primitives (style-field regexes and the giant emoji
+    codepoint-class regexp_extract_all) are computed once per row
+    inside unit 1.
     """
     stages = cached_exprs("q26_scalar_stages", _build_scalar_stage_cols)
     pairs = _derive_reward_pairs(_docs(spark, sf_dir))

@@ -1085,13 +1085,11 @@ ORDER BY s.s_suppkey
 def qg_top_supplier(spark, sf_dir):
     """Top supplier (TPC-H Q15 shape): the supplier(s) with the
     maximum revenue in one quarter — the view-plus-global-scalar-max
-    query.  The per-supplier revenue aggregate is computed ONCE and
-    reused for both the max and the equality filter (persist
-    releases under the harness's per-query clearCache contract);
-    the scalar max is a 1-row broadcast cross-join, never a global
-    window, and the equality on exact fixed-point revenue cannot
-    tie-break differently across engines.  All ties are returned,
-    ordered by supplier key."""
+    query.  The per-supplier revenue aggregate feeds both the max and
+    the equality filter; the scalar max is a 1-row broadcast
+    cross-join, never a global window, and the equality on exact
+    fixed-point revenue cannot tie-break differently across engines.
+    All ties are returned, ordered by supplier key."""
     li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= "1997-01-01")
                   & (F.col("l_shipdate") < "1997-04-01"))
@@ -1099,9 +1097,7 @@ def qg_top_supplier(spark, sf_dir):
                   (F.round(F.col("l_extendedprice") * 100).cast("long")
                    * (100 - F.round(F.col("l_discount") * 100)
                       .cast("long"))).alias("rev_x10k")))
-    rev = (li.groupBy("l_suppkey")
-           .agg(F.sum("rev_x10k").alias("total_x10k"))
-           .persist())
+    rev = li.groupBy("l_suppkey").agg(F.sum("rev_x10k").alias("total_x10k"))
     top = rev.agg(F.max("total_x10k").alias("_max"))
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (rev.crossJoin(F.broadcast(top))
@@ -1135,13 +1131,12 @@ def qg_important_supply(spark, sf_dir):
     per-part value — the HAVING-against-a-global-scalar query.  (Q11's
     fixed 0.01% fraction is itself rescaled per SF in the spec; the
     2x-average form is the scale-invariant equivalent, non-degenerate
-    at every SF.)  The per-part value aggregate is computed once and
-    reused for both sides; the global (total, count) is a 1-row
-    broadcast, and the threshold test is exact DECIMAL(38,0)
-    cross-multiplication (value * n_parts > 2 * total), never a
-    double ratio.  The nation filter reduces supplier to a handful of
-    rows BEFORE the fact join, so the fact is pruned by a broadcast
-    semi-equi-join at any scale."""
+    at every SF.)  The per-part value aggregate feeds both sides; the
+    global (total, count) is a 1-row broadcast, and the threshold
+    test is exact DECIMAL(38,0) cross-multiplication
+    (value * n_parts > 2 * total), never a double ratio.  The nation
+    filter reduces supplier to a handful of rows BEFORE the fact join,
+    so the fact is pruned by a broadcast semi-equi-join at any scale."""
     nation = (_t(spark, sf_dir, "nation")
               .filter(F.col("n_name") == "NATION_3")
               .select("n_nationkey"))
@@ -1156,8 +1151,7 @@ def qg_important_supply(spark, sf_dir):
                       .cast("long"))).alias("rev_x10k")))
     v = (li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
          .groupBy("l_partkey")
-         .agg(F.sum("rev_x10k").alias("value_x10k"))
-         .persist())
+         .agg(F.sum("rev_x10k").alias("value_x10k")))
     total = v.agg(F.sum(F.col("value_x10k").cast("decimal(38,0)"))
                   .alias("_total"),
                   F.count(F.lit(1)).alias("_n"))
@@ -1207,8 +1201,7 @@ def qg_small_qty_revenue(spark, sf_dir):
                   F.round(F.col("l_extendedprice") * 100).cast("long")
                   .alias("price_c")))
     pl = (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-          .select("l_partkey", "qty", "price_c")
-          .persist())
+          .select("l_partkey", "qty", "price_c"))
     stats = (pl.groupBy("l_partkey")
              .agg(F.sum("qty").alias("sum_qty"),
                   F.count(F.lit(1)).alias("cnt")))
@@ -1265,8 +1258,7 @@ def qg_min_cost_supplier(spark, sf_dir):
           .join(F.broadcast(part.select("p_partkey")),
                 F.col("l_partkey") == F.col("p_partkey"), "left_semi"))
     pairs = (li.groupBy("l_partkey", "l_suppkey")
-             .agg(F.min("unit").alias("unit_cents_x100"))
-             .persist())
+             .agg(F.min("unit").alias("unit_cents_x100")))
     best = (pairs.groupBy(F.col("l_partkey").alias("b_partkey"))
             .agg(F.min("unit_cents_x100").alias("best_cents_x100")))
     supp = _t(spark, sf_dir, "supplier").select(
@@ -1327,8 +1319,7 @@ def qg_waiting_suppliers(spark, sf_dir):
                       > F.date_add(F.col("o_orderdate"), 90))
                      .alias("late")))
     pa = lines.select("ok", "sk").distinct()
-    pl = (lines.filter(F.col("late")).select("ok", "sk").distinct()
-          .persist())
+    pl = lines.filter(F.col("late")).select("ok", "sk").distinct()
     others_all = pa.select(F.col("ok").alias("ok2"),
                            F.col("sk").alias("sk2"))
     others_late = pl.select(F.col("ok").alias("ok3"),
@@ -1386,8 +1377,7 @@ def qg_sales_opportunity(spark, sf_dir):
            .filter(F.col("c_acctbal") > 0.0)
            .select("c_custkey", "c_nationkey",
                    F.round(F.col("c_acctbal") * 100).cast("long")
-                   .alias("bal_cents"))
-           .persist())
+                   .alias("bal_cents")))
     dec = "decimal(38,0)"
     stats = pos.agg(F.sum(F.col("bal_cents").cast(dec)).alias("_s"),
                     F.count(F.lit(1)).cast(dec).alias("_n"))

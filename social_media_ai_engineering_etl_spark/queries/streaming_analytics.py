@@ -235,6 +235,24 @@ def qs_inter_event_gaps(spark, sf_dir):
             .orderBy("gap_bucket"))
 
 
+def _grouping_sets(ev, how: str, keys: list[str]):
+    """``ev.cube`` or ``ev.rollup`` (``how``) over ``keys``, to gid,
+    n_events and the BIGINT sum of ``vm``.  SQL keeps the grand-total
+    row over zero input rows, where Spark's grouping-sets aggregate
+    yields none: a one-row all-NULL sentinel reaches every grouping
+    set, n_events counts only the rows that set ``real``, and a group
+    stays if it holds a real row or is the grand total."""
+    ev = ev.withColumn("real", F.lit(True))
+    sentinel = ev.sparkSession.range(1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in ev.schema])
+    return (getattr(ev.unionByName(sentinel), how)(*keys)
+            .agg(F.grouping_id().alias("gid"),
+                 F.count("real").alias("n_events"),
+                 F.sum("vm").cast("long").alias("sum_value_micros"))
+            .filter((F.col("n_events") > 0)
+                    | (F.col("gid") == (1 << len(keys)) - 1)))
+
+
 @register("qs_engagement_rollup", oracle="""
 SELECT event_type,
        strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
@@ -261,11 +279,9 @@ def qs_engagement_rollup(spark, sf_dir):
     ev = load_events_cached(spark, os.path.join(sf_dir, "events.parquet"))
     hour = F.date_format(F.date_trunc("hour", F.col("ts")),
                          "yyyy-MM-dd HH:mm:ss")
-    return (ev.rollup(F.col("event_type"), hour.alias("hour"))
-            .agg(F.grouping_id().alias("gid"),
-                 F.count(F.lit(1)).alias("n_events"),
-                 F.sum(F.floor(F.col("value") * 1e6))
-                  .alias("sum_value_micros"))
+    ev = ev.select("event_type", hour.alias("hour"),
+                   F.floor(F.col("value") * 1e6).alias("vm"))
+    return (_grouping_sets(ev, "rollup", ["event_type", "hour"])
             .select("event_type", "hour", "gid", "n_events",
                     "sum_value_micros")
             .orderBy("gid", F.col("event_type").asc_nulls_first(),
@@ -496,10 +512,7 @@ def qs_engagement_cube(spark, sf_dir):
         "event_type",
         F.dayofweek("ts").cast("long").alias("dow"),
         F.floor(F.col("value") * 1e6).alias("vm"))
-    return (ev.cube("event_type", "dow")
-            .agg(F.grouping_id().alias("gid"),
-                 F.count(F.lit(1)).alias("n_events"),
-                 F.sum("vm").cast("long").alias("sum_value_micros"))
+    return (_grouping_sets(ev, "cube", ["event_type", "dow"])
             .select("gid", "event_type", "dow", "n_events",
                     "sum_value_micros")
             .orderBy("gid", F.col("event_type").asc_nulls_first(),

@@ -743,9 +743,8 @@ def qx_key_skew_profile(spark, sf_dir):
     window needs salting (scale.salted_aggregate) or AQE skew-join
     can absorb it.  Two tiny aggregations over the per-key grain; the
     heavy fact collapses at the first map-side-combined groupBy."""
-    pk = (_events(spark, sf_dir).groupBy("user_id")
-          .agg(F.count(F.lit(1)).alias("c"))
-          .persist())  # feeds both branches; released at query boundary
+    pk = _events(spark, sf_dir).groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("c"))
     tot = pk.agg(F.sum("c").alias("total"), F.max("c").alias("top1"),
                  F.count(F.lit(1)).alias("n_keys"))
     return (pk.groupBy(F.col("c").alias("events_per_key"))
@@ -1196,8 +1195,8 @@ def qx_cdc_apply_roundtrip(spark, sf_dir):
                 .filter(F.col("rn") == 1).select("user_id", "k"))
 
     ev = _events(spark, sf_dir)
-    old = snap(ev.filter(F.col("ts") < "2024-01-16")).persist()
-    new = snap(ev).persist()
+    old = snap(ev.filter(F.col("ts") < "2024-01-16"))
+    new = snap(ev)
     o = old.withColumn("fp", F.md5(F.concat_ws("|", "user_id", "k")))
     n = new.withColumn("fp", F.md5(F.concat_ws("|", "user_id", "k")))
     feed = scale.snapshot_diff(o, n, "user_id", "fp")

@@ -35,3 +35,9 @@ def register(name: str, oracle: str | None = None, bench: bool = False):
             BENCH.append(name)
         return fn
     return deco
+
+
+def name_fragments(arg: str) -> list[str]:
+    """A ``--only`` value: its comma-separated name fragments, each
+    stripped, empty ones dropped (``"a, b,"`` -> ``["a", "b"]``)."""
+    return [s.strip() for s in arg.split(",") if s.strip()]

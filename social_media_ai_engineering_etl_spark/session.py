@@ -37,25 +37,26 @@ JVM-heap delta maps — every stateful operator here runs unchanged on
 it (proven in tests/test_pydatasource.py::test_stateful_op_on_rocksdb_
 state_store).
 
-Cache ownership contract: operators that ``persist()`` an
-intermediate they re-read (dedup candidate tables, pagerank's edge
-frame, global_ntile's range slices) either unpersist it themselves
-before returning (pagerank, global_ntile, permutation importance) or
-— when the returned DataFrame's lazy plan still reads the cache —
-leave release to the QUERY BOUNDARY: harness code that runs many
-registered queries in one session (bench.py, perfbench,
-scripts/scale_curve.py, scripts/verify_driver.py) runs each query
-inside :func:`cache_scope`, which at exit uncaches the CacheManager
-entries the query added and unpersists the RDDs it left persisted
-(``persist``/``cache`` and ``localCheckpoint`` blocks, which
-``spark.catalog.clearCache()`` misses), sparing caches made before the
-scope; so a long session holds at most one query's caches, and a
-repeated build of a query caches again.  tests/test_cache_discipline.py
-pins this for every benched query, and tests/test_scale.py with a
-20-query leak test (no net growth of cached blocks across a simulated
-session).  Library callers embedding single operators own the same
-choice: wrap in try/finally unpersist, or use the scope at their own
-batch boundaries.
+Cache ownership contract: a registered query persists a subtree only
+where a measurement shows the persist pays.  Spark already runs an
+exchange that two branches of one plan share once and reuses it
+(``ReusedExchange``), so a subtree read twice is no reason on its own.
+``PERSISTS`` in tests/test_cache_discipline.py names every query that
+persists, with its sites, its reason and its with -> without seconds;
+the tests that run every registered query fail when a query persists
+and is not listed, or is listed and no longer persists.  An operator
+that persists either unpersists before it returns (global_ntile,
+global_row_number, BPE, the k-means sweep) or, when its returned lazy
+plan still reads the cache, leaves release to the query boundary:
+harness code that runs many queries in one session (bench.py,
+perfbench, scripts/scale_curve.py, scripts/verify_driver.py, the
+query-running tests) runs each inside :func:`cache_scope`, which at
+exit uncaches the CacheManager entries the query added and unpersists
+the RDDs it left persisted (``persist``/``cache`` and
+``localCheckpoint`` blocks), sparing caches made before the scope.
+Library callers embedding single operators own the same choice: wrap
+in try/finally unpersist, or use the scope at their own batch
+boundaries.
 """
 
 from __future__ import annotations

@@ -1,4 +1,5 @@
-"""The package status reader's stage counter, over a fake stage store.
+"""The package status reader's stage counter, over a fake stage store,
+and the ``--only`` parser bench.py and scripts/verify_driver.py share.
 
 None of these starts Spark: :func:`profile.stage_counter` takes any
 ``list_stages`` callable, and the fake one yields the same
@@ -9,6 +10,7 @@ adapter (:class:`profile.StatusReader`) does.
 from __future__ import annotations
 
 from social_media_ai_engineering_etl_spark.profile import stage_counter
+from social_media_ai_engineering_etl_spark.registry import name_fragments
 
 
 class FakeStore:
@@ -48,3 +50,10 @@ def test_counts_failed_stages_and_each_attempt_once():
     store.stages[(4, 1)] = ("COMPLETE", 40)
     assert snap() == (0.040, 1, 80)
     assert snap() == (0.0, 0, 0)
+
+
+def test_only_strips_each_name_fragment():
+    """``--only "a, b,"`` keeps both names: a fragment's spaces would
+    match no query name and skip it silently."""
+    assert name_fragments("q01, qx_dedup ,") == ["q01", "qx_dedup"]
+    assert name_fragments(" , ") == []

@@ -17,10 +17,10 @@ import pytest
 from pyspark.sql import functions as F
 
 import social_media_ai_engineering_etl_spark.queries  # noqa: F401
-from social_media_ai_engineering_etl_spark.registry import QUERIES
+from social_media_ai_engineering_etl_spark.registry import ORACLES, QUERIES
 from social_media_ai_engineering_etl_spark.session import TABLES
 from social_media_ai_engineering_etl_spark.verify import (
-    KEYS, REGIMES, degenerate_tables)
+    KEYS, REGIMES, degenerate_tables, duck_views, exact_diff)
 
 
 def _regime_dir(spark, sf_dir, tmp_path_factory, regime):
@@ -62,19 +62,33 @@ ZERO_ROW_COUNTS = ["q15_clean_context", "qv_record_validation",
                    "qx_cdc_apply_roundtrip", "qx_referential_integrity"]
 
 
-@pytest.mark.parametrize("name", ZERO_ROW_COUNTS)
-def test_zero_row_counts_match_oracle(spark, empty_dir, name):
-    from social_media_ai_engineering_etl_spark.registry import ORACLES
-    from social_media_ai_engineering_etl_spark.verify import (
-        duck_views, exact_diff)
-
-    con = duck_views(empty_dir)
-    got = QUERIES[name](spark, empty_dir).toPandas()
+def _matches_oracle(spark, sf, name):
+    """``name``'s rows over ``sf``, after an exact compare with its
+    DuckDB oracle over the same tables."""
+    con = duck_views(sf)
+    got = QUERIES[name](spark, sf).toPandas()
     want = con.execute(ORACLES[name]).fetchdf()
     con.close()
     assert exact_diff(got, want) is None, exact_diff(got, want)
+    return got
+
+
+@pytest.mark.parametrize("name", ZERO_ROW_COUNTS)
+def test_zero_row_counts_match_oracle(spark, empty_dir, name):
+    got = _matches_oracle(spark, empty_dir, name)
     assert len(got) and got.notna().all().all(), got
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("name", ["qs_engagement_cube",
+                                  "qs_engagement_rollup"])
+def test_grouping_sets_keep_grand_total_on_zero_rows(spark, empty_dir,
+                                                     name):
+    """CUBE and ROLLUP over zero rows yield SQL's one grand-total row:
+    gid 3, n_events 0, every key and the sum NULL."""
+    got = _matches_oracle(spark, empty_dir, name)
+    assert got[["gid", "n_events"]].values.tolist() == [[3, 0]], got
+    assert got.drop(columns=["gid", "n_events"]).isna().all().all(), got
 
 
 @pytest.fixture(scope="module")

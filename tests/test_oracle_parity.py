@@ -7,11 +7,14 @@ import social_media_ai_engineering_etl_spark.queries  # noqa: F401
 from social_media_ai_engineering_etl_spark.registry import ORACLES, QUERIES
 
 from .conftest import assert_matches_oracle
+from .test_cache_discipline import persist_census
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(name, spark, duck, sf_dir):
-    assert_matches_oracle(QUERIES[name](spark, sf_dir), duck, ORACLES[name])
+    with persist_census(spark, name):
+        assert_matches_oracle(QUERIES[name](spark, sf_dir), duck,
+                              ORACLES[name])
 
 
 # oracle-free queries the default-tier smoke leaves out, and why
@@ -44,9 +47,10 @@ def test_every_query_runs(spark, sf_dir):
     every other registered query is collected in full by
     test_oracle_parity or smoked by test_oracle_free_query_runs."""
     for name in sorted(SMOKE_EXCLUDED):
-        df = QUERIES[name](spark, sf_dir)
-        assert df.columns, name
-        df.limit(1).collect()
+        with persist_census(spark, name):
+            df = QUERIES[name](spark, sf_dir)
+            assert df.columns, name
+            df.limit(1).collect()
 
 
 @pytest.mark.parametrize("name", SMOKED)
@@ -54,6 +58,7 @@ def test_oracle_free_query_runs(name, spark, sf_dir):
     """Default-tier smoke for the oracle-free queries: registered, no
     oracle, and a bounded action yields a row."""
     assert name in QUERIES and name not in ORACLES
-    df = QUERIES[name](spark, sf_dir)
-    assert df.columns, name
-    assert len(df.limit(1).collect()) == 1, name
+    with persist_census(spark, name):
+        df = QUERIES[name](spark, sf_dir)
+        assert df.columns, name
+        assert len(df.limit(1).collect()) == 1, name

@@ -197,8 +197,10 @@ def test_twenty_query_session_leaks_no_cached_blocks(spark, sf_dir):
     import social_media_ai_engineering_etl_spark.queries  # noqa: F401
     from social_media_ai_engineering_etl_spark.registry import QUERIES
 
-    # mix of persist-using families: dedup, similarity, graph, ntile,
-    # sampling, curation, continuous aggregate — 23 distinct queries
+    # a mix of families (dedup, similarity, graph, ntile, sampling,
+    # curation, continuous aggregates, star reports): the ones that
+    # tests/test_cache_discipline.py's PERSISTS lists persist, the rest
+    # plan no cache; the leak census must hold for both
     names = [
         "q01_tier_counts", "q05_balance_counts", "q17_author_words",
         "q23_split_counts", "qb4_prefer_downsample", "qe2e_training_mix",
@@ -209,8 +211,8 @@ def test_twenty_query_session_leaks_no_cached_blocks(spark, sf_dir):
         "qx_pagerank_fixed", "qx_corpus_stats", "qx_heavy_hitters",
         "qx_hierarchical_rollup", "qx_asof_last_click",
         "qx_key_skew_profile",
-        # r3d persisting additions: scalar-subquery + semi/anti reports,
-        # and the phash near-dup (persists inside phash_neardup_pairs)
+        # scalar-subquery + semi/anti reports, and the phash near-dup
+        # (persists inside phash_neardup_pairs)
         "qg_top_supplier", "qg_important_supply", "qg_small_qty_revenue",
         "qg_min_cost_supplier", "qg_waiting_suppliers",
         "qg_sales_opportunity", "qmm_media_neardup",
